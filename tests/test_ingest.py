@@ -1734,3 +1734,24 @@ def test_bin_export_sink_object_store_backend(spark, tmp_path):
     assert all(
         r.ok for r in verify_bin_shards(spark, out, store=st).collect()
     )
+
+
+def test_bin_export_batch_rejects_glob_corpus_dir(spark, tmp_path):
+    """Replay detection matches this batch's landed partitions with a
+    Hadoop glob built from ``corpus_dir``, so a glob metacharacter in
+    it would match the wrong directories (or none). It is rejected at
+    entry, before anything lands."""
+    import pytest
+
+    from topn_spark.streaming.ingest import bin_export_batch
+
+    batch = spark.createDataFrame(
+        [(0, [1, 2]), (1, [3])], "seq_id bigint, tokens array<bigint>"
+    )
+    for meta in "{[?*":
+        corpus = str(tmp_path / f"store{meta}x")
+        with pytest.raises(ValueError, match="glob metacharacter"):
+            bin_export_batch(
+                batch, corpus, str(tmp_path / "out"), 0, 2, mask_col=None
+            )
+    assert not list(tmp_path.iterdir())

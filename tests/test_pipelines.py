@@ -209,49 +209,110 @@ def test_dedup_sql_and_synthetic_source(spark, tmp_path):
 
 
 def test_structural_errors(spark, tmp_path):
+    """Every structural failure reads the same whether the spec is
+    compiled or run over an injected source frame — one DAG walker
+    serves both entry points."""
+    from topn_spark.pipelines import run_pipeline_with_source
+
     src = _golden_source(spark, tmp_path)
+    injected = spark.createDataFrame(GOLDEN, "name string, age int")
     base = {"name": "s", "plugin": "File", "properties": {"path": src}}
+
+    def both(spec, match):
+        with pytest.raises(ValidationError, match=match) as deployed:
+            compile_pipeline(spark, spec)
+        with pytest.raises(ValidationError) as fed:
+            run_pipeline_with_source(spark, spec, "s", injected)
+        assert str(fed.value) == str(deployed.value)
+
     # unknown plugin
-    with pytest.raises(ValidationError, match="unknown plugin"):
-        compile_pipeline(
-            spark,
-            {"stages": [dict(base), {"name": "x", "plugin": "Nope"}],
-             "connections": []},
-        )
+    both(
+        {"stages": [dict(base), {"name": "x", "plugin": "Nope"}],
+         "connections": []},
+        "unknown plugin",
+    )
     # cycle
-    with pytest.raises(ValidationError, match="cycle"):
-        compile_pipeline(
-            spark,
-            {
-                "stages": [
-                    dict(base),
-                    {"name": "a", "plugin": "Filter",
-                     "properties": {"condition": "1=1"}},
-                    {"name": "b", "plugin": "Filter",
-                     "properties": {"condition": "1=1"}},
-                ],
-                "connections": [
-                    {"from": "s", "to": "a"},
-                    {"from": "a", "to": "b"},
-                    {"from": "b", "to": "a"},
-                ],
-            },
-        )
+    both(
+        {
+            "stages": [
+                dict(base),
+                {"name": "a", "plugin": "Filter",
+                 "properties": {"condition": "1=1"}},
+                {"name": "b", "plugin": "Filter",
+                 "properties": {"condition": "1=1"}},
+            ],
+            "connections": [
+                {"from": "s", "to": "a"},
+                {"from": "a", "to": "b"},
+                {"from": "b", "to": "a"},
+            ],
+        },
+        "cycle",
+    )
     # declared type mismatching the plugin's kind
-    with pytest.raises(ValidationError, match="batchsource"):
-        compile_pipeline(
-            spark,
-            {"stages": [
-                {"name": "s", "type": "transform", "plugin": "File",
-                 "properties": {"path": src}}],
-             "connections": []},
-        )
+    both(
+        {"stages": [
+            {"name": "s", "type": "transform", "plugin": "File",
+             "properties": {"path": src}}],
+         "connections": []},
+        "batchsource",
+    )
     # duplicate stage names
-    with pytest.raises(ValidationError, match="Duplicate"):
-        compile_pipeline(
-            spark,
-            {"stages": [dict(base), dict(base)], "connections": []},
+    both({"stages": [dict(base), dict(base)], "connections": []},
+         "Duplicate")
+    # wrong input count for a single-input stage
+    both(
+        {"stages": [dict(base), {"name": "a", "plugin": "Filter",
+                                 "properties": {"condition": "1=1"}}],
+         "connections": [{"from": "s", "to": "a"}] * 2},
+        "Stage 'a': too many values to unpack",
+    )
+
+
+def test_injected_source_sinks_append(spark, tmp_path):
+    """run_pipeline_with_source treats its frame as one batch of a
+    larger feed: sinks append, even over the spec's own mode, so two
+    calls into one FileSink path keep both batches' rows."""
+    from topn_spark.pipelines import run_pipeline_with_source
+
+    dst = str(tmp_path / "fed")
+    spec = {
+        "stages": [
+            {"name": "src", "plugin": "File",
+             "properties": {"path": "<injected>"}},
+            {"name": "sink", "plugin": "FileSink",
+             "properties": {"path": dst, "mode": "overwrite"}},
+        ],
+        "connections": [{"from": "src", "to": "sink"}],
+    }
+    for lo in (0, 3):
+        batch = spark.createDataFrame(
+            GOLDEN[lo:lo + 3], "name string, age int"
         )
+        run_pipeline_with_source(spark, spec, "src", batch)
+    got = sorted(r.name for r in spark.read.parquet(dst).collect())
+    assert got == sorted(name for name, _ in GOLDEN)
+
+
+def test_one_dag_walker_and_one_stream_starter():
+    """The pipeline glue is single-sourced: one DAG walker serves
+    deploy, run, injected-source and streaming execution, and one
+    helper starts every foreachBatch stream (the only place that
+    sets the checkpoint and trigger policy). Pinned structurally so
+    a re-grown copy turns the suite red."""
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parent.parent / "topn_spark"
+    sources = {p: p.read_text() for p in sorted(pkg.rglob("*.py"))}
+    starts = [
+        str(p.relative_to(pkg))
+        for p, text in sources.items()
+        for _ in range(text.count("trigger(availableNow=True)"))
+    ]
+    assert len(starts) == 1, starts
+    for gone in ("_run_with_source", "_validate_against", "_execute("):
+        holders = [str(p) for p, text in sources.items() if gone in text]
+        assert not holders, (gone, holders)
 
 
 def test_union_and_window_plugins(spark, tmp_path):

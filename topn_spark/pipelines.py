@@ -18,16 +18,29 @@ two-phase lifecycle:
    TopN.java:74-82): substitute macros, re-validate the literal
    configs, execute sinks.
 
+Every entry point is a thin call to ONE DAG walker, ``_walk``: it
+checks stage names, plugins and declared types, topo-orders the DAG,
+runs each stage's handler in the requested phase and prefixes every
+collected failure with its stage. ``run_pipeline_with_source`` and
+``run_streaming_pipeline`` hand the walker an INJECTED source — a
+DataFrame that stands in for the named source stage's output (an
+in-memory frame, a fixture, or one micro-batch of a stream) — and an
+append write mode for the sinks.
+
 Stage types mirror CDAP's: ``batchsource``, ``transform``,
-``batchaggregator``, ``batchjoiner``, ``batchsink``. The plugin set
-covers the pipelines the reference participates in (File source/sink,
-Projection, Filter, SQL, Deduplicate, GroupByAggregate, Joiner, TopN);
-registering more is one dict entry.
+``batchaggregator``, ``batchjoiner``, ``batchsink``. ``PLUGINS`` maps
+each plugin name to its type and handler: the reference's pipeline
+plugins (File source/sink, Projection, Filter, SQL, Deduplicate,
+GroupByAggregate, Joiner, TopN) plus the corpus, SFT and
+binary-export stages; registering more is one dict entry. Handlers
+read their properties through the shared readers (``_str_prop``,
+``_int_prop``, ``_float_prop``, ``_choice_prop``, ``_fields_prop``),
+which own the parse, the @Macro lifecycle and the failure text.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -50,6 +63,125 @@ class Stage:
     type: str
     plugin: str
     properties: dict = field(default_factory=dict)
+
+
+#: the flag choices, and the hint several plugins print for them
+_TF = ("true", "false")
+_TF_HINT = "'true' or 'false'."
+
+
+def _require_field(df, field, collector, prop):
+    if field not in df.columns:
+        collector.add_failure(
+            f"Column '{field}' not in input schema.",
+            property_name=prop,
+        )
+        return False
+    return True
+
+
+def _str_prop(p, name, default, collector, substitutions, phase):
+    """A property's raw value under the @Macro lifecycle: substituted
+    at run (an unresolvable macro is collected and left in place),
+    as written at deploy."""
+    raw = p.get(name, default)
+    if phase == "run":
+        raw = substitute_macros(raw, substitutions or {}, collector, name)
+    return raw
+
+
+def _int_prop(
+    p, name, default, collector, lo=1,
+    substitutions=None, phase="deploy", hint=None,
+):
+    """Parse an integer stage property with the @Macro lifecycle: a
+    ``${...}`` value defers validation at deploy (returns the
+    default as a schema-faithful placeholder) and substitutes-then-
+    validates at run, exactly like the string-prop handlers. A bad
+    value collects ``Invalid <name> '<v>'. An integer.`` and one
+    below ``lo`` collects ``<name> must be >= <lo>, got <v>.``; with
+    a ``hint`` both collect ``Invalid <name> '<v>'. <hint>``. Either
+    way the result is None."""
+    raw = _str_prop(p, name, str(default), collector, substitutions, phase)
+    if contains_macro(raw):
+        return default if phase == "deploy" else None
+    try:
+        v = int(raw)
+    except (TypeError, ValueError):
+        v = None
+    if v is None or (hint and v < lo):
+        collector.add_failure(
+            f"Invalid {name} '{raw}'.", hint or "An integer.",
+            property_name=name,
+        )
+        return None
+    if v < lo:
+        collector.add_failure(
+            f"{name} must be >= {lo}, got {v}.", property_name=name
+        )
+        return None
+    return v
+
+
+def _float_prop(
+    p, name, default, hint, collector,
+    substitutions=None, phase="deploy", lo=None, hi=None,
+):
+    """Parse a float stage property with the same @Macro lifecycle.
+    ``default`` is the raw text used when the property is absent
+    (None: optional, reads None); a macro reads as the default. A
+    value that does not parse or falls outside ``[lo, hi]`` collects
+    ``Invalid <name> '<v>'. <hint>`` and reads None."""
+    raw = _str_prop(p, name, default, collector, substitutions, phase)
+    if raw is None or contains_macro(str(raw)):
+        return None if default is None else float(default)
+    try:
+        v = float(raw)
+    except (TypeError, ValueError):
+        v = None
+    if v is None or not (
+        (lo is None or v >= lo) and (hi is None or v <= hi)
+    ):
+        collector.add_failure(
+            f"Invalid {name} '{raw}'.", hint, property_name=name
+        )
+        return None
+    return v
+
+
+def _choice_prop(
+    p, name, default, choices, collector, hint=None, label=None,
+    fold=False,
+):
+    """An enumerated property. A value outside ``choices`` collects
+    ``Invalid <name> '<v>'.`` (``Unknown <label> '<v>'.`` when a
+    label is given) with ``hint`` (default ``One of a, b.``) and
+    reads None. ``fold`` compares (and returns) the lower-cased
+    value; the message still shows the value as written."""
+    raw = p.get(name, default)
+    v = raw.lower() if fold else raw
+    if v in choices:
+        return v
+    collector.add_failure(
+        f"Unknown {label} '{raw}'." if label else f"Invalid {name} '{raw}'.",
+        hint or f"One of {', '.join(choices)}.",
+        property_name=name,
+    )
+    return None
+
+
+def _fields_prop(p, name, collector=None, df=None, default=""):
+    """A comma-list property as its stripped, non-empty items. With
+    ``df``, items missing from its schema collect ``Columns [...] not
+    in input schema.`` and the result is None."""
+    names = [c.strip() for c in p.get(name, default).split(",") if c.strip()]
+    missing = [c for c in names if df is not None and c not in df.columns]
+    if missing:
+        collector.add_failure(
+            f"Columns {missing} not in input schema.", property_name=name
+        )
+        return None
+    return names
 
 
 _AGG_FUNCS: dict[str, Callable] = {
@@ -124,7 +256,8 @@ def _stage_source(spark, stage, inputs, collector, substitutions, phase):
             if k in p:
                 r = r.option(k, p[k])
         return r.load()
-    path, fmt = p["path"], p.get("format", "parquet")
+    path = _str_prop(p, "path", None, collector, substitutions, phase)
+    fmt = _str_prop(p, "format", "parquet", collector, substitutions, phase)
     # @Macro lifecycle, same as Filter/SQL/TopN: a macro'd path or
     # format cannot be read at deploy. If an explicit literal schema is
     # given, validate downstream against an empty typed frame; else
@@ -134,15 +267,8 @@ def _stage_source(spark, stage, inputs, collector, substitutions, phase):
         if schema and not contains_macro(schema):
             return spark.createDataFrame([], schema)
         return None  # downstream validation deferred to run
-    if phase == "run":
-        path = substitute_macros(
-            path, substitutions or {}, collector, "path"
-        )
-        fmt = substitute_macros(
-            fmt, substitutions or {}, collector, "format"
-        )
-        if collector.failures:
-            return None
+    if collector.failures:
+        return None
     return read(spark, path, fmt=fmt, schema=p.get("schema"))
 
 
@@ -150,17 +276,10 @@ def _stage_projection(spark, stage, inputs, collector, substitutions, phase):
     (df,) = inputs
     p = stage.properties
     if "select" in p:
-        cols = [c.strip() for c in p["select"].split(",")]
-        missing = [c for c in cols if c not in df.columns]
-        if missing:
-            collector.add_failure(
-                f"Columns {missing} not in input schema.",
-                property_name="select",
-            )
-            return df
-        return df.select(*cols)
+        cols = _fields_prop(p, "select", collector, df)
+        return df if cols is None else df.select(*cols)
     if "drop" in p:
-        return df.drop(*[c.strip() for c in p["drop"].split(",")])
+        return df.drop(*_fields_prop(p, "drop"))
     collector.add_failure(
         "Projection needs 'select' or 'drop'.", property_name="select"
     )
@@ -169,18 +288,16 @@ def _stage_projection(spark, stage, inputs, collector, substitutions, phase):
 
 def _stage_filter(spark, stage, inputs, collector, substitutions, phase):
     (df,) = inputs
-    cond = stage.properties.get("condition")
-    if not cond:
+    if not stage.properties.get("condition"):
         collector.add_failure(
             "Filter needs a 'condition'.", property_name="condition"
         )
         return df
+    cond = _str_prop(
+        stage.properties, "condition", None, collector, substitutions, phase
+    )
     if phase == "deploy" and contains_macro(cond):
         return df  # deferred
-    if phase == "run":
-        cond = substitute_macros(
-            cond, substitutions or {}, collector, "condition"
-        )
     try:
         return df.where(F.expr(cond))
     except Exception as e:  # analyzer error → collected, not raised
@@ -223,36 +340,24 @@ def _stage_sql(spark, stage, inputs, collector, substitutions, phase):
 def _stage_dedup(spark, stage, inputs, collector, substitutions, phase):
     (df,) = inputs
     p = stage.properties
-    uniq = [
-        c.strip() for c in p.get("uniqueFields", "").split(",") if c.strip()
-    ]
-    if not uniq:
+    uniq = _fields_prop(p, "uniqueFields", collector, df)
+    if uniq == []:
         collector.add_failure(
             "Deduplicate needs 'uniqueFields'.",
             property_name="uniqueFields",
         )
+    if not uniq:
         return df
-    missing = [c for c in uniq if c not in df.columns]
-    if missing:
-        collector.add_failure(
-            f"Columns {missing} not in input schema.",
-            property_name="uniqueFields",
-        )
-        return df
-    tiebreak = [
-        c.strip() for c in p.get("tiebreak", "").split(",") if c.strip()
-    ] or [c for c in df.columns if c not in uniq][:1]
+    tiebreak = _fields_prop(p, "tiebreak") or [
+        c for c in df.columns if c not in uniq
+    ][:1]
     return dedup_exact(df, subset=uniq, tiebreak=tiebreak)
 
 
 def _stage_groupby(spark, stage, inputs, collector, substitutions, phase):
     (df,) = inputs
     p = stage.properties
-    keys = [
-        c.strip()
-        for c in p.get("groupByFields", "").split(",")
-        if c.strip()
-    ]
+    keys = _fields_prop(p, "groupByFields")
     aggs = _parse_aggregates(p.get("aggregates", ""), collector)
     if not aggs:
         return df
@@ -311,12 +416,9 @@ def _stage_sink(spark, stage, inputs, collector, substitutions, phase):
         # @Macro lifecycle: resolve ${...} in path/format before the
         # write — a macro'd sink path must never create a literal
         # '${out}' directory
-        path = substitute_macros(
-            p["path"], substitutions or {}, collector, "path"
-        )
-        fmt = substitute_macros(
-            p.get("format", "parquet"), substitutions or {},
-            collector, "format",
+        path = _str_prop(p, "path", None, collector, substitutions, phase)
+        fmt = _str_prop(
+            p, "format", "parquet", collector, substitutions, phase
         )
         if collector.failures:
             return df
@@ -352,11 +454,7 @@ def _stage_window(spark, stage, inputs, collector, substitutions, phase):
 
     (df,) = inputs
     p = stage.properties
-    parts = [
-        c.strip()
-        for c in p.get("partitionFields", "").split(",")
-        if c.strip()
-    ]
+    parts = _fields_prop(p, "partitionFields")
     order = p.get("orderField", "")
     if not order:
         collector.add_failure(
@@ -395,16 +493,6 @@ def _stage_window(spark, stage, inputs, collector, substitutions, phase):
         )
         return df
     return df.withColumn(alias, exprs[fn]())
-
-
-def _require_field(df, field, collector, prop):
-    if field not in df.columns:
-        collector.add_failure(
-            f"Column '{field}' not in input schema.",
-            property_name=prop,
-        )
-        return False
-    return True
 
 
 def _stage_html_extract(
@@ -464,18 +552,14 @@ def _stage_normalize_unicode(
     (df,) = inputs
     p = stage.properties
     text_col = p.get("textField", "text")
-    form = p.get("form", "NFC")
     # validate every property independently so one bad upstream stage
     # doesn't mask this stage's own config errors in the batch report
-    ok = _require_field(df, text_col, collector, "textField")
-    if form not in ("NFC", "NFD", "NFKC", "NFKD"):
-        collector.add_failure(
-            f"Unknown normalization form '{form}'.",
-            "One of NFC, NFD, NFKC, NFKD.",
-            property_name="form",
-        )
-        ok = False
-    if not ok:
+    _require_field(df, text_col, collector, "textField")
+    form = _choice_prop(
+        p, "form", "NFC", ("NFC", "NFD", "NFKC", "NFKD"), collector,
+        label="normalization form",
+    )
+    if collector.failures:
         return df
     from topn_spark.operators.textstats import normalize_unicode
 
@@ -492,16 +576,9 @@ def _stage_gopher_rules(
     (df,) = inputs
     p = stage.properties
     text_col = p.get("textField", "text")
-    keep_only = p.get("keepOnly", "false")
-    ok = _require_field(df, text_col, collector, "textField")
-    if keep_only not in ("true", "false"):
-        collector.add_failure(
-            f"Invalid keepOnly '{keep_only}'.",
-            "One of true, false.",
-            property_name="keepOnly",
-        )
-        ok = False
-    if not ok:
+    _require_field(df, text_col, collector, "textField")
+    keep_only = _choice_prop(p, "keepOnly", "false", _TF, collector)
+    if collector.failures:
         return df
     from topn_spark.operators.textstats import gopher_rules
 
@@ -523,38 +600,24 @@ def _stage_c4_line_filter(
     (df,) = inputs
     p = stage.properties
     text_col = p.get("textField", "text")
-    keep_only = p.get("keepOnly", "false")
-    ok = _require_field(df, text_col, collector, "textField")
-    if keep_only not in ("true", "false"):
-        collector.add_failure(
-            f"Invalid keepOnly '{keep_only}'.",
-            "One of true, false.",
-            property_name="keepOnly",
+    _require_field(df, text_col, collector, "textField")
+    keep_only = _choice_prop(p, "keepOnly", "false", _TF, collector)
+    min_words, min_sentences = (
+        _int_prop(
+            p, prop, default, collector, lo=0, substitutions=substitutions,
+            phase=phase, hint="A non-negative integer.",
         )
-        ok = False
-    thresholds = {"minWords": 3, "minSentences": 5}
-    for prop, default in list(thresholds.items()):
-        raw = p.get(prop, str(default))
-        try:
-            thresholds[prop] = int(raw)
-            if thresholds[prop] < 0:
-                raise ValueError
-        except ValueError:
-            collector.add_failure(
-                f"Invalid {prop} '{raw}'.",
-                "A non-negative integer.",
-                property_name=prop,
-            )
-            ok = False
-    if not ok:
+        for prop, default in (("minWords", 3), ("minSentences", 5))
+    )
+    if collector.failures:
         return df
     from topn_spark.operators.textstats import c4_line_filter
 
     out = c4_line_filter(
         df,
         text_col,
-        min_words=thresholds["minWords"],
-        min_sentences=thresholds["minSentences"],
+        min_words=min_words,
+        min_sentences=min_sentences,
     )
     if keep_only == "true":
         return (
@@ -575,16 +638,9 @@ def _stage_gopher_repetition(
     (df,) = inputs
     p = stage.properties
     text_col = p.get("textField", "text")
-    keep_only = p.get("keepOnly", "false")
-    ok = _require_field(df, text_col, collector, "textField")
-    if keep_only not in ("true", "false"):
-        collector.add_failure(
-            f"Invalid keepOnly '{keep_only}'.",
-            "One of true, false.",
-            property_name="keepOnly",
-        )
-        ok = False
-    if not ok:
+    _require_field(df, text_col, collector, "textField")
+    keep_only = _choice_prop(p, "keepOnly", "false", _TF, collector)
+    if collector.failures:
         return df
     from topn_spark.operators.textstats import gopher_repetition
 
@@ -607,75 +663,43 @@ def _stage_perplexity_filter(
     tokens have no model opinion and are dropped by the filter)."""
     (df,) = inputs
     p = stage.properties
-    model_path = p.get("modelPath")
     text_col = p.get("textField", "text")
     id_col = p.get("idField", "doc_id")
-    smoothing = p.get("smoothing", "wb")
-    k_raw = p.get("k", "1.0")
-    maxppl_raw = p.get("maxPpl")
-    if phase == "run":
-        # macro lifecycle parity: substitute, then re-validate the
-        # literal values below (macro'd props skipped deploy checks)
-        subs = substitutions or {}
-        model_path = substitute_macros(
-            model_path, subs, collector, "modelPath"
-        )
-        smoothing = substitute_macros(
-            smoothing, subs, collector, "smoothing"
-        )
-        k_raw = substitute_macros(k_raw, subs, collector, "k")
-        maxppl_raw = substitute_macros(
-            maxppl_raw, subs, collector, "maxPpl"
-        )
-    ok = _require_field(df, text_col, collector, "textField")
-    ok = _require_field(df, id_col, collector, "idField") and ok
+    # macro lifecycle parity: substitute at run, then validate the
+    # literal values below (macro'd props skip the deploy checks)
+    model_path = _str_prop(
+        p, "modelPath", None, collector, substitutions, phase
+    )
+    smoothing = _str_prop(
+        p, "smoothing", "wb", collector, substitutions, phase
+    )
+    _require_field(df, text_col, collector, "textField")
+    _require_field(df, id_col, collector, "idField")
     if not model_path:
         collector.add_failure(
             "Required property 'modelPath' is missing.",
             "Point it at a save_bigram_lm artifact.",
             property_name="modelPath",
         )
-        ok = False
-    if not contains_macro(smoothing) and smoothing not in (
-        "addk",
-        "wb",
-    ):
+    if not contains_macro(smoothing) and smoothing not in ("addk", "wb"):
         collector.add_failure(
             f"Unknown smoothing '{smoothing}'.",
             "One of addk, wb.",
             property_name="smoothing",
         )
-        ok = False
-    k, max_ppl = 1.0, None
-    if not contains_macro(k_raw):
-        try:
-            k = float(k_raw)
-        except ValueError:
-            collector.add_failure(
-                f"Invalid k '{k_raw}'.",
-                "A float.",
-                property_name="k",
-            )
-            ok = False
-    if maxppl_raw is not None and not contains_macro(maxppl_raw):
-        try:
-            max_ppl = float(maxppl_raw)
-        except ValueError:
-            collector.add_failure(
-                f"Invalid maxPpl '{maxppl_raw}'.",
-                "A float.",
-                property_name="maxPpl",
-            )
-            ok = False
-    if not ok:
+    k = _float_prop(p, "k", "1.0", "A float.", collector, substitutions, phase)
+    max_ppl = _float_prop(
+        p, "maxPpl", None, "A float.", collector, substitutions, phase
+    )
+    if collector.failures:
         return df
     if phase == "deploy" and (
-        contains_macro(model_path) or contains_macro(maxppl_raw)
+        contains_macro(model_path) or contains_macro(p.get("maxPpl"))
     ):
         # schema-faithful placeholder: scoring needs the (deferred)
         # model; with a maxPpl cut the output schema == input schema,
         # else the three score columns append
-        if maxppl_raw is not None:
+        if "maxPpl" in p:
             return df
         return (
             df.withColumn("n_bigrams", F.lit(None).cast("bigint"))
@@ -726,23 +750,16 @@ def _stage_routed_quality(
 
     (df,) = inputs
     p = stage.properties
-    routes_raw = p.get("routes")
-    lm_paths_raw = p.get("lmPaths")
     lang_col = p.get("langField", "lang")
     text_col = p.get("textField", "text")
     id_col = p.get("idField", "doc_id")
     smoothing = p.get("smoothing", "wb")
-    keep_only = p.get("keepOnly", "false")
-    if phase == "run":
-        subs = substitutions or {}
-        routes_raw = substitute_macros(
-            routes_raw, subs, collector, "routes"
-        )
-        lm_paths_raw = substitute_macros(
-            lm_paths_raw, subs, collector, "lmPaths"
-        )
-    ok = _require_field(df, lang_col, collector, "langField")
-    ok = _require_field(df, text_col, collector, "textField") and ok
+    routes_raw = _str_prop(p, "routes", None, collector, substitutions, phase)
+    lm_paths_raw = _str_prop(
+        p, "lmPaths", None, collector, substitutions, phase
+    )
+    _require_field(df, lang_col, collector, "langField")
+    _require_field(df, text_col, collector, "textField")
     if not routes_raw:
         collector.add_failure(
             "Required property 'routes' is missing.",
@@ -760,7 +777,6 @@ def _stage_routed_quality(
                 "A JSON object: lang -> parameter overrides.",
                 property_name="routes",
             )
-            ok = False
         if routes is not None and (
             not isinstance(routes, dict)
             or not all(
@@ -772,7 +788,7 @@ def _stage_routed_quality(
                 "e.g. {\"en\": {}, \"de\": {\"min_stop_hits\": 3}}",
                 property_name="routes",
             )
-            routes, ok = None, False
+            routes = None
         if routes is not None:
             bad = sorted(
                 {
@@ -788,7 +804,6 @@ def _stage_routed_quality(
                     f"Valid: {sorted(ROUTE_DEFAULTS)}.",
                     property_name="routes",
                 )
-                ok = False
     lm_paths = {}
     if lm_paths_raw is not None and not contains_macro(lm_paths_raw):
         try:
@@ -799,13 +814,12 @@ def _stage_routed_quality(
                 "A JSON object: lang -> artifact path.",
                 property_name="lmPaths",
             )
-            ok = False
         if not isinstance(lm_paths, dict):
             collector.add_failure(
                 "lmPaths must map language -> artifact path.",
                 property_name="lmPaths",
             )
-            lm_paths, ok = {}, False
+            lm_paths = {}
     if routes is not None:
         unmodeled = sorted(
             g
@@ -820,15 +834,8 @@ def _stage_routed_quality(
                 "Add the language to lmPaths.",
                 property_name="lmPaths",
             )
-            ok = False
-    if keep_only not in ("true", "false"):
-        collector.add_failure(
-            f"Invalid keepOnly '{keep_only}'.",
-            "'true' or 'false'.",
-            property_name="keepOnly",
-        )
-        ok = False
-    if not ok or routes is None:
+    keep_only = _choice_prop(p, "keepOnly", "false", _TF, collector, _TF_HINT)
+    if collector.failures or routes is None:
         return df
     if phase == "deploy" and (
         contains_macro(routes_raw)
@@ -882,39 +889,24 @@ def _stage_dsir_weights(
     idField ('doc_id'), nBuckets ('256')."""
     (df,) = inputs
     p = stage.properties
-    target_path = p.get("targetPath")
     text_col = p.get("textField", "text")
     id_col = p.get("idField", "doc_id")
-    nb_raw = p.get("nBuckets", "256")
-    if phase == "run":
-        subs = substitutions or {}
-        target_path = substitute_macros(
-            target_path, subs, collector, "targetPath"
-        )
-        nb_raw = substitute_macros(nb_raw, subs, collector, "nBuckets")
-    ok = _require_field(df, text_col, collector, "textField")
-    ok = _require_field(df, id_col, collector, "idField") and ok
+    target_path = _str_prop(
+        p, "targetPath", None, collector, substitutions, phase
+    )
+    _require_field(df, text_col, collector, "textField")
+    _require_field(df, id_col, collector, "idField")
     if not target_path:
         collector.add_failure(
             "Required property 'targetPath' is missing.",
             "Point it at a parquet corpus with the text field.",
             property_name="targetPath",
         )
-        ok = False
-    n_buckets = 256
-    if not contains_macro(nb_raw):
-        try:
-            n_buckets = int(nb_raw)
-            if n_buckets < 2:
-                raise ValueError
-        except ValueError:
-            collector.add_failure(
-                f"Invalid nBuckets '{nb_raw}'.",
-                "An integer >= 2.",
-                property_name="nBuckets",
-            )
-            ok = False
-    if not ok:
+    n_buckets = _int_prop(
+        p, "nBuckets", 256, collector, lo=2, substitutions=substitutions,
+        phase=phase, hint="An integer >= 2.",
+    )
+    if collector.failures:
         return df
     if phase == "deploy" and contains_macro(target_path):
         # schema-faithful placeholder until the macro resolves
@@ -951,35 +943,21 @@ def _stage_langid(
     the corpus-routing deployment shape)."""
     (df,) = inputs
     p = stage.properties
-    model_path = p.get("modelPath")
     text_col = p.get("textField", "text")
     id_col = p.get("idField", "doc_id")
-    keep_scores = p.get("keepScores", "false")
-    keep_only = p.get("keepOnly")
-    if phase == "run":
-        subs = substitutions or {}
-        model_path = substitute_macros(
-            model_path, subs, collector, "modelPath"
-        )
-        keep_only = substitute_macros(
-            keep_only, subs, collector, "keepOnly"
-        )
-    ok = _require_field(df, text_col, collector, "textField")
-    ok = _require_field(df, id_col, collector, "idField") and ok
+    model_path = _str_prop(
+        p, "modelPath", None, collector, substitutions, phase
+    )
+    keep_only = _str_prop(p, "keepOnly", None, collector, substitutions, phase)
+    _require_field(df, text_col, collector, "textField")
+    _require_field(df, id_col, collector, "idField")
     if not model_path:
         collector.add_failure(
             "Required property 'modelPath' is missing.",
             "Point it at a save_langid artifact.",
             property_name="modelPath",
         )
-        ok = False
-    if keep_scores not in ("true", "false"):
-        collector.add_failure(
-            f"Invalid keepScores '{keep_scores}'.",
-            "One of true, false.",
-            property_name="keepScores",
-        )
-        ok = False
+    keep_scores = _choice_prop(p, "keepScores", "false", _TF, collector)
     if (
         keep_scores == "true"
         and contains_macro(model_path)
@@ -991,8 +969,7 @@ def _stage_langid(
             "which a macro'd path cannot supply at deploy time.",
             property_name="keepScores",
         )
-        ok = False
-    if not ok:
+    if collector.failures:
         return df
     if phase == "deploy" and contains_macro(model_path):
         # schema-faithful placeholder: keepOnly preserves the input
@@ -1023,36 +1000,6 @@ def _stage_langid(
     return out
 
 
-def _int_prop(
-    p, name, default, collector, lo=1,
-    substitutions=None, phase="deploy",
-):
-    """Parse an integer stage property with the @Macro lifecycle: a
-    ``${...}`` value defers validation at deploy (returns the
-    default as a schema-faithful placeholder) and substitutes-then-
-    validates at run, exactly like the string-prop handlers."""
-    raw = p.get(name, str(default))
-    if phase == "run":
-        raw = substitute_macros(
-            raw, substitutions or {}, collector, name
-        )
-    if contains_macro(raw):
-        return default if phase == "deploy" else None
-    try:
-        v = int(raw)
-    except (TypeError, ValueError):
-        collector.add_failure(
-            f"Invalid {name} '{raw}'.", "An integer.", property_name=name
-        )
-        return None
-    if v < lo:
-        collector.add_failure(
-            f"{name} must be >= {lo}, got {v}.", property_name=name
-        )
-        return None
-    return v
-
-
 def _stage_warc_source(
     spark, stage, inputs, collector, substitutions, phase
 ):
@@ -1069,20 +1016,12 @@ def _stage_warc_source(
     a crawl dump ships (CommonCrawl: ~1 GB .warc.gz segments)."""
     p = stage.properties
     path = p.get("path")
-    strict = p.get("strict", "true")
-    ok = True
     if not path:
         collector.add_failure(
             "Warc source needs a 'path'.", property_name="path"
         )
-        ok = False
-    if strict not in ("true", "false"):
-        collector.add_failure(
-            f"Invalid strict '{strict}'.", "One of true, false.",
-            property_name="strict",
-        )
-        ok = False
-    if not ok:
+    strict = _choice_prop(p, "strict", "true", _TF, collector)
+    if collector.failures:
         return None
     from topn_spark.sources.warc import parse_warc
 
@@ -1094,12 +1033,9 @@ def _stage_warc_source(
             [], "blob_id string, content binary"
         )
         return parse_warc(empty, id_col="blob_id", strict=True)
-    if phase == "run":
-        path = substitute_macros(
-            path, substitutions or {}, collector, "path"
-        )
-        if collector.failures:
-            return None
+    path = _str_prop(p, "path", None, collector, substitutions, phase)
+    if collector.failures:
+        return None
     blobs = spark.read.format("binaryFile").load(path).select(
         F.col("path").alias("blob_id"), "content"
     )
@@ -1118,16 +1054,10 @@ def _stage_warc_parse(
     p = stage.properties
     content_col = p.get("contentField", "content")
     id_col = p.get("idField", "blob_id")
-    strict = p.get("strict", "true")
-    ok = _require_field(df, content_col, collector, "contentField")
-    ok = _require_field(df, id_col, collector, "idField") and ok
-    if strict not in ("true", "false"):
-        collector.add_failure(
-            f"Invalid strict '{strict}'.", "One of true, false.",
-            property_name="strict",
-        )
-        ok = False
-    if not ok:
+    _require_field(df, content_col, collector, "contentField")
+    _require_field(df, id_col, collector, "idField")
+    strict = _choice_prop(p, "strict", "true", _TF, collector)
+    if collector.failures:
         return df
     from topn_spark.sources.warc import parse_warc
 
@@ -1135,6 +1065,98 @@ def _stage_warc_parse(
         df, content_col=content_col, id_col=id_col,
         strict=strict == "true",
     )
+
+
+#: the two LSH hash families the near-dup stages offer
+_FAMILIES = ("xxhash", "md5")
+
+
+def _lsh_props(p, family, collector, substitutions, phase):
+    """The MinHash-LSH pair-graph knobs LeakageSafeSplit and
+    NearDupCollapse share: ``(numHashes, bands, shingleSize,
+    threshold)`` with family-dependent defaults, or None once the
+    stage has collected any failure."""
+    xx = family == "xxhash"
+    num_hashes = _int_prop(
+        p, "numHashes", 32 if xx else 8, collector,
+        substitutions=substitutions, phase=phase,
+    )
+    bands = _int_prop(
+        p, "bands", 8 if xx else 4, collector,
+        substitutions=substitutions, phase=phase,
+    )
+    shingle = _int_prop(
+        p, "shingleSize", 3, collector,
+        substitutions=substitutions, phase=phase,
+    )
+    threshold = _float_prop(
+        p, "threshold", "0.8" if xx else "0.5", "A number in [0, 1].",
+        collector, substitutions, phase,
+    )
+    if collector.failures:
+        return None
+    if num_hashes % bands:
+        collector.add_failure(
+            f"numHashes ({num_hashes}) must divide into bands"
+            f" ({bands}).",
+            property_name="bands",
+        )
+        return None
+    return num_hashes, bands, shingle, threshold
+
+
+def _lsh_pairs(df, family, id_col, text_col, num_hashes, bands, shingle,
+               threshold):
+    """Candidate near-duplicate ``(id_a, id_b)`` pairs under ``family``."""
+    from topn_spark.operators.dedup import (
+        lsh_pairs_md5,
+        minhash_dedup_pairs,
+    )
+
+    if family == "md5":
+        pairs = lsh_pairs_md5(
+            df, id_col, text_col, num_hashes, bands, shingle, threshold
+        )
+    else:
+        pairs = minhash_dedup_pairs(
+            df, id_col, text_col, threshold, num_hashes, bands, shingle
+        )
+    return pairs.select("id_a", "id_b")
+
+
+def _mixture_weights(p, plugin, weights_raw, collector):
+    """The mixture stages' required ``totalTokens`` and
+    ``'group:weight,group:weight'`` weights: the weights dict, or None
+    while deferred by a macro or invalid."""
+    if "totalTokens" not in p:
+        collector.add_failure(
+            f"{plugin} needs 'totalTokens'.", property_name="totalTokens"
+        )
+    fmt = "Format: 'group:weight,group:weight'."
+    if not weights_raw:
+        collector.add_failure(
+            f"{plugin} needs 'weights'.", fmt, property_name="weights"
+        )
+        return None
+    if contains_macro(weights_raw):
+        return None
+    try:
+        weights = {
+            g.strip(): float(w)
+            for g, w in (
+                part.split(":", 1)
+                for part in weights_raw.split(",")
+                if part.strip()
+            )
+        }
+    except ValueError:
+        weights = None
+    if not weights:
+        collector.add_failure(
+            f"Unparseable weights '{weights_raw}'.", fmt,
+            property_name="weights",
+        )
+    return weights or None
 
 
 def _stage_leakage_split(
@@ -1156,54 +1178,11 @@ def _stage_leakage_split(
     text_col = p.get("textField", "text")
     id_col = p.get("idField", "doc_id")
     out_col = p.get("splitField", "split")
-    family = p.get("family", "xxhash")
-    ok = _require_field(df, text_col, collector, "textField")
-    ok = _require_field(df, id_col, collector, "idField") and ok
-    if family not in ("xxhash", "md5"):
-        collector.add_failure(
-            f"Invalid family '{family}'.", "One of xxhash, md5.",
-            property_name="family",
-        )
-        ok = False
-    num_hashes = _int_prop(
-        p, "numHashes", 32 if family == "xxhash" else 8, collector,
-        substitutions=substitutions, phase=phase,
-    )
-    bands = _int_prop(
-        p, "bands", 8 if family == "xxhash" else 4, collector,
-        substitutions=substitutions, phase=phase,
-    )
-    shingle = _int_prop(
-        p, "shingleSize", 3, collector,
-        substitutions=substitutions, phase=phase,
-    )
-    thr_raw = p.get(
-        "threshold", "0.8" if family == "xxhash" else "0.5"
-    )
-    if phase == "run":
-        thr_raw = substitute_macros(
-            thr_raw, substitutions or {}, collector, "threshold"
-        )
-    if contains_macro(thr_raw):
-        threshold = 0.5 if phase == "deploy" else None
-    else:
-        try:
-            threshold = float(thr_raw)
-        except (TypeError, ValueError):
-            threshold = None
-            collector.add_failure(
-                f"Invalid threshold '{thr_raw}'.",
-                "A number in [0, 1].",
-                property_name="threshold",
-            )
-    if None in (num_hashes, bands, shingle, threshold) or not ok:
-        return df
-    if num_hashes % bands:
-        collector.add_failure(
-            f"numHashes ({num_hashes}) must divide into bands"
-            f" ({bands}).",
-            property_name="bands",
-        )
+    _require_field(df, text_col, collector, "textField")
+    _require_field(df, id_col, collector, "idField")
+    family = _choice_prop(p, "family", "xxhash", _FAMILIES, collector)
+    lsh = _lsh_props(p, family, collector, substitutions, phase)
+    if lsh is None:
         return df
     if phase == "deploy":
         # schema-faithful placeholder: the connected-components
@@ -1212,10 +1191,6 @@ def _stage_leakage_split(
         return df.withColumn(
             "component", F.col(id_col)
         ).withColumn(out_col, F.lit(None).cast("string"))
-    from topn_spark.operators.dedup import (
-        lsh_pairs_md5,
-        minhash_dedup_pairs,
-    )
     from topn_spark.operators.pipeline import leakage_safe_split
 
     # Materialize the stage input ONCE: it fans out to the LSH pair
@@ -1225,17 +1200,8 @@ def _stage_leakage_split(
     # per consumer (measured: the upstream chain executed 3x per
     # z49 run, ~14 s of CPU per execution at sf0.1).
     df = df.localCheckpoint(eager=True)
-    if family == "md5":
-        pairs = lsh_pairs_md5(
-            df, id_col, text_col, num_hashes, bands, shingle, threshold
-        )
-    else:
-        pairs = minhash_dedup_pairs(
-            df, id_col, text_col, threshold, num_hashes, bands, shingle
-        )
-    return leakage_safe_split(
-        df, pairs.select("id_a", "id_b"), id_col=id_col, out_col=out_col
-    )
+    pairs = _lsh_pairs(df, family, id_col, text_col, *lsh)
+    return leakage_safe_split(df, pairs, id_col=id_col, out_col=out_col)
 
 
 def _stage_neardup_collapse(
@@ -1254,77 +1220,24 @@ def _stage_neardup_collapse(
     text_col = p.get("textField", "text")
     id_col = p.get("idField", "doc_id")
     score_col = p.get("scoreField")
-    family = p.get("family", "xxhash")
-    ok = _require_field(df, text_col, collector, "textField")
-    ok = _require_field(df, id_col, collector, "idField") and ok
+    _require_field(df, text_col, collector, "textField")
+    _require_field(df, id_col, collector, "idField")
     if score_col is not None:
-        ok = _require_field(df, score_col, collector, "scoreField") and ok
-    if family not in ("xxhash", "md5"):
-        collector.add_failure(
-            f"Invalid family '{family}'.", "One of xxhash, md5.",
-            property_name="family",
-        )
-        ok = False
-    num_hashes = _int_prop(
-        p, "numHashes", 32 if family == "xxhash" else 8, collector,
-        substitutions=substitutions, phase=phase,
-    )
-    bands = _int_prop(
-        p, "bands", 8 if family == "xxhash" else 4, collector,
-        substitutions=substitutions, phase=phase,
-    )
-    shingle = _int_prop(
-        p, "shingleSize", 3, collector,
-        substitutions=substitutions, phase=phase,
-    )
-    thr_raw = p.get(
-        "threshold", "0.8" if family == "xxhash" else "0.5"
-    )
-    if phase == "run":
-        thr_raw = substitute_macros(
-            thr_raw, substitutions or {}, collector, "threshold"
-        )
-    try:
-        threshold = (
-            0.5 if contains_macro(thr_raw) else float(thr_raw)
-        )
-    except (TypeError, ValueError):
-        threshold = None
-        collector.add_failure(
-            f"Invalid threshold '{thr_raw}'.", "A number in [0, 1].",
-            property_name="threshold",
-        )
-    if None in (num_hashes, bands, shingle, threshold) or not ok:
-        return df
-    if num_hashes % bands:
-        collector.add_failure(
-            f"numHashes ({num_hashes}) must divide into bands"
-            f" ({bands}).",
-            property_name="bands",
-        )
+        _require_field(df, score_col, collector, "scoreField")
+    family = _choice_prop(p, "family", "xxhash", _FAMILIES, collector)
+    lsh = _lsh_props(p, family, collector, substitutions, phase)
+    if lsh is None:
         return df
     if phase == "deploy":
         # the CC fixpoint executes jobs — never at validation time
         return df.withColumn("component", F.col(id_col))
-    from topn_spark.operators.dedup import (
-        lsh_pairs_md5,
-        minhash_dedup_pairs,
-        neardup_keep_best,
-    )
+    from topn_spark.operators.dedup import neardup_keep_best
 
     # same fan-out as LeakageSafeSplit: the stage input feeds the
     # pair graph, the CC edges, the component join-back and the
     # downstream stages — materialize it once (run phase only)
     df = df.localCheckpoint(eager=True)
-    if family == "md5":
-        pairs = lsh_pairs_md5(
-            df, id_col, text_col, num_hashes, bands, shingle, threshold
-        )
-    else:
-        pairs = minhash_dedup_pairs(
-            df, id_col, text_col, threshold, num_hashes, bands, shingle
-        )
-    pairs = pairs.select("id_a", "id_b")
+    pairs = _lsh_pairs(df, family, id_col, text_col, *lsh)
     if score_col is not None:
         return neardup_keep_best(df, pairs, score_col, id_col=id_col)
     # min-id convention: rank on a constant score
@@ -1345,58 +1258,21 @@ def _stage_token_budget_mixture(
     ('doc_id'), tokenField ('n_tokens')."""
     (df,) = inputs
     p = stage.properties
-    weights_raw = p.get("weights")
     group_col = p.get("groupField", "source")
     id_col = p.get("idField", "doc_id")
     token_col = p.get("tokenField", "n_tokens")
-    if phase == "run":
-        weights_raw = substitute_macros(
-            weights_raw, substitutions or {}, collector, "weights"
-        )
+    weights_raw = _str_prop(
+        p, "weights", None, collector, substitutions, phase
+    )
     total = _int_prop(
         p, "totalTokens", 0, collector, lo=0,
         substitutions=substitutions, phase=phase,
     )
-    ok = _require_field(df, group_col, collector, "groupField")
-    ok = _require_field(df, id_col, collector, "idField") and ok
-    ok = _require_field(df, token_col, collector, "tokenField") and ok
-    if "totalTokens" not in p:
-        collector.add_failure(
-            "TokenBudgetMixture needs 'totalTokens'.",
-            property_name="totalTokens",
-        )
-        ok = False
-    weights = None
-    if not weights_raw:
-        collector.add_failure(
-            "TokenBudgetMixture needs 'weights'.",
-            "Format: 'group:weight,group:weight'.",
-            property_name="weights",
-        )
-        ok = False
-    elif not contains_macro(weights_raw):
-        try:
-            weights = {
-                g.strip(): float(w)
-                for g, w in (
-                    part.split(":", 1)
-                    for part in weights_raw.split(",")
-                    if part.strip()
-                )
-            }
-            if not weights:
-                raise ValueError("empty")
-        except ValueError:
-            weights = None
-            collector.add_failure(
-                f"Unparseable weights '{weights_raw}'.",
-                "Format: 'group:weight,group:weight'.",
-                property_name="weights",
-            )
-            ok = False
-    if total is None or not ok:
-        return df
-    if phase == "deploy" or weights is None:
+    _require_field(df, group_col, collector, "groupField")
+    _require_field(df, id_col, collector, "idField")
+    _require_field(df, token_col, collector, "tokenField")
+    weights = _mixture_weights(p, "TokenBudgetMixture", weights_raw, collector)
+    if collector.failures or phase == "deploy" or weights is None:
         return df  # filter preserves the schema
     from topn_spark.operators.pipeline import token_budget_mixture
 
@@ -1421,14 +1297,12 @@ def _stage_epoch_mixture(
     pipeline.expand_epochs; salt re-deals the interleave)."""
     (df,) = inputs
     p = stage.properties
-    weights_raw = p.get("weights")
     group_col = p.get("groupField", "source")
     id_col = p.get("idField", "doc_id")
     token_col = p.get("tokenField", "n_tokens")
-    if phase == "run":
-        weights_raw = substitute_macros(
-            weights_raw, substitutions or {}, collector, "weights"
-        )
+    weights_raw = _str_prop(
+        p, "weights", None, collector, substitutions, phase
+    )
     total = _int_prop(
         p, "totalTokens", 0, collector, lo=0,
         substitutions=substitutions, phase=phase,
@@ -1439,52 +1313,12 @@ def _stage_epoch_mixture(
             p, "maxEpochs", 1, collector, lo=1,
             substitutions=substitutions, phase=phase,
         )
-    ok = _require_field(df, group_col, collector, "groupField")
-    ok = _require_field(df, id_col, collector, "idField") and ok
-    ok = _require_field(df, token_col, collector, "tokenField") and ok
-    if "totalTokens" not in p:
-        collector.add_failure(
-            "EpochMixture needs 'totalTokens'.",
-            property_name="totalTokens",
-        )
-        ok = False
-    weights = None
-    if not weights_raw:
-        collector.add_failure(
-            "EpochMixture needs 'weights'.",
-            "Format: 'group:weight,group:weight'.",
-            property_name="weights",
-        )
-        ok = False
-    elif not contains_macro(weights_raw):
-        try:
-            weights = {
-                g.strip(): float(w)
-                for g, w in (
-                    part.split(":", 1)
-                    for part in weights_raw.split(",")
-                    if part.strip()
-                )
-            }
-            if not weights:
-                raise ValueError("empty")
-        except ValueError:
-            weights = None
-            collector.add_failure(
-                f"Unparseable weights '{weights_raw}'.",
-                "Format: 'group:weight,group:weight'.",
-                property_name="weights",
-            )
-            ok = False
-    expand = p.get("expand", "false")
-    if expand not in ("true", "false"):
-        collector.add_failure(
-            f"Invalid expand '{expand}'.",
-            "'true' or 'false'.",
-            property_name="expand",
-        )
-        ok = False
-    if total is None or not ok:
+    _require_field(df, group_col, collector, "groupField")
+    _require_field(df, id_col, collector, "idField")
+    _require_field(df, token_col, collector, "tokenField")
+    weights = _mixture_weights(p, "EpochMixture", weights_raw, collector)
+    expand = _choice_prop(p, "expand", "false", _TF, collector, _TF_HINT)
+    if collector.failures:
         return df
     if phase == "deploy" or weights is None:
         out = df.withColumn("n_epochs", F.lit(None).cast("bigint"))
@@ -1520,17 +1354,12 @@ def _stage_decontaminate(
     compose — the operator raises on a clobber)."""
     (df,) = inputs
     p = stage.properties
-    eval_path = p.get("evalPath")
     text_col = p.get("textField", "text")
     ev_text_col = p.get("evalTextField", text_col)
     id_col = p.get("idField", "doc_id")
-    action = p.get("action", "flag")
     count_col = p.get("countField", "n_contam_grams")
     flag_col = p.get("flagField", "contaminated")
-    if phase == "run":
-        eval_path = substitute_macros(
-            eval_path, substitutions or {}, collector, "evalPath"
-        )
+    eval_path = _str_prop(p, "evalPath", None, collector, substitutions, phase)
     n = _int_prop(
         p, "n", 13, collector, lo=1,
         substitutions=substitutions, phase=phase,
@@ -1539,22 +1368,17 @@ def _stage_decontaminate(
         p, "minHits", 1, collector, lo=1,
         substitutions=substitutions, phase=phase,
     )
-    ok = _require_field(df, text_col, collector, "textField")
-    ok = _require_field(df, id_col, collector, "idField") and ok
+    _require_field(df, text_col, collector, "textField")
+    _require_field(df, id_col, collector, "idField")
     if not eval_path:
         collector.add_failure(
             "Required property 'evalPath' is missing.",
             "Point it at the eval benchmark parquet.",
             property_name="evalPath",
         )
-        ok = False
-    if action not in ("flag", "drop"):
-        collector.add_failure(
-            f"Invalid action '{action}'.",
-            "'flag' or 'drop'.",
-            property_name="action",
-        )
-        ok = False
+    action = _choice_prop(
+        p, "action", "flag", ("flag", "drop"), collector, "'flag' or 'drop'."
+    )
     for prop, col in (("countField", count_col), ("flagField", flag_col)):
         if col in df.columns:
             collector.add_failure(
@@ -1562,8 +1386,7 @@ def _stage_decontaminate(
                 f"Set '{prop}' so successive gates compose.",
                 property_name=prop,
             )
-            ok = False
-    if n is None or min_hits is None or not ok:
+    if collector.failures:
         return df
     if phase == "deploy" and contains_macro(eval_path):
         if action == "drop":
@@ -1607,71 +1430,27 @@ def _stage_tokenize(
     (df,) = inputs
     p = stage.properties
     text_col = p.get("textField", "text")
-    merges_path = p.get("mergesPath")
-    pieces_path = p.get("piecesPath")
-    if merges_path is not None and pieces_path is not None:
+    if p.get("mergesPath") is not None and p.get("piecesPath") is not None:
         collector.add_failure(
             "mergesPath and piecesPath are mutually exclusive.",
             "A stage applies ONE trained tokenizer.",
             property_name="piecesPath",
         )
         return df
-    if phase == "run":
-        merges_path = substitute_macros(
-            merges_path, substitutions or {}, collector, "mergesPath"
+    merges_path = _str_prop(
+        p, "mergesPath", None, collector, substitutions, phase
+    )
+    pieces_path = _str_prop(
+        p, "piecesPath", None, collector, substitutions, phase
+    )
+    _require_field(df, text_col, collector, "textField")
+    if merges_path is None and pieces_path is None:
+        mode = _choice_prop(
+            p, "mode", "unicode", ("ascii", "unicode", "script"), collector,
+            "One of ascii, unicode, script (or set mergesPath "
+            "for trained BPE).",
         )
-        pieces_path = substitute_macros(
-            pieces_path, substitutions or {}, collector, "piecesPath"
-        )
-    ok = _require_field(df, text_col, collector, "textField")
-    if pieces_path is not None:
-        id_col = p.get("idField", "doc_id")
-        lm_mode = p.get("lmMode", "ascii")
-        keep = _int_prop(
-            p, "keepTokens", 0, collector, lo=-1,
-            substitutions=substitutions, phase=phase,
-        )
-        if lm_mode not in ("ascii", "unicode"):
-            collector.add_failure(
-                f"Invalid lmMode '{lm_mode}'.",
-                "One of ascii, unicode.",
-                property_name="lmMode",
-            )
-            ok = False
-        ok = _require_field(df, id_col, collector, "idField") and ok
-        if keep is None or not ok:
-            return df
-        if phase == "deploy" and contains_macro(pieces_path):
-            out = df.withColumn(
-                "n_words", F.lit(None).cast("bigint")
-            ).withColumn("n_lm_tokens", F.lit(None).cast("bigint"))
-            if keep:
-                out = out.withColumn(
-                    "tokens", F.lit(None).cast("array<string>")
-                )
-            return out
-        from topn_spark.operators.textstats import (
-            apply_unigram_lm,
-            load_unigram_lm,
-        )
-
-        pieces = load_unigram_lm(spark, pieces_path)
-        applied = apply_unigram_lm(
-            df.select(id_col, text_col), pieces, id_col=id_col,
-            text_col=text_col, keep_tokens=keep, mode=lm_mode,
-        )
-        return df.join(applied, id_col)
-    if merges_path is None:
-        mode = p.get("mode", "unicode")
-        if mode not in ("ascii", "unicode", "script"):
-            collector.add_failure(
-                f"Invalid mode '{mode}'.",
-                "One of ascii, unicode, script (or set mergesPath "
-                "for trained BPE).",
-                property_name="mode",
-            )
-            ok = False
-        if not ok:
+        if collector.failures:
             return df
         from topn_spark.operators.textstats import tokens
 
@@ -1680,25 +1459,32 @@ def _stage_tokenize(
             "n_tokens", F.size("tokens").cast("bigint")
         )
     id_col = p.get("idField", "doc_id")
-    bpe_mode = p.get("bpeMode", "byte")
     keep = _int_prop(
         p, "keepTokens", 0, collector, lo=-1,
         substitutions=substitutions, phase=phase,
     )
-    if bpe_mode not in ("ascii", "unicode", "byte"):
-        collector.add_failure(
-            f"Invalid bpeMode '{bpe_mode}'.",
-            "One of ascii, unicode, byte.",
-            property_name="bpeMode",
+    unigram = pieces_path is not None
+    if unigram:
+        mode = _choice_prop(
+            p, "lmMode", "ascii", ("ascii", "unicode"), collector
         )
+    else:
+        mode = _choice_prop(
+            p, "bpeMode", "byte", ("ascii", "unicode", "byte"), collector
+        )
+        if mode is None:
+            return df
+    _require_field(df, id_col, collector, "idField")
+    if collector.failures:
         return df
-    ok = _require_field(df, id_col, collector, "idField") and ok
-    if keep is None or not ok:
-        return df
-    if phase == "deploy" and contains_macro(merges_path):
+    path = pieces_path if unigram else merges_path
+    if phase == "deploy" and contains_macro(path):
         out = df.withColumn(
             "n_words", F.lit(None).cast("bigint")
-        ).withColumn("n_bpe_tokens", F.lit(None).cast("bigint"))
+        ).withColumn(
+            "n_lm_tokens" if unigram else "n_bpe_tokens",
+            F.lit(None).cast("bigint"),
+        )
         if keep:
             out = out.withColumn(
                 "tokens", F.lit(None).cast("array<string>")
@@ -1706,13 +1492,18 @@ def _stage_tokenize(
         return out
     from topn_spark.operators.textstats import (
         apply_bpe,
+        apply_unigram_lm,
         load_bpe_merges,
+        load_unigram_lm,
     )
 
-    merges = load_bpe_merges(spark, merges_path)
-    applied = apply_bpe(
-        df.select(id_col, text_col), merges, id_col=id_col,
-        text_col=text_col, keep_tokens=keep, mode=bpe_mode,
+    load, apply = (
+        (load_unigram_lm, apply_unigram_lm) if unigram
+        else (load_bpe_merges, apply_bpe)
+    )
+    applied = apply(
+        df.select(id_col, text_col), load(spark, path), id_col=id_col,
+        text_col=text_col, keep_tokens=keep, mode=mode,
     )
     return df.join(applied, id_col)
 
@@ -1732,43 +1523,29 @@ def _stage_quality_classifier(
     gate)."""
     (df,) = inputs
     p = stage.properties
-    model_path = p.get("modelPath")
     text_col = p.get("textField", "text")
     prob_col = p.get("probField", "prob")
-    minprob_raw = p.get("minProb")
-    if phase == "run":
-        subs = substitutions or {}
-        model_path = substitute_macros(
-            model_path, subs, collector, "modelPath"
-        )
-        minprob_raw = substitute_macros(
-            minprob_raw, subs, collector, "minProb"
-        )
-    ok = _require_field(df, text_col, collector, "textField")
+    gate = p.get("minProb") is not None
+    model_path = _str_prop(
+        p, "modelPath", None, collector, substitutions, phase
+    )
+    _require_field(df, text_col, collector, "textField")
     if not model_path:
         collector.add_failure(
             "Required property 'modelPath' is missing.",
             "Point it at a save_logreg artifact.",
             property_name="modelPath",
         )
-        ok = False
-    min_prob = None
-    if minprob_raw is not None and not contains_macro(minprob_raw):
-        try:
-            min_prob = float(minprob_raw)
-        except (TypeError, ValueError):
-            collector.add_failure(
-                f"Invalid minProb '{minprob_raw}'.",
-                "A number in [0, 1].",
-                property_name="minProb",
-            )
-            ok = False
-    if not ok:
+    min_prob = _float_prop(
+        p, "minProb", None, "A number in [0, 1].", collector,
+        substitutions, phase,
+    )
+    if collector.failures:
         return df
     if phase == "deploy" and contains_macro(model_path):
         # schema-faithful placeholder: the gate preserves the input
         # schema; annotate mode appends the feature + prob columns
-        if minprob_raw is not None:
+        if gate:
             return df
         from topn_spark.operators.textstats import add_quality
 
@@ -1793,7 +1570,7 @@ def _stage_quality_classifier(
         )
         return df
     scored = logreg_predict(feat, weights, feature_cols, prob_col)
-    if minprob_raw is not None:
+    if gate:
         return scored.where(F.col(prob_col) >= min_prob).select(
             *df.columns
         )
@@ -1814,32 +1591,13 @@ def _stage_dedup_against(
     keys, or broadcast when the base digest set is small."""
     (df,) = inputs
     p = stage.properties
-    base_path = p.get("basePath")
-    if phase == "run":
-        base_path = substitute_macros(
-            base_path, substitutions or {}, collector, "basePath"
-        )
-    uniq = [
-        c.strip()
-        for c in p.get("uniqueFields", "").split(",")
-        if c.strip()
-    ]
-    ok = True
+    base_path = _str_prop(p, "basePath", None, collector, substitutions, phase)
     if not base_path:
         collector.add_failure(
             "DedupAgainst needs 'basePath'.", property_name="basePath"
         )
-        ok = False
-    missing = [c for c in uniq if c not in df.columns]
-    if missing:
-        collector.add_failure(
-            f"Columns {missing} not in input schema.",
-            property_name="uniqueFields",
-        )
-        ok = False
-    if not ok:
-        return df
-    if phase == "deploy":
+    uniq = _fields_prop(p, "uniqueFields", collector, df)
+    if collector.failures or phase == "deploy":
         return df  # anti join preserves the schema; base unread
     from topn_spark.operators.dedup import dedup_against
 
@@ -1867,16 +1625,9 @@ def _stage_pii_redact(
     (df,) = inputs
     p = stage.properties
     text_col = p.get("textField", "text")
-    replace_text = p.get("replaceText", "false")
-    ok = _require_field(df, text_col, collector, "textField")
-    if replace_text not in ("true", "false"):
-        collector.add_failure(
-            f"Invalid replaceText '{replace_text}'.",
-            "One of true, false.",
-            property_name="replaceText",
-        )
-        ok = False
-    if not ok:
+    _require_field(df, text_col, collector, "textField")
+    replace_text = _choice_prop(p, "replaceText", "false", _TF, collector)
+    if collector.failures:
         return df
     from topn_spark.operators.textstats import redact_pii
 
@@ -1907,42 +1658,24 @@ def _stage_url_filter(
     (df,) = inputs
     p = stage.properties
     url_col = p.get("urlField", "url")
-    action = p.get("action", "block")
-    match_on = p.get("matchOn", "registered_domain")
-    domains = p.get("domains")
-    domains_path = p.get("domainsPath")
-    ok = _require_field(df, url_col, collector, "urlField")
-    if action not in ("block", "allow"):
-        collector.add_failure(
-            f"Invalid action '{action}'.", "One of block, allow.",
-            property_name="action",
-        )
-        ok = False
-    if match_on not in ("registered_domain", "host"):
-        collector.add_failure(
-            f"Invalid matchOn '{match_on}'.",
-            "One of registered_domain, host.",
-            property_name="matchOn",
-        )
-        ok = False
-    if (domains is None) == (domains_path is None):
+    _require_field(df, url_col, collector, "urlField")
+    action = _choice_prop(p, "action", "block", ("block", "allow"), collector)
+    match_on = _choice_prop(
+        p, "matchOn", "registered_domain", ("registered_domain", "host"),
+        collector,
+    )
+    if (p.get("domains") is None) == (p.get("domainsPath") is None):
         collector.add_failure(
             "Exactly one of 'domains' or 'domainsPath' is required.",
             "A comma list for small literal lists, a one-per-line "
             "text file for blocklist artifacts.",
             property_name="domains",
         )
-        ok = False
-    if phase == "run":
-        domains_path = substitute_macros(
-            domains_path, substitutions or {}, collector, "domainsPath"
-        )
-        domains = substitute_macros(
-            domains, substitutions or {}, collector, "domains"
-        )
-    if not ok:
-        return df
-    if phase == "deploy":
+    domains_path = _str_prop(
+        p, "domainsPath", None, collector, substitutions, phase
+    )
+    domains = _str_prop(p, "domains", None, collector, substitutions, phase)
+    if collector.failures or phase == "deploy":
         return df  # filter never changes the schema
     from topn_spark.operators.pipeline import url_features
 
@@ -1993,19 +1726,17 @@ def _stage_pack_sequences(
     tokens_col = p.get("tokensField", "tokens")
     id_col = p.get("idField", "doc_id")
     order_col = p.get("orderField", id_col)
-    by = tuple(
-        c.strip() for c in p.get("byFields", "").split(",") if c.strip()
-    )
+    by = tuple(_fields_prop(p, "byFields"))
     seq_len = _int_prop(
         p, "seqLen", 2048, collector,
         substitutions=substitutions, phase=phase,
     )
-    ok = _require_field(df, tokens_col, collector, "tokensField")
-    ok = _require_field(df, id_col, collector, "idField") and ok
-    ok = _require_field(df, order_col, collector, "orderField") and ok
+    _require_field(df, tokens_col, collector, "tokensField")
+    _require_field(df, id_col, collector, "idField")
+    _require_field(df, order_col, collector, "orderField")
     for c in by:
-        ok = _require_field(df, c, collector, "byFields") and ok
-    if seq_len is None or not ok:
+        _require_field(df, c, collector, "byFields")
+    if collector.failures:
         return df
     from topn_spark.operators.pipeline import pack_token_sequences
 
@@ -2028,10 +1759,9 @@ def _stage_shard_sink(
     (optional — manifest then also carries token counts), salt ('')."""
     (df,) = inputs
     p = stage.properties
-    path = p.get("path")
     id_col = p.get("idField", "doc_id")
     token_col = p.get("tokenField")
-    if not path:
+    if not p.get("path"):
         collector.add_failure(
             "ShardSink needs a 'path'.", property_name="path"
         )
@@ -2045,23 +1775,20 @@ def _stage_shard_sink(
         p, "nShards", 1, collector,
         substitutions=substitutions, phase=phase,
     )
-    ok = _require_field(df, id_col, collector, "idField")
+    _require_field(df, id_col, collector, "idField")
     if token_col is not None:
-        ok = _require_field(df, token_col, collector, "tokenField") and ok
-    if n_shards is None or not ok:
+        _require_field(df, token_col, collector, "tokenField")
+    if collector.failures or phase != "run":
         return df
-    if phase == "run":
-        path = substitute_macros(
-            path, substitutions or {}, collector, "path"
-        )
-        if collector.failures:
-            return df
-        from topn_spark.operators.pipeline import export_training_shards
+    path = _str_prop(p, "path", None, collector, substitutions, phase)
+    if collector.failures:
+        return df
+    from topn_spark.operators.pipeline import export_training_shards
 
-        export_training_shards(
-            df, path, n_shards, id_col=id_col, token_col=token_col,
-            salt=p.get("salt", ""),
-        )
+    export_training_shards(
+        df, path, n_shards, id_col=id_col, token_col=token_col,
+        salt=p.get("salt", ""),
+    )
     return df
 
 
@@ -2080,13 +1807,12 @@ def _stage_winrate(
     prompt_col = p.get("promptField", "prompt_id")
     model_col = p.get("modelField", "model")
     score_col = p.get("scoreField", "score")
-    ok = True
     for prop, col in (
         ("promptField", prompt_col), ("modelField", model_col),
         ("scoreField", score_col),
     ):
-        ok = _require_field(df, col, collector, prop) and ok
-    if not ok:
+        _require_field(df, col, collector, prop)
+    if collector.failures:
         return df
     return pairwise_winrate(
         df, prompt_col=prompt_col, model_col=model_col,
@@ -2108,32 +1834,17 @@ def _stage_elo_fit(
 
     (df,) = inputs
     p = stage.properties
-    ok = True
     for col in ("model_a", "model_b", "wins_a", "wins_b", "ties"):
-        ok = _require_field(df, col, collector, "input") and ok
-    smoothing_raw = p.get("smoothing", "0.5")
+        _require_field(df, col, collector, "input")
     max_iter = _int_prop(
-        p, "maxIter", 1, collector,
+        p, "maxIter", 1000, collector,
         substitutions=substitutions, phase=phase,
-    ) if "maxIter" in p else 1000
-    if phase == "run":
-        smoothing_raw = substitute_macros(
-            smoothing_raw, substitutions or {}, collector, "smoothing"
-        )
-    smoothing = 0.5
-    if not contains_macro(smoothing_raw):
-        try:
-            smoothing = float(smoothing_raw)
-            if smoothing < 0:
-                raise ValueError
-        except ValueError:
-            collector.add_failure(
-                f"Invalid smoothing '{smoothing_raw}'.",
-                "A non-negative number.",
-                property_name="smoothing",
-            )
-            ok = False
-    if not ok or max_iter is None:
+    )
+    smoothing = _float_prop(
+        p, "smoothing", "0.5", "A non-negative number.", collector,
+        substitutions, phase, lo=0,
+    )
+    if collector.failures:
         return df
     if phase != "run":
         return bradley_terry_fit(df.limit(0))
@@ -2153,23 +1864,20 @@ def _stage_encode_ids(
     tokensField ('tokens'), outField (defaults to tokensField)."""
     (df,) = inputs
     p = stage.properties
-    vocab_path = p.get("vocabPath")
     tokens_col = p.get("tokensField", "tokens")
-    ok = _require_field(df, tokens_col, collector, "tokensField")
+    _require_field(df, tokens_col, collector, "tokensField")
+    vocab_path = _str_prop(
+        p, "vocabPath", None, collector, substitutions, phase
+    )
     if not vocab_path:
         collector.add_failure(
             "Required property 'vocabPath' is missing.",
             "Point it at a save_vocab artifact.",
             property_name="vocabPath",
         )
-        ok = False
-    if phase == "run" and vocab_path:
-        vocab_path = substitute_macros(
-            vocab_path, substitutions or {}, collector, "vocabPath"
-        )
-    if not ok:
-        return df
-    if phase == "deploy" and contains_macro(vocab_path):
+    if collector.failures or (
+        phase == "deploy" and contains_macro(vocab_path)
+    ):
         return df
     from topn_spark.operators.binshard import (
         encode_token_ids,
@@ -2181,6 +1889,57 @@ def _stage_encode_ids(
         df, vocab, tokens_col=tokens_col,
         out_col=p.get("outField", tokens_col),
     )
+
+
+def _none_field(p, name, default):
+    """An optional column property: the column name, or None when
+    set to ``'none'``."""
+    v = p.get(name, default)
+    return None if v == "none" else v
+
+
+def _shard_count_props(p, plugin, collector, substitutions, phase):
+    """A binary-export sink's ``(n_shards, seqs_per_shard)``: range
+    sharding when ``seqsPerShard`` is set (``n_shards`` 0), else the
+    required ``nShards``; None when neither is given."""
+    if "seqsPerShard" in p:
+        return 0, _int_prop(
+            p, "seqsPerShard", 1, collector,
+            substitutions=substitutions, phase=phase,
+        )
+    if "nShards" not in p:
+        collector.add_failure(
+            f"{plugin} needs 'nShards' (or 'seqsPerShard' "
+            "for range sharding).",
+            property_name="nShards",
+        )
+        return None
+    n_shards = _int_prop(
+        p, "nShards", 1, collector,
+        substitutions=substitutions, phase=phase,
+    )
+    return n_shards, None
+
+
+def _bin_columns_props(p, df, collector):
+    """A binary-export sink's ``(id, tokens, mask, assets, dtype)``:
+    each column checked against the input (mask and assets may be
+    ``'none'``), dtype one of the shard token widths."""
+    id_col = p.get("idField", "seq_id")
+    tokens_col = p.get("tokensField", "tokens")
+    mask_col = _none_field(p, "maskField", "loss_mask")
+    assets_col = _none_field(p, "assetsField", "none")
+    _require_field(df, id_col, collector, "idField")
+    _require_field(df, tokens_col, collector, "tokensField")
+    if mask_col is not None:
+        _require_field(df, mask_col, collector, "maskField")
+    if assets_col is not None:
+        _require_field(df, assets_col, collector, "assetsField")
+    dtype = _choice_prop(
+        p, "dtype", "auto", ("auto", "uint16", "uint32"), collector,
+        "'auto', 'uint16' or 'uint32'.",
+    )
+    return id_col, tokens_col, mask_col, assets_col, dtype
 
 
 def _stage_bin_shard_sink(
@@ -2202,82 +1961,37 @@ def _stage_bin_shard_sink(
     maintenance scheme: commits touch only tail shards)."""
     (df,) = inputs
     p = stage.properties
-    path = p.get("path")
-    id_col = p.get("idField", "seq_id")
-    tokens_col = p.get("tokensField", "tokens")
-    mask_col: str | None = p.get("maskField", "loss_mask")
-    if mask_col == "none":
-        mask_col = None
-    assets_col: str | None = p.get("assetsField", "none")
-    if assets_col == "none":
-        assets_col = None
-    dtype = p.get("dtype", "auto")
-    if not path:
+    if not p.get("path"):
         collector.add_failure(
             "BinShardSink needs a 'path'.", property_name="path"
         )
         return df
-    seqs_per_shard = None
-    if "seqsPerShard" in p:
-        seqs_per_shard = _int_prop(
-            p, "seqsPerShard", 1, collector,
-            substitutions=substitutions, phase=phase,
-        )
-        n_shards = 0
-    else:
-        if "nShards" not in p:
-            collector.add_failure(
-                "BinShardSink needs 'nShards' (or 'seqsPerShard' "
-                "for range sharding).",
-                property_name="nShards",
-            )
-            return df
-        n_shards = _int_prop(
-            p, "nShards", 1, collector,
-            substitutions=substitutions, phase=phase,
-        )
-    ok = _require_field(df, id_col, collector, "idField")
-    ok = _require_field(df, tokens_col, collector, "tokensField") and ok
-    if mask_col is not None:
-        ok = _require_field(df, mask_col, collector, "maskField") and ok
-    if assets_col is not None:
-        ok = _require_field(
-            df, assets_col, collector, "assetsField"
-        ) and ok
-    if dtype not in ("auto", "uint16", "uint32"):
-        collector.add_failure(
-            f"Invalid dtype '{dtype}'.",
-            "'auto', 'uint16' or 'uint32'.",
-            property_name="dtype",
-        )
-        ok = False
-    incremental = p.get("incremental", "false")
-    if incremental not in ("true", "false"):
-        collector.add_failure(
-            f"Invalid incremental '{incremental}'.",
-            "'true' or 'false'.",
-            property_name="incremental",
-        )
-        ok = False
-    if (seqs_per_shard is None and n_shards is None) or (
-        "seqsPerShard" in p and seqs_per_shard is None
-    ) or not ok:
+    shards = _shard_count_props(
+        p, "BinShardSink", collector, substitutions, phase
+    )
+    if shards is None:
         return df
-    if phase == "run":
-        path = substitute_macros(
-            path, substitutions or {}, collector, "path"
-        )
-        if collector.failures:
-            return df
-        from topn_spark.operators.binshard import export_bin_shards
+    n_shards, seqs_per_shard = shards
+    id_col, tokens_col, mask_col, assets_col, dtype = _bin_columns_props(
+        p, df, collector
+    )
+    incremental = _choice_prop(
+        p, "incremental", "false", _TF, collector, _TF_HINT
+    )
+    if collector.failures or phase != "run":
+        return df
+    path = _str_prop(p, "path", None, collector, substitutions, phase)
+    if collector.failures:
+        return df
+    from topn_spark.operators.binshard import export_bin_shards
 
-        export_bin_shards(
-            df, path, n_shards, tokens_col=tokens_col,
-            mask_col=mask_col, id_col=id_col, dtype=dtype,
-            salt=p.get("salt", ""), assets_col=assets_col,
-            incremental=incremental == "true",
-            seqs_per_shard=seqs_per_shard,
-        )
+    export_bin_shards(
+        df, path, n_shards, tokens_col=tokens_col,
+        mask_col=mask_col, id_col=id_col, dtype=dtype,
+        salt=p.get("salt", ""), assets_col=assets_col,
+        incremental=incremental == "true",
+        seqs_per_shard=seqs_per_shard,
+    )
     return df
 
 
@@ -2319,13 +2033,11 @@ def _stage_validate_assets(
     refs_col = p.get("refsField", "asset_ids")
     asset_key = p.get("assetKey", "asset_id")
     id_field = p.get("idField")
-    ok = _require_field(df, refs_col, collector, "refsField")
-    ok = _require_field(
-        registry, asset_key, collector, "assetKey"
-    ) and ok
+    _require_field(df, refs_col, collector, "refsField")
+    _require_field(registry, asset_key, collector, "assetKey")
     if id_field:
-        ok = _require_field(df, id_field, collector, "idField") and ok
-    if not ok:
+        _require_field(df, id_field, collector, "idField")
+    if collector.failures:
         return df
     if id_field:
         base = df.withColumn("_vid", F.col(id_field))
@@ -2396,14 +2108,14 @@ def _stage_pack_multimodal(
     tokens_col = p.get("tokensField", "tokens")
     mask_col = p.get("maskField", "loss_mask")
     assets_col = p.get("assetsField", "asset_ids")
-    ok = _require_field(df, id_col, collector, "idField")
     for f, n in (
+        (id_col, "idField"),
         (tokens_col, "tokensField"),
         (mask_col, "maskField"),
         (assets_col, "assetsField"),
     ):
-        ok = _require_field(df, f, collector, n) and ok
-    if seq_len is None or not ok:
+        _require_field(df, f, collector, n)
+    if collector.failures:
         return df
     from topn_spark.operators.pipeline import (
         pack_multimodal_sequences,
@@ -2448,48 +2160,21 @@ def _stage_bin_export_sink(
     content-changing commits), epochSalt ('')."""
     (df,) = inputs
     p = stage.properties
-    corpus_path = p.get("corpusPath")
-    path = p.get("path")
-    id_col = p.get("idField", "seq_id")
-    tokens_col = p.get("tokensField", "tokens")
-    mask_col: str | None = p.get("maskField", "loss_mask")
-    if mask_col == "none":
-        mask_col = None
-    assets_col: str | None = p.get("assetsField", "none")
-    if assets_col == "none":
-        assets_col = None
-    dtype = p.get("dtype", "auto")
-    ok = True
-    if not corpus_path:
+    if not p.get("corpusPath"):
         collector.add_failure(
             "BinExportSink needs a 'corpusPath'.",
             property_name="corpusPath",
         )
-        ok = False
-    if not path:
+    if not p.get("path"):
         collector.add_failure(
             "BinExportSink needs a 'path'.", property_name="path"
         )
-        ok = False
-    seqs_per_shard = None
-    if "seqsPerShard" in p:
-        seqs_per_shard = _int_prop(
-            p, "seqsPerShard", 1, collector,
-            substitutions=substitutions, phase=phase,
-        )
-        n_shards = 0
-    else:
-        if "nShards" not in p:
-            collector.add_failure(
-                "BinExportSink needs 'nShards' (or 'seqsPerShard' "
-                "for range sharding).",
-                property_name="nShards",
-            )
-            return df
-        n_shards = _int_prop(
-            p, "nShards", 1, collector,
-            substitutions=substitutions, phase=phase,
-        )
+    shards = _shard_count_props(
+        p, "BinExportSink", collector, substitutions, phase
+    )
+    if shards is None:
+        return df
+    n_shards, seqs_per_shard = shards
     batch_id = _int_prop(
         p, "batchId", 0, collector, lo=0,
         substitutions=substitutions, phase=phase,
@@ -2507,46 +2192,27 @@ def _stage_bin_export_sink(
                 "Comma-separated integers.",
                 property_name="epochs",
             )
-            ok = False
-    ok = _require_field(df, id_col, collector, "idField") and ok
-    ok = _require_field(df, tokens_col, collector, "tokensField") and ok
-    if mask_col is not None:
-        ok = _require_field(df, mask_col, collector, "maskField") and ok
-    if assets_col is not None:
-        ok = _require_field(
-            df, assets_col, collector, "assetsField"
-        ) and ok
-    if dtype not in ("auto", "uint16", "uint32"):
-        collector.add_failure(
-            f"Invalid dtype '{dtype}'.",
-            "'auto', 'uint16' or 'uint32'.",
-            property_name="dtype",
-        )
-        ok = False
-    if (
-        (seqs_per_shard is None and n_shards is None)
-        or ("seqsPerShard" in p and seqs_per_shard is None)
-        or batch_id is None
-        or not ok
-    ):
+    id_col, tokens_col, mask_col, assets_col, dtype = _bin_columns_props(
+        p, df, collector
+    )
+    if collector.failures or phase != "run":
         return df
-    if phase == "run":
-        mc = FailureCollector()
-        corpus_path = substitute_macros(
-            corpus_path, substitutions or {}, mc, "corpusPath"
-        )
-        path = substitute_macros(path, substitutions or {}, mc, "path")
-        mc.get_or_throw()
-        from topn_spark.streaming.ingest import bin_export_batch
+    corpus_path = _str_prop(
+        p, "corpusPath", None, collector, substitutions, phase
+    )
+    path = _str_prop(p, "path", None, collector, substitutions, phase)
+    if collector.failures:
+        return df
+    from topn_spark.streaming.ingest import bin_export_batch
 
-        bin_export_batch(
-            df, corpus_path, path, batch_id, n_shards,
-            tokens_col=tokens_col, mask_col=mask_col,
-            id_col=id_col, dtype=dtype, salt=p.get("salt", ""),
-            assets_col=assets_col, epochs=epochs,
-            epoch_salt=p.get("epochSalt", ""),
-            seqs_per_shard=seqs_per_shard,
-        )
+    bin_export_batch(
+        df, corpus_path, path, batch_id, n_shards,
+        tokens_col=tokens_col, mask_col=mask_col,
+        id_col=id_col, dtype=dtype, salt=p.get("salt", ""),
+        assets_col=assets_col, epochs=epochs,
+        epoch_salt=p.get("epochSalt", ""),
+        seqs_per_shard=seqs_per_shard,
+    )
     return df
 
 
@@ -2564,8 +2230,7 @@ def _stage_preference_bin_shard_sink(
     ('auto'), salt (''), incremental ('false')."""
     (df,) = inputs
     p = stage.properties
-    path = p.get("path")
-    if not path:
+    if not p.get("path"):
         collector.add_failure(
             "PreferenceBinShardSink needs a 'path'.",
             property_name="path",
@@ -2584,12 +2249,8 @@ def _stage_preference_bin_shard_sink(
     pair_col = p.get("pairIdField", "pair_id")
     ct = p.get("chosenTokensField", "chosen_tokens")
     rt = p.get("rejectedTokensField", "rejected_tokens")
-    cm: str | None = p.get("chosenMaskField", "chosen_mask")
-    rm: str | None = p.get("rejectedMaskField", "rejected_mask")
-    if cm == "none":
-        cm = None
-    if rm == "none":
-        rm = None
+    cm = _none_field(p, "chosenMaskField", "chosen_mask")
+    rm = _none_field(p, "rejectedMaskField", "rejected_mask")
     if (cm is None) != (rm is None):
         collector.add_failure(
             "chosenMaskField/rejectedMaskField must both be set "
@@ -2597,41 +2258,32 @@ def _stage_preference_bin_shard_sink(
             property_name="chosenMaskField",
         )
         return df
-    ok = _require_field(df, pair_col, collector, "pairIdField")
-    ok = _require_field(df, ct, collector, "chosenTokensField") and ok
-    ok = _require_field(
-        df, rt, collector, "rejectedTokensField"
-    ) and ok
+    _require_field(df, pair_col, collector, "pairIdField")
+    _require_field(df, ct, collector, "chosenTokensField")
+    _require_field(df, rt, collector, "rejectedTokensField")
     if cm is not None:
-        ok = _require_field(
-            df, cm, collector, "chosenMaskField"
-        ) and ok
-        ok = _require_field(
-            df, rm, collector, "rejectedMaskField"
-        ) and ok
-    if n_shards is None or not ok:
+        _require_field(df, cm, collector, "chosenMaskField")
+        _require_field(df, rm, collector, "rejectedMaskField")
+    if collector.failures or phase != "run":
         return df
-    if phase == "run":
-        path = substitute_macros(
-            path, substitutions or {}, collector, "path"
-        )
-        if collector.failures:
-            return df
-        from topn_spark.operators.binshard import (
-            export_preference_shards,
-        )
+    path = _str_prop(p, "path", None, collector, substitutions, phase)
+    if collector.failures:
+        return df
+    from topn_spark.operators.binshard import (
+        export_preference_shards,
+    )
 
-        export_preference_shards(
-            df, path, n_shards,
-            pair_id_col=pair_col,
-            chosen_tokens_col=ct,
-            rejected_tokens_col=rt,
-            chosen_mask_col=cm,
-            rejected_mask_col=rm,
-            dtype=p.get("dtype", "auto"),
-            salt=p.get("salt", ""),
-            incremental=p.get("incremental", "false") == "true",
-        )
+    export_preference_shards(
+        df, path, n_shards,
+        pair_id_col=pair_col,
+        chosen_tokens_col=ct,
+        rejected_tokens_col=rt,
+        chosen_mask_col=cm,
+        rejected_mask_col=rm,
+        dtype=p.get("dtype", "auto"),
+        salt=p.get("salt", ""),
+        incremental=p.get("incremental", "false") == "true",
+    )
     return df
 
 
@@ -2656,15 +2308,13 @@ def _stage_tag_attributes(
 
     (df,) = inputs
     p = stage.properties
-    taggers_raw = p.get("taggers")
     id_col = p.get("idField", "doc_id")
     text_col = p.get("textField", "text")
-    if phase == "run":
-        taggers_raw = substitute_macros(
-            taggers_raw, substitutions or {}, collector, "taggers"
-        )
-    ok = _require_field(df, id_col, collector, "idField")
-    ok = _require_field(df, text_col, collector, "textField") and ok
+    taggers_raw = _str_prop(
+        p, "taggers", None, collector, substitutions, phase
+    )
+    _require_field(df, id_col, collector, "idField")
+    _require_field(df, text_col, collector, "textField")
     names = None
     if taggers_raw and not contains_macro(taggers_raw):
         names = [t.strip() for t in taggers_raw.split(",") if t.strip()]
@@ -2675,14 +2325,12 @@ def _stage_tag_attributes(
                 f"Registered: {list(DOC_TAGGERS)}.",
                 property_name="taggers",
             )
-            ok = False
         if not names:
             collector.add_failure(
                 "taggers must name at least one tagger.",
                 property_name="taggers",
             )
-            ok = False
-    if not ok:
+    if collector.failures:
         return df
     if phase == "deploy" and contains_macro(taggers_raw or ""):
         return df
@@ -2717,19 +2365,13 @@ def _stage_mixer(
 
     (df,) = inputs
     p = stage.properties
-    config_raw = p.get("config")
-    attrs_path = p.get("attributesPath")
     id_col = p.get("idField", "doc_id")
     text_col = p.get("textField", "text")
-    if phase == "run":
-        subs = substitutions or {}
-        config_raw = substitute_macros(
-            config_raw, subs, collector, "config"
-        )
-        attrs_path = substitute_macros(
-            attrs_path, subs, collector, "attributesPath"
-        )
-    ok = _require_field(df, id_col, collector, "idField")
+    config_raw = _str_prop(p, "config", None, collector, substitutions, phase)
+    attrs_path = _str_prop(
+        p, "attributesPath", None, collector, substitutions, phase
+    )
+    _require_field(df, id_col, collector, "idField")
     for prop, val in (("config", config_raw),
                       ("attributesPath", attrs_path)):
         if not val:
@@ -2737,7 +2379,6 @@ def _stage_mixer(
                 f"Required property '{prop}' is missing.",
                 property_name=prop,
             )
-            ok = False
     config = None
     if config_raw and not contains_macro(config_raw):
         try:
@@ -2748,16 +2389,13 @@ def _stage_mixer(
                 "The mixer rule object.",
                 property_name="config",
             )
-            ok = False
         if config is not None and not isinstance(config, dict):
             collector.add_failure(
                 "config must be a JSON object.",
                 property_name="config",
             )
-            config, ok = None, False
-    if not ok:
-        return df
-    if phase == "deploy" and (
+            config = None
+    if collector.failures or phase == "deploy" and (
         contains_macro(config_raw or "")
         or contains_macro(attrs_path or "")
     ):
@@ -2807,26 +2445,17 @@ def _stage_conversation_qc(
     (df,) = inputs
     p = stage.properties
     messages_col = p.get("messagesField", "messages")
-    roles_raw = p.get("allowedRoles", "system,user,assistant")
-    keep_only = p.get("keepOnly", "false")
-    ok = _require_field(df, messages_col, collector, "messagesField")
+    _require_field(df, messages_col, collector, "messagesField")
     roles = tuple(
-        r.strip() for r in roles_raw.split(",") if r.strip()
+        _fields_prop(p, "allowedRoles", default="system,user,assistant")
     )
     if not roles:
         collector.add_failure(
             "allowedRoles must name at least one role.",
             property_name="allowedRoles",
         )
-        ok = False
-    if keep_only not in ("true", "false"):
-        collector.add_failure(
-            f"Invalid keepOnly '{keep_only}'.",
-            "'true' or 'false'.",
-            property_name="keepOnly",
-        )
-        ok = False
-    if not ok:
+    keep_only = _choice_prop(p, "keepOnly", "false", _TF, collector, _TF_HINT)
+    if collector.failures:
         return df
     out = conversation_qc(df, messages_col, allowed_roles=roles)
     if keep_only == "true":
@@ -2846,17 +2475,13 @@ def _stage_render_chat(
     (df,) = inputs
     p = stage.properties
     messages_col = p.get("messagesField", "messages")
-    template = p.get("template", "chatml")
     out_col = p.get("outField", "text")
-    ok = _require_field(df, messages_col, collector, "messagesField")
-    if template not in CHAT_TEMPLATES:
-        collector.add_failure(
-            f"Unknown template '{template}'.",
-            f"One of {list(CHAT_TEMPLATES)}.",
-            property_name="template",
-        )
-        ok = False
-    if not ok:
+    _require_field(df, messages_col, collector, "messagesField")
+    template = _choice_prop(
+        p, "template", "chatml", CHAT_TEMPLATES, collector,
+        f"One of {list(CHAT_TEMPLATES)}.", label="template",
+    )
+    if collector.failures:
         return df
     return render_chat(
         df, messages_col, template=template, out_col=out_col
@@ -2876,38 +2501,22 @@ def _stage_fim(
     p = stage.properties
     text_col = p.get("textField", "text")
     id_col = p.get("idField", "doc_id")
-    ok = _require_field(df, text_col, collector, "textField")
-    ok = _require_field(df, id_col, collector, "idField") and ok
-    rates = {}
-    for prop, default in (("rate", 0.5), ("spmRate", 0.5)):
-        raw = p.get(prop, str(default))
-        if phase == "run":
-            raw = substitute_macros(
-                raw, substitutions or {}, collector, prop
-            )
-        if contains_macro(str(raw)):
-            rates[prop] = default
-            continue
-        try:
-            v = float(raw)
-        except (TypeError, ValueError):
-            v = None
-        if v is None or not 0.0 <= v <= 1.0:
-            collector.add_failure(
-                f"Invalid {prop} '{raw}'.",
-                "A fraction in [0, 1].",
-                property_name=prop,
-            )
-            ok = False
-        else:
-            rates[prop] = v
-    if not ok:
+    _require_field(df, text_col, collector, "textField")
+    _require_field(df, id_col, collector, "idField")
+    rate, spm_rate = (
+        _float_prop(
+            p, prop, "0.5", "A fraction in [0, 1].", collector,
+            substitutions, phase, lo=0.0, hi=1.0,
+        )
+        for prop in ("rate", "spmRate")
+    )
+    if collector.failures:
         return df
     from topn_spark.operators.pipeline import fim_transform
 
     return fim_transform(
         df, text_col=text_col, id_col=id_col,
-        rate=rates["rate"], spm_rate=rates["spmRate"],
+        rate=rate, spm_rate=spm_rate,
         prefix_token=p.get("prefixToken", "<fim_prefix>"),
         middle_token=p.get("middleToken", "<fim_middle>"),
         suffix_token=p.get("suffixToken", "<fim_suffix>"),
@@ -2935,16 +2544,15 @@ def _stage_token_windows(
         p, "stride", 1024, collector, lo=1,
         substitutions=substitutions, phase=phase,
     )
-    ok = _require_field(df, tokens_col, collector, "tokensField")
-    ok = _require_field(df, id_col, collector, "idField") and ok
+    _require_field(df, tokens_col, collector, "tokensField")
+    _require_field(df, id_col, collector, "idField")
     if window is not None and stride is not None and stride > window:
         collector.add_failure(
             f"stride ({stride}) exceeds window ({window}).",
             "Use stride <= window.",
             property_name="stride",
         )
-        ok = False
-    if window is None or stride is None or not ok:
+    if collector.failures:
         return df
     from topn_spark.operators.pipeline import token_windows
 
@@ -2976,18 +2584,14 @@ def _stage_loss_mask(
     (df,) = inputs
     p = stage.properties
     messages_col = p.get("messagesField", "messages")
-    template = p.get("template", "chatml")
     loss_role = p.get("lossRole", "assistant")
     out_col = p.get("outField", "text")
-    ok = _require_field(df, messages_col, collector, "messagesField")
-    if template not in CHAT_TEMPLATES:
-        collector.add_failure(
-            f"Unknown template '{template}'.",
-            f"One of {list(CHAT_TEMPLATES)}.",
-            property_name="template",
-        )
-        ok = False
-    if not ok:
+    _require_field(df, messages_col, collector, "messagesField")
+    template = _choice_prop(
+        p, "template", "chatml", CHAT_TEMPLATES, collector,
+        f"One of {list(CHAT_TEMPLATES)}.", label="template",
+    )
+    if collector.failures:
         return df
     spanned = loss_spans(
         df, messages_col, template=template, loss_role=loss_role,
@@ -3019,28 +2623,21 @@ def _stage_pack_masked(
     mask_col = p.get("maskField", "loss_mask")
     id_col = p.get("idField", "doc_id")
     order_col = p.get("orderField", id_col)
-    by = tuple(
-        c.strip() for c in p.get("byFields", "").split(",") if c.strip()
-    )
+    by = tuple(_fields_prop(p, "byFields"))
     seq_len = _int_prop(
         p, "seqLen", 2048, collector,
         substitutions=substitutions, phase=phase,
     )
-    sep_sup = p.get("sepSupervised", "false").lower()
-    ok = _require_field(df, tokens_col, collector, "tokensField")
-    ok = _require_field(df, mask_col, collector, "maskField") and ok
-    ok = _require_field(df, id_col, collector, "idField") and ok
-    ok = _require_field(df, order_col, collector, "orderField") and ok
+    _require_field(df, tokens_col, collector, "tokensField")
+    _require_field(df, mask_col, collector, "maskField")
+    _require_field(df, id_col, collector, "idField")
+    _require_field(df, order_col, collector, "orderField")
     for c in by:
-        ok = _require_field(df, c, collector, "byFields") and ok
-    if sep_sup not in ("true", "false"):
-        collector.add_failure(
-            f"Invalid sepSupervised '{p.get('sepSupervised')}'.",
-            "'true' or 'false'.",
-            property_name="sepSupervised",
-        )
-        ok = False
-    if seq_len is None or not ok:
+        _require_field(df, c, collector, "byFields")
+    sep_sup = _choice_prop(
+        p, "sepSupervised", "false", _TF, collector, _TF_HINT, fold=True
+    )
+    if collector.failures:
         return df
     from topn_spark.operators.pipeline import pack_masked_sequences
 
@@ -3065,34 +2662,27 @@ def _stage_bpe_loss_mask(
     mode ('byte' | 'char')."""
     (df,) = inputs
     p = stage.properties
-    merges_path = p.get("mergesPath")
     id_col = p.get("idField", "conv_id")
     tokens_col = p.get("tokensField", "tokens")
     mask_col = p.get("maskField", "loss_mask")
-    mode = p.get("mode", "byte")
-    ok = _require_field(df, id_col, collector, "idField")
-    ok = _require_field(df, tokens_col, collector, "tokensField") and ok
-    ok = _require_field(df, mask_col, collector, "maskField") and ok
-    if not merges_path:
+    _require_field(df, id_col, collector, "idField")
+    _require_field(df, tokens_col, collector, "tokensField")
+    _require_field(df, mask_col, collector, "maskField")
+    if not p.get("mergesPath"):
         collector.add_failure(
             "Required property 'mergesPath' is missing.",
             "Point it at a save_bpe_merges artifact.",
             property_name="mergesPath",
         )
-        ok = False
-    if mode not in ("byte", "char"):
-        collector.add_failure(
-            f"Invalid mode '{mode}'.", "'byte' or 'char'.",
-            property_name="mode",
-        )
-        ok = False
-    if phase == "run" and merges_path:
-        merges_path = substitute_macros(
-            merges_path, substitutions or {}, collector, "mergesPath"
-        )
-    if not ok:
-        return df
-    if phase == "deploy" and contains_macro(merges_path):
+    mode = _choice_prop(
+        p, "mode", "byte", ("byte", "char"), collector, "'byte' or 'char'."
+    )
+    merges_path = _str_prop(
+        p, "mergesPath", None, collector, substitutions, phase
+    )
+    if collector.failures or (
+        phase == "deploy" and contains_macro(merges_path)
+    ):
         return df
     from topn_spark.operators.sft import bpe_loss_mask
     from topn_spark.operators.textstats import load_bpe_merges
@@ -3137,34 +2727,17 @@ def _stage_preference_pairs(
     score_col = p.get("scoreField", "score")
     id_col = p.get("idField", "sample_id")
     response_col = p.get("responseField", "response")
-    min_gap_raw = p.get("minGap", "0")
-    ok = True
     for prop, col in (
         ("promptField", prompt_col), ("scoreField", score_col),
         ("idField", id_col), ("responseField", response_col),
     ):
-        ok = _require_field(df, col, collector, prop) and ok
-    if phase == "run":
-        min_gap_raw = substitute_macros(
-            min_gap_raw, substitutions or {}, collector, "minGap"
-        )
-    min_gap = 0.0
-    if not contains_macro(min_gap_raw):
-        try:
-            min_gap = float(min_gap_raw)
-            if min_gap < 0:
-                raise ValueError
-        except ValueError:
-            collector.add_failure(
-                f"Invalid minGap '{min_gap_raw}'.",
-                "A number >= 0.",
-                property_name="minGap",
-            )
-            ok = False
-    if not ok:
+        _require_field(df, col, collector, prop)
+    min_gap = _float_prop(
+        p, "minGap", "0", "A number >= 0.", collector,
+        substitutions, phase, lo=0,
+    )
+    if collector.failures:
         return df
-    if phase == "deploy" and contains_macro(p.get("minGap", "0")):
-        min_gap = 0.0
     return preference_pairs(
         df, prompt_col=prompt_col, score_col=score_col,
         id_col=id_col, response_col=response_col, min_gap=min_gap,
@@ -3184,17 +2757,13 @@ def _stage_loss_spans(
     (df,) = inputs
     p = stage.properties
     messages_col = p.get("messagesField", "messages")
-    template = p.get("template", "chatml")
     loss_role = p.get("lossRole", "assistant")
-    ok = _require_field(df, messages_col, collector, "messagesField")
-    if template not in CHAT_TEMPLATES:
-        collector.add_failure(
-            f"Unknown template '{template}'.",
-            f"One of: {', '.join(CHAT_TEMPLATES)}.",
-            property_name="template",
-        )
-        ok = False
-    if not ok:
+    _require_field(df, messages_col, collector, "messagesField")
+    template = _choice_prop(
+        p, "template", "chatml", CHAT_TEMPLATES, collector,
+        f"One of: {', '.join(CHAT_TEMPLATES)}.", label="template",
+    )
+    if collector.failures:
         return df
     return loss_spans(
         df, messages_col, template=template, loss_role=loss_role
@@ -3216,25 +2785,13 @@ def _stage_kto_labels(
     p = stage.properties
     prompt_col = p.get("promptField", "prompt_id")
     score_col = p.get("scoreField", "score")
-    thr_raw = p.get("threshold")
-    ok = _require_field(df, prompt_col, collector, "promptField")
-    ok = _require_field(df, score_col, collector, "scoreField") and ok
-    if thr_raw is not None and phase == "run":
-        thr_raw = substitute_macros(
-            thr_raw, substitutions or {}, collector, "threshold"
-        )
-    threshold = None
-    if thr_raw is not None and not contains_macro(thr_raw):
-        try:
-            threshold = float(thr_raw)
-        except ValueError:
-            collector.add_failure(
-                f"Invalid threshold '{thr_raw}'.",
-                "A number, or omit for the per-prompt mean.",
-                property_name="threshold",
-            )
-            ok = False
-    if not ok:
+    _require_field(df, prompt_col, collector, "promptField")
+    _require_field(df, score_col, collector, "scoreField")
+    threshold = _float_prop(
+        p, "threshold", None, "A number, or omit for the per-prompt mean.",
+        collector, substitutions, phase,
+    )
+    if collector.failures:
         return df
     return kto_labels(
         df, prompt_col=prompt_col, score_col=score_col,
@@ -3255,39 +2812,21 @@ def _stage_epoch_shuffle(
     (df,) = inputs
     p = stage.properties
     id_col = p.get("idField", "doc_id")
-    ok = _require_field(df, id_col, collector, "idField")
+    _require_field(df, id_col, collector, "idField")
     vals = {}
     for prop, lo in (("epoch", 0), ("numShards", 1)):
-        raw = p.get(prop)
-        if raw is None:
+        if p.get(prop) is None:
             collector.add_failure(
                 f"Required property '{prop}' is missing.",
                 "Provide an integer.",
                 property_name=prop,
             )
-            ok = False
             continue
-        if phase == "run":
-            raw = substitute_macros(
-                raw, substitutions or {}, collector, prop
-            )
-        if contains_macro(raw):
-            vals[prop] = lo  # deferred; placeholder for deploy
-            continue
-        try:
-            v = int(raw)
-            if v < lo:
-                raise ValueError
-        except ValueError:
-            collector.add_failure(
-                f"Invalid {prop} '{raw}'.",
-                f"An integer >= {lo}.",
-                property_name=prop,
-            )
-            ok = False
-            continue
-        vals[prop] = v
-    if not ok:
+        vals[prop] = _int_prop(
+            p, prop, lo, collector, lo=lo, substitutions=substitutions,
+            phase=phase, hint=f"An integer >= {lo}.",
+        )
+    if collector.failures:
         return df
     return epoch_shuffle(
         df, epoch=vals["epoch"], n_shards=vals["numShards"],
@@ -3309,33 +2848,19 @@ def _stage_truncate_conversation(
     p = stage.properties
     messages_col = p.get("messagesField", "messages")
     keep_system = p.get("keepSystem", "true").lower() != "false"
-    raw = p.get("maxChars")
-    ok = _require_field(df, messages_col, collector, "messagesField")
-    if raw is None:
+    _require_field(df, messages_col, collector, "messagesField")
+    if p.get("maxChars") is None:
         collector.add_failure(
             "Required property 'maxChars' is missing.",
             "Provide an integer >= 0.",
             property_name="maxChars",
         )
         return df
-    if phase == "run":
-        raw = substitute_macros(
-            raw, substitutions or {}, collector, "maxChars"
-        )
-    max_chars = 0
-    if not contains_macro(raw):
-        try:
-            max_chars = int(raw)
-            if max_chars < 0:
-                raise ValueError
-        except ValueError:
-            collector.add_failure(
-                f"Invalid maxChars '{raw}'.",
-                "An integer >= 0.",
-                property_name="maxChars",
-            )
-            ok = False
-    if not ok:
+    max_chars = _int_prop(
+        p, "maxChars", 0, collector, lo=0, substitutions=substitutions,
+        phase=phase, hint="An integer >= 0.",
+    )
+    if collector.failures:
         return df
     return truncate_conversation(
         df,
@@ -3358,11 +2883,7 @@ def _stage_json_output_qc(
     (df,) = inputs
     p = stage.properties
     col = p.get("field", "response")
-    keys = tuple(
-        k.strip()
-        for k in p.get("requiredKeys", "").split(",")
-        if k.strip()
-    )
+    keys = tuple(_fields_prop(p, "requiredKeys"))
     keep_only = p.get("keepOnly", "false").lower() == "true"
     if not _require_field(df, col, collector, "field"):
         return df
@@ -3497,12 +3018,21 @@ def _topo_order(stages, connections, collector):
     return order, inputs
 
 
-def _execute(
+def _walk(
     spark: SparkSession,
     spec: dict,
     substitutions: dict | None,
     phase: str,
+    source: tuple[str, DataFrame] | None = None,
+    sink_mode: str | None = None,
 ) -> dict[str, DataFrame]:
+    """The one DAG walker: check stage names, plugins and declared
+    types, topo-order the DAG, then run every stage's handler in
+    ``phase`` with its own FailureCollector and raise ALL stages'
+    failures together, each prefixed with its stage. ``source`` =
+    ``(name, df)`` injects ``df`` as that stage's output instead of
+    running its handler (the stage need not be in the spec);
+    ``sink_mode`` overrides every sink's write ``mode``."""
     stages = [
         Stage(
             s["name"], s.get("type", ""), s["plugin"],
@@ -3510,6 +3040,11 @@ def _execute(
         )
         for s in spec.get("stages", [])
     ]
+    outputs: dict[str, DataFrame] = {}
+    if source is not None:
+        outputs[source[0]] = source[1]
+        if source[0] not in {s.name for s in stages}:
+            stages.append(Stage(source[0], "batchsource", "File"))
     top = FailureCollector()
     seen = set()
     for s in stages:
@@ -3532,14 +3067,17 @@ def _execute(
     top.get_or_throw()
 
     by_name = {s.name: s for s in stages}
-    outputs: dict[str, DataFrame] = {}
     failures = []
     for name in order:
+        if name in outputs:
+            continue  # the injected source
         s = by_name[name]
         ins = [outputs[i] for i in inputs[name] if outputs.get(i) is not None]
         if len(ins) != len(inputs[name]):
             continue  # upstream already failed; don't cascade noise
-        handler = PLUGINS[s.plugin][1]
+        kind, handler = PLUGINS[s.plugin]
+        if sink_mode and kind == "batchsink":
+            s = replace(s, properties=dict(s.properties, mode=sink_mode))
         collector = FailureCollector()
         try:
             outputs[name] = handler(
@@ -3569,7 +3107,7 @@ def compile_pipeline(
     properties. Raises :class:`ValidationError` carrying ALL stages'
     failures. Returns stage-name → DataFrame (nothing executed, no
     sink written)."""
-    return _execute(spark, spec, None, "deploy")
+    return _walk(spark, spec, None, "deploy")
 
 
 def run_pipeline(
@@ -3580,7 +3118,7 @@ def run_pipeline(
     """Run-time pass: substitute macros, re-validate the literal
     configs, execute sink writes. Returns stage-name → DataFrame so
     callers can also read results directly."""
-    return _execute(spark, spec, substitutions, "run")
+    return _walk(spark, spec, substitutions, "run")
 
 
 def run_pipeline_with_source(
@@ -3596,8 +3134,9 @@ def run_pipeline_with_source(
     a round-trip through storage). Identical run-phase semantics to
     :func:`run_pipeline`; sinks write in append mode (the injected
     frame is treated as one batch of a larger feed)."""
-    return _run_with_source(
-        spark, spec, source_name, df, substitutions
+    return _walk(
+        spark, spec, substitutions, "run", source=(source_name, df),
+        sink_mode="append",
     )
 
 
@@ -3652,19 +3191,15 @@ def run_streaming_pipeline(
     # deploy-time validation of the whole DAG on an empty batch frame
     # (schemas are what validation needs; rows are not)
     empty = spark.createDataFrame([], p["schema"])
-    _validate_against(spark, spec, src["name"], empty)
+    _walk(spark, spec, None, "deploy", source=(src["name"], empty))
 
     # @Macro lifecycle for the stream source, mirroring the batch
     # File stage: ${...} in path/format resolves from substitutions
     # before the stream starts (the schema must be literal — it was
     # already required explicit above)
     mc = FailureCollector()
-    path = substitute_macros(
-        p["path"], substitutions or {}, mc, "path"
-    )
-    fmt = substitute_macros(
-        p.get("format", "parquet"), substitutions or {}, mc, "format"
-    )
+    path = _str_prop(p, "path", None, mc, substitutions, "run")
+    fmt = _str_prop(p, "format", "parquet", mc, substitutions, "run")
     mc.get_or_throw()
 
     reader = spark.readStream.schema(p["schema"]).format(fmt)
@@ -3682,117 +3217,11 @@ def run_streaming_pipeline(
         # substitution wins (documented escape hatch for tests)
         subs = dict(substitutions or {})
         subs.setdefault("batchId", str(int(_bid)))
-        _run_with_source(
-            spark, spec, src["name"], batch_df, subs,
+        _walk(
+            spark, spec, subs, "run", source=(src["name"], batch_df),
             sink_mode="append",
         )
 
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    from topn_spark.streaming.ingest import _start_batches
 
-
-def _replace_source(spec: dict, source_name: str) -> dict:
-    """Spec with the source stage swapped for a passthrough handled
-    out-of-band (the caller injects the DataFrame)."""
-    return {
-        "stages": [
-            s for s in spec.get("stages", []) if s["name"] != source_name
-        ],
-        "connections": spec.get("connections", []),
-    }
-
-
-def _run_with_source(
-    spark, spec, source_name, df, substitutions, sink_mode="overwrite"
-):
-    sub = _replace_source(spec, source_name)
-    # execute downstream stages with the injected frame as the
-    # source's output; force sinks to append (micro-batch semantics)
-    stages = [
-        Stage(
-            s["name"], s.get("type", ""), s["plugin"],
-            dict(s.get("properties", {}), mode=sink_mode)
-            if PLUGINS.get(s["plugin"], ("",))[0] == "batchsink"
-            else s.get("properties", {}),
-        )
-        for s in sub["stages"]
-    ]
-    top = FailureCollector()
-    order, inputs = _topo_order(
-        stages + [Stage(source_name, "batchsource", "File")],
-        sub["connections"],
-        top,
-    )
-    top.get_or_throw()
-    by_name = {s.name: s for s in stages}
-    outputs: dict[str, DataFrame] = {source_name: df}
-    failures = []
-    for name in order:
-        if name == source_name:
-            continue
-        s = by_name[name]
-        ins = [outputs[i] for i in inputs[name] if outputs.get(i) is not None]
-        if len(ins) != len(inputs[name]):
-            continue
-        collector = FailureCollector()
-        outputs[name] = PLUGINS[s.plugin][1](
-            spark, s, ins, collector, substitutions, "run"
-        )
-        for fail in collector.failures:
-            failures.append(
-                type(fail)(
-                    f"Stage '{name}': {fail.message}",
-                    fail.corrective_action,
-                    fail.property_name,
-                )
-            )
-    if failures:
-        raise ValidationError(failures)
-    return outputs
-
-
-def _validate_against(spark, spec, source_name, df):
-    """Deploy-phase DAG validation with an injected source frame."""
-    sub = _replace_source(spec, source_name)
-    stages = [
-        Stage(
-            s["name"], s.get("type", ""), s["plugin"],
-            s.get("properties", {}),
-        )
-        for s in sub["stages"]
-    ]
-    top = FailureCollector()
-    order, inputs = _topo_order(
-        stages + [Stage(source_name, "batchsource", "File")],
-        sub["connections"],
-        top,
-    )
-    top.get_or_throw()
-    by_name = {s.name: s for s in stages}
-    outputs: dict[str, DataFrame] = {source_name: df}
-    failures = []
-    for name in order:
-        if name == source_name:
-            continue
-        s = by_name[name]
-        ins = [outputs[i] for i in inputs[name] if outputs.get(i) is not None]
-        if len(ins) != len(inputs[name]):
-            continue
-        collector = FailureCollector()
-        outputs[name] = PLUGINS[s.plugin][1](
-            spark, s, ins, collector, None, "deploy"
-        )
-        for fail in collector.failures:
-            failures.append(
-                type(fail)(
-                    f"Stage '{name}': {fail.message}",
-                    fail.corrective_action,
-                    fail.property_name,
-                )
-            )
-    if failures:
-        raise ValidationError(failures)
+    return _start_batches(stream, _process, checkpoint_dir)

@@ -40,6 +40,22 @@ def _error_condition(e) -> str:
     return ""
 
 
+def _start_batches(stream: DataFrame, process, checkpoint_dir: str):
+    """Start ``stream`` with ``process(batch, batch_id)`` run on every
+    micro-batch via ``foreachBatch``; returns the ``StreamingQuery``.
+    The one place that sets the streaming sinks' checkpoint and
+    trigger policy: the checkpoint at ``checkpoint_dir`` makes batch
+    ids replay-stable, and the availableNow trigger drains what the
+    source holds now and stops, so callers re-start the sink to drain
+    a growing source."""
+    return (
+        stream.writeStream.foreachBatch(process)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 def _read_store(spark, path: str) -> DataFrame | None:
     """Read a parquet state store; ``None`` when it does not exist yet
     (the legitimate first-batch case).
@@ -122,12 +138,7 @@ def incremental_corpus_sink(
     def _process(batch: DataFrame, _batch_id: int) -> None:
         ingest_batch(batch, store_dir, out_dir, text_col, id_col)
 
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_batches(stream, _process, checkpoint_dir)
 
 
 def neardup_ingest_batch(
@@ -292,12 +303,7 @@ def neardup_corpus_sink(
             id_col=id_col,
         )
 
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_batches(stream, _process, checkpoint_dir)
 
 
 def cdc_batch(
@@ -441,12 +447,7 @@ def cdc_snapshot_sink(
             batch_id,
         )
 
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_batches(stream, _process, checkpoint_dir)
 
 
 def quality_gate_batch(
@@ -664,12 +665,7 @@ def quality_corpus_sink(
             redact=redact,
         )
 
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_batches(stream, _process, checkpoint_dir)
 
 
 def routed_gate_batch(
@@ -840,12 +836,7 @@ def routed_corpus_sink(
             redact=redact,
         )
 
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_batches(stream, _process, checkpoint_dir)
 
 
 def gate_report(spark, out_dir: str, reject_dir: str) -> DataFrame:
@@ -986,12 +977,7 @@ def decontam_corpus_sink(
             batch_id=batch_id,
         )
 
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_batches(stream, _process, checkpoint_dir)
 
 
 def attributes_sink(
@@ -1027,12 +1013,7 @@ def attributes_sink(
             f"{out_dir}/batch_id={int(batch_id)}"
         )
 
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_batches(stream, _process, checkpoint_dir)
 
 
 def sft_gate_batch(
@@ -1140,12 +1121,7 @@ def sft_corpus_sink(
             batch_id=batch_id,
         )
 
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_batches(stream, _process, checkpoint_dir)
 
 
 def drift_monitor_batch(
@@ -1257,12 +1233,7 @@ def drift_monitor_sink(
             max_js=max_js,
         )
 
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_batches(stream, _process, checkpoint_dir)
 
 
 def arena_monitor_batch(
@@ -1552,12 +1523,7 @@ def arena_monitor_sink(
             store=store,
         )
 
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_batches(stream, _process, checkpoint_dir)
 
 
 def _manifest_rows(man) -> list[dict]:
@@ -1660,9 +1626,21 @@ def bin_export_batch(
     per-commit cost creeps back toward corpus-proportional even
     though untouched partitions are never read. Epoch orders
     shuffle across and within shards either way, so training-order
-    randomness is unaffected by the layout scheme."""
+    randomness is unaffected by the layout scheme.
+
+    ``corpus_dir`` must be a literal path: replay detection builds a
+    Hadoop glob from it, so a glob metacharacter (``{ [ ? *``) is
+    rejected up front with a ``ValueError``."""
     import os
 
+    bad = sorted({c for c in "{[?*" if c in corpus_dir})
+    if bad:
+        raise ValueError(
+            f"bin_export_batch: corpus_dir {corpus_dir!r} contains glob "
+            f"metacharacter(s) {' '.join(bad)}; replay detection "
+            "matches its partitions with a Hadoop glob, so the path "
+            "must be literal"
+        )
     from topn_spark.operators.binshard import (
         _assign_shards,
         _read_meta,
@@ -1899,12 +1877,7 @@ def bin_export_sink(
             seqs_per_shard=seqs_per_shard,
         )
 
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_batches(stream, _process, checkpoint_dir)
 
 
 def preference_bin_export_batch(
@@ -2015,9 +1988,4 @@ def preference_bin_export_sink(
             seqs_per_shard=seqs_per_shard,
         )
 
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_batches(stream, _process, checkpoint_dir)
