@@ -371,14 +371,6 @@ def simhash(
     return hashed.select(id_col, F.expr(expr).alias("simhash"))
 
 
-def hamming_distance(col_a, col_b):
-    """Hamming distance between two 64-bit fingerprints (bit_count of
-    xor — single codegen'd expression)."""
-    a = F.col(col_a) if isinstance(col_a, str) else col_a
-    b = F.col(col_b) if isinstance(col_b, str) else col_b
-    return F.bit_count(a.bitwiseXOR(b))
-
-
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str = "doc_id",

@@ -930,23 +930,6 @@ def ngrams_from_tokens(tok_col: str, n: int = 2) -> Column:
     )
 
 
-def word_ngrams(text_col: str = "text", n: int = 2) -> Column:
-    """Adjacent word ``n``-grams of ``text_col`` as a single column
-    expression. ONLY for one-shot use in a projection that keeps no
-    other reference to the tokens — for anything iterating over the
-    grams, materialize tokens first and use
-    :func:`ngrams_from_tokens` (see its perf note)."""
-    t = f"regexp_extract_all(lower({text_col}), '{TOKEN_RE}', 0)"
-    # tokens bound once via transform(array(...)) — an inlined t
-    # inside the slice lambda re-runs the regexp per position (r14)
-    return F.expr(
-        f"transform(array({t}), tk -> if(size(tk) >= {n},"
-        f" transform(sequence(1, size(tk) - {n - 1}),"
-        f" i -> concat_ws(' ', slice(tk, i, {n}))),"
-        f" array()))[0]"
-    )
-
-
 def add_repetition_signals(
     df: DataFrame, text_col: str = "text", n: int = 2
 ) -> DataFrame:

@@ -21,22 +21,6 @@ def formatted_plan(df: DataFrame) -> str:
     return qe.explainString(mode)
 
 
-def codegen_summary(df: DataFrame) -> str:
-    """The codegen explain output ("Found N WholeStageCodegen
-    subtrees" + generated code).
-
-    Caveat: under AQE this reports 0 subtrees before the query has
-    executed (stages materialize at runtime). For codegen assertions,
-    execute the DataFrame first and look for ``*(n)`` stage prefixes
-    in ``queryExecution().executedPlan()`` — see
-    tests/test_plans.py::test_whole_stage_codegen_everywhere."""
-    qe = df._jdf.queryExecution()
-    mode = df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        "codegen"
-    )
-    return qe.explainString(mode)
-
-
 def assert_plan_contains(df: DataFrame, *needles: str) -> None:
     plan = formatted_plan(df)
     missing = [n for n in needles if n not in plan]
