@@ -2395,9 +2395,12 @@ def _stage_mixer(
                 property_name="config",
             )
             config = None
-    if collector.failures or phase == "deploy" and (
-        contains_macro(config_raw or "")
-        or contains_macro(attrs_path or "")
+    if collector.failures or (
+        phase == "deploy"
+        and (
+            contains_macro(config_raw or "")
+            or contains_macro(attrs_path or "")
+        )
     ):
         return df
     attrs = spark.read.parquet(attrs_path)
