@@ -1105,8 +1105,9 @@ def _lsh_props(p, family, collector, substitutions, phase):
     return num_hashes, bands, shingle, threshold
 
 
-def _lsh_pairs(df, family, id_col, text_col, num_hashes, bands, shingle,
-               threshold):
+def _lsh_pairs(
+    df, family, id_col, text_col, num_hashes, bands, shingle, threshold
+):
     """Candidate near-duplicate ``(id_a, id_b)`` pairs under ``family``."""
     from topn_spark.operators.dedup import (
         lsh_pairs_md5,
