@@ -343,6 +343,17 @@ DEPLOY = {
     ),
     "json_qc": _one("JsonOutputQc", {"field": G}),
     "canonical_url": _one("CanonicalUrl", {"urlField": G}),
+    # failure order: a bad earlier property, then a ghost column
+    "budget_order": _one(
+        "TokenBudgetMixture", {"totalTokens": "-1", "groupField": G}
+    ),
+    "epoch_mixture_order": _one(
+        "EpochMixture", {"maxEpochs": "0", "groupField": G}
+    ),
+    "decontam_order": _one("Decontaminate", {"n": "0", "textField": G}),
+    "windows_order": _one(
+        "TokenWindows", {"window": "0", "tokensField": G}
+    ),
 }
 
 #: id -> spec validated at run (run_pipeline, no substitutions for the
@@ -361,6 +372,25 @@ RUN = {
     "elo_macro": _one("EloFit", {"smoothing": "${s}"}),
     "filesink_macro": _one("FileSink", {"path": "${out}"}),
     "shard_macro": _one("ShardSink", {"path": "${o}", "nShards": "2"}),
+    # failure order: an unresolved earlier macro, then a ghost column
+    "perplexity_order": _one(
+        "PerplexityFilter", {"modelPath": "${m}", "textField": G}
+    ),
+    "routed_order": _one(
+        "RoutedQuality", {"routes": "${r}", "langField": G}
+    ),
+    "dsir_order": _one("DsirWeights", {"targetPath": "${t}", "textField": G}),
+    "langid_order": _one("LangId", {"modelPath": "${m}", "textField": G}),
+    "tokenize_order": _one(
+        "Tokenize", {"mergesPath": "${m}", "textField": G}
+    ),
+    "classifier_order": _one(
+        "QualityClassifier", {"modelPath": "${m}", "textField": G}
+    ),
+    "tag_order": _one("TagAttributes", {"taggers": "${t}", "idField": G}),
+    "mixer_order": _one(
+        "Mixer", {"config": "${c}", "attributesPath": "/a", "idField": G}
+    ),
 }
 
 EXPECTED: dict[str, str] = {
@@ -412,6 +442,13 @@ EXPECTED: dict[str, str] = {
         "TokenBudgetMixture needs 'weights'. Format: "
         "'group:weight,group:weight'. (property: weights)"
     ),
+    'budget_order': (
+        "Stage 'st': totalTokens must be >= 0, got -1. (property: "
+        "totalTokens); Stage 'st': Column 'ghost' not in input "
+        "schema. (property: groupField); Stage 'st': "
+        "TokenBudgetMixture needs 'weights'. Format: "
+        "'group:weight,group:weight'. (property: weights)"
+    ),
     'budget_props': (
         "Stage 'st': totalTokens must be >= 0, got -1. (property: "
         "totalTokens); Stage 'st': Unparseable weights 'web'. Format: "
@@ -427,6 +464,12 @@ EXPECTED: dict[str, str] = {
     'canonical_url': (
         "Stage 'st': Column 'ghost' not in input schema. (property: "
         'urlField)'
+    ),
+    'classifier_order': (
+        "Stage 'st': Macro '${m}' has no provided value. Provide a "
+        "substitution for the macro at run time. (property: "
+        "modelPath); Stage 'st': Column 'ghost' not in input schema. "
+        "(property: textField)"
     ),
     'classifier_props': (
         "Stage 'st': Column 'ghost' not in input schema. (property: "
@@ -444,6 +487,13 @@ EXPECTED: dict[str, str] = {
     'declared_type': (
         "Stage 'src': plugin File is a batchsource, declared "
         'transform.'
+    ),
+    'decontam_order': (
+        "Stage 'st': n must be >= 1, got 0. (property: n); Stage "
+        "'st': Column 'ghost' not in input schema. (property: "
+        "textField); Stage 'st': Required property 'evalPath' is "
+        "missing. Point it at the eval benchmark parquet. (property: "
+        "evalPath)"
     ),
     'decontam_props': (
         "Stage 'st': n must be >= 1, got 0. (property: n); Stage "
@@ -469,6 +519,12 @@ EXPECTED: dict[str, str] = {
     'dedup_no_fields': (
         "Stage 'st': Deduplicate needs 'uniqueFields'. (property: "
         'uniqueFields)'
+    ),
+    'dsir_order': (
+        "Stage 'st': Macro '${t}' has no provided value. Provide a "
+        "substitution for the macro at run time. (property: "
+        "targetPath); Stage 'st': Column 'ghost' not in input schema. "
+        "(property: textField)"
     ),
     'dsir_props': (
         "Stage 'st': Column 'ghost' not in input schema. (property: "
@@ -503,6 +559,14 @@ EXPECTED: dict[str, str] = {
         "(property: totalTokens); Stage 'st': EpochMixture needs "
         "'weights'. Format: 'group:weight,group:weight'. (property: "
         'weights)'
+    ),
+    'epoch_mixture_order': (
+        "Stage 'st': maxEpochs must be >= 1, got 0. (property: "
+        "maxEpochs); Stage 'st': Column 'ghost' not in input schema. "
+        "(property: groupField); Stage 'st': EpochMixture needs "
+        "'totalTokens'. (property: totalTokens); Stage 'st': "
+        "EpochMixture needs 'weights'. Format: "
+        "'group:weight,group:weight'. (property: weights)"
     ),
     'epoch_mixture_props': (
         "Stage 'st': maxEpochs must be >= 1, got 0. (property: "
@@ -591,6 +655,12 @@ EXPECTED: dict[str, str] = {
         "promptField); Stage 'st': Invalid threshold 'x'. A number, "
         'or omit for the per-prompt mean. (property: threshold)'
     ),
+    'langid_order': (
+        "Stage 'st': Macro '${m}' has no provided value. Provide a "
+        "substitution for the macro at run time. (property: "
+        "modelPath); Stage 'st': Column 'ghost' not in input schema. "
+        "(property: textField)"
+    ),
     'langid_props': (
         "Stage 'st': Column 'ghost' not in input schema. (property: "
         "textField); Stage 'st': Required property 'modelPath' is "
@@ -637,6 +707,12 @@ EXPECTED: dict[str, str] = {
     'mixer_not_object': (
         "Stage 'st': config must be a JSON object. (property: config)"
     ),
+    'mixer_order': (
+        "Stage 'st': Macro '${c}' has no provided value. Provide a "
+        "substitution for the macro at run time. (property: config); "
+        "Stage 'st': Column 'ghost' not in input schema. (property: "
+        "idField)"
+    ),
     'neardup_bands': (
         "Stage 'st': numHashes (9) must divide into bands (2). "
         '(property: bands)'
@@ -675,6 +751,12 @@ EXPECTED: dict[str, str] = {
         "orderField); Stage 'st': Column 'ghost' not in input schema. "
         "(property: byFields); Stage 'st': Column 'x' not in input "
         'schema. (property: byFields)'
+    ),
+    'perplexity_order': (
+        "Stage 'st': Macro '${m}' has no provided value. Provide a "
+        "substitution for the macro at run time. (property: "
+        "modelPath); Stage 'st': Column 'ghost' not in input schema. "
+        "(property: textField)"
     ),
     'perplexity_props': (
         "Stage 'st': Column 'ghost' not in input schema. (property: "
@@ -751,6 +833,12 @@ EXPECTED: dict[str, str] = {
         'missing. A JSON object: lang -> parameter overrides. '
         '(property: routes)'
     ),
+    'routed_order': (
+        "Stage 'st': Macro '${r}' has no provided value. Provide a "
+        "substitution for the macro at run time. (property: routes); "
+        "Stage 'st': Column 'ghost' not in input schema. (property: "
+        "langField)"
+    ),
     'routed_shape': (
         "Stage 'st': routes must map language -> override object. "
         'e.g. {"en": {}, "de": {"min_stop_hits": 3}} (property: '
@@ -792,6 +880,12 @@ EXPECTED: dict[str, str] = {
         "idField); Stage 'st': taggers must name at least one tagger. "
         '(property: taggers)'
     ),
+    'tag_order': (
+        "Stage 'st': Macro '${t}' has no provided value. Provide a "
+        "substitution for the macro at run time. (property: taggers); "
+        "Stage 'st': Column 'ghost' not in input schema. (property: "
+        "idField)"
+    ),
     'tag_unknown': (
         "Stage 'st': Unknown tagger(s) ['ghost', 'x']. Registered: "
         "['char_length', 'line_count', 'word_count', 'mean_word_len', "
@@ -824,6 +918,12 @@ EXPECTED: dict[str, str] = {
         "textField); Stage 'st': Invalid mode 'x'. One of ascii, "
         'unicode, script (or set mergesPath for trained BPE). '
         '(property: mode)'
+    ),
+    'tokenize_order': (
+        "Stage 'st': Macro '${m}' has no provided value. Provide a "
+        "substitution for the macro at run time. (property: "
+        "mergesPath); Stage 'st': Column 'ghost' not in input schema. "
+        "(property: textField)"
     ),
     'topn_field_size': (
         "Stage 'st': Field 'ghost' does not exist in the input "
@@ -938,6 +1038,11 @@ EXPECTED: dict[str, str] = {
     'windows_macro': (
         "Stage 'st': Macro '${w}' has no provided value. Provide a "
         'substitution for the macro at run time. (property: window)'
+    ),
+    'windows_order': (
+        "Stage 'st': window must be >= 1, got 0. (property: window); "
+        "Stage 'st': Column 'ghost' not in input schema. (property: "
+        "tokensField)"
     ),
     'windows_props': (
         "Stage 'st': window must be >= 1, got 0. (property: window); "
