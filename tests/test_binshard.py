@@ -1205,6 +1205,29 @@ def test_delta_export_batch_sized_stats_and_cross_check(
         export_bin_shards_delta(upd, store2, out, 5, salt="d")
 
 
+def test_delta_export_requires_a_store(spark, tmp_path):
+    """Without ``store_df`` or ``store_reader`` the delta has nothing
+    to rewrite the touched shards from: it must refuse at entry with
+    a ValueError, before it deletes any shard file."""
+    from topn_spark.operators.binshard import export_bin_shards_delta
+    from topn_spark.operators.pipeline import shard_assignment
+
+    ddl = "seq_id bigint, tokens array<bigint>, loss_mask array<boolean>"
+    out = str(tmp_path / "nostore")
+    export_bin_shards(
+        spark.createDataFrame([(1, [5], [True])], ddl), out, 2, salt="n"
+    )
+    batch = shard_assignment(
+        spark.createDataFrame([(2, [6], [True])], ddl), 2, "seq_id", "n"
+    )
+    with pytest.raises(
+        ValueError, match="store_df is required when store_reader is None"
+    ):
+        export_bin_shards_delta(batch, None, out, 2, salt="n")
+    assert [r.seq_id for r in read_bin_shards(spark, out).collect()] == [1]
+    assert all(r.ok for r in verify_bin_shards(spark, out).collect())
+
+
 def test_range_sharding_round_trip_and_scheme_guard(spark, tmp_path):
     """Range sharding (shard = id // seqs_per_shard): contiguous
     bounded shards, full round trip, and the scheme is a hard

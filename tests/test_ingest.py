@@ -6,7 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from topn_spark.streaming.ingest import incremental_corpus_sink
+from topn_spark.streaming.ingest import ingest_batch, start_batches
 
 
 def _write_docs(spark, path, rows):
@@ -29,7 +29,7 @@ def test_incremental_ingest_dedups_across_runs(spark, tmp_path):
          (4, "gamma text")],
     )
     stream = spark.readStream.schema("doc_id long, text string").parquet(src)
-    q = incremental_corpus_sink(stream, store, out, ck)
+    q = start_batches(stream, lambda b, _i: ingest_batch(b, store, out), ck)
     q.awaitTermination(120)
 
     got1 = {
@@ -45,7 +45,7 @@ def test_incremental_ingest_dedups_across_runs(spark, tmp_path):
         [(5, "alpha text"), (6, "delta text"), (7, "delta text")],
     )
     stream = spark.readStream.schema("doc_id long, text string").parquet(src)
-    q = incremental_corpus_sink(stream, store, out, ck)
+    q = start_batches(stream, lambda b, _i: ingest_batch(b, store, out), ck)
     q.awaitTermination(120)
 
     got2 = {
@@ -148,12 +148,18 @@ def test_rollup_sink_replay_is_idempotent(spark, tmp_path):
 
 
 def test_neardup_ingest_gates_on_similarity_across_runs(spark, tmp_path):
-    from topn_spark.streaming.ingest import neardup_corpus_sink
+    from topn_spark.streaming.ingest import (
+        neardup_ingest_batch,
+        start_batches,
+    )
 
     src = str(tmp_path / "nsrc")
     store = str(tmp_path / "nstore")
     out = str(tmp_path / "nout")
     ck = str(tmp_path / "nck")
+
+    def gate(batch, _batch_id):
+        neardup_ingest_batch(batch, store, out, threshold=0.5)
 
     base = (
         "the quick brown fox jumps over the lazy dog while seventeen "
@@ -176,7 +182,7 @@ def test_neardup_ingest_gates_on_similarity_across_runs(spark, tmp_path):
     # run 1: base admitted; its in-batch near-dup dropped; other kept
     _write_docs(spark, src, [(1, base), (2, near1), (3, other)])
     stream = spark.readStream.schema("doc_id long, text string").parquet(src)
-    q = neardup_corpus_sink(stream, store, out, ck, threshold=0.5)
+    q = start_batches(stream, gate, ck)
     q.awaitTermination(180)
     got1 = {r["doc_id"] for r in spark.read.parquet(out).collect()}
     assert got1 == {1, 3}
@@ -184,7 +190,7 @@ def test_neardup_ingest_gates_on_similarity_across_runs(spark, tmp_path):
     # run 2 (restart): near-dup of the STORED doc rejected, novel kept
     _write_docs(spark, src, [(4, near2), (5, third)])
     stream = spark.readStream.schema("doc_id long, text string").parquet(src)
-    q = neardup_corpus_sink(stream, store, out, ck, threshold=0.5)
+    q = start_batches(stream, gate, ck)
     q.awaitTermination(180)
     got2 = {r["doc_id"] for r in spark.read.parquet(out).collect()}
     assert got2 == {1, 3, 5}
@@ -203,8 +209,9 @@ def test_cdc_snapshot_sink_classifies_and_maintains_snapshot(
     import os
 
     from topn_spark.streaming.ingest import (
-        cdc_snapshot_sink,
+        cdc_batch,
         read_cdc_snapshot,
+        start_batches,
     )
 
     src = str(tmp_path / "cdc_src")
@@ -219,7 +226,11 @@ def test_cdc_snapshot_sink_classifies_and_maintains_snapshot(
 
     def run():
         stream = spark.readStream.schema("k long, v string").parquet(src)
-        q = cdc_snapshot_sink(stream, snap, chg, ck, ["k"], ["v"])
+        q = start_batches(
+            stream,
+            lambda b, i: cdc_batch(b, snap, chg, ["k"], ["v"], i),
+            ck,
+        )
         q.awaitTermination(120)
 
     # run 1: first-ever batch -> all added (incl. a within-batch dup
@@ -815,7 +826,7 @@ def test_sft_corpus_sink_lands_trainable_conversations(spark, tmp_path):
     trainable — rendered text with aligned tokens/loss_mask/
     n_supervised ready for PackMasked; a replay overwrites its own
     batch partition."""
-    from topn_spark.streaming.ingest import sft_corpus_sink
+    from topn_spark.streaming.ingest import sft_gate_batch, start_batches
 
     src = str(tmp_path / "sftsrc")
     spark.createDataFrame(
@@ -837,8 +848,10 @@ def test_sft_corpus_sink_lands_trainable_conversations(spark, tmp_path):
     ).parquet(src)
     out = str(tmp_path / "sftout")
     rej = str(tmp_path / "sftrej")
-    q = sft_corpus_sink(
-        stream, out, rej, str(tmp_path / "sftck"), redact=True
+    q = start_batches(
+        stream,
+        lambda b, i: sft_gate_batch(b, out, rej, redact=True, batch_id=i),
+        str(tmp_path / "sftck"),
     )
     q.awaitTermination(120)
     kept = {r.conv_id: r for r in spark.read.parquet(out).collect()}
@@ -865,7 +878,10 @@ def test_drift_monitor_sink_detects_shift(spark, tmp_path):
     per batch_id partition, replay-idempotent by construction."""
     import math
 
-    from topn_spark.streaming.ingest import drift_monitor_sink
+    from topn_spark.streaming.ingest import (
+        drift_monitor_batch,
+        start_batches,
+    )
 
     src = str(tmp_path / "src")
     out = str(tmp_path / "drift")
@@ -873,6 +889,9 @@ def test_drift_monitor_sink_detects_shift(spark, tmp_path):
 
     # reference distribution: the accepted corpus vocabulary
     reference = {"alpha": 40, "beta": 30, "gamma": 30}
+
+    def monitor(batch, batch_id):
+        drift_monitor_batch(batch, reference, out, batch_id, max_js=0.3)
 
     # batch 1: same distribution as the reference
     _write_docs(
@@ -882,7 +901,7 @@ def test_drift_monitor_sink_detects_shift(spark, tmp_path):
     stream = spark.readStream.schema(
         "doc_id long, text string"
     ).parquet(src)
-    q = drift_monitor_sink(stream, reference, out, ck, max_js=0.3)
+    q = start_batches(stream, monitor, ck)
     q.awaitTermination(120)
 
     # batch 2: a shifted feed — disjoint vocabulary
@@ -893,7 +912,7 @@ def test_drift_monitor_sink_detects_shift(spark, tmp_path):
     stream = spark.readStream.schema(
         "doc_id long, text string"
     ).parquet(src)
-    q = drift_monitor_sink(stream, reference, out, ck, max_js=0.3)
+    q = start_batches(stream, monitor, ck)
     q.awaitTermination(120)
 
     rows = {
@@ -913,7 +932,10 @@ def test_arena_monitor_sink_tracks_ratings(spark, tmp_path):
     """Streaming arena monitor: per-batch win matrices and BT
     ratings under batch_id partitions; a regressed model shows up
     in the rating history; replay after restart stays idempotent."""
-    from topn_spark.streaming.ingest import arena_monitor_sink
+    from topn_spark.streaming.ingest import (
+        arena_monitor_batch,
+        start_batches,
+    )
 
     src = str(tmp_path / "arena_src")
     out = str(tmp_path / "arena")
@@ -929,7 +951,9 @@ def test_arena_monitor_sink_tracks_ratings(spark, tmp_path):
         stream = spark.readStream.schema(
             "prompt_id long, model string, score double"
         ).parquet(src)
-        q = arena_monitor_sink(stream, out, ck)
+        q = start_batches(
+            stream, lambda b, i: arena_monitor_batch(b, out, i), ck
+        )
         q.awaitTermination(120)
 
     # batch 1: mA dominates mB on every shared prompt
@@ -972,7 +996,10 @@ def test_arena_monitor_no_shared_prompt_batch_writes_nothing(
     comparable batch still rates normally."""
     import os
 
-    from topn_spark.streaming.ingest import arena_monitor_sink
+    from topn_spark.streaming.ingest import (
+        arena_monitor_batch,
+        start_batches,
+    )
 
     src = str(tmp_path / "arena_src2")
     out = str(tmp_path / "arena2")
@@ -982,7 +1009,9 @@ def test_arena_monitor_no_shared_prompt_batch_writes_nothing(
         stream = spark.readStream.schema(
             "prompt_id long, model string, score double"
         ).parquet(src)
-        q = arena_monitor_sink(stream, out, ck)
+        q = start_batches(
+            stream, lambda b, i: arena_monitor_batch(b, out, i), ck
+        )
         q.awaitTermination(120)
 
     # batch 0: disjoint prompts per model -> empty win matrix
@@ -1117,7 +1146,7 @@ def test_bin_export_sink_maintains_shards_incrementally(
         read_bin_shards,
         verify_bin_shards,
     )
-    from topn_spark.streaming.ingest import bin_export_sink
+    from topn_spark.streaming.ingest import bin_export_batch, start_batches
 
     src = str(tmp_path / "bin_src")
     corpus = str(tmp_path / "bin_store")
@@ -1138,7 +1167,11 @@ def test_bin_export_sink_maintains_shards_incrementally(
 
     def run():
         stream = spark.readStream.schema(schema).parquet(src)
-        q = bin_export_sink(stream, corpus, out, ck, 6, salt="bs")
+        q = start_batches(
+            stream,
+            lambda b, i: bin_export_batch(b, corpus, out, i, 6, salt="bs"),
+            ck,
+        )
         q.awaitTermination(180)
 
     def hashes():
@@ -1452,7 +1485,10 @@ def test_arena_monitor_bootstrap_cis_stream(spark, tmp_path):
     rating sits inside its interval, a lopsided pair separates with
     non-overlapping intervals, and a replayed batch rewrites the CI
     partition byte-identically (deterministic replicates)."""
-    from topn_spark.streaming.ingest import arena_monitor_sink
+    from topn_spark.streaming.ingest import (
+        arena_monitor_batch,
+        start_batches,
+    )
 
     src = str(tmp_path / "ci_src")
     out = str(tmp_path / "ci")
@@ -1466,8 +1502,12 @@ def test_arena_monitor_bootstrap_cis_stream(spark, tmp_path):
 
     def run():
         stream = spark.readStream.schema(schema).parquet(src)
-        q = arena_monitor_sink(
-            stream, out, ck, half_life_batches=2.0, bootstrap=40
+        q = start_batches(
+            stream,
+            lambda b, i: arena_monitor_batch(
+                b, out, i, half_life_batches=2.0, bootstrap=40
+            ),
+            ck,
         )
         q.awaitTermination(180)
 
@@ -1564,7 +1604,10 @@ def test_preference_bin_export_sink_streaming_pairs(
         read_preference_window,
         verify_preference_shards,
     )
-    from topn_spark.streaming.ingest import preference_bin_export_sink
+    from topn_spark.streaming.ingest import (
+        preference_bin_export_batch,
+        start_batches,
+    )
 
     src = str(tmp_path / "pp_src")
     corpus = str(tmp_path / "pp_store")
@@ -1586,9 +1629,13 @@ def test_preference_bin_export_sink_streaming_pairs(
 
     def run():
         stream = spark.readStream.schema(schema).parquet(src)
-        q = preference_bin_export_sink(
-            stream, corpus, out, ck, 0,
-            seqs_per_shard=8, epochs=(0,), epoch_salt="e",
+        q = start_batches(
+            stream,
+            lambda b, i: preference_bin_export_batch(
+                b, corpus, out, i, 0,
+                seqs_per_shard=8, epochs=(0,), epoch_salt="e",
+            ),
+            ck,
         )
         q.awaitTermination(180)
 
@@ -1702,7 +1749,7 @@ def test_bin_export_sink_object_store_backend(spark, tmp_path):
         read_bin_shards,
         verify_bin_shards,
     )
-    from topn_spark.streaming.ingest import bin_export_sink
+    from topn_spark.streaming.ingest import bin_export_batch, start_batches
 
     src = str(tmp_path / "ob_src")
     corpus = str(tmp_path / "ob_store")
@@ -1716,8 +1763,12 @@ def test_bin_export_sink_object_store_backend(spark, tmp_path):
 
     def run():
         stream = spark.readStream.schema(schema).parquet(src)
-        q = bin_export_sink(
-            stream, corpus, out, ck, 4, salt="ob", store=st
+        q = start_batches(
+            stream,
+            lambda b, i: bin_export_batch(
+                b, corpus, out, i, 4, salt="ob", store=st
+            ),
+            ck,
         )
         q.awaitTermination(180)
 

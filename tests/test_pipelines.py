@@ -313,6 +313,19 @@ def test_one_dag_walker_and_one_stream_starter():
     for gone in ("_run_with_source", "_validate_against", "_execute("):
         holders = [str(p) for p, text in sources.items() if gone in text]
         assert not holders, (gone, holders)
+    # per-batch steps attach through start_batches, not through
+    # wrappers that re-declare a step's signature and forward it
+    for wrapper in (
+        "incremental_corpus_sink", "neardup_corpus_sink",
+        "cdc_snapshot_sink", "sft_corpus_sink", "drift_monitor_sink",
+        "arena_monitor_sink", "bin_export_sink",
+        "preference_bin_export_sink",
+    ):
+        holders = [
+            str(p) for p, text in sources.items()
+            if f"def {wrapper}(" in text
+        ]
+        assert not holders, (wrapper, holders)
 
 
 def test_union_and_window_plugins(spark, tmp_path):

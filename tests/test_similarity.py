@@ -143,6 +143,34 @@ def test_edit_distance_join_neighborhood_is_lossless(spark):
     assert not any({a, b} == {1, 5} or {a, b} == {1, 6} for a, b, _ in got)
 
 
+def test_edit_distance_join_block_on_text_col(spark, tmp_path):
+    """A block column that is also the id or text column is projected
+    once: no plan node carries one attribute twice (the spread
+    shuffle would move the text twice, and engines that do not fold
+    same-attribute duplicates raise AMBIGUOUS_REFERENCE). Blocking on
+    the text itself pairs only identical texts."""
+    from topn_spark.operators.similarity import edit_distance_join
+
+    path = str(tmp_path / "one_split")
+    spark.createDataFrame(
+        [(1, "abc"), (2, "abc"), (3, "abd")], "id int, s string"
+    ).coalesce(1).write.parquet(path)
+    out = edit_distance_join(
+        spark.read.parquet(path), "id", "s", block_cols=("s",)
+    )
+    assert {(r.k1, r.k2, r.d) for r in out.collect()} == {(1, 2, 0)}
+
+    def doubled(node):
+        attrs = node.output()
+        ids = [attrs.apply(i).exprId().id() for i in range(attrs.size())]
+        kids = node.children()
+        return len(ids) != len(set(ids)) or any(
+            doubled(kids.apply(i)) for i in range(kids.size())
+        )
+
+    assert not doubled(out._jdf.queryExecution().optimizedPlan())
+
+
 def test_edit_distance_join_rejects_unsupported_dist(spark):
     import pytest
     from topn_spark.operators.similarity import edit_distance_join

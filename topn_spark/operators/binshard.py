@@ -1106,7 +1106,10 @@ def export_bin_shards_delta(
 
     Reference parity: the reference engine (TopN.java) has no
     trainer export; this is the round-12 verdict's top-ranked gap
-    ("make bin_export_sink batch-proportional")."""
+    (batch-proportional streaming maintenance: ``start_batches``
+    plus :func:`~topn_spark.streaming.ingest.bin_export_batch`)."""
+    if store_df is None and store_reader is None:
+        raise ValueError("store_df is required when store_reader is None")
     spark = batch.sparkSession
     st = store or LocalBinaryStore()
     meta = _read_meta(spark, out_dir, st)
@@ -2750,8 +2753,9 @@ def resume_bin_window(
       the new version — serving positions from a different
       permutation would silently repeat and skip data;
     - epoch exhausted → roll to the next epoch's order (which must
-      exist — the raise says to export it; ``bin_export_sink
-      (epochs=...)`` keeps a window of orders current);
+      exist — the raise says to export it; ``bin_export_batch
+      (epochs=...)`` attached with ``start_batches`` keeps a window
+      of orders current);
     - layout dispatch: ``seq`` layouts serve
       :func:`read_bin_window` rows (``batch_units`` sequences),
       ``pair`` layouts serve :func:`read_preference_window` rows

@@ -420,7 +420,7 @@ def edit_distance_join(
     # serializing the explode and both join sides' map work on one
     # core (§2.5 input skew). Spread first; a no-op at scale.
     keyed = ensure_parallelism(
-        df.select(id_col, text_col, *block_cols)
+        df.select(*dict.fromkeys((id_col, text_col, *block_cols)))
     ).select(
         F.col(id_col).alias("_id"),
         F.col(text_col).alias("_txt"),

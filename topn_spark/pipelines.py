@@ -34,8 +34,9 @@ plugins (File source/sink, Projection, Filter, SQL, Deduplicate,
 GroupByAggregate, Joiner, TopN) plus the corpus, SFT and
 binary-export stages; registering more is one dict entry. Handlers
 read their properties through the shared readers (``_str_prop``,
-``_int_prop``, ``_float_prop``, ``_choice_prop``, ``_fields_prop``),
-which own the parse, the @Macro lifecycle and the failure text.
+``_int_prop``, ``_float_prop``, ``_choice_prop``, ``_fields_prop``,
+``_col_prop``), which own the parse, the @Macro lifecycle and the
+failure text.
 """
 
 from __future__ import annotations
@@ -70,14 +71,19 @@ _TF = ("true", "false")
 _TF_HINT = "'true' or 'false'."
 
 
-def _require_field(df, field, collector, prop):
-    if field not in df.columns:
+def _col_prop(p, name, default, df, collector):
+    """A column-name property: the name, after collecting ``Column
+    '<c>' not in input schema.`` when ``df`` lacks it; an unset
+    optional column (``default`` None) reads None unchecked. Called
+    where the check belongs in the stage's failure order;
+    ``_col_prop({}, name, col, ...)`` checks a fixed column ``col``
+    under ``name``."""
+    col = p.get(name, default)
+    if col is not None and col not in df.columns:
         collector.add_failure(
-            f"Column '{field}' not in input schema.",
-            property_name=prop,
+            f"Column '{col}' not in input schema.", property_name=name
         )
-        return False
-    return True
+    return col
 
 
 def _str_prop(p, name, default, collector, substitutions, phase):
@@ -504,12 +510,11 @@ def _stage_html_extract(
     (default 'doc_id')."""
     (df,) = inputs
     p = stage.properties
-    html_col = p.get("htmlField", "html")
-    id_col = p.get("idField", "doc_id")
-    if not (
-        _require_field(df, html_col, collector, "htmlField")
-        and _require_field(df, id_col, collector, "idField")
-    ):
+    html_col = _col_prop(p, "htmlField", "html", df, collector)
+    if collector.failures:
+        return df
+    id_col = _col_prop(p, "idField", "doc_id", df, collector)
+    if collector.failures:
         return df
     from topn_spark.operators.markup import extract_html_text
 
@@ -522,8 +527,8 @@ def _stage_quality_score(
     """QualityScore transform: Gopher-style quality features + keep
     flag (textstats.add_quality). Property: textField ('text')."""
     (df,) = inputs
-    text_col = stage.properties.get("textField", "text")
-    if not _require_field(df, text_col, collector, "textField"):
+    text_col = _col_prop(stage.properties, "textField", "text", df, collector)
+    if collector.failures:
         return df
     from topn_spark.operators.textstats import add_quality
 
@@ -536,8 +541,8 @@ def _stage_script_profile(
     """ScriptProfile transform: per-doc Unicode script counts +
     dominant script (textstats.script_profile). Property: textField."""
     (df,) = inputs
-    text_col = stage.properties.get("textField", "text")
-    if not _require_field(df, text_col, collector, "textField"):
+    text_col = _col_prop(stage.properties, "textField", "text", df, collector)
+    if collector.failures:
         return df
     from topn_spark.operators.textstats import script_profile
 
@@ -551,10 +556,9 @@ def _stage_normalize_unicode(
     Properties: textField ('text'), form ('NFC')."""
     (df,) = inputs
     p = stage.properties
-    text_col = p.get("textField", "text")
     # validate every property independently so one bad upstream stage
     # doesn't mask this stage's own config errors in the batch report
-    _require_field(df, text_col, collector, "textField")
+    text_col = _col_prop(p, "textField", "text", df, collector)
     form = _choice_prop(
         p, "form", "NFC", ("NFC", "NFD", "NFKC", "NFKD"), collector,
         label="normalization form",
@@ -575,8 +579,7 @@ def _stage_gopher_rules(
     filter to gopher_keep rows and drop the signal columns)."""
     (df,) = inputs
     p = stage.properties
-    text_col = p.get("textField", "text")
-    _require_field(df, text_col, collector, "textField")
+    text_col = _col_prop(p, "textField", "text", df, collector)
     keep_only = _choice_prop(p, "keepOnly", "false", _TF, collector)
     if collector.failures:
         return df
@@ -599,8 +602,7 @@ def _stage_c4_line_filter(
     properties for deliberate deviation."""
     (df,) = inputs
     p = stage.properties
-    text_col = p.get("textField", "text")
-    _require_field(df, text_col, collector, "textField")
+    text_col = _col_prop(p, "textField", "text", df, collector)
     keep_only = _choice_prop(p, "keepOnly", "false", _TF, collector)
     min_words, min_sentences = (
         _int_prop(
@@ -637,8 +639,7 @@ def _stage_gopher_repetition(
     and drop the signal columns)."""
     (df,) = inputs
     p = stage.properties
-    text_col = p.get("textField", "text")
-    _require_field(df, text_col, collector, "textField")
+    text_col = _col_prop(p, "textField", "text", df, collector)
     keep_only = _choice_prop(p, "keepOnly", "false", _TF, collector)
     if collector.failures:
         return df
@@ -663,8 +664,6 @@ def _stage_perplexity_filter(
     tokens have no model opinion and are dropped by the filter)."""
     (df,) = inputs
     p = stage.properties
-    text_col = p.get("textField", "text")
-    id_col = p.get("idField", "doc_id")
     # macro lifecycle parity: substitute at run, then validate the
     # literal values below (macro'd props skip the deploy checks)
     model_path = _str_prop(
@@ -673,8 +672,8 @@ def _stage_perplexity_filter(
     smoothing = _str_prop(
         p, "smoothing", "wb", collector, substitutions, phase
     )
-    _require_field(df, text_col, collector, "textField")
-    _require_field(df, id_col, collector, "idField")
+    text_col = _col_prop(p, "textField", "text", df, collector)
+    id_col = _col_prop(p, "idField", "doc_id", df, collector)
     if not model_path:
         collector.add_failure(
             "Required property 'modelPath' is missing.",
@@ -750,16 +749,14 @@ def _stage_routed_quality(
 
     (df,) = inputs
     p = stage.properties
-    lang_col = p.get("langField", "lang")
-    text_col = p.get("textField", "text")
     id_col = p.get("idField", "doc_id")
     smoothing = p.get("smoothing", "wb")
     routes_raw = _str_prop(p, "routes", None, collector, substitutions, phase)
     lm_paths_raw = _str_prop(
         p, "lmPaths", None, collector, substitutions, phase
     )
-    _require_field(df, lang_col, collector, "langField")
-    _require_field(df, text_col, collector, "textField")
+    lang_col = _col_prop(p, "langField", "lang", df, collector)
+    text_col = _col_prop(p, "textField", "text", df, collector)
     if not routes_raw:
         collector.add_failure(
             "Required property 'routes' is missing.",
@@ -889,13 +886,11 @@ def _stage_dsir_weights(
     idField ('doc_id'), nBuckets ('256')."""
     (df,) = inputs
     p = stage.properties
-    text_col = p.get("textField", "text")
-    id_col = p.get("idField", "doc_id")
     target_path = _str_prop(
         p, "targetPath", None, collector, substitutions, phase
     )
-    _require_field(df, text_col, collector, "textField")
-    _require_field(df, id_col, collector, "idField")
+    text_col = _col_prop(p, "textField", "text", df, collector)
+    id_col = _col_prop(p, "idField", "doc_id", df, collector)
     if not target_path:
         collector.add_failure(
             "Required property 'targetPath' is missing.",
@@ -943,14 +938,12 @@ def _stage_langid(
     the corpus-routing deployment shape)."""
     (df,) = inputs
     p = stage.properties
-    text_col = p.get("textField", "text")
-    id_col = p.get("idField", "doc_id")
     model_path = _str_prop(
         p, "modelPath", None, collector, substitutions, phase
     )
     keep_only = _str_prop(p, "keepOnly", None, collector, substitutions, phase)
-    _require_field(df, text_col, collector, "textField")
-    _require_field(df, id_col, collector, "idField")
+    text_col = _col_prop(p, "textField", "text", df, collector)
+    id_col = _col_prop(p, "idField", "doc_id", df, collector)
     if not model_path:
         collector.add_failure(
             "Required property 'modelPath' is missing.",
@@ -1052,10 +1045,8 @@ def _stage_warc_parse(
     ('blob_id'), strict ('true')."""
     (df,) = inputs
     p = stage.properties
-    content_col = p.get("contentField", "content")
-    id_col = p.get("idField", "blob_id")
-    _require_field(df, content_col, collector, "contentField")
-    _require_field(df, id_col, collector, "idField")
+    content_col = _col_prop(p, "contentField", "content", df, collector)
+    id_col = _col_prop(p, "idField", "blob_id", df, collector)
     strict = _choice_prop(p, "strict", "true", _TF, collector)
     if collector.failures:
         return df
@@ -1176,11 +1167,9 @@ def _stage_leakage_split(
     numHashes, bands, shingleSize."""
     (df,) = inputs
     p = stage.properties
-    text_col = p.get("textField", "text")
-    id_col = p.get("idField", "doc_id")
     out_col = p.get("splitField", "split")
-    _require_field(df, text_col, collector, "textField")
-    _require_field(df, id_col, collector, "idField")
+    text_col = _col_prop(p, "textField", "text", df, collector)
+    id_col = _col_prop(p, "idField", "doc_id", df, collector)
     family = _choice_prop(p, "family", "xxhash", _FAMILIES, collector)
     lsh = _lsh_props(p, family, collector, substitutions, phase)
     if lsh is None:
@@ -1218,13 +1207,9 @@ def _stage_neardup_collapse(
     ``component``."""
     (df,) = inputs
     p = stage.properties
-    text_col = p.get("textField", "text")
-    id_col = p.get("idField", "doc_id")
-    score_col = p.get("scoreField")
-    _require_field(df, text_col, collector, "textField")
-    _require_field(df, id_col, collector, "idField")
-    if score_col is not None:
-        _require_field(df, score_col, collector, "scoreField")
+    text_col = _col_prop(p, "textField", "text", df, collector)
+    id_col = _col_prop(p, "idField", "doc_id", df, collector)
+    score_col = _col_prop(p, "scoreField", None, df, collector)
     family = _choice_prop(p, "family", "xxhash", _FAMILIES, collector)
     lsh = _lsh_props(p, family, collector, substitutions, phase)
     if lsh is None:
@@ -1259,9 +1244,6 @@ def _stage_token_budget_mixture(
     ('doc_id'), tokenField ('n_tokens')."""
     (df,) = inputs
     p = stage.properties
-    group_col = p.get("groupField", "source")
-    id_col = p.get("idField", "doc_id")
-    token_col = p.get("tokenField", "n_tokens")
     weights_raw = _str_prop(
         p, "weights", None, collector, substitutions, phase
     )
@@ -1269,9 +1251,9 @@ def _stage_token_budget_mixture(
         p, "totalTokens", 0, collector, lo=0,
         substitutions=substitutions, phase=phase,
     )
-    _require_field(df, group_col, collector, "groupField")
-    _require_field(df, id_col, collector, "idField")
-    _require_field(df, token_col, collector, "tokenField")
+    group_col = _col_prop(p, "groupField", "source", df, collector)
+    id_col = _col_prop(p, "idField", "doc_id", df, collector)
+    token_col = _col_prop(p, "tokenField", "n_tokens", df, collector)
     weights = _mixture_weights(p, "TokenBudgetMixture", weights_raw, collector)
     if collector.failures or phase == "deploy" or weights is None:
         return df  # filter preserves the schema
@@ -1298,9 +1280,6 @@ def _stage_epoch_mixture(
     pipeline.expand_epochs; salt re-deals the interleave)."""
     (df,) = inputs
     p = stage.properties
-    group_col = p.get("groupField", "source")
-    id_col = p.get("idField", "doc_id")
-    token_col = p.get("tokenField", "n_tokens")
     weights_raw = _str_prop(
         p, "weights", None, collector, substitutions, phase
     )
@@ -1314,9 +1293,9 @@ def _stage_epoch_mixture(
             p, "maxEpochs", 1, collector, lo=1,
             substitutions=substitutions, phase=phase,
         )
-    _require_field(df, group_col, collector, "groupField")
-    _require_field(df, id_col, collector, "idField")
-    _require_field(df, token_col, collector, "tokenField")
+    group_col = _col_prop(p, "groupField", "source", df, collector)
+    id_col = _col_prop(p, "idField", "doc_id", df, collector)
+    token_col = _col_prop(p, "tokenField", "n_tokens", df, collector)
     weights = _mixture_weights(p, "EpochMixture", weights_raw, collector)
     expand = _choice_prop(p, "expand", "false", _TF, collector, _TF_HINT)
     if collector.failures:
@@ -1355,9 +1334,6 @@ def _stage_decontaminate(
     compose — the operator raises on a clobber)."""
     (df,) = inputs
     p = stage.properties
-    text_col = p.get("textField", "text")
-    ev_text_col = p.get("evalTextField", text_col)
-    id_col = p.get("idField", "doc_id")
     count_col = p.get("countField", "n_contam_grams")
     flag_col = p.get("flagField", "contaminated")
     eval_path = _str_prop(p, "evalPath", None, collector, substitutions, phase)
@@ -1369,8 +1345,9 @@ def _stage_decontaminate(
         p, "minHits", 1, collector, lo=1,
         substitutions=substitutions, phase=phase,
     )
-    _require_field(df, text_col, collector, "textField")
-    _require_field(df, id_col, collector, "idField")
+    text_col = _col_prop(p, "textField", "text", df, collector)
+    ev_text_col = p.get("evalTextField", text_col)
+    id_col = _col_prop(p, "idField", "doc_id", df, collector)
     if not eval_path:
         collector.add_failure(
             "Required property 'evalPath' is missing.",
@@ -1430,7 +1407,6 @@ def _stage_tokenize(
     the same keepTokens contract; lmMode 'ascii'|'unicode')."""
     (df,) = inputs
     p = stage.properties
-    text_col = p.get("textField", "text")
     if p.get("mergesPath") is not None and p.get("piecesPath") is not None:
         collector.add_failure(
             "mergesPath and piecesPath are mutually exclusive.",
@@ -1444,7 +1420,7 @@ def _stage_tokenize(
     pieces_path = _str_prop(
         p, "piecesPath", None, collector, substitutions, phase
     )
-    _require_field(df, text_col, collector, "textField")
+    text_col = _col_prop(p, "textField", "text", df, collector)
     if merges_path is None and pieces_path is None:
         mode = _choice_prop(
             p, "mode", "unicode", ("ascii", "unicode", "script"), collector,
@@ -1459,7 +1435,6 @@ def _stage_tokenize(
         return df.withColumn("tokens", t).withColumn(
             "n_tokens", F.size("tokens").cast("bigint")
         )
-    id_col = p.get("idField", "doc_id")
     keep = _int_prop(
         p, "keepTokens", 0, collector, lo=-1,
         substitutions=substitutions, phase=phase,
@@ -1475,7 +1450,7 @@ def _stage_tokenize(
         )
         if mode is None:
             return df
-    _require_field(df, id_col, collector, "idField")
+    id_col = _col_prop(p, "idField", "doc_id", df, collector)
     if collector.failures:
         return df
     path = pieces_path if unigram else merges_path
@@ -1524,13 +1499,12 @@ def _stage_quality_classifier(
     gate)."""
     (df,) = inputs
     p = stage.properties
-    text_col = p.get("textField", "text")
     prob_col = p.get("probField", "prob")
     gate = p.get("minProb") is not None
     model_path = _str_prop(
         p, "modelPath", None, collector, substitutions, phase
     )
-    _require_field(df, text_col, collector, "textField")
+    text_col = _col_prop(p, "textField", "text", df, collector)
     if not model_path:
         collector.add_failure(
             "Required property 'modelPath' is missing.",
@@ -1625,8 +1599,7 @@ def _stage_pii_redact(
     release-gate deployment shape)."""
     (df,) = inputs
     p = stage.properties
-    text_col = p.get("textField", "text")
-    _require_field(df, text_col, collector, "textField")
+    text_col = _col_prop(p, "textField", "text", df, collector)
     replace_text = _choice_prop(p, "replaceText", "false", _TF, collector)
     if collector.failures:
         return df
@@ -1658,8 +1631,7 @@ def _stage_url_filter(
     = input schema (feature columns are internal)."""
     (df,) = inputs
     p = stage.properties
-    url_col = p.get("urlField", "url")
-    _require_field(df, url_col, collector, "urlField")
+    url_col = _col_prop(p, "urlField", "url", df, collector)
     action = _choice_prop(p, "action", "block", ("block", "allow"), collector)
     match_on = _choice_prop(
         p, "matchOn", "registered_domain", ("registered_domain", "host"),
@@ -1724,19 +1696,16 @@ def _stage_pack_sequences(
     convention; counts as a real training token)."""
     (df,) = inputs
     p = stage.properties
-    tokens_col = p.get("tokensField", "tokens")
-    id_col = p.get("idField", "doc_id")
-    order_col = p.get("orderField", id_col)
     by = tuple(_fields_prop(p, "byFields"))
     seq_len = _int_prop(
         p, "seqLen", 2048, collector,
         substitutions=substitutions, phase=phase,
     )
-    _require_field(df, tokens_col, collector, "tokensField")
-    _require_field(df, id_col, collector, "idField")
-    _require_field(df, order_col, collector, "orderField")
+    tokens_col = _col_prop(p, "tokensField", "tokens", df, collector)
+    id_col = _col_prop(p, "idField", "doc_id", df, collector)
+    order_col = _col_prop(p, "orderField", id_col, df, collector)
     for c in by:
-        _require_field(df, c, collector, "byFields")
+        _col_prop({}, "byFields", c, df, collector)
     if collector.failures:
         return df
     from topn_spark.operators.pipeline import pack_token_sequences
@@ -1760,8 +1729,6 @@ def _stage_shard_sink(
     (optional — manifest then also carries token counts), salt ('')."""
     (df,) = inputs
     p = stage.properties
-    id_col = p.get("idField", "doc_id")
-    token_col = p.get("tokenField")
     if not p.get("path"):
         collector.add_failure(
             "ShardSink needs a 'path'.", property_name="path"
@@ -1776,9 +1743,8 @@ def _stage_shard_sink(
         p, "nShards", 1, collector,
         substitutions=substitutions, phase=phase,
     )
-    _require_field(df, id_col, collector, "idField")
-    if token_col is not None:
-        _require_field(df, token_col, collector, "tokenField")
+    id_col = _col_prop(p, "idField", "doc_id", df, collector)
+    token_col = _col_prop(p, "tokenField", None, df, collector)
     if collector.failures or phase != "run":
         return df
     path = _str_prop(p, "path", None, collector, substitutions, phase)
@@ -1805,14 +1771,9 @@ def _stage_winrate(
 
     (df,) = inputs
     p = stage.properties
-    prompt_col = p.get("promptField", "prompt_id")
-    model_col = p.get("modelField", "model")
-    score_col = p.get("scoreField", "score")
-    for prop, col in (
-        ("promptField", prompt_col), ("modelField", model_col),
-        ("scoreField", score_col),
-    ):
-        _require_field(df, col, collector, prop)
+    prompt_col = _col_prop(p, "promptField", "prompt_id", df, collector)
+    model_col = _col_prop(p, "modelField", "model", df, collector)
+    score_col = _col_prop(p, "scoreField", "score", df, collector)
     if collector.failures:
         return df
     return pairwise_winrate(
@@ -1836,7 +1797,7 @@ def _stage_elo_fit(
     (df,) = inputs
     p = stage.properties
     for col in ("model_a", "model_b", "wins_a", "wins_b", "ties"):
-        _require_field(df, col, collector, "input")
+        _col_prop({}, "input", col, df, collector)
     max_iter = _int_prop(
         p, "maxIter", 1000, collector,
         substitutions=substitutions, phase=phase,
@@ -1865,8 +1826,7 @@ def _stage_encode_ids(
     tokensField ('tokens'), outField (defaults to tokensField)."""
     (df,) = inputs
     p = stage.properties
-    tokens_col = p.get("tokensField", "tokens")
-    _require_field(df, tokens_col, collector, "tokensField")
+    tokens_col = _col_prop(p, "tokensField", "tokens", df, collector)
     vocab_path = _str_prop(
         p, "vocabPath", None, collector, substitutions, phase
     )
@@ -1926,16 +1886,14 @@ def _bin_columns_props(p, df, collector):
     """A binary-export sink's ``(id, tokens, mask, assets, dtype)``:
     each column checked against the input (mask and assets may be
     ``'none'``), dtype one of the shard token widths."""
-    id_col = p.get("idField", "seq_id")
-    tokens_col = p.get("tokensField", "tokens")
+    id_col = _col_prop(p, "idField", "seq_id", df, collector)
+    tokens_col = _col_prop(p, "tokensField", "tokens", df, collector)
     mask_col = _none_field(p, "maskField", "loss_mask")
-    assets_col = _none_field(p, "assetsField", "none")
-    _require_field(df, id_col, collector, "idField")
-    _require_field(df, tokens_col, collector, "tokensField")
     if mask_col is not None:
-        _require_field(df, mask_col, collector, "maskField")
+        _col_prop(p, "maskField", mask_col, df, collector)
+    assets_col = _none_field(p, "assetsField", "none")
     if assets_col is not None:
-        _require_field(df, assets_col, collector, "assetsField")
+        _col_prop(p, "assetsField", assets_col, df, collector)
     dtype = _choice_prop(
         p, "dtype", "auto", ("auto", "uint16", "uint32"), collector,
         "'auto', 'uint16' or 'uint32'.",
@@ -2031,13 +1989,11 @@ def _stage_validate_assets(
         )
     df, registry = inputs
     p = stage.properties
-    refs_col = p.get("refsField", "asset_ids")
-    asset_key = p.get("assetKey", "asset_id")
+    refs_col = _col_prop(p, "refsField", "asset_ids", df, collector)
+    asset_key = _col_prop(p, "assetKey", "asset_id", registry, collector)
     id_field = p.get("idField")
-    _require_field(df, refs_col, collector, "refsField")
-    _require_field(registry, asset_key, collector, "assetKey")
     if id_field:
-        _require_field(df, id_field, collector, "idField")
+        _col_prop(p, "idField", None, df, collector)
     if collector.failures:
         return df
     if id_field:
@@ -2105,17 +2061,10 @@ def _stage_pack_multimodal(
         p, "seqLen", 1, collector,
         substitutions=substitutions, phase=phase,
     )
-    id_col = p.get("idField", "conv_id")
-    tokens_col = p.get("tokensField", "tokens")
-    mask_col = p.get("maskField", "loss_mask")
-    assets_col = p.get("assetsField", "asset_ids")
-    for f, n in (
-        (id_col, "idField"),
-        (tokens_col, "tokensField"),
-        (mask_col, "maskField"),
-        (assets_col, "assetsField"),
-    ):
-        _require_field(df, f, collector, n)
+    id_col = _col_prop(p, "idField", "conv_id", df, collector)
+    tokens_col = _col_prop(p, "tokensField", "tokens", df, collector)
+    mask_col = _col_prop(p, "maskField", "loss_mask", df, collector)
+    assets_col = _col_prop(p, "assetsField", "asset_ids", df, collector)
     if collector.failures:
         return df
     from topn_spark.operators.pipeline import (
@@ -2247,9 +2196,6 @@ def _stage_preference_bin_shard_sink(
         p, "nShards", 1, collector,
         substitutions=substitutions, phase=phase,
     )
-    pair_col = p.get("pairIdField", "pair_id")
-    ct = p.get("chosenTokensField", "chosen_tokens")
-    rt = p.get("rejectedTokensField", "rejected_tokens")
     cm = _none_field(p, "chosenMaskField", "chosen_mask")
     rm = _none_field(p, "rejectedMaskField", "rejected_mask")
     if (cm is None) != (rm is None):
@@ -2259,12 +2205,12 @@ def _stage_preference_bin_shard_sink(
             property_name="chosenMaskField",
         )
         return df
-    _require_field(df, pair_col, collector, "pairIdField")
-    _require_field(df, ct, collector, "chosenTokensField")
-    _require_field(df, rt, collector, "rejectedTokensField")
+    pair_col = _col_prop(p, "pairIdField", "pair_id", df, collector)
+    ct = _col_prop(p, "chosenTokensField", "chosen_tokens", df, collector)
+    rt = _col_prop(p, "rejectedTokensField", "rejected_tokens", df, collector)
     if cm is not None:
-        _require_field(df, cm, collector, "chosenMaskField")
-        _require_field(df, rm, collector, "rejectedMaskField")
+        _col_prop(p, "chosenMaskField", cm, df, collector)
+        _col_prop(p, "rejectedMaskField", rm, df, collector)
     if collector.failures or phase != "run":
         return df
     path = _str_prop(p, "path", None, collector, substitutions, phase)
@@ -2309,13 +2255,11 @@ def _stage_tag_attributes(
 
     (df,) = inputs
     p = stage.properties
-    id_col = p.get("idField", "doc_id")
-    text_col = p.get("textField", "text")
     taggers_raw = _str_prop(
         p, "taggers", None, collector, substitutions, phase
     )
-    _require_field(df, id_col, collector, "idField")
-    _require_field(df, text_col, collector, "textField")
+    id_col = _col_prop(p, "idField", "doc_id", df, collector)
+    text_col = _col_prop(p, "textField", "text", df, collector)
     names = None
     if taggers_raw and not contains_macro(taggers_raw):
         names = [t.strip() for t in taggers_raw.split(",") if t.strip()]
@@ -2366,13 +2310,12 @@ def _stage_mixer(
 
     (df,) = inputs
     p = stage.properties
-    id_col = p.get("idField", "doc_id")
     text_col = p.get("textField", "text")
     config_raw = _str_prop(p, "config", None, collector, substitutions, phase)
     attrs_path = _str_prop(
         p, "attributesPath", None, collector, substitutions, phase
     )
-    _require_field(df, id_col, collector, "idField")
+    id_col = _col_prop(p, "idField", "doc_id", df, collector)
     for prop, val in (("config", config_raw),
                       ("attributesPath", attrs_path)):
         if not val:
@@ -2414,10 +2357,11 @@ def _stage_mixer(
         )
         return df
     errs = mixer_errors(config, attrs.columns)
-    for rule in (config or {}).get("span_replacement", []) or []:
-        if isinstance(rule, dict) and "span" in rule:
-            if not _require_field(df, text_col, collector, "textField"):
-                break
+    if any(
+        isinstance(rule, dict) and "span" in rule
+        for rule in (config or {}).get("span_replacement", []) or []
+    ):
+        _col_prop(p, "textField", "text", df, collector)
     if errs:
         for e in errs:
             collector.add_failure(
@@ -2448,8 +2392,7 @@ def _stage_conversation_qc(
 
     (df,) = inputs
     p = stage.properties
-    messages_col = p.get("messagesField", "messages")
-    _require_field(df, messages_col, collector, "messagesField")
+    messages_col = _col_prop(p, "messagesField", "messages", df, collector)
     roles = tuple(
         _fields_prop(p, "allowedRoles", default="system,user,assistant")
     )
@@ -2478,9 +2421,8 @@ def _stage_render_chat(
 
     (df,) = inputs
     p = stage.properties
-    messages_col = p.get("messagesField", "messages")
     out_col = p.get("outField", "text")
-    _require_field(df, messages_col, collector, "messagesField")
+    messages_col = _col_prop(p, "messagesField", "messages", df, collector)
     template = _choice_prop(
         p, "template", "chatml", CHAT_TEMPLATES, collector,
         f"One of {list(CHAT_TEMPLATES)}.", label="template",
@@ -2503,10 +2445,8 @@ def _stage_fim(
     (defaults to textField), salt ('')."""
     (df,) = inputs
     p = stage.properties
-    text_col = p.get("textField", "text")
-    id_col = p.get("idField", "doc_id")
-    _require_field(df, text_col, collector, "textField")
-    _require_field(df, id_col, collector, "idField")
+    text_col = _col_prop(p, "textField", "text", df, collector)
+    id_col = _col_prop(p, "idField", "doc_id", df, collector)
     rate, spm_rate = (
         _float_prop(
             p, prop, "0.5", "A fraction in [0, 1].", collector,
@@ -2538,8 +2478,6 @@ def _stage_token_windows(
     stride ('1024' — must be in [1, window])."""
     (df,) = inputs
     p = stage.properties
-    tokens_col = p.get("tokensField", "tokens")
-    id_col = p.get("idField", "doc_id")
     window = _int_prop(
         p, "window", 2048, collector, lo=1,
         substitutions=substitutions, phase=phase,
@@ -2548,8 +2486,8 @@ def _stage_token_windows(
         p, "stride", 1024, collector, lo=1,
         substitutions=substitutions, phase=phase,
     )
-    _require_field(df, tokens_col, collector, "tokensField")
-    _require_field(df, id_col, collector, "idField")
+    tokens_col = _col_prop(p, "tokensField", "tokens", df, collector)
+    id_col = _col_prop(p, "idField", "doc_id", df, collector)
     if window is not None and stride is not None and stride > window:
         collector.add_failure(
             f"stride ({stride}) exceeds window ({window}).",
@@ -2587,10 +2525,9 @@ def _stage_loss_mask(
 
     (df,) = inputs
     p = stage.properties
-    messages_col = p.get("messagesField", "messages")
     loss_role = p.get("lossRole", "assistant")
     out_col = p.get("outField", "text")
-    _require_field(df, messages_col, collector, "messagesField")
+    messages_col = _col_prop(p, "messagesField", "messages", df, collector)
     template = _choice_prop(
         p, "template", "chatml", CHAT_TEMPLATES, collector,
         f"One of {list(CHAT_TEMPLATES)}.", label="template",
@@ -2623,21 +2560,17 @@ def _stage_pack_masked(
     learned)."""
     (df,) = inputs
     p = stage.properties
-    tokens_col = p.get("tokensField", "tokens")
-    mask_col = p.get("maskField", "loss_mask")
-    id_col = p.get("idField", "doc_id")
-    order_col = p.get("orderField", id_col)
     by = tuple(_fields_prop(p, "byFields"))
     seq_len = _int_prop(
         p, "seqLen", 2048, collector,
         substitutions=substitutions, phase=phase,
     )
-    _require_field(df, tokens_col, collector, "tokensField")
-    _require_field(df, mask_col, collector, "maskField")
-    _require_field(df, id_col, collector, "idField")
-    _require_field(df, order_col, collector, "orderField")
+    tokens_col = _col_prop(p, "tokensField", "tokens", df, collector)
+    mask_col = _col_prop(p, "maskField", "loss_mask", df, collector)
+    id_col = _col_prop(p, "idField", "doc_id", df, collector)
+    order_col = _col_prop(p, "orderField", id_col, df, collector)
     for c in by:
-        _require_field(df, c, collector, "byFields")
+        _col_prop({}, "byFields", c, df, collector)
     sep_sup = _choice_prop(
         p, "sepSupervised", "false", _TF, collector, _TF_HINT, fold=True
     )
@@ -2666,12 +2599,9 @@ def _stage_bpe_loss_mask(
     mode ('byte' | 'char')."""
     (df,) = inputs
     p = stage.properties
-    id_col = p.get("idField", "conv_id")
-    tokens_col = p.get("tokensField", "tokens")
-    mask_col = p.get("maskField", "loss_mask")
-    _require_field(df, id_col, collector, "idField")
-    _require_field(df, tokens_col, collector, "tokensField")
-    _require_field(df, mask_col, collector, "maskField")
+    id_col = _col_prop(p, "idField", "conv_id", df, collector)
+    tokens_col = _col_prop(p, "tokensField", "tokens", df, collector)
+    mask_col = _col_prop(p, "maskField", "loss_mask", df, collector)
     if not p.get("mergesPath"):
         collector.add_failure(
             "Required property 'mergesPath' is missing.",
@@ -2709,8 +2639,8 @@ def _stage_redact_conversation(
 
     (df,) = inputs
     p = stage.properties
-    messages_col = p.get("messagesField", "messages")
-    if not _require_field(df, messages_col, collector, "messagesField"):
+    messages_col = _col_prop(p, "messagesField", "messages", df, collector)
+    if collector.failures:
         return df
     return redact_conversation(df, messages_col)
 
@@ -2727,15 +2657,10 @@ def _stage_preference_pairs(
 
     (df,) = inputs
     p = stage.properties
-    prompt_col = p.get("promptField", "prompt_id")
-    score_col = p.get("scoreField", "score")
-    id_col = p.get("idField", "sample_id")
-    response_col = p.get("responseField", "response")
-    for prop, col in (
-        ("promptField", prompt_col), ("scoreField", score_col),
-        ("idField", id_col), ("responseField", response_col),
-    ):
-        _require_field(df, col, collector, prop)
+    prompt_col = _col_prop(p, "promptField", "prompt_id", df, collector)
+    score_col = _col_prop(p, "scoreField", "score", df, collector)
+    id_col = _col_prop(p, "idField", "sample_id", df, collector)
+    response_col = _col_prop(p, "responseField", "response", df, collector)
     min_gap = _float_prop(
         p, "minGap", "0", "A number >= 0.", collector,
         substitutions, phase, lo=0,
@@ -2760,9 +2685,8 @@ def _stage_loss_spans(
 
     (df,) = inputs
     p = stage.properties
-    messages_col = p.get("messagesField", "messages")
     loss_role = p.get("lossRole", "assistant")
-    _require_field(df, messages_col, collector, "messagesField")
+    messages_col = _col_prop(p, "messagesField", "messages", df, collector)
     template = _choice_prop(
         p, "template", "chatml", CHAT_TEMPLATES, collector,
         f"One of: {', '.join(CHAT_TEMPLATES)}.", label="template",
@@ -2787,10 +2711,8 @@ def _stage_kto_labels(
 
     (df,) = inputs
     p = stage.properties
-    prompt_col = p.get("promptField", "prompt_id")
-    score_col = p.get("scoreField", "score")
-    _require_field(df, prompt_col, collector, "promptField")
-    _require_field(df, score_col, collector, "scoreField")
+    prompt_col = _col_prop(p, "promptField", "prompt_id", df, collector)
+    score_col = _col_prop(p, "scoreField", "score", df, collector)
     threshold = _float_prop(
         p, "threshold", None, "A number, or omit for the per-prompt mean.",
         collector, substitutions, phase,
@@ -2815,8 +2737,7 @@ def _stage_epoch_shuffle(
 
     (df,) = inputs
     p = stage.properties
-    id_col = p.get("idField", "doc_id")
-    _require_field(df, id_col, collector, "idField")
+    id_col = _col_prop(p, "idField", "doc_id", df, collector)
     vals = {}
     for prop, lo in (("epoch", 0), ("numShards", 1)):
         if p.get(prop) is None:
@@ -2850,9 +2771,8 @@ def _stage_truncate_conversation(
 
     (df,) = inputs
     p = stage.properties
-    messages_col = p.get("messagesField", "messages")
     keep_system = p.get("keepSystem", "true").lower() != "false"
-    _require_field(df, messages_col, collector, "messagesField")
+    messages_col = _col_prop(p, "messagesField", "messages", df, collector)
     if p.get("maxChars") is None:
         collector.add_failure(
             "Required property 'maxChars' is missing.",
@@ -2886,10 +2806,10 @@ def _stage_json_output_qc(
 
     (df,) = inputs
     p = stage.properties
-    col = p.get("field", "response")
     keys = tuple(_fields_prop(p, "requiredKeys"))
     keep_only = p.get("keepOnly", "false").lower() == "true"
-    if not _require_field(df, col, collector, "field"):
+    col = _col_prop(p, "field", "response", df, collector)
+    if collector.failures:
         return df
     out = json_output_qc(df, col=col, required_keys=keys)
     if keep_only:
@@ -2911,9 +2831,9 @@ def _stage_canonical_url(
 
     (df,) = inputs
     p = stage.properties
-    url_col = p.get("urlField", "url")
     out_col = p.get("outField", "canonical_url")
-    if not _require_field(df, url_col, collector, "urlField"):
+    url_col = _col_prop(p, "urlField", "url", df, collector)
+    if collector.failures:
         return df
     return canonical_url(df, url_col=url_col, out_col=out_col)
 
@@ -3226,6 +3146,6 @@ def run_streaming_pipeline(
             sink_mode="append",
         )
 
-    from topn_spark.streaming.ingest import _start_batches
+    from topn_spark.streaming.ingest import start_batches
 
-    return _start_batches(stream, _process, checkpoint_dir)
+    return start_batches(stream, _process, checkpoint_dir)

@@ -15,8 +15,8 @@ and assert equality — the only honest check for streaming semantics.
 """
 
 from topn_spark.streaming.ingest import (
-    incremental_corpus_sink,
     ingest_batch,
+    start_batches,
 )
 from topn_spark.streaming.joins import (
     enrich_stream,
@@ -38,6 +38,6 @@ __all__ = [
     "enrich_stream",
     "interval_join",
     "streaming_dedup",
-    "incremental_corpus_sink",
     "ingest_batch",
+    "start_batches",
 ]

@@ -40,14 +40,19 @@ def _error_condition(e) -> str:
     return ""
 
 
-def _start_batches(stream: DataFrame, process, checkpoint_dir: str):
+def start_batches(stream: DataFrame, process, checkpoint_dir: str):
     """Start ``stream`` with ``process(batch, batch_id)`` run on every
     micro-batch via ``foreachBatch``; returns the ``StreamingQuery``.
-    The one place that sets the streaming sinks' checkpoint and
-    trigger policy: the checkpoint at ``checkpoint_dir`` makes batch
-    ids replay-stable, and the availableNow trigger drains what the
-    source holds now and stops, so callers re-start the sink to drain
-    a growing source."""
+    The one way a per-batch step attaches to a stream, e.g.
+    ``start_batches(stream, lambda b, i: bin_export_batch(b, corpus,
+    out, i, 6), ck)``. Pass the epoch id on as the step's
+    ``batch_id`` where it takes one, so a replayed epoch overwrites
+    its own partition.
+
+    The one place that sets the checkpoint and trigger policy: the
+    checkpoint at ``checkpoint_dir`` makes batch ids replay-stable,
+    and the availableNow trigger drains what the source holds now and
+    stops, so callers re-start the query to drain a growing source."""
     return (
         stream.writeStream.foreachBatch(process)
         .option("checkpointLocation", checkpoint_dir)
@@ -96,7 +101,10 @@ def ingest_batch(
     """Process one micro-batch: drop rows whose content fingerprint is
     already in ``store_dir`` (or duplicated within the batch —
     min-``id_col`` row wins), append survivors to ``out_dir`` and
-    their fingerprints to the store."""
+    their fingerprints to the store. Parquet appends are not
+    transactional, so documents append FIRST: a crash between the two
+    writes strands a document without its fingerprint, never a
+    fingerprint without its document (which would drop data)."""
     spark = batch.sparkSession
     deduped = dedup_exact(batch, subset=[text_col], tiebreak=[id_col])
     fp = deduped.withColumn("_fp", F.md5(F.col(text_col)))
@@ -114,31 +122,6 @@ def ingest_batch(
         fresh.select("_fp").write.mode("append").parquet(store_dir)
     finally:
         fresh.unpersist()
-
-
-def incremental_corpus_sink(
-    stream: DataFrame,
-    store_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-):
-    """Wire a document stream into :func:`ingest_batch` via
-    ``foreachBatch`` (availableNow-compatible). Returns the started
-    ``StreamingQuery``.
-
-    Exactly-once caveat: plain parquet appends are not transactional —
-    a crash between the two writes in a batch can leave a fingerprint
-    without its document (safe: re-ingest skips it) but the reverse
-    order would drop data, hence documents are appended FIRST. The
-    checkpoint makes batch replays idempotent at the source level.
-    """
-
-    def _process(batch: DataFrame, _batch_id: int) -> None:
-        ingest_batch(batch, store_dir, out_dir, text_col, id_col)
-
-    return _start_batches(stream, _process, checkpoint_dir)
 
 
 def neardup_ingest_batch(
@@ -164,7 +147,8 @@ def neardup_ingest_batch(
     equi-join on (band, bhash), never batch x corpus — (3) verifies
     candidates by signature agreement, (4) applies the same rule
     within the batch (drop the larger id of any qualifying pair),
-    then appends survivors' docs, sigs, and bucket rows.
+    then appends survivors' docs, sigs, and bucket rows — documents
+    first, so a crash strands at most an unindexed admitted doc.
 
     Admission semantics are GREEDY-VS-SURVIVORS, the operational
     contract of an ingest gate: a new doc is compared against the
@@ -275,35 +259,6 @@ def neardup_ingest_batch(
     finally:
         admitted.unpersist()
         sigs.unpersist()
-
-
-def neardup_corpus_sink(
-    stream: DataFrame,
-    store_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    threshold: float = 0.7,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-):
-    """Wire a document stream into :func:`neardup_ingest_batch` via
-    ``foreachBatch`` (availableNow-compatible) — the near-dup sibling
-    of :func:`incremental_corpus_sink` (which gates on EXACT content
-    only). Same write-ordering caveat: documents append before index
-    rows, so a crash strands at most an unindexed admitted doc (safe:
-    it can only admit a future near-dup, never drop data)."""
-
-    def _process(batch: DataFrame, _batch_id: int) -> None:
-        neardup_ingest_batch(
-            batch,
-            store_dir,
-            out_dir,
-            threshold=threshold,
-            text_col=text_col,
-            id_col=id_col,
-        )
-
-    return _start_batches(stream, _process, checkpoint_dir)
 
 
 def cdc_batch(
@@ -425,29 +380,6 @@ def read_cdc_changes(
             "status", F.struct(pr.alias("p"), F.col("status"))
         ).alias("status")
     ).select(*cols)
-
-
-def cdc_snapshot_sink(
-    stream: DataFrame,
-    snapshot_dir: str,
-    changes_dir: str,
-    checkpoint_dir: str,
-    key_cols: list[str],
-    compare_cols: list[str],
-):
-    """Wire an upsert stream into :func:`cdc_batch` via
-    ``foreachBatch`` (availableNow-compatible): maintains a keyed
-    snapshot and a per-epoch added/changed/unchanged change log —
-    the CDC counterpart of the dedup ingest gates. Returns the
-    started ``StreamingQuery``."""
-
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        cdc_batch(
-            batch, snapshot_dir, changes_dir, key_cols, compare_cols,
-            batch_id,
-        )
-
-    return _start_batches(stream, _process, checkpoint_dir)
 
 
 def quality_gate_batch(
@@ -665,7 +597,7 @@ def quality_corpus_sink(
             redact=redact,
         )
 
-    return _start_batches(stream, _process, checkpoint_dir)
+    return start_batches(stream, _process, checkpoint_dir)
 
 
 def routed_gate_batch(
@@ -836,7 +768,7 @@ def routed_corpus_sink(
             redact=redact,
         )
 
-    return _start_batches(stream, _process, checkpoint_dir)
+    return start_batches(stream, _process, checkpoint_dir)
 
 
 def gate_report(spark, out_dir: str, reject_dir: str) -> DataFrame:
@@ -977,7 +909,7 @@ def decontam_corpus_sink(
             batch_id=batch_id,
         )
 
-    return _start_batches(stream, _process, checkpoint_dir)
+    return start_batches(stream, _process, checkpoint_dir)
 
 
 def attributes_sink(
@@ -1013,7 +945,7 @@ def attributes_sink(
             f"{out_dir}/batch_id={int(batch_id)}"
         )
 
-    return _start_batches(stream, _process, checkpoint_dir)
+    return start_batches(stream, _process, checkpoint_dir)
 
 
 def sft_gate_batch(
@@ -1088,40 +1020,6 @@ def sft_gate_batch(
         ).write.mode(mode).parquet(rej_target)
     finally:
         flagged.unpersist()
-
-
-def sft_corpus_sink(
-    stream: DataFrame,
-    out_dir: str,
-    reject_dir: str,
-    checkpoint_dir: str,
-    messages_col: str = "messages",
-    id_col: str = "conv_id",
-    template: str = "chatml",
-    redact: bool = False,
-):
-    """Wire a conversation stream into :func:`sft_gate_batch` via
-    ``foreachBatch`` (availableNow-compatible) — the streaming twin
-    of the batch SFT spec (``examples/sft_pipeline.json``): QC gate
-    with a dead-letter reason log, optional in-place PII redaction,
-    and trainable (text, tokens, loss_mask) landings per batch. The
-    stream's epoch id threads through as ``batch_id``, so a
-    checkpointed replay OVERWRITES its own batch partition instead
-    of duplicating it. Returns the started ``StreamingQuery``."""
-
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        sft_gate_batch(
-            batch,
-            out_dir,
-            reject_dir,
-            messages_col=messages_col,
-            id_col=id_col,
-            template=template,
-            redact=redact,
-            batch_id=batch_id,
-        )
-
-    return _start_batches(stream, _process, checkpoint_dir)
 
 
 def drift_monitor_batch(
@@ -1204,36 +1102,6 @@ def drift_monitor_batch(
         f"{out_dir}/batch_id={int(batch_id)}"
     )
     counts.unpersist()
-
-
-def drift_monitor_sink(
-    stream: DataFrame,
-    reference: dict[str, int],
-    out_dir: str,
-    checkpoint_dir: str,
-    text_col: str = "text",
-    mode: str = "ascii",
-    max_js: float | None = None,
-):
-    """Attach :func:`drift_monitor_batch` to a stream: one monitor
-    row per micro-batch under ``batch_id=<N>`` partitions
-    (exactly-once under replay), reference distribution held
-    driver-side and broadcast per batch. Returns the started
-    ``StreamingQuery``; read the log back with
-    ``spark.read.parquet(out_dir)`` and alert on ``drifted``."""
-
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        drift_monitor_batch(
-            batch,
-            reference,
-            out_dir,
-            int(batch_id),
-            text_col=text_col,
-            mode=mode,
-            max_js=max_js,
-        )
-
-    return _start_batches(stream, _process, checkpoint_dir)
 
 
 def arena_monitor_batch(
@@ -1480,50 +1348,6 @@ def arena_monitor_batch(
                 st.write_parquet(
                     _part("decayed_ci"), _ci_rows(dec_t), ci_ddl
                 )
-
-
-def arena_monitor_sink(
-    stream: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-    prompt_col: str = "prompt_id",
-    model_col: str = "model",
-    score_col: str = "score",
-    smoothing: float = 0.5,
-    cumulative: bool = True,
-    half_life_batches: float | None = None,
-    bootstrap: int | None = None,
-    store=None,
-):
-    """Attach :func:`arena_monitor_batch` to a stream of scored
-    samples: per-batch win matrices and Bradley–Terry ratings under
-    ``batch_id=<N>`` partitions (exactly-once under replay), plus
-    the cumulative fit + drift signal, with ``half_life_batches``
-    the exponentially-forgetting leaderboard, and with
-    ``bootstrap=n`` deterministic match-level bootstrap CIs under
-    ``cumulative_ci``/``decayed_ci`` — drift WITH uncertainty, the
-    shape a production leaderboard pages on. Returns the started
-    ``StreamingQuery``; read the rating history back with
-    ``spark.read.parquet(f"{out_dir}/ratings")`` (or
-    ``.../cumulative`` / ``.../decayed`` / ``.../decayed_ci``) and
-    alert on ``drift`` outside the interval."""
-
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        arena_monitor_batch(
-            batch,
-            out_dir,
-            int(batch_id),
-            prompt_col=prompt_col,
-            model_col=model_col,
-            score_col=score_col,
-            smoothing=smoothing,
-            cumulative=cumulative,
-            half_life_batches=half_life_batches,
-            bootstrap=bootstrap,
-            store=store,
-        )
-
-    return _start_batches(stream, _process, checkpoint_dir)
 
 
 def _manifest_rows(man) -> list[dict]:
@@ -1828,58 +1652,6 @@ def bin_export_batch(
     return man
 
 
-def bin_export_sink(
-    stream: DataFrame,
-    corpus_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    n_shards: int,
-    tokens_col: str = "tokens",
-    mask_col: str | None = "loss_mask",
-    id_col: str = "seq_id",
-    dtype: str = "auto",
-    salt: str = "",
-    assets_col: str | None = None,
-    store=None,
-    epochs: tuple[int, ...] = (),
-    epoch_salt: str = "",
-    seqs_per_shard: int | None = None,
-):
-    """Attach :func:`bin_export_batch` to a stream of packed
-    sequences: every micro-batch lands in the shard-partitioned
-    corpus store and the binary shard set re-exports at
-    BATCH-PROPORTIONAL cost (signature fold from the batch +
-    partition-pruned rewrite of touched shards; full-store diff
-    only on replay) — after each commit,
-    ``read_bin_shards(out_dir)`` equals the full store, and
-    ``verify_bin_shards`` stays green. With ``epochs``, the listed
-    epoch orders are re-derived whenever a commit changes shard
-    content, so trainer resume via ``read_bin_window`` always
-    finds a current-version order. Returns the started
-    ``StreamingQuery``."""
-
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        bin_export_batch(
-            batch,
-            corpus_dir,
-            out_dir,
-            int(batch_id),
-            n_shards,
-            tokens_col=tokens_col,
-            mask_col=mask_col,
-            id_col=id_col,
-            dtype=dtype,
-            salt=salt,
-            assets_col=assets_col,
-            store=store,
-            epochs=epochs,
-            epoch_salt=epoch_salt,
-            seqs_per_shard=seqs_per_shard,
-        )
-
-    return _start_batches(stream, _process, checkpoint_dir)
-
-
 def preference_bin_export_batch(
     batch: DataFrame,
     corpus_dir: str,
@@ -1941,51 +1713,3 @@ def preference_bin_export_batch(
         _layout="pair",
         _epoch_unit="pair",
     )
-
-
-def preference_bin_export_sink(
-    stream: DataFrame,
-    corpus_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    n_shards: int,
-    pair_id_col: str = "pair_id",
-    chosen_tokens_col: str = "chosen_tokens",
-    rejected_tokens_col: str = "rejected_tokens",
-    chosen_mask_col: str | None = "chosen_mask",
-    rejected_mask_col: str | None = "rejected_mask",
-    dtype: str = "auto",
-    salt: str = "",
-    store=None,
-    epochs: tuple[int, ...] = (),
-    epoch_salt: str = "",
-    seqs_per_shard: int | None = None,
-):
-    """Attach :func:`preference_bin_export_batch` to a stream of
-    preference pairs: after every commit the preference shard set
-    equals the full pair store (adjacency intact), and with
-    ``epochs`` a DPO trainer's ``read_preference_window`` always
-    finds a current-version pair-unit order. Returns the started
-    ``StreamingQuery``."""
-
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        preference_bin_export_batch(
-            batch,
-            corpus_dir,
-            out_dir,
-            int(batch_id),
-            n_shards,
-            pair_id_col=pair_id_col,
-            chosen_tokens_col=chosen_tokens_col,
-            rejected_tokens_col=rejected_tokens_col,
-            chosen_mask_col=chosen_mask_col,
-            rejected_mask_col=rejected_mask_col,
-            dtype=dtype,
-            salt=salt,
-            store=store,
-            epochs=epochs,
-            epoch_salt=epoch_salt,
-            seqs_per_shard=seqs_per_shard,
-        )
-
-    return _start_batches(stream, _process, checkpoint_dir)

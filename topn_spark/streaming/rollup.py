@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from topn_spark.operators.rollup import BUCKET_COL, RollupSpec, re_rollup, rollup
-from topn_spark.streaming.ingest import _start_batches
+from topn_spark.streaming.ingest import start_batches
 
 _PART = "_pdate"  # date partition column: dynamic overwrite granularity
 
@@ -139,4 +139,4 @@ def continuous_rollup_sink(
     def _process(batch: DataFrame, batch_id: int) -> None:
         apply_batch(batch, batch_id, store_dir, ledger, ts_col, bucket, spec)
 
-    return _start_batches(stream, _process, checkpoint_dir)
+    return start_batches(stream, _process, checkpoint_dir)
