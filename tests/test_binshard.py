@@ -1336,3 +1336,159 @@ def test_resume_cursor_windows_rollover_and_version_guard(
     rows = frame.collect()
     assert len(rows) == 4 and "chosen_tokens" in frame.columns
     assert cur == {"epoch": 0, "next_pos": 4, "export_version": 1}
+
+
+# ------------------------------------------------ pinned shard bytes
+
+
+def _rows_md5(df, order):
+    import hashlib
+    import json
+
+    rows = [list(r) for r in df.orderBy(*order).collect()]
+    return hashlib.md5(json.dumps(rows).encode()).hexdigest()
+
+
+def test_shard_bytes_pinned(spark, tmp_path):
+    """Byte-level pins across code versions: every ``shard_*`` file
+    and every reader's rows after a full export, a batch delta, an
+    incremental rewrite of one changed shard and an epoch order
+    (seq layout with mask and assets), and after a preference
+    export plus a pair-unit epoch (pair layout, uint32 tokens).
+    The other round-trip tests only compare a re-export with
+    itself; these digests fail when the layout drifts."""
+    from topn_spark.operators.binshard import (
+        export_bin_shards_delta,
+        export_epoch_order,
+        export_preference_shards,
+        read_bin_window,
+        read_preference_shards,
+        read_preference_window,
+    )
+    from topn_spark.operators.pipeline import shard_assignment
+
+    ddl = (
+        "seq_id bigint, tokens array<bigint>,"
+        " loss_mask array<boolean>, assets array<bigint>"
+    )
+
+    def seqs(ids, changed=None):
+        rows = []
+        for i in ids:
+            toks = [(i * 7 + j) % 50 + 1 for j in range(i % 5)]
+            if i == changed:
+                toks = [49] + toks
+            rows.append(
+                (
+                    i, toks, [j % 2 == 0 for j in range(len(toks))],
+                    [i * 10 + a for a in range(i % 3)],
+                )
+            )
+        return spark.createDataFrame(rows, ddl)
+
+    kw = dict(salt="pin", assets_col="assets")
+    out = str(tmp_path / "pin_seq")
+    seq_order = ["shard", "seq_index"]
+
+    export_bin_shards(seqs(range(9)), out, 2, **kw)
+    assert _file_hashes(out) == {
+        "shard_00000.ast": "f5313e833dc7f2501f7959dd85bbf43b",
+        "shard_00000.bin": "72e82d3404edfd5548ca9f7d7b6d1616",
+        "shard_00000.idx": "3a41bc3ff0849f08337c2b142ec86437",
+        "shard_00000.msk": "e3b99cbc875fba06408671e5468efa0c",
+        "shard_00001.ast": "c52a69f19b9619b7995009fbfad3379d",
+        "shard_00001.bin": "465ac4c26388e06018bbca73aae8f5e1",
+        "shard_00001.idx": "c9ac48b2be8220e744314d322a4f412b",
+        "shard_00001.msk": "249ba6277758050695e8f5909bacd6d3",
+    }
+    assert _rows_md5(read_bin_shards(spark, out), seq_order) == (
+        "c7285f507a64c705f481b10f1ddac6b3"
+    )
+
+    export_bin_shards_delta(
+        seqs(range(9, 12)),
+        shard_assignment(seqs(range(12)), 2, "seq_id", "pin"),
+        out, 2, **kw,
+    )
+    assert _file_hashes(out) == {
+        "shard_00000.ast": "25845f4d2352863ba908d299930e2214",
+        "shard_00000.bin": "d564896218be27f51f35914fac345e6e",
+        "shard_00000.idx": "ea605e695101adac3bfdab1f5527e6dd",
+        "shard_00000.msk": "b6a35748fdc63f8d52bdfdd2a6281062",
+        "shard_00001.ast": "197c48cd925e2135994123bd0605a0be",
+        "shard_00001.bin": "c2ebb6f17471bd5334d9107c90bbcdcb",
+        "shard_00001.idx": "7cfd4ae24c74d63ec5bb9eff2a83dce6",
+        "shard_00001.msk": "39849e2cbf0a783ca59593c685053a24",
+    }
+    assert _rows_md5(read_bin_shards(spark, out), seq_order) == (
+        "5067d855bd4181bb84f0bb76b582cfc3"
+    )
+
+    man = export_bin_shards(
+        seqs(range(12), changed=4), out, 2, incremental=True, **kw
+    ).collect()
+    assert sum(r.rewritten for r in man) == 1
+    assert _file_hashes(out) == {
+        "shard_00000.ast": "25845f4d2352863ba908d299930e2214",
+        "shard_00000.bin": "085ad4f7c2f98e3f920725f18e389549",
+        "shard_00000.idx": "31a67f84dbc1b8cba0a6358d3cf77ac5",
+        "shard_00000.msk": "0fefbbe4e0e5746d75815215afc04bc6",
+        "shard_00001.ast": "197c48cd925e2135994123bd0605a0be",
+        "shard_00001.bin": "c2ebb6f17471bd5334d9107c90bbcdcb",
+        "shard_00001.idx": "7cfd4ae24c74d63ec5bb9eff2a83dce6",
+        "shard_00001.msk": "39849e2cbf0a783ca59593c685053a24",
+    }
+    assert _rows_md5(read_bin_shards(spark, out), seq_order) == (
+        "d055d444dc542257a3962b9360e26647"
+    )
+
+    export_epoch_order(spark, out, 0, salt="pin")
+    assert _file_hashes(out) == {
+        "shard_00000.ast": "25845f4d2352863ba908d299930e2214",
+        "shard_00000.bin": "085ad4f7c2f98e3f920725f18e389549",
+        "shard_00000.ep0000": "536ba254655d2ce5b5b7c962e5e522c7",
+        "shard_00000.idx": "31a67f84dbc1b8cba0a6358d3cf77ac5",
+        "shard_00000.msk": "0fefbbe4e0e5746d75815215afc04bc6",
+        "shard_00001.ast": "197c48cd925e2135994123bd0605a0be",
+        "shard_00001.bin": "c2ebb6f17471bd5334d9107c90bbcdcb",
+        "shard_00001.ep0000": "23e8278e2b69a3a75fa59b23c49ed6ad",
+        "shard_00001.idx": "7cfd4ae24c74d63ec5bb9eff2a83dce6",
+        "shard_00001.msk": "39849e2cbf0a783ca59593c685053a24",
+    }
+    assert _rows_md5(
+        read_bin_window(spark, out, 0, 2, 10), ["global_pos"]
+    ) == "95dfae205fd2ce6e319322443528bedd"
+
+    pairs = spark.createDataFrame(
+        [
+            (
+                p,
+                [70000 + p + j for j in range(1 + p % 3)],
+                [j > 0 for j in range(1 + p % 3)],
+                [5 + j for j in range(p % 4)],
+                [True] * (p % 4),
+            )
+            for p in range(10)
+        ],
+        "pair_id bigint, chosen_tokens array<bigint>,"
+        " chosen_mask array<boolean>,"
+        " rejected_tokens array<bigint>,"
+        " rejected_mask array<boolean>",
+    )
+    pout = str(tmp_path / "pin_pair")
+    export_preference_shards(pairs, pout, 2, salt="pin")
+    assert _file_hashes(pout) == {
+        "shard_00000.bin": "acb60cf4974e73af75139b25dae8f049",
+        "shard_00000.idx": "011d67bebfbc920f234f79ba29df9d44",
+        "shard_00000.msk": "684ec645c338d0a109c862af8f3102e0",
+        "shard_00001.bin": "8a86dd8c374a85aa8a301481497a56c1",
+        "shard_00001.idx": "e2618e9cc66e01346a5875cab429c7b4",
+        "shard_00001.msk": "39914c93d132942aa841da77e7253018",
+    }
+    assert _rows_md5(
+        read_preference_shards(spark, pout), ["shard", "pair_index"]
+    ) == "97b8751d8c70a2c591cd69a8276019ae"
+    export_epoch_order(spark, pout, 1, salt="pin", unit="pair")
+    assert _rows_md5(
+        read_preference_window(spark, pout, 1, 1, 9), ["global_pos"]
+    ) == "e9c0f8c444c5308aa5f56555bcece184"
