@@ -61,6 +61,8 @@ pipeline, sized per the round-9/10 verdict task list.
 
 from __future__ import annotations
 
+import contextlib
+import io
 import os
 import struct
 import zlib
@@ -75,8 +77,11 @@ from topn_spark.operators.binfs import LocalBinaryStore
 _MAGIC = b"TNSPBIN1"
 _AST_MAGIC = b"TNSPAST1"
 _VERSION = 1
-#: dtype_code -> (numpy dtype string, max token id)
-_DTYPES = {2: ("<u2", (1 << 16) - 1), 4: ("<u4", (1 << 32) - 1)}
+#: dtype_code -> (numpy dtype string, max token id, dtype name)
+_DTYPES = {
+    2: ("<u2", (1 << 16) - 1, "uint16"),
+    4: ("<u4", (1 << 32) - 1, "uint32"),
+}
 
 _MANIFEST_SCHEMA = (
     "shard int, n_seqs bigint, n_tokens bigint, n_supervised bigint,"
@@ -303,44 +308,49 @@ def encode_token_ids(
 # binary export
 # ------------------------------------------------------------------
 
-def _remove_epoch_artifacts(out_dir: str, store=None) -> None:
-    """Delete every epoch-order artifact (``*.ep*`` permutation
-    files + ``_epoch_*`` manifests): an epoch order is a view of ONE
-    dataset version, so any export that changes shard content
-    invalidates it — a trainer silently consuming a stale
-    permutation over new data is the failure this prevents (a
-    deleted file fails LOUDLY at read time, with the
-    ``export_version`` remediation message)."""
-    st = store or LocalBinaryStore()
-    for n in st.list(out_dir, "shard_*.ep*"):
-        st.remove(os.path.join(out_dir, n))
-    for n in st.list(out_dir, "_epoch_*"):
+def _clear_shards(st, out_dir: str, shards) -> None:
+    """Delete what a rewrite replaces, before the writer runs: the
+    named shards' files (``None``: every ``shard_*`` file) and every
+    epoch-order artifact (``*.ep*`` permutation files + ``_epoch_*``
+    manifests). An epoch order is a view of ONE dataset version, so
+    any export that changes shard content invalidates it — a
+    trainer silently consuming a stale permutation over new data is
+    the failure this prevents (a deleted file fails LOUDLY at read
+    time, with the ``export_version`` remediation message)."""
+    if shards is None:
+        names = st.list(out_dir, "shard_*")
+    else:
+        names = [
+            f"shard_{int(k):05d}{sfx}"
+            for k in sorted(shards)
+            for sfx in (".bin", ".idx", ".msk", ".ast")
+        ] + st.list(out_dir, "shard_*.ep*")
+    names += st.list(out_dir, "_epoch_*")
+    for n in names:
         st.remove(os.path.join(out_dir, n))
 
 
-def _resolve_dtype(lo: int, hi: int, dtype: str) -> int:
+def _resolve_dtype(lo: int, hi: int, dtype: str, caller: str) -> int:
     """Resolve the dtype code from the observed token-id range
     (collected as part of the single per-shard stats aggregate —
-    never its own scan)."""
-    if dtype not in ("auto", "uint16", "uint32"):
+    never its own scan). A fixed ``dtype`` (the caller's, or the
+    stored export's for a delta) must hold every id."""
+    codes = {v[2]: k for k, v in _DTYPES.items()}
+    if dtype != "auto" and dtype not in codes:
         raise ValueError(
             f"unknown dtype {dtype!r} (auto|uint16|uint32)"
         )
     if lo < 0:
         raise ValueError(
-            f"export_bin_shards: negative token id {lo} — binary "
+            f"{caller}: negative token id {lo} — binary "
             "token streams are unsigned"
         )
-    if dtype == "uint16":
-        code = 2
-    elif dtype == "uint32":
-        code = 4
-    else:
-        code = 2 if hi <= _DTYPES[2][1] else 4
+    code = codes.get(dtype) or (2 if hi <= _DTYPES[2][1] else 4)
     if hi > _DTYPES[code][1]:
+        hint = " — run a full export with dtype='uint32'" * (code == 2)
         raise ValueError(
-            f"export_bin_shards: token id {hi} exceeds "
-            f"{'uint16' if code == 2 else 'uint32'} range"
+            f"{caller}: token id {hi} exceeds the {_DTYPES[code][2]} "
+            f"range{hint}"
         )
     return code
 
@@ -437,18 +447,92 @@ def _hashed_projection(
     )
 
 
-def _make_shard_writer(
-    st, out_dir, code, has_mask, has_ast, dtype_name, id_col
-):
-    """Build the mapInPandas shard-writer closure — each task
-    streams its shards' bytes straight to the storage backend and
-    yields the model-sized manifest rows. Shared verbatim by the
-    full/incremental exporter and the batch-proportional streaming
-    delta exporter (:func:`export_bin_shards_delta`): one writer,
-    one byte layout, regardless of which planner decided WHICH
-    shards to rewrite. Input batches must arrive repartitioned by
-    shard and sorted by (shard, _id)."""
-    np_dtype, _ = _DTYPES[code]
+def _offsets(sizes: np.ndarray) -> np.ndarray:
+    """Start offsets of consecutive records of the given byte sizes
+    — the ``.idx`` / ``.ast`` pointer tables the writer lays out and
+    the verifier re-derives."""
+    ptrs = np.zeros(len(sizes), dtype="<u8")
+    np.cumsum(sizes[:-1], out=ptrs[1:])
+    return ptrs
+
+
+def _shard_stats(hashed: DataFrame, dtype: str, caller: str):
+    """ONE per-shard aggregate (map-side combinable, one output row
+    per shard) carrying everything the pre-write decisions need:
+    the per-shard signature parts (``n``, ``x``) the incremental
+    diff and the delta fold consume, AND the token-id range the
+    dtype resolution checks — never two scans where one suffices
+    (at corpus scale, input passes ARE the cost model). Returns the
+    stats rows and the dtype code; sequences without tokens carry
+    no range, so an all-empty input resolves like token id 0."""
+    stats = hashed.groupBy("shard").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.bit_xor("_h").alias("x"),
+        F.min(F.array_min("_toks")).alias("lo"),
+        F.max(F.array_max("_toks")).alias("hi"),
+    ).collect()
+    lo = min(
+        (r["lo"] for r in stats if r["lo"] is not None), default=0
+    )
+    hi = max(
+        (r["hi"] for r in stats if r["hi"] is not None), default=0
+    )
+    return stats, _resolve_dtype(int(lo), int(hi), dtype, caller)
+
+
+def _prior_export(spark, out_dir: str, st, want: dict, caller: str):
+    """The prior export an incremental rewrite builds on: its meta
+    and its manifest rows by shard. RAISES when there is none, or
+    when a ``want`` parameter differs from it (the assignment or
+    encoding changed, so every shard would differ — run a full
+    export). Also sweeps the ``.inprogress`` temp files failed or
+    killed task attempts left behind: a full export sweeps them
+    with its ``shard_*`` listing, but a rewrite deletes only exact
+    final names, and no manifest ever references a temp name."""
+    meta = _read_meta(spark, out_dir, st)
+    if meta is None:
+        raise ValueError(
+            f"{caller}: needs a prior export at {out_dir} (no "
+            "_manifest_meta found) — run a full export first"
+        )
+    # meta predating the layout / scheme fields can only be a
+    # seq-layout hash export — reconstruct what it stored
+    stored = {
+        "layout": "seq",
+        "shard_scheme": f"hash:{meta['n_shards']}:{meta['salt']}",
+        **meta,
+    }
+    diff = {
+        k: (stored.get(k), v)
+        for k, v in want.items()
+        if stored.get(k) != v
+    }
+    if diff:
+        raise ValueError(
+            f"{caller}: parameters differ from the prior export: "
+            f"{diff} — every shard would change; run a full export"
+        )
+    for stale in st.list(out_dir, "shard_*.inprogress-*"):
+        st.remove(os.path.join(out_dir, stale))
+    return meta, {
+        int(r["shard"]): dict(r)
+        for r in _read_manifest_rows(out_dir, st) or []
+    }
+
+
+def _write_shards(
+    st, out_dir, hashed, nparts, code, has_mask, has_ast, id_col
+) -> list[dict]:
+    """The ONE write step of every exporter — one writer, one byte
+    layout, regardless of which planner decided WHICH shards to
+    rewrite: a hash repartition on the shard key plus an
+    in-partition sort by ``(shard, _id)``, then an Arrow
+    ``mapInPandas`` pass in which each task streams its shards'
+    bytes straight to the storage backend and yields the
+    model-sized manifest rows. ``collect`` executes the write
+    exactly once; the manifest is one row per shard."""
+    np_dtype, _, dtype_name = _DTYPES[code]
+    itemsize = np.dtype(np_dtype).itemsize
 
     def _write(batches):
         state: dict | None = None
@@ -484,11 +568,7 @@ def _make_shard_writer(
             n = len(s["lens"])
             lens = np.asarray(s["lens"], dtype="<u4")
             nsup = np.asarray(s["nsup"], dtype="<u4")
-            itemsize = 2 if code == 2 else 4
-            tok_ptrs = np.zeros(n, dtype="<u8")
-            np.cumsum(
-                lens[:-1].astype("<u8") * itemsize, out=tok_ptrs[1:]
-            )
+            tok_ptrs = _offsets(lens.astype("<u8") * itemsize)
             parts = [
                 _MAGIC,
                 struct.pack(
@@ -501,12 +581,9 @@ def _make_shard_writer(
                 tok_ptrs.tobytes(),
             ]
             if has_mask:
-                msk_ptrs = np.zeros(n, dtype="<u8")
-                np.cumsum(
-                    ((lens[:-1].astype("<u8") + 7) // 8),
-                    out=msk_ptrs[1:],
+                parts.append(
+                    _offsets((lens.astype("<u8") + 7) // 8).tobytes()
                 )
-                parts.append(msk_ptrs.tobytes())
             # data streams land before the index that points at them
             st.finalize(s["bin"])
             if s["msk"] is not None:
@@ -518,10 +595,7 @@ def _make_shard_writer(
             ast_bytes, ast_crc, n_assets = 0, 0, 0
             if has_ast:
                 alens = np.asarray(s["ast_lens"], dtype="<u4")
-                ast_ptrs = np.zeros(n, dtype="<u8")
-                np.cumsum(
-                    alens[:-1].astype("<u8") * 8, out=ast_ptrs[1:]
-                )
+                ast_ptrs = _offsets(alens.astype("<u8") * 8)
                 payload = (
                     np.concatenate(s["ast_refs"])
                     if s["ast_refs"]
@@ -650,7 +724,34 @@ def _make_shard_writer(
             out_rows.append(close_shard(state))
         if out_rows:
             yield pd.DataFrame(out_rows)
-    return _write
+    return [
+        r.asDict()
+        for r in hashed.repartition(nparts, "shard")
+        .sortWithinPartitions("shard", "_id")
+        .mapInPandas(_write, _MANIFEST_SCHEMA)
+        .collect()
+    ]
+
+
+def _commit_export(spark, st, out_dir, rows, old_rows, meta):
+    """Persist a rewrite and return the public manifest: the written
+    rows merged over the prior export's (``old_rows`` — unchanged
+    rows carry forward byte-identically; ``None`` for a full export,
+    whose manifest then has no ``rewritten`` column), then the
+    ``_manifest`` and ``_manifest_meta`` tables."""
+    written = None
+    if old_rows is not None:
+        written = {int(r["shard"]) for r in rows}
+        rows = rows + [
+            r for k, r in old_rows.items() if k not in written
+        ]
+    st.write_parquet(
+        os.path.join(out_dir, "_manifest"),
+        sorted(rows, key=lambda r: r["shard"]),
+        _MANIFEST_SCHEMA,
+    )
+    _write_meta(out_dir, meta, st)
+    return _manifest_df(spark, rows, written)
 
 
 def export_bin_shards(
@@ -811,205 +912,87 @@ def export_bin_shards(
 
     assigned = _cached = assigned.persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        rows, written = _export_bin_shards_body(
-            df, out_dir, n_shards, tokens_col, mask_col, id_col,
-            dtype, salt, assets_col, incremental, store, layout,
-            seqs_per_shard, assigned, has_mask, has_ast, spark, st,
+        stats, code = _shard_stats(assigned, dtype, "export_bin_shards")
+        meta = {
+            "version": _VERSION,
+            "dtype": _DTYPES[code][2],
+            "has_mask": has_mask,
+            "has_assets": has_ast,
+            "n_shards": int(n_shards),
+            "salt": salt,
+            "export_version": 1,
+            "layout": layout,
+            "shard_scheme": _shard_scheme(
+                n_shards, salt, seqs_per_shard
+            ),
+        }
+        st.makedirs(out_dir)
+        old_rows = None
+        n_write = len(stats)
+        if incremental:
+            prior, old_rows = _prior_export(
+                spark, out_dir, st,
+                {
+                    k: meta[k]
+                    for k in (
+                        "dtype", "has_mask", "has_assets", "layout",
+                        "shard_scheme",
+                    )
+                },
+                "export_bin_shards(incremental=True)",
+            )
+            # the stats pass already computed the signatures — the
+            # delta decision costs no additional file or input I/O,
+            # and a no-op re-export is exactly ONE scan (and the
+            # ONLY Spark job: the accounting tables read driver-side)
+            sigs = {
+                int(r["shard"]): _content_sig(r["n"], r["x"])
+                for r in stats
+            }
+            changed = {
+                k for k, s in sigs.items()
+                if k not in old_rows
+                or old_rows[k]["content_sig"] != s
+            }
+            orphans = set(old_rows) - set(sigs)
+            if not changed and not orphans:
+                return _manifest_df(spark, list(old_rows.values()), set())
+            for k in orphans:
+                old_rows.pop(k)
+            _clear_shards(st, out_dir, changed | orphans)
+            assigned = assigned.where(
+                F.col("shard").isin(sorted(changed))
+            )
+            meta["export_version"] = int(prior["export_version"]) + 1
+            n_write = len(changed)
+        else:
+            _clear_shards(st, out_dir, None)
+        rows = _write_shards(
+            st, out_dir, assigned,
+            int(n_shards) if seqs_per_shard is None else max(n_write, 1),
+            code, has_mask, has_ast, id_col,
         )
+        return _commit_export(spark, st, out_dir, rows, old_rows, meta)
     finally:
         _cached.unpersist()
-    return _manifest_df(spark, rows, written)
 
 
 def _manifest_df(spark, rows, written) -> DataFrame:
-    """Build the public manifest DataFrame from driver-side rows and
-    stash the rows on it (``_topn_manifest_rows``) so orchestration
-    callers (the streaming sinks) can read the model-sized result
-    without a Spark job — a ``collect`` on the sorted local relation
-    costs a sampling + shuffle + fetch job trio per commit."""
-    rows = sorted(rows, key=lambda r: r["shard"])
-    out = _rows_df(spark, rows, _MANIFEST_SCHEMA)
+    """The public manifest DataFrame, ordered by shard, from the
+    driver-side rows; rewrites (``written`` set — incremental and
+    delta exports) add the ``rewritten`` boolean per shard. Callers
+    that need to know whether a rewrite changed anything read the
+    ``export_version`` in ``_manifest_meta`` (bumped exactly when a
+    rewrite happened) instead of collecting this frame."""
+    out = _rows_df(
+        spark, sorted(rows, key=lambda r: r["shard"]), _MANIFEST_SCHEMA
+    )
     if written is not None:
         out = out.withColumn(
             "rewritten",
             F.col("shard").isin([int(k) for k in written]),
         )
-    out = out.orderBy("shard")
-    out._topn_manifest_rows = [
-        dict(r)
-        if written is None
-        else {**r, "rewritten": int(r["shard"]) in written}
-        for r in rows
-    ]
-    return out
-
-
-def _export_bin_shards_body(
-    df, out_dir, n_shards, tokens_col, mask_col, id_col, dtype,
-    salt, assets_col, incremental, store, layout, seqs_per_shard,
-    assigned, has_mask, has_ast, spark, st,
-) -> tuple[list[dict], set[int] | None]:
-    # ONE per-shard stats aggregate (map-side combinable, n_shards
-    # output rows) carries everything pre-write decisions need: the
-    # token-id range for dtype resolution AND the per-shard content
-    # signatures the incremental delta diffs against — never two
-    # scans where one suffices (at corpus scale, input passes ARE
-    # the cost model)
-    stats = assigned.groupBy("shard").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.bit_xor("_h").alias("x"),
-        F.min(F.array_min("_toks")).alias("lo"),
-        F.max(F.array_max("_toks")).alias("hi"),
-    ).collect()
-    lo = min(
-        (r["lo"] for r in stats if r["lo"] is not None), default=0
-    )
-    hi = max(
-        (r["hi"] for r in stats if r["hi"] is not None), default=0
-    )
-    code = _resolve_dtype(int(lo), int(hi), dtype)
-    np_dtype, _ = _DTYPES[code]
-    dtype_name = "uint16" if code == 2 else "uint32"
-
-    st.makedirs(out_dir)
-    old_rows: dict[int, dict] = {}
-    changed: set[int] | None = None
-    meta = _read_meta(spark, out_dir, st)
-    if incremental:
-        if meta is None:
-            raise ValueError(
-                "export_bin_shards: incremental=True needs a prior "
-                f"export at {out_dir} (no _manifest_meta found) — "
-                "run a full export first"
-            )
-        scheme = _shard_scheme(n_shards, salt, seqs_per_shard)
-        want = {
-            "dtype": dtype_name, "has_mask": has_mask,
-            "has_assets": has_ast, "layout": layout,
-            "shard_scheme": scheme,
-        }
-
-        def _stored(k):
-            if k == "layout":
-                return meta.get("layout", "seq")
-            if k == "shard_scheme":
-                # meta predating the scheme field can only be a
-                # hash export — reconstruct its scheme string
-                return meta.get(
-                    "shard_scheme",
-                    f"hash:{meta['n_shards']}:{meta['salt']}",
-                )
-            return meta.get(k)
-
-        diff = {
-            k: (_stored(k), v)
-            for k, v in want.items()
-            if _stored(k) != v
-        }
-        if diff:
-            raise ValueError(
-                "export_bin_shards: incremental export parameters "
-                f"differ from the prior export: {diff} — every "
-                "shard would change; run a full export"
-            )
-        # failed/killed task attempts leave .inprogress temp files;
-        # the full-export path sweeps them via its shard_* listing,
-        # but incremental deletes only exact final names — sweep
-        # here too (temp names are never referenced by any
-        # manifest, so deletion is always safe)
-        for stale in st.list(out_dir, "shard_*.inprogress-*"):
-            st.remove(os.path.join(out_dir, stale))
-        old_rows = {
-            int(r["shard"]): dict(r)
-            for r in _read_manifest_rows(out_dir, st) or []
-        }
-        # the stats pass already computed the signatures — the delta
-        # decision costs no additional file or input I/O, and a
-        # no-op re-export is exactly ONE scan (and the ONLY Spark
-        # job: the accounting tables read driver-side)
-        sigs = {
-            int(r["shard"]): _content_sig(r["n"], r["x"])
-            for r in stats
-        }
-        changed = {
-            k for k, s in sigs.items()
-            if k not in old_rows
-            or old_rows[k]["content_sig"] != s
-        }
-        orphans = set(old_rows) - set(sigs)
-        if not changed and not orphans:
-            return list(old_rows.values()), set()
-        suffixes = [".bin", ".idx", ".msk", ".ast"]
-        for k in changed | orphans:
-            for sfx in suffixes:
-                st.remove(
-                    os.path.join(out_dir, f"shard_{k:05d}{sfx}")
-                )
-        for k in orphans:
-            old_rows.pop(k)
-        # epoch artifacts describe the previous dataset version
-        _remove_epoch_artifacts(out_dir, st)
-        assigned = assigned.where(
-            F.col("shard").isin([int(k) for k in changed])
-        )
-    else:
-        for stale in st.list(out_dir, "shard_*"):
-            st.remove(os.path.join(out_dir, stale))
-        _remove_epoch_artifacts(out_dir, st)
-
-    nparts = (
-        int(n_shards)
-        if seqs_per_shard is None
-        else max(len(changed) if changed is not None else len(stats), 1)
-    )
-    assigned = assigned.repartition(
-        nparts, "shard"
-    ).sortWithinPartitions("shard", "_id")
-
-    _write = _make_shard_writer(
-        st, out_dir, code, has_mask, has_ast, dtype_name, id_col
-    )
-
-    # collect executes the write exactly once; the manifest is
-    # n_shards rows — model-sized by definition
-    rows = [
-        r.asDict()
-        for r in assigned.mapInPandas(
-            _write, _MANIFEST_SCHEMA
-        ).collect()
-    ]
-    if incremental:
-        written = {int(r["shard"]) for r in rows}
-        rows.extend(
-            r for k, r in old_rows.items() if k not in written
-        )
-    st.write_parquet(
-        os.path.join(out_dir, "_manifest"),
-        sorted(rows, key=lambda r: r["shard"]),
-        _MANIFEST_SCHEMA,
-    )
-    _write_meta(
-        out_dir,
-        {
-            "version": _VERSION,
-            "dtype": dtype_name,
-            "has_mask": has_mask,
-            "has_assets": has_ast,
-            "n_shards": int(n_shards),
-            "salt": salt,
-            "export_version": (
-                int(meta["export_version"]) + 1
-                if incremental and meta is not None
-                else 1
-            ),
-            "layout": layout,
-            "shard_scheme": _shard_scheme(
-                n_shards, salt, seqs_per_shard
-            ),
-        },
-        st,
-    )
-    return rows, (written if incremental else None)
+    return out.orderBy("shard")
 
 
 def _parse_sig(sig: str) -> tuple[int, int]:
@@ -1073,27 +1056,32 @@ def export_bin_shards_delta(
        corpus-sized metadata work per commit even though pruning
        keeps untouched FILES closed. With ``store_reader`` set,
        ``store_df`` may be ``None`` (it is never consulted).
-    3. The rewrite reuses the standard writer verbatim (same ONE
-       repartition-by-shard shuffle, atomic writes, crc manifest),
-       then CROSS-CHECKS each written shard's signature against
-       the batch-side fold: a mismatch means the append-only/
-       unique-id contract was violated (an id updated, removed, or
-       duplicated) and RAISES — the export never silently diverges
+    3. The rewrite is the full exporter's own write step
+       (:func:`_write_shards` — same ONE repartition-by-shard
+       shuffle, atomic writes, crc manifest), then CROSS-CHECKS
+       each written shard's signature against the batch-side fold:
+       a mismatch means the append-only/unique-id contract was
+       violated (an id updated, removed, or duplicated) and RAISES — the export never silently diverges
        from what a from-scratch export would produce. When batch
        and rewrite read the same landed partitions (the streaming
        wrapper's shape), the store is authoritative post-land: the
        check pins the fold's soundness against the manifest, not
        store-vs-batch-lineage agreement.
 
-    Unchanged manifest rows carry forward byte-identically,
-    ``export_version`` bumps, and epoch artifacts (views of the
-    previous dataset version) are deleted. Orphan shards cannot
-    arise under append-only maintenance. An empty batch is a no-op
-    that writes nothing and leaves the version untouched. Dtype is
-    FIXED by the prior export: a batch token id outside the stored
-    dtype's range raises with instructions to run a full export
-    (silently widening would rewrite every shard under a streaming
-    trigger). Returns the full manifest with ``rewritten``.
+    The compatibility check, the stats aggregate, the clean-up
+    and the manifest commit are the ones
+    ``export_bin_shards(incremental=True)`` runs, so the two paths
+    accept the same rows: unchanged manifest rows carry forward
+    byte-identically, ``export_version`` bumps, and epoch artifacts
+    (views of the previous dataset version) are deleted. Orphan
+    shards cannot arise under append-only maintenance. An empty
+    batch is a no-op that writes nothing and leaves the version
+    untouched; a batch whose token arrays are all empty still
+    appends its zero-length sequences. Dtype is FIXED by the prior
+    export: a batch token id outside the stored dtype's range
+    raises with instructions to run a full export (silently
+    widening would rewrite every shard under a streaming trigger).
+    Returns the full manifest with ``rewritten``.
 
     Under RANGE sharding (``seqs_per_shard`` — the streaming
     scheme, see :func:`_assign_shards`) and roughly increasing
@@ -1112,99 +1100,45 @@ def export_bin_shards_delta(
         raise ValueError("store_df is required when store_reader is None")
     spark = batch.sparkSession
     st = store or LocalBinaryStore()
-    meta = _read_meta(spark, out_dir, st)
-    if meta is None:
-        raise ValueError(
-            "export_bin_shards_delta: needs a prior export at "
-            f"{out_dir} (no _manifest_meta found) — run a full "
-            "export first"
-        )
     has_mask = mask_col is not None
     has_ast = assets_col is not None
-    scheme = _shard_scheme(n_shards, salt, seqs_per_shard)
-    want = {
-        "has_mask": has_mask, "has_assets": has_ast,
-        "layout": layout, "shard_scheme": scheme,
-    }
-
-    def _stored(k):
-        if k == "layout":
-            return meta.get("layout", "seq")
-        if k == "shard_scheme":
-            return meta.get(
-                "shard_scheme",
-                f"hash:{meta['n_shards']}:{meta['salt']}",
-            )
-        return meta.get(k)
-
-    diff = {
-        k: (_stored(k), v)
-        for k, v in want.items()
-        if _stored(k) != v
-    }
-    if diff:
-        raise ValueError(
-            "export_bin_shards_delta: parameters differ from the "
-            f"prior export: {diff} — every shard would change; run "
-            "a full export"
-        )
-    dtype_name = meta["dtype"]
-    code = 2 if dtype_name == "uint16" else 4
-    old_rows = {
-        int(r["shard"]): dict(r)
-        for r in _read_manifest_rows(out_dir, st) or []
-    }
-
+    meta, old_rows = _prior_export(
+        spark, out_dir, st,
+        {
+            "has_mask": has_mask, "has_assets": has_ast,
+            "layout": layout,
+            "shard_scheme": _shard_scheme(
+                n_shards, salt, seqs_per_shard
+            ),
+        },
+        "export_bin_shards_delta",
+    )
     if "shard" not in batch.columns:
         batch = _assign_shards(
             batch, n_shards, shard_key_col or id_col, salt,
             seqs_per_shard,
         )
-    hashed_b = _hashed_projection(
-        batch, tokens_col, mask_col, id_col, assets_col
-    )
     # ONE batch-sized aggregate: the signature fold AND the
-    # dtype-range guard ride the same pass — zero store input
-    bstats = hashed_b.groupBy("shard").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.bit_xor("_h").alias("x"),
-        F.min(F.array_min("_toks")).alias("lo"),
-        F.max(F.array_max("_toks")).alias("hi"),
-    ).collect()
+    # dtype-range guard (against the STORED dtype) ride the same
+    # pass — zero store input
+    bstats, code = _shard_stats(
+        _hashed_projection(
+            batch, tokens_col, mask_col, id_col, assets_col
+        ),
+        meta["dtype"],
+        "export_bin_shards_delta",
+    )
     if not bstats:
         return _manifest_df(spark, list(old_rows.values()), set())
-    lo = min(r["lo"] for r in bstats if r["lo"] is not None)
-    hi = max(r["hi"] for r in bstats if r["hi"] is not None)
-    if lo < 0:
-        raise ValueError(
-            f"export_bin_shards_delta: negative token id {lo} — "
-            "binary token streams are unsigned"
-        )
-    if hi > _DTYPES[code][1]:
-        raise ValueError(
-            f"export_bin_shards_delta: batch token id {hi} exceeds "
-            f"the stored export dtype {dtype_name} — the whole "
-            "store needs re-encoding; run a full export with "
-            "dtype='uint32'"
-        )
-    predicted: dict[int, str] = {}
+    predicted = {}
     for r in bstats:
         k = int(r["shard"])
-        if k in old_rows:
-            n0, x0 = _parse_sig(old_rows[k]["content_sig"])
-        else:
-            n0, x0 = 0, 0
-        predicted[k] = _content_sig(
-            n0 + int(r["n"]), x0 ^ int(r["x"])
+        n0, x0 = _parse_sig(
+            old_rows[k]["content_sig"] if k in old_rows else "0:0"
         )
+        predicted[k] = _content_sig(n0 + int(r["n"]), x0 ^ int(r["x"]))
     touched = sorted(predicted)
-
-    for stale in st.list(out_dir, "shard_*.inprogress-*"):
-        st.remove(os.path.join(out_dir, stale))
-    for k in touched:
-        for sfx in (".bin", ".idx", ".msk", ".ast"):
-            st.remove(os.path.join(out_dir, f"shard_{k:05d}{sfx}"))
-    _remove_epoch_artifacts(out_dir, st)
+    _clear_shards(st, out_dir, touched)
 
     # the rewrite's ONLY store input: the touched shards'
     # partitions (Catalyst partition-prunes the IN filter; with a
@@ -1215,21 +1149,14 @@ def export_bin_shards_delta(
         if store_reader is not None
         else store_df
     )
-    src = _hashed_projection(
-        src_df.where(F.col("shard").isin(touched)),
-        tokens_col, mask_col, id_col, assets_col,
+    rows = _write_shards(
+        st, out_dir,
+        _hashed_projection(
+            src_df.where(F.col("shard").isin(touched)),
+            tokens_col, mask_col, id_col, assets_col,
+        ),
+        len(touched), code, has_mask, has_ast, id_col,
     )
-    src = src.repartition(
-        max(len(touched), 1), "shard"
-    ).sortWithinPartitions("shard", "_id")
-    writer = _make_shard_writer(
-        st, out_dir, code, has_mask, has_ast, dtype_name, id_col
-    )
-    rows = [
-        r.asDict()
-        for r in src.mapInPandas(writer, _MANIFEST_SCHEMA).collect()
-    ]
-    written = {int(r["shard"]) for r in rows}
     for r in rows:
         k = int(r["shard"])
         if r["content_sig"] != predicted[k]:
@@ -1243,7 +1170,7 @@ def export_bin_shards_delta(
                 "export_bin_shards(incremental=True) against the "
                 "full store"
             )
-    missing = set(touched) - written
+    missing = set(touched) - {int(r["shard"]) for r in rows}
     if missing:
         raise RuntimeError(
             f"export_bin_shards_delta: shards {sorted(missing)} "
@@ -1251,20 +1178,10 @@ def export_bin_shards_delta(
             "no data for them — store_df does not contain the "
             "landed batch"
         )
-    rows.extend(
-        r for k, r in old_rows.items() if k not in written
-    )
-    st.write_parquet(
-        os.path.join(out_dir, "_manifest"),
-        sorted(rows, key=lambda r: r["shard"]),
-        _MANIFEST_SCHEMA,
-    )
-    _write_meta(
-        out_dir,
+    return _commit_export(
+        spark, st, out_dir, rows, old_rows,
         {**meta, "export_version": int(meta["export_version"]) + 1},
-        st,
     )
-    return _manifest_df(spark, rows, written)
 
 
 def _parse_idx(store, path: str):
@@ -1327,6 +1244,155 @@ def _parse_ast(store, path: str):
     return alens, ast_ptrs, payload
 
 
+@contextlib.contextmanager
+def _open_shard(st, base: str, whole: bool):
+    """Open one shard for reading: yields its parsed ``.idx``
+    (:func:`_parse_idx`) and ``seq(i) -> (n_tokens, n_supervised,
+    tokens, loss_mask)`` — the ONE decoder of a sequence's token ids
+    and bit-packed loss mask (``loss_mask`` None when the export
+    carried none). ``whole`` reads ``.bin``/``.msk`` with one read
+    each (the whole-shard readers visit every sequence); otherwise
+    every sequence is one seek+read per stream, so a window read's
+    bytes stay proportional to the window, not the shard."""
+    idx = _parse_idx(st, base + ".idx")
+    code, has_mask, lens, _, nsup, tok_ptrs, msk_ptrs = idx
+    np_dtype = _DTYPES[code][0]
+    itemsize = np.dtype(np_dtype).itemsize
+
+    def stream(path):
+        if whole:
+            return io.BytesIO(st.read_bytes(path))
+        return st.open_read(path)
+
+    with stream(base + ".bin") as fb, (
+        stream(base + ".msk") if has_mask else contextlib.nullcontext()
+    ) as fm:
+
+        def seq(i):
+            ln = int(lens[i])
+            fb.seek(int(tok_ptrs[i]))
+            t = np.frombuffer(fb.read(ln * itemsize), dtype=np_dtype)
+            m = None
+            if fm is not None:
+                fm.seek(int(msk_ptrs[i]))
+                bits = np.frombuffer(fm.read((ln + 7) // 8), dtype="u1")
+                m = np.unpackbits(bits, bitorder="little")[:ln]
+                m = m.astype(bool).tolist()
+            return ln, int(nsup[i]), t.astype("int64").tolist(), m
+
+        yield idx, seq
+
+
+def _asset_ids(ast, i: int) -> list[int]:
+    """Sequence ``i``'s asset refs from a parsed ``.ast`` sidecar
+    (:func:`_parse_ast`)."""
+    alens, ast_ptrs, payload = ast
+    a0 = int(ast_ptrs[i]) // 8
+    return payload[a0 : a0 + int(alens[i])].astype("int64").tolist()
+
+
+def _pair_row(k: int, p: int, ids, seq) -> tuple:
+    """Pair ``p`` of shard ``k`` — the adjacent sequences ``2p`` /
+    ``2p+1`` — as ``(pair_index, pair_id, chosen_n_tokens,
+    rejected_n_tokens, chosen_n_supervised, rejected_n_supervised,
+    chosen_tokens, rejected_tokens, chosen_mask, rejected_mask)``.
+    RAISES unless the chosen id is even and the rejected id is its
+    successor (the :func:`export_preference_shards` layout)."""
+    cid, rid = int(ids[2 * p]), int(ids[2 * p + 1])
+    if cid % 2 != 0 or rid != cid + 1:
+        raise IOError(
+            f"shard {k}: pair {p} (sequences {2 * p}/{2 * p + 1}) "
+            f"carries ids {cid}/{rid} — pairing invariant broken"
+        )
+    return (p, cid // 2) + sum(zip(seq(2 * p), seq(2 * p + 1)), ())
+
+
+_WINDOW_UNITS = {
+    "seq": (
+        "read_bin_window", "sequences",
+        "pair-unit epochs are consumed via read_preference_window",
+    ),
+    "pair": (
+        "read_preference_window", "pairs",
+        "export it with unit='pair' (a sequence-level permutation "
+        "would tear every pair apart)",
+    ),
+}
+
+
+def _read_window(
+    spark, out_dir, epoch, start, stop, st, unit, schema, shard_rows
+) -> DataFrame:
+    """The window readers' shared driver. RAISES unless epoch
+    ``epoch`` is a ``unit``-unit order (missing or stale orders
+    raise in :func:`_load_epoch`) and ``[start, stop)`` lies inside
+    it — a resume step beyond the epoch is a bookkeeping bug
+    upstream, and serving a short window silently would skip data.
+    The driver holds only the shard-level epoch manifest and maps
+    one task per OVERLAPPING shard; each task seeks its slice of the
+    shard's ``.ep`` permutation, opens the shard in seek mode
+    (:func:`_open_shard`) and emits ``(global_pos, shard, shard_pos,
+    position)`` + ``shard_rows(k, base, idx, seq, units)`` per
+    visited unit."""
+    caller, what, hint = _WINDOW_UNITS[unit]
+    ep_rows = _load_epoch(spark, out_dir, epoch, st)
+    units = {r.get("unit", "seq") for r in ep_rows} or {"seq"}
+    if units != {unit}:
+        raise ValueError(
+            f"{caller}: epoch {epoch} is a {sorted(units)}-unit "
+            f"order — {hint}"
+        )
+    man = sorted(
+        (
+            int(r["shard_pos"]),
+            int(r["shard"]),
+            int(r.get("n_units", r["n_seqs"])),
+        )
+        for r in ep_rows
+    )
+    total = sum(n for _, _, n in man)
+    start, stop = int(start), int(stop)
+    if start < 0 or stop > total or start > stop:
+        raise ValueError(
+            f"{caller}: window [{start}, {stop}) out of range for "
+            f"epoch {epoch} with {total} {what}"
+        )
+    work = []
+    g0 = 0
+    for pos, k, n in man:
+        s, e = max(start, g0), min(stop, g0 + n)
+        if s < e:
+            work.append((k, pos, g0, s - g0, e - g0))
+        g0 += n
+    cols = _fields(schema)
+
+    def _read(batches):
+        for pdf in batches:
+            for r in pdf.itertuples(index=False):
+                k, ls, le = int(r.shard), int(r.ls), int(r.le)
+                base = os.path.join(out_dir, f"shard_{k:05d}")
+                with st.open_read(base + f".ep{int(epoch):04d}") as f:
+                    f.seek(4 * ls)
+                    perm = np.frombuffer(
+                        f.read(4 * (le - ls)), dtype="<u4"
+                    )
+                with _open_shard(st, base, whole=False) as (idx, seq):
+                    tails = shard_rows(
+                        k, base, idx, seq, [int(u) for u in perm]
+                    )
+                rows = [
+                    (int(r.g0) + ls + j, k, int(r.shard_pos), ls + j)
+                    + t
+                    for j, t in enumerate(tails)
+                ]
+                yield pd.DataFrame(rows, columns=cols)
+
+    return spark.createDataFrame(
+        spark.sparkContext.parallelize(work, max(len(work), 1)),
+        "shard int, shard_pos int, g0 bigint, ls bigint, le bigint",
+    ).mapInPandas(_read, schema)
+
+
 def _shard_frame(
     spark: SparkSession, out_dir: str, store
 ) -> DataFrame:
@@ -1377,64 +1443,15 @@ def read_bin_shards(
         for pdf in batches:
             for k in pdf["shard"].tolist():
                 base = os.path.join(out_dir, f"shard_{int(k):05d}")
-                code, has_mask, lens, ids, nsup, tok_ptrs, msk_ptrs \
-                    = _parse_idx(st, base + ".idx")
-                np_dtype, _ = _DTYPES[code]
-                toks = np.frombuffer(
-                    st.read_bytes(base + ".bin"), dtype=np_dtype
-                )
-                mraw = (
-                    np.frombuffer(
-                        st.read_bytes(base + ".msk"), dtype="u1"
-                    )
-                    if has_mask
-                    else None
-                )
-                if has_ast:
-                    alens, _, payload = _parse_ast(
-                        st, base + ".ast"
-                    )
-                    apos = 0
-                rows = []
-                pos = 0
-                for i in range(len(lens)):
-                    ln = int(lens[i])
-                    t = toks[pos : pos + ln].astype("int64").tolist()
-                    pos += ln
-                    if has_mask:
-                        mp = int(msk_ptrs[i])
-                        nb = (ln + 7) // 8
-                        bits = np.unpackbits(
-                            mraw[mp : mp + nb], bitorder="little"
-                        )[:ln]
-                        m = bits.astype(bool).tolist()
-                    else:
-                        m = None
-                    row = (
-                        int(k),
-                        i,
-                        int(ids[i]),
-                        ln,
-                        int(nsup[i]),
-                        t,
-                        m,
-                    )
-                    if has_ast:
-                        an = int(alens[i])
-                        row = row + (
-                            payload[apos : apos + an]
-                            .astype("int64")
-                            .tolist(),
-                        )
-                        apos += an
-                    rows.append(row)
-                cols = [
-                    "shard", "seq_index", "seq_id", "n_tokens",
-                    "n_supervised", "tokens", "loss_mask",
-                ]
-                if has_ast:
-                    cols.append("asset_ids")
-                yield pd.DataFrame(rows, columns=cols)
+                ast = _parse_ast(st, base + ".ast") if has_ast else None
+                with _open_shard(st, base, whole=True) as (idx, seq):
+                    ids = idx[3]
+                    rows = [
+                        (int(k), i, int(ids[i])) + seq(i)
+                        + ((_asset_ids(ast, i),) if has_ast else ())
+                        for i in range(len(ids))
+                    ]
+                yield pd.DataFrame(rows, columns=_fields(schema))
 
     return _shard_frame(spark, out_dir, st).mapInPandas(
         _read, schema
@@ -1495,13 +1512,10 @@ def verify_bin_shards(
                         msk_ptrs = _parse_idx(st, base + ".idx")
                     itemsize = 2 if code == 2 else 4
                     braw = st.read_bytes(base + ".bin")
-                    exp_tok = np.zeros(len(lens), dtype="<u8")
-                    np.cumsum(
-                        lens[:-1].astype("<u8") * itemsize,
-                        out=exp_tok[1:],
-                    )
                     consistent = (
-                        np.array_equal(tok_ptrs, exp_tok)
+                        np.array_equal(
+                            tok_ptrs, _offsets(lens.astype("<u8") * itemsize)
+                        )
                         and len(braw)
                         == int(lens.astype("int64").sum()) * itemsize
                     )
@@ -1518,13 +1532,8 @@ def verify_bin_shards(
                     }
                     if has_mask:
                         mraw = st.read_bytes(base + ".msk")
-                        exp_msk = np.zeros(len(lens), dtype="<u8")
-                        np.cumsum(
-                            (lens[:-1].astype("<u8") + 7) // 8,
-                            out=exp_msk[1:],
-                        )
                         consistent = consistent and np.array_equal(
-                            msk_ptrs, exp_msk
+                            msk_ptrs, _offsets((lens.astype("<u8") + 7) // 8)
                         )
                         actual["msk_bytes_actual"] = len(mraw)
                         actual["msk_crc32_actual"] = zlib.crc32(mraw)
@@ -1539,14 +1548,11 @@ def verify_bin_shards(
                         alens, ast_ptrs, _ = _parse_ast(
                             st, base + ".ast"
                         )
-                        exp_ast = np.zeros(len(alens), dtype="<u8")
-                        np.cumsum(
-                            alens[:-1].astype("<u8") * 8,
-                            out=exp_ast[1:],
-                        )
                         consistent = (
                             consistent
-                            and np.array_equal(ast_ptrs, exp_ast)
+                            and np.array_equal(
+                                ast_ptrs, _offsets(alens.astype("<u8") * 8)
+                            )
                             and len(alens) == len(lens)
                         )
                         actual["ast_bytes_actual"] = len(araw)
@@ -1907,41 +1913,8 @@ def read_bin_window(
     task bytes proportional to its share of the window, regardless
     of shard size."""
     st = store or LocalBinaryStore()
-    ep_rows = _load_epoch(spark, out_dir, epoch, st)
-    units = {r.get("unit", "seq") for r in ep_rows} or {"seq"}
-    if units != {"seq"}:
-        raise ValueError(
-            f"read_bin_window: epoch {epoch} is a "
-            f"{sorted(units)}-unit order — pair-unit epochs are "
-            "consumed via read_preference_window"
-        )
-    man = sorted(
-        (
-            (
-                int(r["shard_pos"]),
-                int(r["shard"]),
-                int(r.get("n_units", r["n_seqs"])),
-            )
-            for r in ep_rows
-        )
-    )
-    total = sum(n for _, _, n in man)
-    start, stop = int(start), int(stop)
-    if start < 0 or stop > total or start > stop:
-        raise ValueError(
-            f"read_bin_window: window [{start}, {stop}) out of "
-            f"range for epoch {epoch} with {total} sequences"
-        )
     meta = _read_meta(spark, out_dir, st)
     has_ast = bool(meta and meta["has_assets"])
-    work = []
-    g0 = 0
-    for pos, k, n in man:
-        s = max(start, g0)
-        e = min(stop, g0 + n)
-        if s < e:
-            work.append((k, pos, g0, s - g0, e - g0))
-        g0 += n
     schema = (
         "global_pos bigint, shard int, shard_pos int,"
         " position bigint, seq_index bigint, seq_id bigint,"
@@ -1950,90 +1923,19 @@ def read_bin_window(
     )
     if has_ast:
         schema += ", asset_ids array<bigint>"
-    wdf = spark.createDataFrame(
-        spark.sparkContext.parallelize(work, max(len(work), 1)),
-        "shard int, shard_pos int, g0 bigint, ls bigint,"
-        " le bigint",
+
+    def shard_rows(k, base, idx, seq, units):
+        ast = _parse_ast(st, base + ".ast") if has_ast else None
+        return [
+            (si, int(idx[3][si])) + seq(si)
+            + ((_asset_ids(ast, si),) if has_ast else ())
+            for si in units
+        ]
+
+    return _read_window(
+        spark, out_dir, epoch, start, stop, st, "seq", schema,
+        shard_rows,
     )
-
-    def _read(batches):
-        for pdf in batches:
-            for r in pdf.itertuples(index=False):
-                k = int(r.shard)
-                ls, le = int(r.ls), int(r.le)
-                base = os.path.join(out_dir, f"shard_{k:05d}")
-                with st.open_read(
-                    base + f".ep{int(epoch):04d}"
-                ) as f:
-                    f.seek(4 * ls)
-                    perm = np.frombuffer(
-                        f.read(4 * (le - ls)), dtype="<u4"
-                    )
-                code, has_mask, lens, ids, nsup, tok_ptrs, \
-                    msk_ptrs = _parse_idx(st, base + ".idx")
-                itemsize = 2 if code == 2 else 4
-                np_dtype, _ = _DTYPES[code]
-                if has_ast:
-                    alens, ast_ptrs, payload = _parse_ast(
-                        st, base + ".ast"
-                    )
-                    a_starts = ast_ptrs // 8
-                rows = []
-                with st.open_read(base + ".bin") as fb, (
-                    st.open_read(base + ".msk")
-                    if has_mask
-                    else _NullCtx()
-                ) as fm:
-                    for j, si in enumerate(perm):
-                        si = int(si)
-                        ln = int(lens[si])
-                        fb.seek(int(tok_ptrs[si]))
-                        t = np.frombuffer(
-                            fb.read(ln * itemsize), dtype=np_dtype
-                        ).astype("int64").tolist()
-                        if has_mask:
-                            nb = (ln + 7) // 8
-                            fm.seek(int(msk_ptrs[si]))
-                            m = np.unpackbits(
-                                np.frombuffer(
-                                    fm.read(nb), dtype="u1"
-                                ),
-                                bitorder="little",
-                            )[:ln].astype(bool).tolist()
-                        else:
-                            m = None
-                        row = (
-                            int(r.g0) + ls + j, k,
-                            int(r.shard_pos), ls + j, si,
-                            int(ids[si]), ln, int(nsup[si]), t, m,
-                        )
-                        if has_ast:
-                            a0 = int(a_starts[si])
-                            row = row + (
-                                payload[a0 : a0 + int(alens[si])]
-                                .astype("int64").tolist(),
-                            )
-                        rows.append(row)
-                cols = [
-                    "global_pos", "shard", "shard_pos", "position",
-                    "seq_index", "seq_id", "n_tokens",
-                    "n_supervised", "tokens", "loss_mask",
-                ]
-                if has_ast:
-                    cols.append("asset_ids")
-                yield pd.DataFrame(rows, columns=cols)
-
-    return wdf.mapInPandas(_read, schema)
-
-
-class _NullCtx:
-    """Context manager standing in for the absent .msk handle."""
-
-    def __enter__(self):
-        return None
-
-    def __exit__(self, *a):
-        return False
 
 
 # ------------------------------------------------------------------
@@ -2147,61 +2049,6 @@ def export_preference_shards(
     )
 
 
-def export_preference_shards_delta(
-    batch: DataFrame,
-    store_df: DataFrame,
-    out_dir: str,
-    n_shards: int,
-    pair_id_col: str = "pair_id",
-    chosen_tokens_col: str = "chosen_tokens",
-    rejected_tokens_col: str = "rejected_tokens",
-    chosen_mask_col: str | None = "chosen_mask",
-    rejected_mask_col: str | None = "rejected_mask",
-    salt: str = "",
-    store=None,
-    seqs_per_shard: int | None = None,
-) -> DataFrame:
-    """Batch-proportional incremental re-export for PREFERENCE
-    shard sets — :func:`export_bin_shards_delta` at the pair layer
-    (a DPO data service accumulates (chosen, rejected) pairs
-    continuously; rescanning the pair store per micro-batch is the
-    same corpus-sized anti-pattern the seq-layout delta closed):
-    the batch of NEW pairs stacks into the ``2·pair + stream``
-    sequence encoding (:func:`_stack_pairs` — the same single
-    definition the full exporter uses), signatures fold from the
-    stacked batch alone, and the rewrite reads only the touched
-    shards' partitions of ``store_df`` (the STACKED pair store,
-    ``shard`` column present — the
-    :func:`~topn_spark.streaming.ingest.preference_bin_export_batch`
-    layout). Sharding keys on the PAIR id, so both halves of every
-    pair stay co-located and the rewrite's ascending-id order keeps
-    them adjacent — the pairing invariant survives any number of
-    deltas (``verify_preference_shards`` recounts it).
-    ``seqs_per_shard`` is in PAIRS under range sharding (each shard
-    then holds ≤ 2·seqs_per_shard sequences). Pair ids must be
-    append-only unique; the writer's duplicate raise and the fold
-    cross-check both fire if not."""
-    stacked, has_mask = _stack_pairs(
-        batch, pair_id_col, chosen_tokens_col, rejected_tokens_col,
-        chosen_mask_col, rejected_mask_col,
-        caller="export_preference_shards_delta",
-    )
-    return export_bin_shards_delta(
-        stacked,
-        store_df,
-        out_dir,
-        n_shards,
-        tokens_col="tokens",
-        mask_col="loss_mask" if has_mask else None,
-        id_col="seq_id",
-        salt=salt,
-        store=store,
-        seqs_per_shard=seqs_per_shard,
-        shard_key_col="pair_id",
-        layout="pair",
-    )
-
-
 def read_preference_shards(
     spark: SparkSession, out_dir: str, store=None
 ) -> DataFrame:
@@ -2237,69 +2084,18 @@ def read_preference_shards(
         for pdf in batches:
             for k in pdf["shard"].tolist():
                 base = os.path.join(out_dir, f"shard_{int(k):05d}")
-                code, has_mask, lens, ids, nsup, tok_ptrs, \
-                    msk_ptrs = _parse_idx(st, base + ".idx")
-                np_dtype, _ = _DTYPES[code]
-                toks = np.frombuffer(
-                    st.read_bytes(base + ".bin"), dtype=np_dtype
-                )
-                mraw = (
-                    np.frombuffer(
-                        st.read_bytes(base + ".msk"), dtype="u1"
-                    )
-                    if has_mask
-                    else None
-                )
-                if len(lens) % 2:
-                    raise IOError(
-                        f"shard {k}: odd sequence count "
-                        f"{len(lens)} — not a preference shard"
-                    )
-
-                def seq(i):
-                    ln = int(lens[i])
-                    p0 = int(tok_ptrs[i]) // (
-                        2 if code == 2 else 4
-                    )
-                    t = toks[p0 : p0 + ln].astype(
-                        "int64"
-                    ).tolist()
-                    if has_mask:
-                        mp = int(msk_ptrs[i])
-                        nb = (ln + 7) // 8
-                        m = np.unpackbits(
-                            mraw[mp : mp + nb], bitorder="little"
-                        )[:ln].astype(bool).tolist()
-                    else:
-                        m = None
-                    return t, m, ln, int(nsup[i])
-
-                rows = []
-                for i in range(0, len(lens), 2):
-                    cid, rid = int(ids[i]), int(ids[i + 1])
-                    if cid % 2 != 0 or rid != cid + 1:
+                with _open_shard(st, base, whole=True) as (idx, seq):
+                    ids = idx[3]
+                    if len(ids) % 2:
                         raise IOError(
-                            f"shard {k}: sequences {i}/{i + 1} "
-                            f"carry ids {cid}/{rid} — pairing "
-                            "invariant broken"
+                            f"shard {k}: odd sequence count "
+                            f"{len(ids)} — not a preference shard"
                         )
-                    ct, cm, cln, cns = seq(i)
-                    rt, rm, rln, rns = seq(i + 1)
-                    rows.append(
-                        (
-                            int(k), i // 2, cid // 2,
-                            cln, rln, cns, rns,
-                            ct, rt, cm, rm,
-                        )
-                    )
-                cols = [
-                    "shard", "pair_index", "pair_id",
-                    "chosen_n_tokens", "rejected_n_tokens",
-                    "chosen_n_supervised", "rejected_n_supervised",
-                    "chosen_tokens", "rejected_tokens",
-                    "chosen_mask", "rejected_mask",
-                ]
-                yield pd.DataFrame(rows, columns=cols)
+                    rows = [
+                        (int(k),) + _pair_row(k, p, ids, seq)
+                        for p in range(len(ids) // 2)
+                    ]
+                yield pd.DataFrame(rows, columns=_fields(schema))
 
     return _shard_frame(spark, out_dir, st).mapInPandas(
         _read, schema
@@ -2566,126 +2362,19 @@ def read_preference_window(
     chosen_n_tokens, rejected_n_tokens, chosen_n_supervised,
     rejected_n_supervised, chosen_tokens, rejected_tokens,
     chosen_mask, rejected_mask)``."""
-    st = store or LocalBinaryStore()
-    ep_rows = _load_epoch(spark, out_dir, epoch, st)
-    units = {r.get("unit", "seq") for r in ep_rows} or {"seq"}
-    if units != {"pair"}:
-        raise ValueError(
-            f"read_preference_window: epoch {epoch} is a "
-            f"{sorted(units)}-unit order — export it with "
-            "unit='pair' (a sequence-level permutation would tear "
-            "every pair apart)"
-        )
-    man = sorted(
-        (
-            (int(r["shard_pos"]), int(r["shard"]), int(r["n_units"]))
-            for r in ep_rows
-        )
-    )
-    total = sum(n for _, _, n in man)
-    start, stop = int(start), int(stop)
-    if start < 0 or stop > total or start > stop:
-        raise ValueError(
-            f"read_preference_window: window [{start}, {stop}) out "
-            f"of range for epoch {epoch} with {total} pairs"
-        )
-    work = []
-    g0 = 0
-    for pos, k, n in man:
-        s = max(start, g0)
-        e = min(stop, g0 + n)
-        if s < e:
-            work.append((k, pos, g0, s - g0, e - g0))
-        g0 += n
-    schema = (
+    return _read_window(
+        spark, out_dir, epoch, start, stop,
+        store or LocalBinaryStore(), "pair",
         "global_pos bigint, shard int, shard_pos int,"
         " position bigint, pair_index bigint, pair_id bigint,"
         " chosen_n_tokens bigint, rejected_n_tokens bigint,"
         " chosen_n_supervised bigint, rejected_n_supervised bigint,"
         " chosen_tokens array<bigint>, rejected_tokens array<bigint>,"
-        " chosen_mask array<boolean>, rejected_mask array<boolean>"
+        " chosen_mask array<boolean>, rejected_mask array<boolean>",
+        lambda k, base, idx, seq, units: [
+            _pair_row(k, p, idx[3], seq) for p in units
+        ],
     )
-    wdf = spark.createDataFrame(
-        spark.sparkContext.parallelize(work, max(len(work), 1)),
-        "shard int, shard_pos int, g0 bigint, ls bigint,"
-        " le bigint",
-    )
-
-    def _read(batches):
-        for pdf in batches:
-            for r in pdf.itertuples(index=False):
-                k = int(r.shard)
-                ls, le = int(r.ls), int(r.le)
-                base = os.path.join(out_dir, f"shard_{k:05d}")
-                with st.open_read(
-                    base + f".ep{int(epoch):04d}"
-                ) as f:
-                    f.seek(4 * ls)
-                    perm = np.frombuffer(
-                        f.read(4 * (le - ls)), dtype="<u4"
-                    )
-                code, has_mask, lens, ids, nsup, tok_ptrs, \
-                    msk_ptrs = _parse_idx(st, base + ".idx")
-                itemsize = 2 if code == 2 else 4
-                np_dtype, _ = _DTYPES[code]
-                rows = []
-                with st.open_read(base + ".bin") as fb, (
-                    st.open_read(base + ".msk")
-                    if has_mask
-                    else _NullCtx()
-                ) as fm:
-
-                    def seq(si):
-                        ln = int(lens[si])
-                        fb.seek(int(tok_ptrs[si]))
-                        t = np.frombuffer(
-                            fb.read(ln * itemsize), dtype=np_dtype
-                        ).astype("int64").tolist()
-                        if has_mask:
-                            nb = (ln + 7) // 8
-                            fm.seek(int(msk_ptrs[si]))
-                            m = np.unpackbits(
-                                np.frombuffer(
-                                    fm.read(nb), dtype="u1"
-                                ),
-                                bitorder="little",
-                            )[:ln].astype(bool).tolist()
-                        else:
-                            m = None
-                        return t, m, ln, int(nsup[si])
-
-                    for j, p in enumerate(perm):
-                        p = int(p)
-                        cid, rid = int(ids[2 * p]), int(
-                            ids[2 * p + 1]
-                        )
-                        if cid % 2 != 0 or rid != cid + 1:
-                            raise IOError(
-                                f"shard {k}: pair {p} carries ids "
-                                f"{cid}/{rid} — pairing invariant "
-                                "broken"
-                            )
-                        ct, cm, cln, cns = seq(2 * p)
-                        rt, rm, rln, rns = seq(2 * p + 1)
-                        rows.append(
-                            (
-                                int(r.g0) + ls + j, k,
-                                int(r.shard_pos), ls + j, p,
-                                cid // 2, cln, rln, cns, rns,
-                                ct, rt, cm, rm,
-                            )
-                        )
-                cols = [
-                    "global_pos", "shard", "shard_pos", "position",
-                    "pair_index", "pair_id",
-                    "chosen_n_tokens", "rejected_n_tokens",
-                    "chosen_n_supervised", "rejected_n_supervised",
-                    "chosen_tokens", "rejected_tokens",
-                    "chosen_mask", "rejected_mask",
-                ]
-                yield pd.DataFrame(rows, columns=cols)
-
-    return wdf.mapInPandas(_read, schema)
 
 
 # ------------------------------------------------------------------

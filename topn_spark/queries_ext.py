@@ -17658,8 +17658,10 @@ SELECT shard,
   cm AS chosen_mask, rm AS rejected_mask
 FROM f ORDER BY pair_id ASC""",
     doc="STREAMING PREFERENCE SHARD MAINTENANCE (streaming/"
-    "ingest.py::preference_bin_export_batch/_sink + binshard.py::"
-    "export_preference_shards_delta) — the DPO analogue of z132: a"
+    "ingest.py::preference_bin_export_batch, attached with"
+    " start_batches; its delta commits run binshard.py::"
+    "export_bin_shards_delta over the stacked pairs) — the DPO"
+    " analogue of z132: a"
     " preference data service accumulates (chosen, rejected) pairs"
     " continuously, and rescanning the pair store per micro-batch"
     " is the same corpus-sized anti-pattern the seq-layout delta"

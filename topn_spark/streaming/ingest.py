@@ -1350,17 +1350,6 @@ def arena_monitor_batch(
                 )
 
 
-def _manifest_rows(man) -> list[dict]:
-    """The exporter's model-sized manifest rows without a Spark job:
-    exporters stash them on the returned DataFrame
-    (``_topn_manifest_rows``); fall back to a collect for any
-    manifest DataFrame built elsewhere."""
-    rows = getattr(man, "_topn_manifest_rows", None)
-    if rows is not None:
-        return rows
-    return [r.asDict() for r in man.collect()]
-
-
 def bin_export_batch(
     batch: DataFrame,
     corpus_dir: str,
@@ -1379,7 +1368,6 @@ def bin_export_batch(
     seqs_per_shard: int | None = None,
     _shard_key_col: str | None = None,
     _layout: str = "seq",
-    _epoch_unit: str = "seq",
 ) -> DataFrame:
     """Keep a trainer-native binary shard set CURRENT from one
     micro-batch of packed sequences — streaming maintenance for
@@ -1429,8 +1417,12 @@ def bin_export_batch(
     ``epochs``, the listed epoch orders are (re)derived after any
     commit that changed shard content — closing the version-bump
     resume story: a trainer's ``read_bin_window`` keeps finding a
-    current-version epoch order once ingest settles. Returns the
-    manifest.
+    current-version epoch order once ingest settles. Whether a
+    commit changed content is read from ``_manifest_meta``: on all
+    three paths ``export_version`` is new or bumped exactly when a
+    shard was rewritten, so the check costs no Spark job. Epoch
+    orders run over the layout's unit (pairs for
+    :func:`preference_bin_export_batch`). Returns the manifest.
 
     Scale shape per commit: one batch write (shuffle-free append),
     one batch-sized aggregate, one rewrite shuffle over touched
@@ -1514,9 +1506,7 @@ def bin_export_batch(
     ).write.mode("append").partitionBy("shard", "batch_id").parquet(
         corpus_dir
     )
-    first = (
-        _read_meta(spark, out_dir, store) is None
-    )
+    prior = _read_meta(spark, out_dir, store)
     # read the store with the KNOWN schema (the batch's own fields
     # + the partition columns): schema inference would read parquet
     # footers from arbitrary store files at planning time — at
@@ -1546,12 +1536,11 @@ def bin_export_batch(
             .parquet(*paths)
         )
 
-    if first:
-        corpus = spark.read.schema(store_schema).parquet(
-            corpus_dir
-        ).drop("batch_id")
+    if prior is None or replayed:
         man = export_bin_shards(
-            corpus.drop("shard"),
+            spark.read.schema(store_schema)
+            .parquet(corpus_dir)
+            .drop("batch_id", "shard"),
             out_dir,
             n_shards,
             tokens_col=tokens_col,
@@ -1560,33 +1549,12 @@ def bin_export_batch(
             dtype=dtype,
             salt=salt,
             assets_col=assets_col,
+            incremental=prior is not None,
             store=store,
             seqs_per_shard=seqs_per_shard,
             shard_key_col=_shard_key_col,
             layout=_layout,
         )
-        changed = True
-    elif replayed:
-        corpus = spark.read.schema(store_schema).parquet(
-            corpus_dir
-        ).drop("batch_id")
-        man = export_bin_shards(
-            corpus.drop("shard"),
-            out_dir,
-            n_shards,
-            tokens_col=tokens_col,
-            mask_col=mask_col,
-            id_col=id_col,
-            dtype=dtype,
-            salt=salt,
-            assets_col=assets_col,
-            incremental=True,
-            store=store,
-            seqs_per_shard=seqs_per_shard,
-            shard_key_col=_shard_key_col,
-            layout=_layout,
-        )
-        changed = any(r["rewritten"] for r in _manifest_rows(man))
     else:
         # ONE batch input pass per commit (r14): the signature fold
         # consumes the batch's rows read BACK from the store
@@ -1636,18 +1604,24 @@ def bin_export_batch(
             layout=_layout,
             store_reader=_touched_shards_reader,
         )
-        changed = any(r["rewritten"] for r in _manifest_rows(man))
     if epochs:
         from topn_spark.operators.binfs import LocalBinaryStore
 
         st = store or LocalBinaryStore()
+        # each path bumps (or first writes) export_version exactly
+        # when it rewrote a shard, so the version says whether the
+        # epoch orders are views of a stale dataset version
+        changed = prior is None or (
+            _read_meta(spark, out_dir, st)["export_version"]
+            != prior["export_version"]
+        )
         for e in epochs:
             if changed or not st.exists(
                 os.path.join(out_dir, f"_epoch_{int(e):04d}")
             ):
                 export_epoch_order(
                     spark, out_dir, e, salt=epoch_salt, store=st,
-                    unit=_epoch_unit,
+                    unit=_layout,
                 )
     return man
 
@@ -1711,5 +1685,4 @@ def preference_bin_export_batch(
         seqs_per_shard=seqs_per_shard,
         _shard_key_col="pair_id",
         _layout="pair",
-        _epoch_unit="pair",
     )
