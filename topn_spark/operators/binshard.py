@@ -146,14 +146,6 @@ def _read_manifest_rows(out_dir: str, store) -> list[dict] | None:
     return store.read_parquet_rows(os.path.join(out_dir, "_manifest"))
 
 
-def _write_meta(out_dir: str, meta: dict, store) -> None:
-    store.write_parquet(
-        os.path.join(out_dir, "_manifest_meta"),
-        [meta],
-        _META_SCHEMA,
-    )
-
-
 def _content_sig(n: int, xor: int) -> str:
     """Per-shard logical content signature: sequence count + the
     XOR of per-sequence ``xxhash64(id, tokens[, mask][, assets])``
@@ -750,7 +742,9 @@ def _commit_export(spark, st, out_dir, rows, old_rows, meta):
         sorted(rows, key=lambda r: r["shard"]),
         _MANIFEST_SCHEMA,
     )
-    _write_meta(out_dir, meta, st)
+    st.write_parquet(
+        os.path.join(out_dir, "_manifest_meta"), [meta], _META_SCHEMA
+    )
     return _manifest_df(spark, rows, written)
 
 
