@@ -2117,3 +2117,84 @@ def test_multimodal_chain_render_gate_pack_e2e(spark):
     assert all_assets == [11]
     n_ph = sum(r.tokens.count("<|image|>") for r in packed)
     assert n_ph == 1
+
+
+def _canon_md5(df):
+    """md5 of a frame's canonical form: its column names in output
+    order, then its rows sorted by their JSON text."""
+    import hashlib
+    import json
+
+    rows = sorted(json.dumps(list(r)) for r in df.collect())
+    return hashlib.md5(
+        json.dumps([df.columns, rows]).encode()
+    ).hexdigest()
+
+
+def test_packers_pinned(spark):
+    """Row-level pins of the sequence-packing family across code
+    versions: the three packers with padding and separators (by
+    groups on the token and masked packers; a NULL asset list and a
+    conversation split across a boundary on the multimodal one), and
+    the token and masked unpack round trips."""
+    from topn_spark.operators.pipeline import (
+        pack_masked_sequences,
+        pack_multimodal_sequences,
+        pack_token_sequences,
+        packed_doc_spans,
+        unpack_masked_sequences,
+        unpack_sequences,
+    )
+
+    rows = []
+    for i in range(1, 13):
+        toks = [f"t{i}_{j}" for j in range((i * 5) % 7)]
+        mask = [(i + j) % 3 == 0 for j in range(len(toks))]
+        rows.append((i, f"g{i % 2}", toks, mask))
+    df = spark.createDataFrame(
+        rows,
+        "doc_id long, grp string, tokens array<string>,"
+        " loss_mask array<boolean>",
+    )
+    by = ("grp",)
+    kw = dict(seq_len=5, by=by, pad_token="<pad>", sep_token="</s>")
+
+    packed = pack_token_sequences(df, **kw)
+    assert _canon_md5(packed) == "c7727565df5fb2cc731612cade7735fe"
+    masked = pack_masked_sequences(df, sep_supervised=True, **kw)
+    assert _canon_md5(masked) == "9ad763b88630b3f9987d001d8ae4105e"
+
+    mm = spark.createDataFrame(
+        [
+            (1, ["a", "<|image|>", "bb", "ccc", "<|image|>", "dd"],
+             [False, False, True, True, False, True], [101, 102]),
+            (2, ["xx", "yy"], [True, False], None),
+            (3, ["<|image|>", "q"], [False, True], [300]),
+            (4, ["r", "s", "<|image|>"], [True, True, False], [400]),
+        ],
+        "conv_id bigint, tokens array<string>,"
+        " loss_mask array<boolean>, asset_ids array<bigint>",
+    )
+    assert _canon_md5(
+        pack_multimodal_sequences(
+            mm, seq_len=4, pad_token="<pad>", sep_token="<eos>"
+        )
+    ) == "43b7e596dfd7c814596fea610f58429b"
+
+    spans = packed_doc_spans(
+        df, seq_len=5, by=by, sep_token="</s>"
+    )
+    unpacked = unpack_sequences(packed, spans, by=by, sep_token="</s>")
+    assert _canon_md5(unpacked) == "9c4ade75b608b31e5c25b4e4416af4d5"
+    assert _canon_md5(unpacked) == _canon_md5(
+        df.where("size(tokens) > 0").select("grp", "doc_id", "tokens")
+    )
+    unmasked = unpack_masked_sequences(
+        masked, spans, by=by, sep_token="</s>"
+    )
+    assert _canon_md5(unmasked) == "c3be3bd1411f7e22c8940b802f81cfcb"
+    assert _canon_md5(unmasked) == _canon_md5(
+        df.where("size(tokens) > 0").select(
+            "grp", "doc_id", "tokens", "loss_mask"
+        )
+    )
