@@ -276,6 +276,9 @@ DEPLOY = {
     "pack_mm_props": _one(
         "PackMultimodal", {"seqLen": "0", "assetsField": G}
     ),
+    "pack_mm_sep_supervised": _one(
+        "PackMultimodal", {"seqLen": "4", "sepSupervised": "maybe"}
+    ),
     "bin_export_missing": _one("BinExportSink", {}),
     "bin_export_props": _one(
         "BinExportSink",
@@ -744,6 +747,10 @@ EXPECTED: dict[str, str] = {
         "Stage 'st': seqLen must be >= 1, got 0. (property: seqLen); "
         "Stage 'st': Column 'ghost' not in input schema. (property: "
         'assetsField)'
+    ),
+    'pack_mm_sep_supervised': (
+        "Stage 'st': Invalid sepSupervised 'maybe'. 'true' or 'false'. "
+        "(property: sepSupervised)"
     ),
     'pack_props': (
         "Stage 'st': seqLen must be >= 1, got 0. (property: seqLen); "

@@ -2198,3 +2198,29 @@ def test_packers_pinned(spark):
             "grp", "doc_id", "tokens", "loss_mask"
         )
     )
+
+
+def test_one_packer_and_one_unpacker():
+    """The sequence-packing family is single-sourced: one reassembly
+    (shared by the three packers), one unpacker, one misalignment
+    guard, one pad step, and one repeated-span remover in textstats.
+    Pinned structurally so a re-grown copy turns the suite red."""
+    import ast
+    from pathlib import Path
+
+    ops = Path(__file__).resolve().parent.parent / "topn_spark" / "operators"
+    src = (ops / "pipeline.py").read_text()
+    assert src.count('F.collect_list("_sp")') == 2
+    assert src.count("F.raise_error(") == 1
+    assert src.count("F.array_repeat(") == 1
+    callers = [
+        fn.name
+        for fn in ast.walk(ast.parse(src))
+        if isinstance(fn, ast.FunctionDef)
+        for node in ast.walk(fn)
+        if isinstance(node, ast.Call)
+        and getattr(node.func, "id", None) == "_packed_spans"
+    ]
+    assert sorted(callers) == ["_pack_stream", "packed_doc_spans"]
+    text = (ops / "textstats.py").read_text()
+    assert text.count('Window.partitionBy("_h")') == 2

@@ -2420,6 +2420,38 @@ def test_loss_mask_and_pack_masked_stages(spark):
         run_pipeline_with_source(spark, no_mask, "src", conv)
 
 
+def test_pack_multimodal_stage_sep_supervised_folds_case(spark):
+    """PackMultimodal reads sepSupervised like PackMasked: case-folded,
+    so 'TRUE' supervises every separator."""
+    from topn_spark.pipelines import run_pipeline_with_source
+
+    conv = spark.createDataFrame(
+        [
+            (1, ["<|image|>", "a", "b"], [False, True, False], [7]),
+            (2, ["c", "d"], [False, True], None),
+        ],
+        "conv_id long, tokens array<string>,"
+        " loss_mask array<boolean>, asset_ids array<bigint>",
+    )
+
+    def supervised(flag):
+        spec = {
+            "stages": [
+                {"name": "src", "plugin": "File",
+                 "properties": {"path": "x"}},
+                {"name": "pack", "plugin": "PackMultimodal",
+                 "properties": {"seqLen": "4", "sepToken": "<eos>",
+                                "sepSupervised": flag}},
+            ],
+            "connections": [{"from": "src", "to": "pack"}],
+        }
+        staged = run_pipeline_with_source(spark, spec, "src", conv)
+        return sum(r.n_supervised for r in staged["pack"].collect())
+
+    # two real supervised tokens, plus one separator per conversation
+    assert supervised("false") == 2
+    assert supervised("TRUE") == supervised("true") == 4
+
 def test_fim_and_token_windows_stages(spark):
     """FimTransform + TokenWindows plugins: spec-driven code-corpus
     prep; invalid rate and stride > window rejected loudly."""

@@ -576,6 +576,130 @@ def packed_doc_spans(
     ).drop("_toks")
 
 
+def _pack_stream(df, stream_col, id_col, seq_len, by, order_col, sep, pad):
+    """The packers' one reassembly step over a per-token stream —
+    the token array, or the struct array :func:`_pack_masked` zips
+    its lanes into (plan: :func:`pack_token_sequences`). A ``pad``
+    element right-pads the final short sequence to ``seq_len``.
+    Returns ``(*by, seq_id, n_docs, n_tokens, _all)``; ``n_tokens``
+    counts separators, not pads."""
+    spans = _packed_spans(
+        df, stream_col, id_col, seq_len, by, order_col, sep
+    )
+    out = (
+        spans.select(
+            *by,
+            "seq_id",
+            F.struct(
+                F.col("seq_start"),
+                F.slice(
+                    "_toks",
+                    (F.col("doc_start") + 1).cast("int"),
+                    F.col("n_tokens").cast("int"),
+                ).alias("piece"),
+            ).alias("_sp"),
+        )
+        .groupBy(*by, "seq_id")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+            F.flatten(
+                F.transform(
+                    F.array_sort(F.collect_list("_sp")),
+                    lambda s: s["piece"],
+                )
+            ).alias("_all"),
+        )
+        .withColumn("n_tokens", F.size("_all").cast("bigint"))
+    )
+    if pad is not None:
+        out = out.withColumn(
+            "_all",
+            F.concat(
+                "_all",
+                F.array_repeat(
+                    pad,
+                    (F.lit(int(seq_len)) - F.size("_all")).cast("int"),
+                ),
+            ),
+        )
+    return out
+
+
+def _pack_masked(
+    df, tokens_col, mask_col, id_col, seq_len, by, order_col,
+    pad_token, sep_token, sep_supervised, error, ok=None, refs=None,
+):
+    """The mask-carrying packers' one lane step: zip ``tokens_col``,
+    ``mask_col`` and, for the multimodal packer, ``refs`` (a
+    (per-token array, NULL element) pair) into one struct stream,
+    guarded to raise ``error`` + the id on a NULL/misaligned mask or
+    a false ``ok``; pack it with :func:`_pack_stream` (a separator
+    carries ``sep_supervised``, a pad is never supervised, neither
+    names an asset); unzip to ``tokens`` / ``mask_col`` (/
+    ``_refs``) and count ``n_supervised``. ``refs`` must stay in the
+    guarded branch: on a misaligned row its ``element_at`` raises
+    Spark's index error before ``error``."""
+    elem = df.schema[tokens_col].dataType.elementType.simpleString()
+    lanes = [F.col(tokens_col), F.col(mask_col)]
+    names = ["tokens", mask_col]
+    if refs is not None:
+        lanes.append(refs[0])
+        names.append("_refs")
+    aligned = (
+        F.col(tokens_col).isNotNull()
+        & F.col(mask_col).isNotNull()
+        & (F.size(tokens_col) == F.size(mask_col))
+    )
+    if ok is not None:
+        aligned = aligned & ok
+    guarded = F.when(
+        aligned,
+        F.arrays_zip(*(c.alias(f"l{i}") for i, c in enumerate(lanes))),
+    ).otherwise(
+        F.raise_error(
+            F.concat(F.lit(error), F.col(id_col).cast("string"))
+        )
+    )
+
+    def element(token, supervised):
+        if token is None:
+            return None
+        return F.struct(
+            F.lit(token).cast(elem).alias("l0"),
+            F.lit(supervised).alias("l1"),
+            *([] if refs is None else [refs[1].alias("l2")]),
+        )
+
+    return (
+        _pack_stream(
+            df.withColumn("_zt", guarded), "_zt", id_col, seq_len, by,
+            order_col, element(sep_token, bool(sep_supervised)),
+            element(pad_token, False),
+        )
+        .select(
+            *by,
+            "seq_id",
+            "n_docs",
+            "n_tokens",
+            *(
+                F.transform("_all", lambda x: x[f"l{i}"]).alias(n)
+                for i, n in enumerate(names)
+            ),
+        )
+        .withColumn(
+            "n_supervised",
+            F.aggregate(
+                mask_col,
+                F.lit(0).cast("bigint"),
+                lambda acc, x: acc
+                + F.when(x, F.lit(1))
+                .otherwise(F.lit(0))
+                .cast("bigint"),
+            ),
+        )
+    )
+
+
 def pack_token_sequences(
     df: DataFrame,
     tokens_col: str = "tokens",
@@ -603,55 +727,20 @@ def pack_token_sequences(
     (the property that makes packed exports resumable and
     auditable).
 
-    Plan: the :func:`packed_doc_spans` arithmetic, then each overlap
-    slices its document's token array (``slice`` — no per-token
-    explode) and sequences reassemble with one hash agg
-    (``array_sort`` on (seq_start, piece) structs + ``flatten``).
+    Plan: :func:`_pack_stream` over the token arrays — the
+    :func:`packed_doc_spans` arithmetic, then each overlap slices its
+    document's token array (``slice`` — no per-token explode) and
+    sequences reassemble with one hash agg (``array_sort`` on
+    (seq_start, piece) structs + ``flatten``).
     One window cumsum + one shuffle on ``seq_id``. Scale: pass
     ``by`` at 100 TB (see :func:`packed_doc_spans`)."""
-    spans = _packed_spans(
-        df, tokens_col, id_col, seq_len, by, order_col, sep_token
+    elem = df.schema[tokens_col].dataType.elementType.simpleString()
+    pad = None if pad_token is None else F.lit(pad_token).cast(elem)
+    return _pack_stream(
+        df, tokens_col, id_col, seq_len, by, order_col, sep_token, pad
+    ).select(
+        *by, "seq_id", "n_docs", "n_tokens", F.col("_all").alias("tokens")
     )
-    piece = spans.select(
-        *by,
-        "seq_id",
-        F.struct(
-            F.col("seq_start"),
-            F.slice(
-                "_toks",
-                (F.col("doc_start") + 1).cast("int"),
-                F.col("n_tokens").cast("int"),
-            ).alias("piece"),
-        ).alias("_sp"),
-    )
-    out = (
-        piece.groupBy(*by, "seq_id")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-            F.flatten(
-                F.transform(
-                    F.array_sort(F.collect_list("_sp")),
-                    lambda s: s["piece"],
-                )
-            ).alias("tokens"),
-        )
-        .withColumn("n_tokens", F.size("tokens").cast("bigint"))
-    )
-    if pad_token is not None:
-        elem = out.schema["tokens"].dataType.elementType.simpleString()
-        out = out.withColumn(
-            "tokens",
-            F.concat(
-                "tokens",
-                F.array_repeat(
-                    F.lit(pad_token).cast(elem),
-                    (F.lit(int(seq_len)) - F.size("tokens")).cast(
-                        "int"
-                    ),
-                ),
-            ),
-        )
-    return out.select(*by, "seq_id", "n_docs", "n_tokens", "tokens")
 
 
 def pack_masked_sequences(
@@ -689,106 +778,18 @@ def pack_masked_sequences(
     are NEVER supervised and never counted in ``n_tokens``.
 
     Scale shape: identical to :func:`pack_token_sequences` — the
-    zip adds one map-only projection; the span arithmetic still
-    runs on token COUNTS (one two-level prefix-sum, no keyless
-    window for integral/string ``order_col``), pieces slice without
-    a per-token explode, and sequences reassemble with one hash agg
-    on ``seq_id``. Pass ``by`` at 100 TB for per-shard numbering."""
-    elem = df.schema[tokens_col].dataType.elementType.simpleString()
-    zipped = F.zip_with(
-        tokens_col,
-        mask_col,
-        lambda t, m: F.struct(t.alias("t"), m.alias("m")),
-    )
-    ok = (
-        F.col(tokens_col).isNotNull()
-        & F.col(mask_col).isNotNull()
-        & (F.size(tokens_col) == F.size(mask_col))
-    )
-    guarded = F.when(ok, zipped).otherwise(
-        F.raise_error(
-            F.concat(
-                F.lit(
-                    "pack_masked_sequences: NULL or misaligned "
-                    "loss mask for id "
-                ),
-                F.col(id_col).cast("string"),
-            )
-        )
-    )
-    dfz = df.withColumn("_zt", guarded)
-    sep = None
-    if sep_token is not None:
-        sep = F.struct(
-            F.lit(sep_token).cast(elem).alias("t"),
-            F.lit(bool(sep_supervised)).alias("m"),
-        )
-    spans = _packed_spans(
-        dfz, "_zt", id_col, seq_len, by, order_col, sep
-    )
-    piece = spans.select(
-        *by,
-        "seq_id",
-        F.struct(
-            F.col("seq_start"),
-            F.slice(
-                "_toks",
-                (F.col("doc_start") + 1).cast("int"),
-                F.col("n_tokens").cast("int"),
-            ).alias("piece"),
-        ).alias("_sp"),
-    )
-    merged = piece.groupBy(*by, "seq_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-        F.flatten(
-            F.transform(
-                F.array_sort(F.collect_list("_sp")),
-                lambda s: s["piece"],
-            )
-        ).alias("_all"),
-    )
-    out = (
-        merged.select(
-            *by,
-            "seq_id",
-            "n_docs",
-            F.transform("_all", lambda x: x["t"]).alias("tokens"),
-            F.transform("_all", lambda x: x["m"]).alias(mask_col),
-        )
-        .withColumn("n_tokens", F.size("tokens").cast("bigint"))
-        .withColumn(
-            "n_supervised",
-            F.aggregate(
-                mask_col,
-                F.lit(0).cast("bigint"),
-                lambda acc, x: acc
-                + F.when(x, F.lit(1))
-                .otherwise(F.lit(0))
-                .cast("bigint"),
-            ),
-        )
-    )
-    if pad_token is not None:
-        pad_n = (F.lit(int(seq_len)) - F.size("tokens")).cast("int")
-        out = out.withColumn(
-            "tokens",
-            F.concat(
-                "tokens",
-                F.array_repeat(F.lit(pad_token).cast(elem), pad_n),
-            ),
-        ).withColumn(
-            mask_col,
-            F.concat(
-                mask_col,
-                F.array_repeat(
-                    F.lit(False),
-                    (F.lit(int(seq_len)) - F.size(mask_col)).cast(
-                        "int"
-                    ),
-                ),
-            ),
-        )
-    return out.select(
+    :func:`_pack_masked` zip adds one map-only projection and the
+    zipped stream packs through the same :func:`_pack_stream`; the
+    span arithmetic still runs on token COUNTS (one two-level
+    prefix-sum, no keyless window for integral/string
+    ``order_col``), pieces slice without a per-token explode, and
+    sequences reassemble with one hash agg on ``seq_id``. Pass
+    ``by`` at 100 TB for per-shard numbering."""
+    return _pack_masked(
+        df, tokens_col, mask_col, id_col, seq_len, by, order_col,
+        pad_token, sep_token, sep_supervised,
+        "pack_masked_sequences: NULL or misaligned loss mask for id ",
+    ).select(
         *by,
         "seq_id",
         "n_docs",
@@ -842,7 +843,7 @@ def pack_multimodal_sequences(
     per-token asset refs are built map-only (placeholder positions
     bound as a projected array; per-placeholder ordinal via
     array_position over that IMAGE-sized array), ride the same
-    zip through the span arithmetic, and the per-sequence manifest
+    :func:`_pack_masked` zip through the span arithmetic, and the per-sequence manifest
     is one filter over the reassembled refs. No extra shuffle, no
     UDF."""
     elem = df.schema[tokens_col].dataType.elementType.simpleString()
@@ -865,12 +866,6 @@ def pack_multimodal_sequences(
             ),
         )
     )
-    aligned = (
-        F.col(tokens_col).isNotNull()
-        & F.col(mask_col).isNotNull()
-        & (F.size(tokens_col) == F.size(mask_col))
-        & (F.size("_php") == F.size("_ma"))
-    )
     refs = F.transform(
         "_mt",
         lambda t, i: F.when(
@@ -881,116 +876,23 @@ def pack_multimodal_sequences(
             ),
         ),
     )
-    zipped = F.zip_with(
-        F.zip_with(
-            tokens_col,
-            mask_col,
-            lambda t, m: F.struct(t.alias("t"), m.alias("m")),
-        ),
-        refs,
-        lambda tm, a: F.struct(
-            tm["t"].alias("t"), tm["m"].alias("m"), a.alias("a")
-        ),
+    out = _pack_masked(
+        bound, tokens_col, mask_col, id_col, seq_len, by, order_col,
+        pad_token, sep_token, sep_supervised,
+        "pack_multimodal_sequences: NULL/misaligned mask or "
+        "placeholder/asset count mismatch for id ",
+        ok=F.size("_php") == F.size("_ma"),
+        refs=(refs, F.lit(None).cast(a_elem)),
     )
-    guarded = F.when(aligned, zipped).otherwise(
-        F.raise_error(
-            F.concat(
-                F.lit(
-                    "pack_multimodal_sequences: NULL/misaligned "
-                    "mask or placeholder/asset count mismatch for "
-                    "id "
-                ),
-                F.col(id_col).cast("string"),
-            )
-        )
-    )
-    dfz = bound.withColumn("_zt", guarded).drop("_mt", "_ma", "_php")
-    sep = None
-    if sep_token is not None:
-        sep = F.struct(
-            F.lit(sep_token).cast(elem).alias("t"),
-            F.lit(bool(sep_supervised)).alias("m"),
-            F.lit(None).cast(a_elem).alias("a"),
-        )
-    spans = _packed_spans(
-        dfz, "_zt", id_col, seq_len, by, order_col, sep
-    )
-    piece = spans.select(
-        *by,
-        "seq_id",
-        F.struct(
-            F.col("seq_start"),
-            F.slice(
-                "_toks",
-                (F.col("doc_start") + 1).cast("int"),
-                F.col("n_tokens").cast("int"),
-            ).alias("piece"),
-        ).alias("_sp"),
-    )
-    merged = piece.groupBy(*by, "seq_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-        F.flatten(
-            F.transform(
-                F.array_sort(F.collect_list("_sp")),
-                lambda s: s["piece"],
-            )
-        ).alias("_all"),
-    )
-    out = (
-        merged.select(
-            *by,
-            "seq_id",
-            "n_docs",
-            F.transform("_all", lambda x: x["t"]).alias("tokens"),
-            F.transform("_all", lambda x: x["m"]).alias(mask_col),
-            F.filter(
-                F.transform("_all", lambda x: x["a"]),
-                lambda a: a.isNotNull(),
-            ).alias(assets_col),
-        )
-        .withColumn("n_tokens", F.size("tokens").cast("bigint"))
-        .withColumn(
-            "n_supervised",
-            F.aggregate(
-                mask_col,
-                F.lit(0).cast("bigint"),
-                lambda acc, x: acc
-                + F.when(x, F.lit(1))
-                .otherwise(F.lit(0))
-                .cast("bigint"),
-            ),
-        )
-        .withColumn(
-            "n_images", F.size(assets_col).cast("bigint")
-        )
-    )
-    if pad_token is not None:
-        pad_n = (F.lit(int(seq_len)) - F.size("tokens")).cast("int")
-        out = out.withColumn(
-            "tokens",
-            F.concat(
-                "tokens",
-                F.array_repeat(F.lit(pad_token).cast(elem), pad_n),
-            ),
-        ).withColumn(
-            mask_col,
-            F.concat(
-                mask_col,
-                F.array_repeat(
-                    F.lit(False),
-                    (F.lit(int(seq_len)) - F.size(mask_col)).cast(
-                        "int"
-                    ),
-                ),
-            ),
-        )
-    return out.select(
+    return out.withColumn(
+        assets_col, F.filter("_refs", lambda a: a.isNotNull())
+    ).select(
         *by,
         "seq_id",
         "n_docs",
         "n_tokens",
         "n_supervised",
-        "n_images",
+        F.size(assets_col).cast("bigint").alias("n_images"),
         "tokens",
         mask_col,
         assets_col,
@@ -2779,6 +2681,51 @@ def corpus_overlap_estimate(
     )
 
 
+def _unpack(packed, spans, id_col, by, sep_token, cols):
+    """The unpackers' one body over the packed array columns
+    ``cols`` (plan: :func:`unpack_sequences`): every array slices
+    by the same offsets and reassembles in the same per-document
+    agg; ``sep_token`` strips the trailing separator from each."""
+    piece = packed.select(
+        *by,
+        "seq_id",
+        *(F.col(c).alias(f"_l{i}") for i, c in enumerate(cols)),
+    ).join(spans, [*by, "seq_id"])
+    out = (
+        piece.select(
+            *by,
+            F.col(id_col),
+            F.struct(
+                F.col("doc_start"),
+                *(
+                    F.slice(
+                        f"_l{i}",
+                        (F.col("seq_start") + 1).cast("int"),
+                        F.col("n_tokens").cast("int"),
+                    ).alias(f"p{i}")
+                    for i in range(len(cols))
+                ),
+            ).alias("_sp"),
+        )
+        .groupBy(*by, id_col)
+        .agg(F.array_sort(F.collect_list("_sp")).alias("_ps"))
+        .select(
+            *by,
+            id_col,
+            *(
+                F.flatten(
+                    F.transform("_ps", lambda s: s[f"p{i}"])
+                ).alias(c)
+                for i, c in enumerate(cols)
+            ),
+        )
+    )
+    if sep_token is not None:
+        for c in cols:
+            out = out.withColumn(c, F.slice(c, 1, F.size(c) - 1))
+    return out
+
+
 def unpack_sequences(
     packed: DataFrame,
     spans: DataFrame,
@@ -2799,46 +2746,13 @@ def unpack_sequences(
     id, seq_start, doc_start, n_tokens`` + ``by``; pass the SAME
     ``by``/``seq_len``/order — and ``sep_token``, which strips the
     one trailing separator every packed document carries, restoring
-    the pre-packing arrays exactly). Plan: equi-join on
-    (``by``, seq_id) — both sides already carry that key, so AQE
+    the pre-packing arrays exactly). Plan (:func:`_unpack`):
+    equi-join on (``by``, seq_id) — both sides already carry that key, so AQE
     broadcasts or co-shuffles it — each overlap slices its piece out
     of the sequence array, and one hash agg per document reassembles
     (``array_sort`` on (doc_start, piece) structs + ``flatten``),
     the exact mirror of the packer's reassembly."""
-    piece = packed.select(
-        *by,
-        "seq_id",
-        F.col("tokens").alias("_seq_toks"),
-    ).join(spans, [*by, "seq_id"])
-    out = (
-        piece.select(
-            *by,
-            F.col(id_col),
-            F.struct(
-                F.col("doc_start"),
-                F.slice(
-                    "_seq_toks",
-                    (F.col("seq_start") + 1).cast("int"),
-                    F.col("n_tokens").cast("int"),
-                ).alias("piece"),
-            ).alias("_sp"),
-        )
-        .groupBy(*by, id_col)
-        .agg(
-            F.flatten(
-                F.transform(
-                    F.array_sort(F.collect_list("_sp")),
-                    lambda s: s["piece"],
-                )
-            ).alias("tokens"),
-        )
-    )
-    if sep_token is not None:
-        out = out.withColumn(
-            "tokens",
-            F.slice("tokens", 1, F.size("tokens") - 1),
-        )
-    return out
+    return _unpack(packed, spans, id_col, by, sep_token, ["tokens"])
 
 
 def unpack_masked_sequences(
@@ -2863,53 +2777,12 @@ def unpack_masked_sequences(
     the same offsets and reassemble in one hash agg per document;
     ``sep_token`` strips the trailing separator from BOTH arrays.
 
-    Plan: the :func:`unpack_sequences` shapes with one extra
-    projection-bound slice/transform per row — equi-join on
-    (``by``, seq_id), per-overlap slices, one per-doc hash agg."""
-    piece = packed.select(
-        *by,
-        "seq_id",
-        F.col("tokens").alias("_seq_toks"),
-        F.col(mask_col).alias("_seq_mask"),
-    ).join(spans, [*by, "seq_id"])
-    out = (
-        piece.select(
-            *by,
-            F.col(id_col),
-            F.struct(
-                F.col("doc_start"),
-                F.slice(
-                    "_seq_toks",
-                    (F.col("seq_start") + 1).cast("int"),
-                    F.col("n_tokens").cast("int"),
-                ).alias("pt"),
-                F.slice(
-                    "_seq_mask",
-                    (F.col("seq_start") + 1).cast("int"),
-                    F.col("n_tokens").cast("int"),
-                ).alias("pm"),
-            ).alias("_sp"),
-        )
-        .groupBy(*by, id_col)
-        .agg(F.array_sort(F.collect_list("_sp")).alias("_ps"))
-        .select(
-            *by,
-            id_col,
-            F.flatten(
-                F.transform(F.col("_ps"), lambda s: s["pt"])
-            ).alias("tokens"),
-            F.flatten(
-                F.transform(F.col("_ps"), lambda s: s["pm"])
-            ).alias(mask_col),
-        )
+    Plan: :func:`_unpack` over both arrays — the
+    :func:`unpack_sequences` equi-join on (``by``, seq_id),
+    per-overlap slices, one per-doc hash agg."""
+    return _unpack(
+        packed, spans, id_col, by, sep_token, ["tokens", mask_col]
     )
-    if sep_token is not None:
-        out = out.withColumn(
-            "tokens", F.slice("tokens", 1, F.size("tokens") - 1)
-        ).withColumn(
-            mask_col, F.slice(mask_col, 1, F.size(mask_col) - 1)
-        )
-    return out
 
 
 def token_budget_mixture(

@@ -1462,6 +1462,18 @@ def remove_duplicate_spans(
     all-pairs and no driver state exists, so the plan is the same at
     100 TB with the window-hash shuffle as the only data-sized cost.
     """
+    return _remove_repeated_windows(
+        df, tokens(text_col), window, min_count, keep, id_col,
+        "n_tokens", "n_dup_windows",
+    )
+
+
+def _remove_repeated_windows(
+    df, units, window, min_count, keep, id_col, n_name, dup_name
+):
+    """The one body of :func:`remove_duplicate_spans` (``units`` =
+    tokens) and :func:`remove_duplicate_sentence_spans` (sentences);
+    returns ``(id, <n_name>, <dup_name>, n_removed, clean_text)``."""
     if keep not in ("first", "none"):
         raise ValueError(f"keep must be 'first' or 'none', got {keep!r}")
     from pyspark.sql.window import Window
@@ -1470,7 +1482,7 @@ def remove_duplicate_spans(
 
     toks = (
         ensure_parallelism(df)
-        .select(F.col(id_col).alias("_id"), tokens(text_col).alias("_toks"))
+        .select(F.col(id_col).alias("_id"), units.alias("_toks"))
         .withColumn("_n", F.size("_toks"))
         .persist()
     )
@@ -1524,8 +1536,8 @@ def remove_duplicate_spans(
     )
     return out.select(
         F.col("_id").alias(id_col),
-        F.col("_n").cast("bigint").alias("n_tokens"),
-        F.size("_dups").cast("bigint").alias("n_dup_windows"),
+        F.col("_n").cast("bigint").alias(n_name),
+        F.size("_dups").cast("bigint").alias(dup_name),
         F.size("_cov").cast("bigint").alias("n_removed"),
         F.concat_ws(" ", kept_toks).alias("clean_text"),
     )
@@ -2251,81 +2263,16 @@ def remove_duplicate_sentence_spans(
 
     Returns ``(id, n_sentences, n_dup_spans, n_removed, clean_text)``.
 
-    Scale shape — identical to the token-window remover: one
-    posexplode to the (doc, pos, span-hash) stream, ONE shuffle keyed
-    by the span hash (count and global first-occurrence rank in a
-    single window pass), a per-doc agg of removed positions, a join
-    back, and per-row array rebuilds. No all-pairs, no driver state.
+    Scale shape — the token-window remover's, through the same
+    :func:`_remove_repeated_windows` body: one posexplode to the
+    (doc, pos, span-hash) stream, ONE shuffle keyed by the span hash
+    (count and global first-occurrence rank in a single window
+    pass), a per-doc agg of removed positions, a join back, and
+    per-row array rebuilds. No all-pairs, no driver state.
     """
-    if keep not in ("first", "none"):
-        raise ValueError(f"keep must be 'first' or 'none', got {keep!r}")
-    from pyspark.sql.window import Window
-
-    from topn_spark.operators.dedup import ensure_parallelism
-
-    sents = (
-        ensure_parallelism(df)
-        .select(
-            F.col(id_col).alias("_id"),
-            sentences(text_col).alias("_s"),
-        )
-        .withColumn("_n", F.size("_s"))
-        .persist()
-    )
-    starts = F.when(
-        F.col("_n") >= window,
-        F.sequence(F.lit(0), F.col("_n") - window),
-    ).otherwise(F.array().cast("array<int>"))
-    occ = sents.select(
-        "_id",
-        F.explode(starts).alias("pos"),
-        F.col("_s").alias("_t"),
-    ).select(
-        "_id",
-        "pos",
-        F.md5(
-            F.concat_ws(
-                "\x1f", F.slice("_t", F.col("pos") + 1, window)
-            )
-        ).alias("_h"),
-    )
-    w_all = Window.partitionBy("_h").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    w_ord = Window.partitionBy("_h").orderBy("_id", "pos")
-    flagged = occ.select(
-        "_id",
-        "pos",
-        F.count(F.lit(1)).over(w_all).alias("_cnt"),
-        F.row_number().over(w_ord).alias("_rn"),
-    )
-    removed = flagged.where(
-        (F.col("_cnt") >= min_count)
-        & (F.lit(keep == "none") | (F.col("_rn") > 1))
-    )
-    per_doc = removed.groupBy("_id").agg(
-        F.sort_array(F.collect_list("pos")).alias("_dups")
-    )
-    joined = sents.join(per_doc, "_id", "left").withColumn(
-        "_dups", F.coalesce("_dups", F.array().cast("array<int>"))
-    )
-    covered = F.array_distinct(
-        F.flatten(
-            F.transform(
-                "_dups", lambda p: F.sequence(p, p + window - 1)
-            )
-        )
-    )
-    out = joined.withColumn("_cov", covered)
-    kept = F.filter(
-        "_s", lambda x, i: ~F.array_contains("_cov", i)
-    )
-    return out.select(
-        F.col("_id").alias(id_col),
-        F.col("_n").cast("bigint").alias("n_sentences"),
-        F.size("_dups").cast("bigint").alias("n_dup_spans"),
-        F.size("_cov").cast("bigint").alias("n_removed"),
-        F.concat_ws(" ", kept).alias("clean_text"),
+    return _remove_repeated_windows(
+        df, sentences(text_col), window, min_count, keep, id_col,
+        "n_sentences", "n_dup_spans",
     )
 
 

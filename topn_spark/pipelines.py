@@ -2065,6 +2065,9 @@ def _stage_pack_multimodal(
     tokens_col = _col_prop(p, "tokensField", "tokens", df, collector)
     mask_col = _col_prop(p, "maskField", "loss_mask", df, collector)
     assets_col = _col_prop(p, "assetsField", "asset_ids", df, collector)
+    sep_sup = _choice_prop(
+        p, "sepSupervised", "false", _TF, collector, _TF_HINT, fold=True
+    )
     if collector.failures:
         return df
     from topn_spark.operators.pipeline import (
@@ -2081,7 +2084,7 @@ def _stage_pack_multimodal(
         order_col=id_col,
         image_token=p.get("imageToken", "<|image|>"),
         sep_token=p.get("sepToken"),
-        sep_supervised=p.get("sepSupervised", "false") == "true",
+        sep_supervised=sep_sup == "true",
     )
 
 
