@@ -630,15 +630,13 @@ def _pack_masked(
     pad_token, sep_token, sep_supervised, error, ok=None, refs=None,
 ):
     """The mask-carrying packers' one lane step: zip ``tokens_col``,
-    ``mask_col`` and, for the multimodal packer, ``refs`` (a
-    (per-token array, NULL element) pair) into one struct stream,
-    guarded to raise ``error`` + the id on a NULL/misaligned mask or
-    a false ``ok``; pack it with :func:`_pack_stream` (a separator
-    carries ``sep_supervised``, a pad is never supervised, neither
-    names an asset); unzip to ``tokens`` / ``mask_col`` (/
-    ``_refs``) and count ``n_supervised``. ``refs`` must stay in the
-    guarded branch: on a misaligned row its ``element_at`` raises
-    Spark's index error before ``error``."""
+    ``mask_col`` and the multimodal packer's ``refs`` ((per-token
+    array, NULL element)) into one struct stream, guarded to raise
+    ``error`` + the id on a NULL/misaligned mask or a false ``ok``
+    (``refs`` stays inside the guard: on a misaligned row its
+    ``element_at`` would raise Spark's index error first); pack it
+    with :func:`_pack_stream` and unzip to ``tokens`` /
+    ``mask_col`` (/ ``_refs``) plus ``n_supervised``."""
     elem = df.schema[tokens_col].dataType.elementType.simpleString()
     lanes = [F.col(tokens_col), F.col(mask_col)]
     names = ["tokens", mask_col]
