@@ -127,3 +127,28 @@ def test_sql_entry_point_matches_dataframe_builders(spark):
         via_sql = [tuple(r) for r in spark.sql(q.oracle).collect()]
         via_df = [tuple(r) for r in q.builder(spark, SF_SMALL).collect()]
         assert via_sql == via_df, f"{name}: SQL and DataFrame paths differ"
+
+
+def test_catalog_text_pinned():
+    """Every entry's declared text is pinned: oracle SQL, tolerance
+    oracle (a callable by its qualified name), doc, tolerance,
+    tolerance keys and builder name, hashed in name order. A refactor
+    of the catalog's builders or oracle-fragment helpers must render
+    every entry byte-identically; no Spark is needed to check it."""
+    import hashlib
+
+    h = hashlib.sha256()
+    for name in sorted(QUERIES):
+        q = QUERIES[name]
+        tol = (
+            q.tol_oracle.__qualname__
+            if callable(q.tol_oracle) else q.tol_oracle
+        )
+        h.update(repr((
+            name, q.oracle, tol, q.doc, q.tolerance, tuple(q.tol_keys),
+            q.builder.__qualname__,
+        )).encode())
+    assert len(QUERIES) == 301
+    assert h.hexdigest() == (
+        "4a7a94e653e98e14fed709354a3cf3bca7814532fc696f1359fda569c04dcb22"
+    )
