@@ -152,3 +152,37 @@ def test_catalog_text_pinned():
     assert h.hexdigest() == (
         "4a7a94e653e98e14fed709354a3cf3bca7814532fc696f1359fda569c04dcb22"
     )
+
+
+def test_duplicate_entry_name_raises():
+    """A copy-pasted entry name must not silently replace the earlier
+    entry: ``query`` refuses it before the registry changes."""
+    from topn_spark.queries import query
+
+    before = QUERIES["q01"]
+    with pytest.raises(ValueError, match="q01"):
+        query("q01", "SELECT 1")(lambda spark, sf_dir: None)
+    assert QUERIES["q01"] is before
+
+
+def test_catalog_fixtures_and_oracle_fragments_live_once():
+    """Each shared catalog fixture and oracle fragment is written
+    once in ``queries_ext.py`` (the arena scores, the per-channel
+    pixel stats, the planted HTML pages, the packing slice), and
+    every entry registers through ``@query`` alone. Pinned
+    structurally so a re-grown copy turns the suite red."""
+    from pathlib import Path
+
+    src = (
+        Path(__file__).resolve().parent.parent
+        / "topn_spark" / "queries_ext.py"
+    ).read_text()
+    for once in (
+        "(d % 4 == 3) & (p % 3 == 0)",
+        "def ch_min(c):",
+        '"<html><head><title>Title "',
+        "GREATEST(seq_id * 32 - off, 0) + 1 AS BIGINT",
+    ):
+        assert src.count(once) == 1, (once, src.count(once))
+    for gone in (".__class__(", "oracle patched below", "QUERIES as _Q"):
+        assert gone not in src, gone

@@ -66,6 +66,9 @@ def query(
     tolerance: float = 0.0,
     tol_keys: tuple[str, ...] = (),
 ):
+    if name in QUERIES:
+        raise ValueError(f"duplicate catalog entry name {name!r}")
+
     def deco(fn):
         QUERIES[name] = Query(
             name, fn, oracle, doc, tol_oracle, tolerance, tol_keys

@@ -20,9 +20,593 @@ from topn_spark.operators.textstats import (
     fingerprint,
     language_scores,
 )
-from topn_spark.queries import query
+from topn_spark.queries import QUERIES, query
 
 _TOKS_DUCK = "regexp_extract_all(lower(text), '[a-z0-9]+')"
+
+
+# --------------------------------------------------------------------------
+# Shared Spark-side fixtures. Builders only: no oracle calls these.
+# --------------------------------------------------------------------------
+
+def _planted_assets(spark, sf_dir, n_docs, payload):
+    """``doc_id < n_docs`` documents with one synthesized binary
+    ``payload`` column; ``payload(doc_id) -> bytes`` runs on the
+    executors inside one pandas UDF."""
+    from pyspark.sql import types as T
+    from pyspark.sql.functions import pandas_udf
+
+    @pandas_udf(T.BinaryType())
+    def planted(doc_ids):
+        import pandas as pd
+
+        return pd.Series([payload(int(d)) for d in doc_ids])
+
+    docs = load_table(spark, sf_dir, "documents").where(
+        F.col("doc_id") < n_docs
+    )
+    return docs.select("doc_id", planted("doc_id").alias("payload"))
+
+
+def _planted_ramps(spark, sf_dir, dims, encode):
+    """Planted x+y+40c RGB ramps: ``dims(doc_id) -> (w, h)`` and
+    ``encode(doc_id, w, h, pixels) -> bytes`` pick the image shape
+    and container per row."""
+
+    def payload(d):
+        w, h = dims(d)
+        pix = bytes(
+            x + y + 40 * c
+            for y in range(h)
+            for x in range(w)
+            for c in range(3)
+        )
+        return encode(d, w, h, pix)
+
+    return _planted_assets(spark, sf_dir, 200, payload)
+
+
+def _planted_wavs(spark, sf_dir):
+    """Planted PCM16 WAVs: 1-2 channels, 8.0-8.2 kHz, 20-69 frames of
+    the sample ramp (7d + 3f + 11c) % 200 - 100."""
+    from topn_spark.operators.multimodal import encode_wav_pcm16
+
+    def payload(d):
+        ch, sr, nf = 1 + d % 2, 8000 + 100 * (d % 3), 20 + d % 50
+        frames = [
+            (d * 7 + f * 3 + c * 11) % 200 - 100
+            for f in range(nf)
+            for c in range(ch)
+        ]
+        return encode_wav_pcm16(sr, ch, frames)
+
+    return _planted_assets(spark, sf_dir, 200, payload)
+
+
+def _planted_html(shapes):
+    """The planted HTML pages, one of ``shapes`` (2 or 4) per doc_id:
+    full page with script+style+comment+entity, list+inline anchor,
+    entities+br, table cells."""
+    d = F.col("doc_id")
+    ds = d.cast("string")
+    pages = [
+        F.concat(
+            F.lit("<html><head><title>Title "), ds,
+            F.lit("</title><style>p{c:red}</style></head>"
+                  "<body><h1>Doc "), ds,
+            F.lit("</h1><p>alpha "), ds,
+            F.lit(" beta</p><script>var x="), ds,
+            F.lit(";</script><p>gamma &amp; delta</p>"
+                  "<!--hidden--></body></html>"),
+        ),
+        F.concat(
+            F.lit("<body><ul><li>item A "), ds,
+            F.lit("</li><li>item B</li></ul><div>tail "
+                  "<a href=\"/x\">link</a> text</div></body>"),
+        ),
+        F.concat(
+            F.lit("<body><p>A &lt;tag&gt; &amp; B<br>second "), ds,
+            F.lit(" line</p></body>"),
+        ),
+        F.concat(
+            F.lit("<body><table><tr><td>r1c1</td><td>r1c2 "), ds,
+            F.lit("</td></tr><tr><td>r2</td></tr></table>"
+                  "<p>after "), ds,
+            F.lit("</p></body>"),
+        ),
+    ][:shapes]
+    html = F.when(d % shapes == 0, pages[0])
+    for k in range(1, shapes - 1):
+        html = html.when(d % shapes == k, pages[k])
+    return html.otherwise(pages[-1])
+
+
+def _crawl_record(html):
+    """The WARC response record of a crawled ``html`` page at
+    http://crawl.test/doc/<doc_id>."""
+    return F.concat(
+        F.lit(
+            "WARC/1.0\r\nWARC-Type: response\r\nWARC-Target-URI: "
+            "http://crawl.test/doc/"
+        ),
+        F.col("doc_id").cast("string"),
+        F.lit("\r\nContent-Length: "),
+        F.octet_length(html).cast("string"),
+        F.lit("\r\n\r\n"),
+        html,
+        F.lit("\r\n\r\n"),
+    )
+
+
+def _warc_blobs(docs, rec, per_blob):
+    """WARC records ``rec`` framed ``per_blob`` docs at a time, in
+    doc_id order, into one binary ``content`` blob per ``blob_id``."""
+    d = F.col("doc_id")
+    return (
+        docs.select(
+            F.expr(f"doc_id DIV {per_blob}").alias("blob_id"),
+            F.struct(d.alias("doc_id"), rec.alias("rec")).alias("s"),
+        )
+        .groupBy("blob_id")
+        .agg(
+            F.array_join(
+                F.transform(
+                    F.array_sort(F.collect_list("s")),
+                    lambda s: s["rec"],
+                ),
+                "",
+            )
+            .cast("binary")
+            .alias("content"),
+        )
+    )
+
+
+def _arena_samples(spark, sf_dir):
+    """The arena fixture: 4 models (m0 +10 offset) x 60 prompts of
+    scored samples with an m3 NULL stripe on every third prompt."""
+    docs = load_table(spark, sf_dir, "documents").where(
+        F.col("doc_id") < 480
+    )
+    d = F.col("doc_id")
+    p = (d / 8).cast("bigint")
+    score = F.when(
+        (d % 4 == 3) & (p % 3 == 0), F.lit(None).cast("double")
+    ).otherwise(
+        ((d * 7) % 29).cast("double")
+        + F.when(d % 4 == 0, F.lit(10.0)).otherwise(F.lit(0.0))
+    )
+    return docs.select(
+        p.alias("prompt_id"),
+        F.concat(F.lit("m"), (d % 4).cast("string")).alias("model"),
+        d.alias("sample_id"),
+        score.alias("score"),
+    )
+
+
+def _preference_pairs(spark, sf_dir):
+    """Planted preference pairs over ``doc_id < 250``: chosen = the
+    token-length ids, rejected = the lengths capped at 9 behind a 5
+    marker; masks keep chosen ids >= 4 and rejected ids >= 3."""
+    from topn_spark.operators.textstats import tokens
+
+    return (
+        load_table(spark, sf_dir, "documents")
+        .where(F.col("doc_id") < 250)
+        .select(
+            F.col("doc_id").alias("pair_id"),
+            F.transform(
+                tokens("text"),
+                lambda t: F.length(t).cast("bigint"),
+            ).alias("chosen_tokens"),
+        )
+        .where(F.size("chosen_tokens") > 0)
+        .withColumn(
+            "rejected_tokens",
+            F.concat(
+                F.array(F.lit(5).cast("bigint")),
+                F.transform(
+                    "chosen_tokens", lambda t: F.least(t, F.lit(9))
+                ),
+            ),
+        )
+        .withColumn(
+            "chosen_mask",
+            F.transform("chosen_tokens", lambda t: t >= 4),
+        )
+        .withColumn(
+            "rejected_mask",
+            F.transform("rejected_tokens", lambda t: t >= 3),
+        )
+    )
+
+
+def _length_id_docs(spark, sf_dir, n_docs, mask=True):
+    """Non-empty ``doc_id < n_docs`` documents as token-length ids
+    ``tokens``, plus (``mask``) a ``loss_mask`` keeping ids >= 4."""
+    from topn_spark.operators.textstats import tokens
+
+    docs = (
+        load_table(spark, sf_dir, "documents")
+        .where(F.col("doc_id") < n_docs)
+        .select(
+            "doc_id",
+            F.transform(
+                tokens("text"),
+                lambda t: F.length(t).cast("bigint"),
+            ).alias("tokens"),
+        )
+        .where(F.size("tokens") > 0)
+    )
+    if not mask:
+        return docs
+    return docs.withColumn(
+        "loss_mask", F.transform("tokens", lambda t: t >= 4)
+    )
+
+
+def _packed_length_ids(spark, sf_dir):
+    """Token-length ids of the non-empty ``doc_id < 300`` documents,
+    masked to tokens of 4+ characters and packed into 32-token
+    sequences with separator id 0."""
+    from topn_spark.operators.pipeline import pack_masked_sequences
+    from topn_spark.operators.textstats import tokens
+
+    docs = (
+        load_table(spark, sf_dir, "documents")
+        .where(F.col("doc_id") < 300)
+        .select("doc_id", tokens("text").alias("tokens"))
+        .where(F.size("tokens") > 0)
+        .select(
+            "doc_id",
+            F.transform(
+                "tokens", lambda t: F.length(t).cast("bigint")
+            ).alias("tokens"),
+            F.transform(
+                "tokens", lambda t: F.length(t) >= 4
+            ).alias("loss_mask"),
+        )
+    )
+    return pack_masked_sequences(
+        docs,
+        id_col="doc_id",
+        order_col="doc_id",
+        seq_len=32,
+        sep_token=0,
+    )
+
+
+def _okey_docs(spark, sf_dir, mask=True):
+    """``doc_id < 400`` documents keyed by ``okey`` = md5(doc_id) with
+    their engine ``tokens`` and (``mask``) a ``loss_mask`` keeping
+    tokens of 4+ characters."""
+    from topn_spark.operators.textstats import tokens
+
+    docs = (
+        load_table(spark, sf_dir, "documents")
+        .where(F.col("doc_id") < 400)
+        .select(
+            F.md5(F.col("doc_id").cast("string")).alias("okey"),
+            tokens("text").alias("tokens"),
+        )
+    )
+    if not mask:
+        return docs
+    return docs.withColumn(
+        "loss_mask",
+        F.transform("tokens", lambda t: F.length(t) >= 4),
+    )
+
+
+def _with_quality(extracted):
+    """``add_quality`` over extracted page text plus its engine token
+    count ``n_tokens``."""
+    from topn_spark.operators.textstats import add_quality
+
+    return add_quality(extracted).withColumn(
+        "n_tokens",
+        F.size(
+            F.expr("regexp_extract_all(lower(text), '[a-z0-9]+', 0)")
+        ).cast("bigint"),
+    )
+
+
+def _mask_str(msk):
+    """A boolean loss mask as a '0'/'1' string (NULL stays NULL)."""
+    return F.when(
+        msk.isNotNull(),
+        F.array_join(
+            F.transform(msk, lambda b: F.when(b, "1").otherwise("0")),
+            "",
+        ),
+    )
+
+
+def _subtoken_sigs(out, n_col):
+    """Per-conversation subtoken count ``n_col``, supervised count,
+    '|'-joined subtokens and mask string of a loss-mask tokenizer."""
+    toks, msk = F.col("tokens"), F.col("loss_mask")
+    return out.select(
+        "conv_id",
+        n_col,
+        "n_supervised",
+        F.when(toks.isNotNull(), F.array_join(toks, "|")).alias(
+            "toks_sig"
+        ),
+        _mask_str(msk).alias("mask_str"),
+    ).orderBy("conv_id")
+
+
+def _array_md5(col):
+    """md5 of an int array rendered as its comma-joined decimal text."""
+    return F.md5(
+        F.concat_ws(",", F.transform(col, lambda x: x.cast("string")))
+        .cast("binary")
+    )
+
+
+def _channel_stats(decoded):
+    """Shape, pixel md5 and per-channel min/max/mean of decoded RGB."""
+
+    def ch_min(c):
+        return F.array_min(F.expr(f"filter(pixels, (x, i) -> i % 3 = {c})"))
+
+    def ch_max(c):
+        return F.array_max(F.expr(f"filter(pixels, (x, i) -> i % 3 = {c})"))
+
+    def ch_mean(c):
+        return F.round(
+            F.expr(
+                f"aggregate(filter(pixels, (x, i) -> i % 3 = {c}), 0L, "
+                "(a, x) -> a + x, "
+                "a -> a / cast(size(pixels) div 3 as double))"
+            ),
+            4,
+        )
+
+    return decoded.select(
+        "doc_id",
+        F.element_at("shape", 1).alias("h"),
+        F.element_at("shape", 2).alias("w"),
+        F.size("pixels").alias("n_px"),
+        _array_md5("pixels").alias("px_md5"),
+        ch_min(0).alias("r_min"),
+        ch_max(0).alias("r_max"),
+        ch_mean(0).alias("r_mean"),
+        ch_min(1).alias("g_min"),
+        ch_max(1).alias("g_max"),
+        ch_mean(1).alias("g_mean"),
+        ch_min(2).alias("b_min"),
+        ch_max(2).alias("b_max"),
+        ch_mean(2).alias("b_mean"),
+    ).orderBy("doc_id")
+
+
+# --------------------------------------------------------------------------
+# Shared oracle fragments: DuckDB SQL text only, never run by a builder.
+# --------------------------------------------------------------------------
+
+#: closed-form extracted text of each ``_planted_html`` shape
+_HTML_TEXTS_DUCK = (
+    "'Doc ' || doc_id || chr(10) || 'alpha ' || doc_id\n"
+    "|| ' beta' || chr(10) || 'gamma & delta'",
+    "'item A ' || doc_id || chr(10) || 'item B'\n"
+    "|| chr(10) || 'tail link text'",
+    "'A <tag> & B' || chr(10) || 'second ' || doc_id\n"
+    "|| ' line'",
+    "'r1c1' || chr(10) || 'r1c2 ' || doc_id || chr(10)\n"
+    "|| 'r2' || chr(10) || 'after ' || doc_id",
+)
+
+
+def _duck_html_text(pad, shapes):
+    """Oracle of ``extract_html_text`` over ``_planted_html``: a
+    ``CASE doc_id % shapes`` expression aliased ``text`` whose lines
+    after the first are indented under ``pad``."""
+    whens = "".join(
+        f"\n{pad}  WHEN {k} THEN "
+        + text.replace("\n", "\n" + pad + " " * 14)
+        for k, text in enumerate(_HTML_TEXTS_DUCK[:shapes])
+    )
+    return f"CASE doc_id % {shapes}{whens}\n{pad}END AS text"
+
+
+def _duck_web_quality(title, shapes, head):
+    """Oracle of ``add_quality`` over the extracted planted HTML:
+    ``title`` is the title expression, ``head`` the output columns
+    before the keep flag."""
+    return """WITH t AS (
+  SELECT doc_id,
+    """ + title + """,
+    """ + _duck_html_text("    ", shapes) + """
+  FROM documents WHERE doc_id < 400),
+q AS (
+  SELECT doc_id, title, text,
+    ROUND(CAST(LENGTH(regexp_replace(text, '[^A-Za-z]', '', 'g'))
+               AS DOUBLE)
+          / NULLIF(CAST(LENGTH(text) AS DOUBLE), 0), 6) AS alpha_ratio,
+    ROUND(CAST(LENGTH(text)
+               - LENGTH(regexp_replace(text, '[^ ]', '', 'g'))
+               AS DOUBLE)
+          / NULLIF(CAST(len(regexp_extract_all(lower(text),
+                                               '[a-z0-9]+'))
+                        AS DOUBLE), 0), 6) AS mean_word_len,
+    CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+'))
+         AS BIGINT) AS n_tokens
+  FROM t)
+SELECT doc_id, """ + head + """
+       (n_tokens >= 10 AND alpha_ratio >= 0.6
+        AND mean_word_len BETWEEN 2.0 AND 12.0) AS quality_keep
+FROM q ORDER BY doc_id ASC"""
+
+
+def _duck_pack_spans(c_cols, key, src, s_cols):
+    """The packing prefix-sum CTEs: ``c`` gives each document of
+    ``src`` its token offset ``off`` by one framed running SUM of
+    token counts in ``key`` order (its select list opens with
+    ``c_cols``), ``s`` fans each document out to the 32-token
+    sequences it overlaps (carrying ``s_cols``)."""
+    return f"""c AS (
+  SELECT {c_cols}CAST(len(toks) AS BIGINT) AS n,
+    CAST(COALESCE(SUM(CAST(len(toks) AS BIGINT)) OVER (
+      ORDER BY {key} ROWS BETWEEN UNBOUNDED PRECEDING
+      AND 1 PRECEDING), 0) AS BIGINT) AS off
+  FROM {src}),
+s AS (
+  SELECT {s_cols}, n, off, u.seq_id AS seq_id
+  FROM c, UNNEST(range(off // 32, (off + n - 1) // 32 + 1))
+    AS u(seq_id)),
+"""
+
+
+def _duck_seq_slice(arr, indent):
+    """The part of document array ``arr`` that falls into 32-token
+    sequence ``seq_id``, for a document at token offset ``off`` of
+    length ``n``; continuation lines align under the bracket."""
+    pad = indent + " " * (len(arr) + 1)
+    return (
+        f"{indent}{arr}[CAST(GREATEST(seq_id * 32 - off, 0) + 1 AS BIGINT)"
+        f"\n{pad}:CAST(GREATEST(seq_id * 32 - off, 0)"
+        f"\n{pad}  + LEAST((seq_id + 1) * 32, off + n)"
+        f"\n{pad}  - GREATEST(seq_id * 32, off) AS BIGINT)]"
+    )
+
+
+def _duck_length_ids(key, arr, n_docs):
+    """``WITH t``: the token-length ids ``arr`` of every non-empty
+    document with ``doc_id < n_docs``, selected as ``key``."""
+    return f"""WITH t AS (
+  SELECT {key},
+    list_transform(regexp_extract_all(lower(text), '[a-z0-9]+'),
+      x -> CAST(length(x) AS BIGINT)) AS {arr}
+  FROM documents WHERE doc_id < {n_docs}
+    AND len(regexp_extract_all(lower(text), '[a-z0-9]+')) > 0)"""
+
+
+def _duck_md5_shard(col, salt, n_shards):
+    """The binary-shard rule: first 8 hex digits of md5(col || salt)
+    modulo ``n_shards``."""
+    return f"""CAST(CAST(('0x' || substring(md5(CAST({col} AS VARCHAR)
+      || '{salt}'), 1, 8)) AS BIGINT) % {n_shards} AS INT) AS shard"""
+
+
+def _duck_pair_sides(salt, n_shards):
+    """``p`` and ``f``: the planted rejected side (lengths capped at
+    9 behind a 5 marker) and both masks of each pair in ``t``, and
+    its shard."""
+    return f"""p AS (
+  SELECT pair_id, ct,
+    list_prepend(CAST(5 AS BIGINT),
+      list_transform(ct, x -> LEAST(x, CAST(9 AS BIGINT)))) AS rt,
+    list_transform(ct, x -> x >= 4) AS cm,
+    {_duck_md5_shard("pair_id", salt, n_shards)}
+  FROM t),
+f AS (
+  SELECT *, list_transform(rt, x -> x >= 3) AS rm FROM p)"""
+
+
+#: the per-pair columns a preference-shard read returns
+_DUCK_PAIR_ROWS = """  CAST(len(ct) AS BIGINT) AS chosen_n_tokens,
+  CAST(len(rt) AS BIGINT) AS rejected_n_tokens,
+  CAST(len(list_filter(cm, x -> x)) AS BIGINT)
+    AS chosen_n_supervised,
+  CAST(len(list_filter(rm, x -> x)) AS BIGINT)
+    AS rejected_n_supervised,
+  ct AS chosen_tokens, rt AS rejected_tokens,
+  cm AS chosen_mask, rm AS rejected_mask"""
+
+#: the rows a binary-shard read returns for the documents in ``m``
+_DUCK_SEQ_ROWS = """SELECT shard,
+  CAST(ROW_NUMBER() OVER (PARTITION BY shard ORDER BY doc_id) - 1
+    AS BIGINT) AS seq_index,
+  doc_id AS seq_id,
+  CAST(len(toks) AS BIGINT) AS n_tokens,
+  CAST(len(list_filter(msk, x -> x)) AS BIGINT) AS n_supervised,
+  toks AS tokens, msk AS loss_mask
+FROM m ORDER BY seq_id ASC"""
+
+
+def _duck_epoch_order(unit, src, epoch, salt):
+    """``ix`` .. ``sp``: each ``unit`` ("seq" or "pair") of ``src``
+    gets its in-shard index, its shuffled in-shard ``position`` for
+    ``epoch`` and its shard's ``shard_pos``/``base`` in the epoch's
+    shard order, all keyed by md5 under ``salt``."""
+    n = "n_seqs" if unit == "seq" else "n_units"
+    return f"""ix AS (
+  SELECT *,
+    CAST(ROW_NUMBER() OVER (PARTITION BY shard ORDER BY {unit}_id) - 1
+      AS BIGINT) AS {unit}_index
+  FROM {src}),
+pos AS (
+  SELECT *,
+    CAST(ROW_NUMBER() OVER (PARTITION BY shard ORDER BY
+      md5('{epoch}:' || CAST(shard AS VARCHAR) || ':'
+        || CAST({unit}_index AS VARCHAR) || '{salt}'),
+      {unit}_index) - 1 AS BIGINT) AS position
+  FROM ix),
+sh AS (
+  SELECT shard, COUNT(*) AS {n},
+    md5('{epoch}:' || CAST(shard AS VARCHAR) || '{salt}') AS skey
+  FROM pos GROUP BY shard),
+sp AS (
+  SELECT shard,
+    CAST(ROW_NUMBER() OVER (ORDER BY skey, shard) - 1 AS INT)
+      AS shard_pos,
+    CAST(COALESCE(SUM({n}) OVER (ORDER BY skey, shard
+      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+      AS BIGINT) AS base
+  FROM sh)"""
+
+
+#: the recursive connected-components walk over the undirected
+#: near-duplicate ``pairs``: every node ``id`` reaches label ``r``
+_DUCK_COMPONENTS = """edges AS (
+  SELECT id_a AS src, id_b AS dst FROM pairs
+  UNION SELECT id_b, id_a FROM pairs),
+nodes AS (SELECT DISTINCT src AS id FROM edges),
+reach(id, r) AS (
+  SELECT id, id FROM nodes
+  UNION
+  SELECT e.dst, reach.r FROM reach JOIN edges e ON e.src = reach.id)"""
+
+
+#: the oracle side of ``_okey_docs`` as packed with an unsupervised
+#: '</s>' separator: per non-empty document, tokens and loss mask
+_DUCK_OKEY_MASKED = r"""WITH t AS (
+  SELECT md5(CAST(doc_id AS VARCHAR)) AS okey,
+    list_append(
+      regexp_extract_all(lower(text), '[a-z0-9]+'), '</s>') AS toks,
+    list_append(
+      list_transform(regexp_extract_all(lower(text), '[a-z0-9]+'),
+        x -> length(x) >= 4), false) AS msk
+  FROM documents WHERE doc_id < 400
+    AND len(regexp_extract_all(lower(text), '[a-z0-9]+')) > 0)"""
+
+
+def _duck_ramp_stats(dims):
+    """Oracle of ``_channel_stats`` over planted ramps; ``dims`` is the
+    ``w``/``h`` select-list tail of the ``g`` CTE."""
+    return """WITH g AS (
+  SELECT doc_id""" + dims + """
+  FROM documents WHERE doc_id < 200),
+px AS (
+  SELECT doc_id, w, h,
+         [CAST((i // 3) % w + (i // (3 * w)) + 40 * (i % 3) AS INT)
+          for i in generate_series(0, 3 * w * h - 1)] AS pixels
+  FROM g)
+SELECT doc_id, h, w,
+       CAST(3 * w * h AS INT) AS n_px,
+       md5(array_to_string(pixels, ',')) AS px_md5,
+       CAST(0 AS INT) AS r_min,
+       CAST((w - 1) + (h - 1) AS INT) AS r_max,
+       ROUND((w - 1) / 2.0 + (h - 1) / 2.0, 4) AS r_mean,
+       CAST(40 AS INT) AS g_min,
+       CAST(40 + (w - 1) + (h - 1) AS INT) AS g_max,
+       ROUND(40 + (w - 1) / 2.0 + (h - 1) / 2.0, 4) AS g_mean,
+       CAST(80 AS INT) AS b_min,
+       CAST(80 + (w - 1) + (h - 1) AS INT) AS b_max,
+       ROUND(80 + (w - 1) / 2.0 + (h - 1) / 2.0, 4) AS b_mean
+FROM px ORDER BY doc_id ASC"""
 
 
 @query(
@@ -921,7 +1505,7 @@ ORDER BY id_a ASC, id_b ASC"""
 
 @query(
     "x28_embedding_neardup",
-    None,  # replaced right below — needs _srp_planes literals
+    _x28_oracle(),
     doc="Embedding-cosine near-dup with an EXACT-arithmetic oracle: "
     "integer-quantized vectors, integer random-hyperplane LSH "
     "buckets, and the cosine>=0.25 test done as "
@@ -1004,16 +1588,6 @@ def x28_embedding_neardup(spark, sf_dir):
     return pairs
 
 
-from topn_spark.queries import QUERIES as _Q  # noqa: E402
-
-_Q["x28_embedding_neardup"] = _Q["x28_embedding_neardup"].__class__(
-    name="x28_embedding_neardup",
-    builder=_Q["x28_embedding_neardup"].builder,
-    oracle=_x28_oracle(),
-    doc=_Q["x28_embedding_neardup"].doc,
-)
-
-
 @query(
     "x29_explode",
     """SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok
@@ -1058,22 +1632,15 @@ def x30_unpivot(spark, sf_dir):
 
 
 def _x31_oracle() -> str:
-    x19 = _Q["x19_lsh_neardup_pairs"].oracle
+    x19 = QUERIES["x19_lsh_neardup_pairs"].oracle
     return f"""WITH RECURSIVE pairs AS ({x19}),
-edges AS (
-  SELECT id_a AS src, id_b AS dst FROM pairs
-  UNION SELECT id_b, id_a FROM pairs),
-nodes AS (SELECT DISTINCT src AS id FROM edges),
-reach(id, r) AS (
-  SELECT id, id FROM nodes
-  UNION
-  SELECT e.dst, reach.r FROM reach JOIN edges e ON e.src = reach.id)
+{_DUCK_COMPONENTS}
 SELECT id, MIN(r) AS component FROM reach GROUP BY id ORDER BY id ASC"""
 
 
 @query(
     "x31_neardup_components",
-    None,  # oracle patched below (embeds the x19 pair SQL)
+    _x31_oracle(),
     doc="Connected components over the near-dup pair graph — the "
     "iterative min-label-propagation operator vs a DuckDB recursive "
     "transitive closure. This is the dedup CLUSTERING step: "
@@ -1082,17 +1649,9 @@ SELECT id, MIN(r) AS component FROM reach GROUP BY id ORDER BY id ASC"""
 def x31_neardup_components(spark, sf_dir):
     from topn_spark.operators.dedup import connected_components
 
-    pairs = _Q["x19_lsh_neardup_pairs"].builder(spark, sf_dir)
+    pairs = QUERIES["x19_lsh_neardup_pairs"].builder(spark, sf_dir)
     comp = connected_components(pairs.select("id_a", "id_b"))
     return comp.orderBy("id")
-
-
-_Q["x31_neardup_components"] = _Q["x31_neardup_components"].__class__(
-    name="x31_neardup_components",
-    builder=_Q["x31_neardup_components"].builder,
-    oracle=_x31_oracle(),
-    doc=_Q["x31_neardup_components"].doc,
-)
 
 
 @query(
@@ -1171,7 +1730,7 @@ ORDER BY qdot DESC, a.vec_id ASC LIMIT 10"""
 
 @query(
     "x33_ivf_topk",
-    None,  # oracle patched below (needs centroid literals)
+    _x33_oracle(),
     doc="IVF approximate top-k with a full oracle: fixed integer "
     "centroids, integer-quantized vectors, argmax cluster assignment, "
     "probe the 2 nearest cells, exact integer dot top-10 within them "
@@ -1258,14 +1817,6 @@ def x33_ivf_topk(spark, sf_dir):
         .orderBy(F.col("qdot").desc(), F.col("vec_id").asc())
         .limit(10)
     )
-
-
-_Q["x33_ivf_topk"] = _Q["x33_ivf_topk"].__class__(
-    name="x33_ivf_topk",
-    builder=_Q["x33_ivf_topk"].builder,
-    oracle=_x33_oracle(),
-    doc=_Q["x33_ivf_topk"].doc,
-)
 
 
 _MH_SH_DUCK = (
@@ -3270,29 +3821,9 @@ def x88_groupwise_auc(spark, sf_dir):
 
 @query(
     "x89_pixel_decode_stats",
-    """WITH g AS (
-  SELECT doc_id,
+    _duck_ramp_stats(""",
          CAST(1 + doc_id % 7 AS INT) AS w,
-         CAST(1 + doc_id % 5 AS INT) AS h
-  FROM documents WHERE doc_id < 200),
-px AS (
-  SELECT doc_id, w, h,
-         [CAST((i // 3) % w + (i // (3 * w)) + 40 * (i % 3) AS INT)
-          for i in generate_series(0, 3 * w * h - 1)] AS pixels
-  FROM g)
-SELECT doc_id, h, w,
-       CAST(3 * w * h AS INT) AS n_px,
-       md5(array_to_string(pixels, ',')) AS px_md5,
-       CAST(0 AS INT) AS r_min,
-       CAST((w - 1) + (h - 1) AS INT) AS r_max,
-       ROUND((w - 1) / 2.0 + (h - 1) / 2.0, 4) AS r_mean,
-       CAST(40 AS INT) AS g_min,
-       CAST(40 + (w - 1) + (h - 1) AS INT) AS g_max,
-       ROUND(40 + (w - 1) / 2.0 + (h - 1) / 2.0, 4) AS g_mean,
-       CAST(80 AS INT) AS b_min,
-       CAST(80 + (w - 1) + (h - 1) AS INT) AS b_max,
-       ROUND(80 + (w - 1) / 2.0 + (h - 1) / 2.0, 4) AS b_mean
-FROM px ORDER BY doc_id ASC""",
+         CAST(1 + doc_id % 5 AS INT) AS h"""),
     doc="REAL pixel decode, oracled (multimodal.py::decode_pixels): "
     "spec-valid uncompressed 24-bit BMPs (even doc_id — BGR order, "
     "padded bottom-up rows) and binary P6 PPMs (odd) are synthesized "
@@ -3303,76 +3834,20 @@ FROM px ORDER BY doc_id ASC""",
     "arithmetically from doc_id",
 )
 def x89_pixel_decode_stats(spark, sf_dir):
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
     from topn_spark.operators.multimodal import (
         decode_pixels,
         encode_bmp_rgb,
         encode_ppm_rgb,
     )
 
-    @pandas_udf(T.BinaryType())
-    def planted_payload(doc_ids):
-        import pandas as pd
+    def encode(d, w, h, pix):
+        enc = encode_bmp_rgb if d % 2 == 0 else encode_ppm_rgb
+        return enc(w, h, pix)
 
-        out = []
-        for d in doc_ids:
-            d = int(d)
-            w, h = 1 + d % 7, 1 + d % 5
-            pix = bytes(
-                x + y + 40 * c
-                for y in range(h)
-                for x in range(w)
-                for c in range(3)
-            )
-            enc = encode_bmp_rgb if d % 2 == 0 else encode_ppm_rgb
-            out.append(enc(w, h, pix))
-        return pd.Series(out)
-
-    docs = load_table(spark, sf_dir, "documents").where(
-        F.col("doc_id") < 200
+    assets = _planted_ramps(
+        spark, sf_dir, lambda d: (1 + d % 7, 1 + d % 5), encode
     )
-    assets = docs.select(
-        "doc_id", planted_payload("doc_id").alias("payload")
-    )
-    decoded = decode_pixels(assets)
-
-    def ch_min(c):
-        return F.array_min(F.expr(f"filter(pixels, (x, i) -> i % 3 = {c})"))
-
-    def ch_max(c):
-        return F.array_max(F.expr(f"filter(pixels, (x, i) -> i % 3 = {c})"))
-
-    def ch_mean(c):
-        return F.round(
-            F.expr(
-                f"aggregate(filter(pixels, (x, i) -> i % 3 = {c}), 0L, "
-                "(a, x) -> a + x, "
-                "a -> a / cast(size(pixels) div 3 as double))"
-            ),
-            4,
-        )
-
-    return decoded.select(
-        "doc_id",
-        F.element_at("shape", 1).alias("h"),
-        F.element_at("shape", 2).alias("w"),
-        F.size("pixels").alias("n_px"),
-        F.md5(
-            F.concat_ws(",", F.transform("pixels", lambda x: x.cast("string")))
-            .cast("binary")
-        ).alias("px_md5"),
-        ch_min(0).alias("r_min"),
-        ch_max(0).alias("r_max"),
-        ch_mean(0).alias("r_mean"),
-        ch_min(1).alias("g_min"),
-        ch_max(1).alias("g_max"),
-        ch_mean(1).alias("g_mean"),
-        ch_min(2).alias("b_min"),
-        ch_max(2).alias("b_max"),
-        ch_mean(2).alias("b_mean"),
-    ).orderBy("doc_id")
+    return _channel_stats(decode_pixels(assets))
 
 
 @query(
@@ -3407,37 +3882,9 @@ FROM s ORDER BY doc_id ASC""",
     "and the integer duration arithmetically from doc_id",
 )
 def x90_audio_decode_stats(spark, sf_dir):
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
+    from topn_spark.operators.multimodal import decode_audio
 
-    from topn_spark.operators.multimodal import (
-        decode_audio,
-        encode_wav_pcm16,
-    )
-
-    @pandas_udf(T.BinaryType())
-    def planted_wav(doc_ids):
-        import pandas as pd
-
-        out = []
-        for d in doc_ids:
-            d = int(d)
-            ch, sr, nf = 1 + d % 2, 8000 + 100 * (d % 3), 20 + d % 50
-            frames = [
-                (d * 7 + f * 3 + c * 11) % 200 - 100
-                for f in range(nf)
-                for c in range(ch)
-            ]
-            out.append(encode_wav_pcm16(sr, ch, frames))
-        return pd.Series(out)
-
-    docs = load_table(spark, sf_dir, "documents").where(
-        F.col("doc_id") < 200
-    )
-    assets = docs.select(
-        "doc_id", planted_wav("doc_id").alias("payload")
-    )
-    decoded = decode_audio(assets)
+    decoded = decode_audio(_planted_wavs(spark, sf_dir))
     return decoded.select(
         "doc_id",
         "aud_format",
@@ -3445,11 +3892,7 @@ def x90_audio_decode_stats(spark, sf_dir):
         "sample_rate",
         "n_frames",
         "duration_ms",
-        F.md5(
-            F.concat_ws(
-                ",", F.transform("samples", lambda x: x.cast("string"))
-            ).cast("binary")
-        ).alias("s_md5"),
+        _array_md5("samples").alias("s_md5"),
         F.array_min("samples").alias("s_min"),
         F.array_max("samples").alias("s_max"),
         F.expr(
@@ -3475,33 +3918,16 @@ FROM documents WHERE doc_id < 200 ORDER BY doc_id ASC""",
     "triple",
 )
 def x93_video_header_decode(spark, sf_dir):
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
     from topn_spark.operators.multimodal import (
         decode_video,
         encode_mp4_stub,
     )
 
-    @pandas_udf(T.BinaryType())
-    def planted_mp4(doc_ids):
-        import pandas as pd
-
-        out = []
-        for d in doc_ids:
-            d = int(d)
-            out.append(
-                encode_mp4_stub(
-                    600 * (1 + d % 4), 1000 + d * 37, version=d % 2
-                )
-            )
-        return pd.Series(out)
-
-    docs = load_table(spark, sf_dir, "documents").where(
-        F.col("doc_id") < 200
-    )
-    assets = docs.select(
-        "doc_id", planted_mp4("doc_id").alias("payload")
+    assets = _planted_assets(
+        spark, sf_dir, 200,
+        lambda d: encode_mp4_stub(
+            600 * (1 + d % 4), 1000 + d * 37, version=d % 2
+        ),
     )
     return (
         decode_video(assets)
@@ -4210,36 +4636,19 @@ FROM c ORDER BY doc_id ASC, frame_idx ASC""",
     "extraction stays sample_frames' fail-fast contract)",
 )
 def y15_video_frame_times(spark, sf_dir):
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
     from topn_spark.operators.multimodal import (
         encode_mp4_with_track,
         video_frame_times,
     )
 
-    @pandas_udf(T.BinaryType())
-    def planted_mp4(doc_ids):
-        import pandas as pd
-
-        out = []
-        for d in doc_ids:
-            d = int(d)
-            out.append(
-                encode_mp4_with_track(
-                    600,
-                    500 * (1 + d % 2),
-                    [(3, 50 * (1 + d % 3)), (2, 200)],
-                    version=d % 2,
-                )
-            )
-        return pd.Series(out)
-
-    docs = load_table(spark, sf_dir, "documents").where(
-        F.col("doc_id") < 150
-    )
-    assets = docs.select(
-        "doc_id", planted_mp4("doc_id").alias("payload")
+    assets = _planted_assets(
+        spark, sf_dir, 150,
+        lambda d: encode_mp4_with_track(
+            600,
+            500 * (1 + d % 2),
+            [(3, 50 * (1 + d % 3)), (2, 200)],
+            version=d % 2,
+        ),
     )
     return video_frame_times(assets).orderBy("doc_id", "frame_idx")
 
@@ -5198,27 +5607,9 @@ def y36_population_stability(spark, sf_dir):
 
 @query(
     "z01_png_decode",
-    """WITH g AS (
-  SELECT doc_id, CAST(1 + doc_id % 7 AS INT) AS w, CAST(5 AS INT) AS h
-  FROM documents WHERE doc_id < 200),
-px AS (
-  SELECT doc_id, w, h,
-         [CAST((i // 3) % w + (i // (3 * w)) + 40 * (i % 3) AS INT)
-          for i in generate_series(0, 3 * w * h - 1)] AS pixels
-  FROM g)
-SELECT doc_id, h, w,
-       CAST(3 * w * h AS INT) AS n_px,
-       md5(array_to_string(pixels, ',')) AS px_md5,
-       CAST(0 AS INT) AS r_min,
-       CAST((w - 1) + (h - 1) AS INT) AS r_max,
-       ROUND((w - 1) / 2.0 + (h - 1) / 2.0, 4) AS r_mean,
-       CAST(40 AS INT) AS g_min,
-       CAST(40 + (w - 1) + (h - 1) AS INT) AS g_max,
-       ROUND(40 + (w - 1) / 2.0 + (h - 1) / 2.0, 4) AS g_mean,
-       CAST(80 AS INT) AS b_min,
-       CAST(80 + (w - 1) + (h - 1) AS INT) AS b_max,
-       ROUND(80 + (w - 1) / 2.0 + (h - 1) / 2.0, 4) AS b_mean
-FROM px ORDER BY doc_id ASC""",
+    _duck_ramp_stats(
+        ", CAST(1 + doc_id % 7 AS INT) AS w, CAST(5 AS INT) AS h"
+    ),
     doc="REAL compressed-format pixel decode, oracled (multimodal.py::"
     "decode_png_pixels): spec-valid 8-bit RGB PNGs — zlib IDAT, "
     "height fixed at 5 so the cycling per-row filter exercises ALL "
@@ -5230,71 +5621,13 @@ FROM px ORDER BY doc_id ASC""",
     "per-channel min/max/mean arithmetically from doc_id",
 )
 def z01_png_decode(spark, sf_dir):
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
     from topn_spark.operators.multimodal import decode_pixels, encode_png
 
-    @pandas_udf(T.BinaryType())
-    def planted_png(doc_ids):
-        import pandas as pd
-
-        out = []
-        for d in doc_ids:
-            d = int(d)
-            w, h = 1 + d % 7, 5
-            pix = bytes(
-                x + y + 40 * c
-                for y in range(h)
-                for x in range(w)
-                for c in range(3)
-            )
-            out.append(encode_png(w, h, pix))
-        return pd.Series(out)
-
-    docs = load_table(spark, sf_dir, "documents").where(
-        F.col("doc_id") < 200
+    assets = _planted_ramps(
+        spark, sf_dir, lambda d: (1 + d % 7, 5),
+        lambda d, w, h, pix: encode_png(w, h, pix),
     )
-    assets = docs.select(
-        "doc_id", planted_png("doc_id").alias("payload")
-    )
-    decoded = decode_pixels(assets)
-
-    def ch_min(c):
-        return F.array_min(F.expr(f"filter(pixels, (x, i) -> i % 3 = {c})"))
-
-    def ch_max(c):
-        return F.array_max(F.expr(f"filter(pixels, (x, i) -> i % 3 = {c})"))
-
-    def ch_mean(c):
-        return F.round(
-            F.expr(
-                f"aggregate(filter(pixels, (x, i) -> i % 3 = {c}), 0L, "
-                "(a, x) -> a + x, "
-                "a -> a / cast(size(pixels) div 3 as double))"
-            ),
-            4,
-        )
-
-    return decoded.select(
-        "doc_id",
-        F.element_at("shape", 1).alias("h"),
-        F.element_at("shape", 2).alias("w"),
-        F.size("pixels").alias("n_px"),
-        F.md5(
-            F.concat_ws(",", F.transform("pixels", lambda x: x.cast("string")))
-            .cast("binary")
-        ).alias("px_md5"),
-        ch_min(0).alias("r_min"),
-        ch_max(0).alias("r_max"),
-        ch_mean(0).alias("r_mean"),
-        ch_min(1).alias("g_min"),
-        ch_max(1).alias("g_max"),
-        ch_mean(1).alias("g_mean"),
-        ch_min(2).alias("b_min"),
-        ch_max(2).alias("b_max"),
-        ch_mean(2).alias("b_mean"),
-    ).orderBy("doc_id")
+    return _channel_stats(decode_pixels(assets))
 
 
 def _z02_bpe_train_mirror(con):
@@ -5500,29 +5833,9 @@ def z03_ivfpq_ann(spark, sf_dir):
 
 @query(
     "z04_gif_decode",
-    """WITH g AS (
-  SELECT doc_id,
+    _duck_ramp_stats(""",
          CAST(1 + doc_id % 5 AS INT) AS w,
-         CAST(3 + doc_id % 7 AS INT) AS h
-  FROM documents WHERE doc_id < 200),
-px AS (
-  SELECT doc_id, w, h,
-         [CAST((i // 3) % w + (i // (3 * w)) + 40 * (i % 3) AS INT)
-          for i in generate_series(0, 3 * w * h - 1)] AS pixels
-  FROM g)
-SELECT doc_id, h, w,
-       CAST(3 * w * h AS INT) AS n_px,
-       md5(array_to_string(pixels, ',')) AS px_md5,
-       CAST(0 AS INT) AS r_min,
-       CAST((w - 1) + (h - 1) AS INT) AS r_max,
-       ROUND((w - 1) / 2.0 + (h - 1) / 2.0, 4) AS r_mean,
-       CAST(40 AS INT) AS g_min,
-       CAST(40 + (w - 1) + (h - 1) AS INT) AS g_max,
-       ROUND(40 + (w - 1) / 2.0 + (h - 1) / 2.0, 4) AS g_mean,
-       CAST(80 AS INT) AS b_min,
-       CAST(80 + (w - 1) + (h - 1) AS INT) AS b_max,
-       ROUND(80 + (w - 1) / 2.0 + (h - 1) / 2.0, 4) AS b_mean
-FROM px ORDER BY doc_id ASC""",
+         CAST(3 + doc_id % 7 AS INT) AS h"""),
     doc="REAL GIF pixel decode, oracled (multimodal.py::"
     "decode_gif_pixels): spec-valid INTERLACED GIF89a frames — pure-"
     "Python spec-appendix-F LZW with variable code widths and CLEAR "
@@ -5533,74 +5846,16 @@ FROM px ORDER BY doc_id ASC""",
     "palette bugs) plus per-channel stats arithmetically from doc_id",
 )
 def z04_gif_decode(spark, sf_dir):
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
     from topn_spark.operators.multimodal import (
         decode_pixels,
         encode_gif_rgb,
     )
 
-    @pandas_udf(T.BinaryType())
-    def planted_gif(doc_ids):
-        import pandas as pd
-
-        out = []
-        for d in doc_ids:
-            d = int(d)
-            w, h = 1 + d % 5, 3 + d % 7
-            pix = bytes(
-                x + y + 40 * c
-                for y in range(h)
-                for x in range(w)
-                for c in range(3)
-            )
-            out.append(encode_gif_rgb(w, h, pix, interlace=True))
-        return pd.Series(out)
-
-    docs = load_table(spark, sf_dir, "documents").where(
-        F.col("doc_id") < 200
+    assets = _planted_ramps(
+        spark, sf_dir, lambda d: (1 + d % 5, 3 + d % 7),
+        lambda d, w, h, pix: encode_gif_rgb(w, h, pix, interlace=True),
     )
-    assets = docs.select(
-        "doc_id", planted_gif("doc_id").alias("payload")
-    )
-    decoded = decode_pixels(assets)
-
-    def ch_min(c):
-        return F.array_min(F.expr(f"filter(pixels, (x, i) -> i % 3 = {c})"))
-
-    def ch_max(c):
-        return F.array_max(F.expr(f"filter(pixels, (x, i) -> i % 3 = {c})"))
-
-    def ch_mean(c):
-        return F.round(
-            F.expr(
-                f"aggregate(filter(pixels, (x, i) -> i % 3 = {c}), 0L, "
-                "(a, x) -> a + x, "
-                "a -> a / cast(size(pixels) div 3 as double))"
-            ),
-            4,
-        )
-
-    return decoded.select(
-        "doc_id",
-        F.element_at("shape", 1).alias("h"),
-        F.element_at("shape", 2).alias("w"),
-        F.size("pixels").alias("n_px"),
-        F.md5(
-            F.concat_ws(",", F.transform("pixels", lambda x: x.cast("string")))
-            .cast("binary")
-        ).alias("px_md5"),
-        ch_min(0).alias("r_min"),
-        ch_max(0).alias("r_max"),
-        ch_mean(0).alias("r_mean"),
-        ch_min(1).alias("g_min"),
-        ch_max(1).alias("g_max"),
-        ch_mean(1).alias("g_mean"),
-        ch_min(2).alias("b_min"),
-        ch_max(2).alias("b_max"),
-        ch_mean(2).alias("b_mean"),
-    ).orderBy("doc_id")
+    return _channel_stats(decode_pixels(assets))
 
 
 @query(
@@ -5636,46 +5891,27 @@ FROM px ORDER BY doc_id ASC""",
     "arithmetically from doc_id",
 )
 def z05_jpeg_decode(spark, sf_dir):
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
     from topn_spark.operators.multimodal import (
         decode_pixels,
         encode_jpeg_gray,
     )
 
-    @pandas_udf(T.BinaryType())
-    def planted_jpeg(doc_ids):
-        import pandas as pd
+    def payload(d):
+        w, h = 8 * (1 + d % 3), 8 * (1 + d % 2)
+        pix = bytes(
+            20 + 3 * (x // 8) + 5 * (y // 8) + d % 7
+            for y in range(h)
+            for x in range(w)
+        )
+        return encode_jpeg_gray(w, h, pix)
 
-        out = []
-        for d in doc_ids:
-            d = int(d)
-            w, h = 8 * (1 + d % 3), 8 * (1 + d % 2)
-            pix = bytes(
-                20 + 3 * (x // 8) + 5 * (y // 8) + d % 7
-                for y in range(h)
-                for x in range(w)
-            )
-            out.append(encode_jpeg_gray(w, h, pix))
-        return pd.Series(out)
-
-    docs = load_table(spark, sf_dir, "documents").where(
-        F.col("doc_id") < 200
-    )
-    assets = docs.select(
-        "doc_id", planted_jpeg("doc_id").alias("payload")
-    )
-    decoded = decode_pixels(assets)
+    decoded = decode_pixels(_planted_assets(spark, sf_dir, 200, payload))
     return decoded.select(
         "doc_id",
         F.element_at("shape", 1).alias("h"),
         F.element_at("shape", 2).alias("w"),
         F.size("pixels").alias("n_px"),
-        F.md5(
-            F.concat_ws(",", F.transform("pixels", lambda x: x.cast("string")))
-            .cast("binary")
-        ).alias("px_md5"),
+        _array_md5("pixels").alias("px_md5"),
         F.array_min("pixels").alias("v_min"),
         F.array_max("pixels").alias("v_max"),
         F.round(
@@ -5712,9 +5948,6 @@ FROM g ORDER BY doc_id ASC""",
     "interior pixel, so edge_frac(10) = 1",
 )
 def z06_image_features(spark, sf_dir):
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
     from topn_spark.operators.multimodal import (
         encode_bmp_rgb,
         encode_gif_rgb,
@@ -5722,28 +5955,11 @@ def z06_image_features(spark, sf_dir):
         image_features,
     )
 
-    @pandas_udf(T.BinaryType())
-    def planted(doc_ids):
-        import pandas as pd
-
-        encs = (encode_png, encode_gif_rgb, encode_bmp_rgb)
-        out = []
-        for d in doc_ids:
-            d = int(d)
-            w, h = 3 + d % 5, 3 + d % 4
-            pix = bytes(
-                x + y + 40 * c
-                for y in range(h)
-                for x in range(w)
-                for c in range(3)
-            )
-            out.append(encs[d % 3](w, h, pix))
-        return pd.Series(out)
-
-    docs = load_table(spark, sf_dir, "documents").where(
-        F.col("doc_id") < 200
+    encs = (encode_png, encode_gif_rgb, encode_bmp_rgb)
+    assets = _planted_ramps(
+        spark, sf_dir, lambda d: (3 + d % 5, 3 + d % 4),
+        lambda d, w, h, pix: encs[d % 3](w, h, pix),
     )
-    assets = docs.select("doc_id", planted("doc_id").alias("payload"))
     return (
         image_features(assets)
         .select(
@@ -5781,32 +5997,12 @@ FROM px ORDER BY doc_id ASC""",
     "alignment, channel order, and mean-vs-sum bugs",
 )
 def z07_image_resize(spark, sf_dir):
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
     from topn_spark.operators.multimodal import encode_png, resize_image
 
-    @pandas_udf(T.BinaryType())
-    def planted(doc_ids):
-        import pandas as pd
-
-        out = []
-        for d in doc_ids:
-            d = int(d)
-            w, h = 2 * (1 + d % 4), 2 * (1 + d % 3)
-            pix = bytes(
-                x + y + 40 * c
-                for y in range(h)
-                for x in range(w)
-                for c in range(3)
-            )
-            out.append(encode_png(w, h, pix))
-        return pd.Series(out)
-
-    docs = load_table(spark, sf_dir, "documents").where(
-        F.col("doc_id") < 200
+    assets = _planted_ramps(
+        spark, sf_dir, lambda d: (2 * (1 + d % 4), 2 * (1 + d % 3)),
+        lambda d, w, h, pix: encode_png(w, h, pix),
     )
-    assets = docs.select("doc_id", planted("doc_id").alias("payload"))
     return (
         resize_image(assets, factor=2)
         .select(
@@ -5814,12 +6010,7 @@ def z07_image_resize(spark, sf_dir):
             F.element_at("r_shape", 1).alias("rh"),
             F.element_at("r_shape", 2).alias("rw"),
             F.size("r_pixels").alias("n_px"),
-            F.md5(
-                F.concat_ws(
-                    ",",
-                    F.transform("r_pixels", lambda x: x.cast("string")),
-                ).cast("binary")
-            ).alias("px_md5"),
+            _array_md5("r_pixels").alias("px_md5"),
         )
         .orderBy("doc_id")
     )
@@ -5862,38 +6053,10 @@ FROM s ORDER BY doc_id ASC""",
     "recomputes every feature arithmetically from doc_id",
 )
 def z08_audio_features(spark, sf_dir):
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
+    from topn_spark.operators.multimodal import audio_features
 
-    from topn_spark.operators.multimodal import (
-        audio_features,
-        encode_wav_pcm16,
-    )
-
-    @pandas_udf(T.BinaryType())
-    def planted_wav(doc_ids):
-        import pandas as pd
-
-        out = []
-        for d in doc_ids:
-            d = int(d)
-            ch, sr, nf = 1 + d % 2, 8000 + 100 * (d % 3), 20 + d % 50
-            frames = [
-                (d * 7 + f * 3 + c * 11) % 200 - 100
-                for f in range(nf)
-                for c in range(ch)
-            ]
-            out.append(encode_wav_pcm16(sr, ch, frames))
-        return pd.Series(out)
-
-    docs = load_table(spark, sf_dir, "documents").where(
-        F.col("doc_id") < 200
-    )
-    assets = docs.select(
-        "doc_id", planted_wav("doc_id").alias("payload")
-    )
     return (
-        audio_features(assets)
+        audio_features(_planted_wavs(spark, sf_dir))
         .select(
             "doc_id", "channels", "sample_rate", "n_frames",
             "rms", "peak", "zcr",
@@ -6154,35 +6317,22 @@ WHERE r.rn = 1 ORDER BY r.doc_id ASC""",
     "rounding in the vector itself",
 )
 def z11_histogram_features(spark, sf_dir):
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
     from topn_spark.operators.multimodal import (
         encode_png,
         extract_features,
     )
 
-    @pandas_udf(T.BinaryType())
-    def planted(doc_ids):
-        import pandas as pd
+    def payload(d):
+        nbx, nby = 1 + d % 3, 1 + d % 2
+        w, h = 8 * nbx, 8 * nby
+        pix = bytes(
+            16 * ((x // 8 + y // 8 + d) % 5) + 8
+            for y in range(h)
+            for x in range(w)
+        )
+        return encode_png(w, h, pix, color_type=0)
 
-        out = []
-        for d in doc_ids:
-            d = int(d)
-            nbx, nby = 1 + d % 3, 1 + d % 2
-            w, h = 8 * nbx, 8 * nby
-            pix = bytes(
-                16 * ((x // 8 + y // 8 + d) % 5) + 8
-                for y in range(h)
-                for x in range(w)
-            )
-            out.append(encode_png(w, h, pix, color_type=0))
-        return pd.Series(out)
-
-    docs = load_table(spark, sf_dir, "documents").where(
-        F.col("doc_id") < 200
-    )
-    assets = docs.select("doc_id", planted("doc_id").alias("payload"))
+    assets = _planted_assets(spark, sf_dir, 200, payload)
     feat = extract_features(assets)
     f = F.col("features")
     sq = F.aggregate(
@@ -6228,48 +6378,29 @@ FROM px ORDER BY doc_id ASC, frame_idx ASC""",
     "sampled frame",
 )
 def z12_video_frame_sample(spark, sf_dir):
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
     from topn_spark.operators.multimodal import (
         encode_avi_mjpeg,
         encode_jpeg_gray,
         sample_video_frames,
     )
 
-    @pandas_udf(T.BinaryType())
-    def planted_avi(doc_ids):
-        import pandas as pd
+    def payload(d):
+        frames = []
+        for f in range(3 + d % 4):
+            pix = bytes(
+                20 + 10 * f + 3 * (x // 8) + d % 7
+                for y in range(8)
+                for x in range(16)
+            )
+            frames.append(encode_jpeg_gray(16, 8, pix))
+        return encode_avi_mjpeg(16, 8, frames)
 
-        out = []
-        for d in doc_ids:
-            d = int(d)
-            nf = 3 + d % 4
-            frames = []
-            for f in range(nf):
-                pix = bytes(
-                    20 + 10 * f + 3 * (x // 8) + d % 7
-                    for y in range(8)
-                    for x in range(16)
-                )
-                frames.append(encode_jpeg_gray(16, 8, pix))
-            out.append(encode_avi_mjpeg(16, 8, frames))
-        return pd.Series(out)
-
-    docs = load_table(spark, sf_dir, "documents").where(
-        F.col("doc_id") < 200
-    )
-    assets = docs.select(
-        "doc_id", planted_avi("doc_id").alias("payload")
-    )
+    assets = _planted_assets(spark, sf_dir, 200, payload)
     sampled = sample_video_frames(assets, every=2)
     return sampled.select(
         "doc_id", "frame_idx", "t_ms", "h", "w", "ch",
         F.size("pixels").alias("n_px"),
-        F.md5(
-            F.concat_ws(",", F.transform("pixels", lambda x: x.cast("string")))
-            .cast("binary")
-        ).alias("px_md5"),
+        _array_md5("pixels").alias("px_md5"),
     ).orderBy("doc_id", "frame_idx")
 
 
@@ -6277,16 +6408,7 @@ def z12_video_frame_sample(spark, sf_dir):
     "z13_html_extract",
     """SELECT doc_id,
        CASE doc_id % 4 WHEN 0 THEN 'Title ' || doc_id END AS title,
-       CASE doc_id % 4
-         WHEN 0 THEN 'Doc ' || doc_id || chr(10) || 'alpha ' || doc_id
-                     || ' beta' || chr(10) || 'gamma & delta'
-         WHEN 1 THEN 'item A ' || doc_id || chr(10) || 'item B'
-                     || chr(10) || 'tail link text'
-         WHEN 2 THEN 'A <tag> & B' || chr(10) || 'second ' || doc_id
-                     || ' line'
-         WHEN 3 THEN 'r1c1' || chr(10) || 'r1c2 ' || doc_id || chr(10)
-                     || 'r2' || chr(10) || 'after ' || doc_id
-       END AS text,
+       """ + _duck_html_text("       ", 4) + """,
        CAST(CASE doc_id % 4 WHEN 1 THEN 1 ELSE 0 END AS INT) AS n_links
 FROM documents WHERE doc_id < 400 ORDER BY doc_id ASC""",
     doc="HTML -> text extraction (markup.py::extract_html_text) — "
@@ -6305,45 +6427,7 @@ def z13_html_extract(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents").where(
         F.col("doc_id") < 400
     )
-    d = F.col("doc_id")
-    ds = d.cast("string")
-    html = (
-        F.when(
-            d % 4 == 0,
-            F.concat(
-                F.lit("<html><head><title>Title "), ds,
-                F.lit("</title><style>p{c:red}</style></head>"
-                      "<body><h1>Doc "), ds,
-                F.lit("</h1><p>alpha "), ds,
-                F.lit(" beta</p><script>var x="), ds,
-                F.lit(";</script><p>gamma &amp; delta</p>"
-                      "<!--hidden--></body></html>"),
-            ),
-        )
-        .when(
-            d % 4 == 1,
-            F.concat(
-                F.lit("<body><ul><li>item A "), ds,
-                F.lit("</li><li>item B</li></ul><div>tail "
-                      "<a href=\"/x\">link</a> text</div></body>"),
-            ),
-        )
-        .when(
-            d % 4 == 2,
-            F.concat(
-                F.lit("<body><p>A &lt;tag&gt; &amp; B<br>second "), ds,
-                F.lit(" line</p></body>"),
-            ),
-        )
-        .otherwise(
-            F.concat(
-                F.lit("<body><table><tr><td>r1c1</td><td>r1c2 "), ds,
-                F.lit("</td></tr><tr><td>r2</td></tr></table>"
-                      "<p>after "), ds,
-                F.lit("</p></body>"),
-            )
-        )
-    )
+    html = _planted_html(4)
     planted = docs.select("doc_id", html.alias("html"))
     return extract_html_text(planted).orderBy("doc_id")
 
@@ -6583,37 +6667,18 @@ FROM ex GROUP BY doc_id ORDER BY doc_id ASC""",
     "full sample stream by md5",
 )
 def z17_g711_audio(spark, sf_dir):
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
     from topn_spark.operators.multimodal import (
         decode_audio,
         encode_wav_g711,
     )
 
-    @pandas_udf(T.BinaryType())
-    def planted_g711(doc_ids):
-        import pandas as pd
+    def payload(d):
+        enc = bytes((d * 7 + i * 13) % 256 for i in range(16 + d % 5))
+        return encode_wav_g711(
+            8000, 1, enc, "ulaw" if d % 2 == 0 else "alaw"
+        )
 
-        out = []
-        for d in doc_ids:
-            d = int(d)
-            n = 16 + d % 5
-            enc = bytes((d * 7 + i * 13) % 256 for i in range(n))
-            out.append(
-                encode_wav_g711(
-                    8000, 1, enc, "ulaw" if d % 2 == 0 else "alaw"
-                )
-            )
-        return pd.Series(out)
-
-    docs = load_table(spark, sf_dir, "documents").where(
-        F.col("doc_id") < 200
-    )
-    assets = docs.select(
-        "doc_id", planted_g711("doc_id").alias("payload")
-    )
-    dec = decode_audio(assets)
+    dec = decode_audio(_planted_assets(spark, sf_dir, 200, payload))
     return dec.select(
         "doc_id",
         F.col("n_frames"),
@@ -6622,48 +6687,16 @@ def z17_g711_audio(spark, sf_dir):
         ).alias("sample_sum"),
         F.array_min("samples").alias("sample_min"),
         F.array_max("samples").alias("sample_max"),
-        F.md5(
-            F.concat_ws(
-                ",", F.transform("samples", lambda x: x.cast("string"))
-            ).cast("binary")
-        ).alias("sample_md5"),
+        _array_md5("samples").alias("sample_md5"),
     ).orderBy("doc_id")
 
 
 @query(
     "z18_web_pipeline",
-    """WITH t AS (
-  SELECT doc_id,
-    CASE doc_id % 4 WHEN 0 THEN 'Title ' || doc_id END AS title,
-    CASE doc_id % 4
-      WHEN 0 THEN 'Doc ' || doc_id || chr(10) || 'alpha ' || doc_id
-                  || ' beta' || chr(10) || 'gamma & delta'
-      WHEN 1 THEN 'item A ' || doc_id || chr(10) || 'item B'
-                  || chr(10) || 'tail link text'
-      WHEN 2 THEN 'A <tag> & B' || chr(10) || 'second ' || doc_id
-                  || ' line'
-      WHEN 3 THEN 'r1c1' || chr(10) || 'r1c2 ' || doc_id || chr(10)
-                  || 'r2' || chr(10) || 'after ' || doc_id
-    END AS text
-  FROM documents WHERE doc_id < 400),
-q AS (
-  SELECT doc_id, title, text,
-    ROUND(CAST(LENGTH(regexp_replace(text, '[^A-Za-z]', '', 'g'))
-               AS DOUBLE)
-          / NULLIF(CAST(LENGTH(text) AS DOUBLE), 0), 6) AS alpha_ratio,
-    ROUND(CAST(LENGTH(text)
-               - LENGTH(regexp_replace(text, '[^ ]', '', 'g'))
-               AS DOUBLE)
-          / NULLIF(CAST(len(regexp_extract_all(lower(text),
-                                               '[a-z0-9]+'))
-                        AS DOUBLE), 0), 6) AS mean_word_len,
-    CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+'))
-         AS BIGINT) AS n_tokens
-  FROM t)
-SELECT doc_id, title, n_tokens, alpha_ratio,
-       (n_tokens >= 10 AND alpha_ratio >= 0.6
-        AND mean_word_len BETWEEN 2.0 AND 12.0) AS quality_keep
-FROM q ORDER BY doc_id ASC""",
+    _duck_web_quality(
+        "CASE doc_id % 4 WHEN 0 THEN 'Title ' || doc_id END AS title",
+        4, "title, n_tokens, alpha_ratio,",
+    ),
     doc="END-TO-END web-corpus front end: raw planted HTML -> "
     "markup.py::extract_html_text (boilerplate strip, entity decode, "
     "block line rules) -> textstats.py::add_quality over the "
@@ -6675,62 +6708,15 @@ FROM q ORDER BY doc_id ASC""",
 )
 def z18_web_pipeline(spark, sf_dir):
     from topn_spark.operators.markup import extract_html_text
-    from topn_spark.operators.textstats import add_quality
 
     docs = load_table(spark, sf_dir, "documents").where(
         F.col("doc_id") < 400
     )
-    d = F.col("doc_id")
-    ds = d.cast("string")
-    html = (
-        F.when(
-            d % 4 == 0,
-            F.concat(
-                F.lit("<html><head><title>Title "), ds,
-                F.lit("</title><style>p{c:red}</style></head>"
-                      "<body><h1>Doc "), ds,
-                F.lit("</h1><p>alpha "), ds,
-                F.lit(" beta</p><script>var x="), ds,
-                F.lit(";</script><p>gamma &amp; delta</p>"
-                      "<!--hidden--></body></html>"),
-            ),
-        )
-        .when(
-            d % 4 == 1,
-            F.concat(
-                F.lit("<body><ul><li>item A "), ds,
-                F.lit("</li><li>item B</li></ul><div>tail "
-                      "<a href=\"/x\">link</a> text</div></body>"),
-            ),
-        )
-        .when(
-            d % 4 == 2,
-            F.concat(
-                F.lit("<body><p>A &lt;tag&gt; &amp; B<br>second "), ds,
-                F.lit(" line</p></body>"),
-            ),
-        )
-        .otherwise(
-            F.concat(
-                F.lit("<body><table><tr><td>r1c1</td><td>r1c2 "), ds,
-                F.lit("</td></tr><tr><td>r2</td></tr></table>"
-                      "<p>after "), ds,
-                F.lit("</p></body>"),
-            )
-        )
-    )
+    html = _planted_html(4)
     planted = docs.select("doc_id", html.alias("html"))
     extracted = extract_html_text(planted)
     return (
-        add_quality(extracted)
-        .withColumn(
-            "n_tokens",
-            F.size(
-                F.expr(
-                    "regexp_extract_all(lower(text), '[a-z0-9]+', 0)"
-                )
-            ).cast("bigint"),
-        )
+        _with_quality(extracted)
         .select(
             "doc_id", "title", "n_tokens", "alpha_ratio",
             "quality_keep",
@@ -7901,24 +7887,7 @@ def z32_warc_parse(spark, sf_dir):
         F.col("text"),
         F.lit("\r\n\r\n"),
     )
-    blobs = (
-        docs.select(
-            F.expr("doc_id DIV 5").alias("blob_id"),
-            F.struct(d.alias("doc_id"), rec.alias("rec")).alias("s"),
-        )
-        .groupBy("blob_id")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list("s")),
-                    lambda s: s["rec"],
-                ),
-                "",
-            )
-            .cast("binary")
-            .alias("content"),
-        )
-    )
+    blobs = _warc_blobs(docs, rec, 5)
     return (
         parse_warc(blobs)
         .select(
@@ -7976,35 +7945,11 @@ def z33_zorder_blocks(spark, sf_dir):
 
 @query(
     "z34_cc_pipeline",
-    """WITH t AS (
-  SELECT doc_id,
-    CASE WHEN doc_id % 2 = 0 THEN 'Title ' || doc_id END AS title,
-    CASE doc_id % 2
-      WHEN 0 THEN 'Doc ' || doc_id || chr(10) || 'alpha ' || doc_id
-                  || ' beta' || chr(10) || 'gamma & delta'
-      WHEN 1 THEN 'item A ' || doc_id || chr(10) || 'item B'
-                  || chr(10) || 'tail link text'
-    END AS text
-  FROM documents WHERE doc_id < 400),
-q AS (
-  SELECT doc_id, title, text,
-    ROUND(CAST(LENGTH(regexp_replace(text, '[^A-Za-z]', '', 'g'))
-               AS DOUBLE)
-          / NULLIF(CAST(LENGTH(text) AS DOUBLE), 0), 6) AS alpha_ratio,
-    ROUND(CAST(LENGTH(text)
-               - LENGTH(regexp_replace(text, '[^ ]', '', 'g'))
-               AS DOUBLE)
-          / NULLIF(CAST(len(regexp_extract_all(lower(text),
-                                               '[a-z0-9]+'))
-                        AS DOUBLE), 0), 6) AS mean_word_len,
-    CAST(len(regexp_extract_all(lower(text), '[a-z0-9]+'))
-         AS BIGINT) AS n_tokens
-  FROM t)
-SELECT doc_id, 'http://crawl.test/doc/' || doc_id AS target_uri,
-       title, n_tokens,
-       (n_tokens >= 10 AND alpha_ratio >= 0.6
-        AND mean_word_len BETWEEN 2.0 AND 12.0) AS quality_keep
-FROM q ORDER BY doc_id ASC""",
+    _duck_web_quality(
+        "CASE WHEN doc_id % 2 = 0 THEN 'Title ' || doc_id END AS title",
+        2, "'http://crawl.test/doc/' || doc_id AS target_uri,\n"
+        "       title, n_tokens,",
+    ),
     doc="FULL CommonCrawl-shaped front end in ONE composed job: WARC "
     "blobs (framed in Spark, four HTML response records each) -> "
     "sources/warc.py::parse_warc (byte-sliced record walk) -> doc id "
@@ -8018,62 +7963,13 @@ FROM q ORDER BY doc_id ASC""",
 )
 def z34_cc_pipeline(spark, sf_dir):
     from topn_spark.operators.markup import extract_html_text
-    from topn_spark.operators.textstats import add_quality
     from topn_spark.sources.warc import parse_warc
 
     docs = load_table(spark, sf_dir, "documents").where(
         F.col("doc_id") < 400
     )
-    d = F.col("doc_id")
-    ds = d.cast("string")
-    html = F.when(
-        d % 2 == 0,
-        F.concat(
-            F.lit("<html><head><title>Title "), ds,
-            F.lit("</title><style>p{c:red}</style></head>"
-                  "<body><h1>Doc "), ds,
-            F.lit("</h1><p>alpha "), ds,
-            F.lit(" beta</p><script>var x="), ds,
-            F.lit(";</script><p>gamma &amp; delta</p>"
-                  "<!--hidden--></body></html>"),
-        ),
-    ).otherwise(
-        F.concat(
-            F.lit("<body><ul><li>item A "), ds,
-            F.lit("</li><li>item B</li></ul><div>tail "
-                  "<a href=\"/x\">link</a> text</div></body>"),
-        )
-    )
-    rec = F.concat(
-        F.lit(
-            "WARC/1.0\r\nWARC-Type: response\r\nWARC-Target-URI: "
-            "http://crawl.test/doc/"
-        ),
-        ds,
-        F.lit("\r\nContent-Length: "),
-        F.octet_length(html).cast("string"),
-        F.lit("\r\n\r\n"),
-        html,
-        F.lit("\r\n\r\n"),
-    )
-    blobs = (
-        docs.select(
-            F.expr("doc_id DIV 4").alias("blob_id"),
-            F.struct(d.alias("doc_id"), rec.alias("rec")).alias("s"),
-        )
-        .groupBy("blob_id")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list("s")),
-                    lambda s: s["rec"],
-                ),
-                "",
-            )
-            .cast("binary")
-            .alias("content"),
-        )
-    )
+    html = _planted_html(2)
+    blobs = _warc_blobs(docs, _crawl_record(html), 4)
     pages = parse_warc(blobs).select(
         F.regexp_extract("target_uri", r"/doc/(\d+)$", 1)
         .cast("bigint")
@@ -8083,15 +7979,7 @@ def z34_cc_pipeline(spark, sf_dir):
     )
     extracted = extract_html_text(pages, keep_cols=("target_uri",))
     return (
-        add_quality(extracted)
-        .withColumn(
-            "n_tokens",
-            F.size(
-                F.expr(
-                    "regexp_extract_all(lower(text), '[a-z0-9]+', 0)"
-                )
-            ).cast("bigint"),
-        )
+        _with_quality(extracted)
         .select(
             "doc_id", "target_uri", "title", "n_tokens",
             "quality_keep",
@@ -8574,16 +8462,9 @@ def z39_unigram_lm_apply(spark, sf_dir):
 
 
 def _z40_oracle() -> str:
-    x19 = _Q["x19_lsh_neardup_pairs"].oracle
+    x19 = QUERIES["x19_lsh_neardup_pairs"].oracle
     return f"""WITH RECURSIVE pairs AS ({x19}),
-edges AS (
-  SELECT id_a AS src, id_b AS dst FROM pairs
-  UNION SELECT id_b, id_a FROM pairs),
-nodes AS (SELECT DISTINCT src AS id FROM edges),
-reach(id, r) AS (
-  SELECT id, id FROM nodes
-  UNION
-  SELECT e.dst, reach.r FROM reach JOIN edges e ON e.src = reach.id),
+{_DUCK_COMPONENTS},
 comp AS (SELECT id, MIN(r) AS component FROM reach GROUP BY id),
 assigned AS (
   SELECT d.doc_id,
@@ -8602,7 +8483,7 @@ SELECT doc_id, component, split FROM labeled ORDER BY doc_id ASC"""
 
 @query(
     "z40_leakage_safe_split",
-    None,  # oracle patched below (embeds the x19 pair SQL)
+    _z40_oracle(),
     doc="Near-dup-aware train/val/test split (pipeline.py::"
     "leakage_safe_split): documents connected by the MinHash-LSH "
     "near-duplicate graph land in the SAME split — a plain id-keyed "
@@ -8619,18 +8500,10 @@ def z40_leakage_safe_split(spark, sf_dir):
     from topn_spark.operators.pipeline import leakage_safe_split
 
     docs = load_table(spark, sf_dir, "documents")
-    pairs = _Q["x19_lsh_neardup_pairs"].builder(spark, sf_dir)
+    pairs = QUERIES["x19_lsh_neardup_pairs"].builder(spark, sf_dir)
     return leakage_safe_split(
         docs, pairs.select("id_a", "id_b")
     ).select("doc_id", "component", "split").orderBy("doc_id")
-
-
-_Q["z40_leakage_safe_split"] = _Q["z40_leakage_safe_split"].__class__(
-    name="z40_leakage_safe_split",
-    builder=_Q["z40_leakage_safe_split"].builder,
-    oracle=_z40_oracle(),
-    doc=_Q["z40_leakage_safe_split"].doc,
-)
 
 
 @query(
@@ -8892,9 +8765,6 @@ ORDER BY id_a ASC, id_b ASC""",
     "hash-exact",
 )
 def z44_image_neardup(spark, sf_dir):
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
     from topn_spark.operators.multimodal import (
         encode_png,
         extract_features,
@@ -8903,21 +8773,12 @@ def z44_image_neardup(spark, sf_dir):
         embedding_near_dup_pairs,
     )
 
-    @pandas_udf(T.BinaryType())
-    def planted(doc_ids):
-        import pandas as pd
-
-        out = []
-        for d in doc_ids:
-            g = int(d) % 10
-            pix = bytes([16 * g + 8]) * (16 * 8)
-            out.append(encode_png(16, 8, pix, color_type=0))
-        return pd.Series(out)
-
-    docs = load_table(spark, sf_dir, "documents").where(
-        F.col("doc_id") < 200
+    assets = _planted_assets(
+        spark, sf_dir, 200,
+        lambda d: encode_png(
+            16, 8, bytes([16 * (d % 10) + 8]) * (16 * 8), color_type=0
+        ),
     )
-    assets = docs.select("doc_id", planted("doc_id").alias("payload"))
     feats = extract_features(assets).select("doc_id", "features")
     return embedding_near_dup_pairs(
         feats,
@@ -9225,23 +9086,12 @@ def z46_byte_bpe(spark, sf_dir):
     r"""WITH t AS (
   SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
   FROM documents WHERE doc_id < 400),
-c AS (
-  SELECT doc_id, toks, CAST(len(toks) AS BIGINT) AS n,
-    CAST(COALESCE(SUM(CAST(len(toks) AS BIGINT)) OVER (
-      ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING
-      AND 1 PRECEDING), 0) AS BIGINT) AS off
-  FROM t WHERE len(toks) > 0),
-s AS (
-  SELECT doc_id, toks, n, off, u.seq_id AS seq_id
-  FROM c, UNNEST(range(off // 32, (off + n - 1) // 32 + 1))
-    AS u(seq_id)),
-p AS (
+""" + _duck_pack_spans(
+    "doc_id, toks, ", "doc_id", "t WHERE len(toks) > 0", "doc_id, toks"
+) + r"""p AS (
   SELECT seq_id,
     GREATEST(seq_id * 32, off) - seq_id * 32 AS seq_start,
-    toks[CAST(GREATEST(seq_id * 32 - off, 0) + 1 AS BIGINT)
-         :CAST(GREATEST(seq_id * 32 - off, 0)
-           + LEAST((seq_id + 1) * 32, off + n)
-           - GREATEST(seq_id * 32, off) AS BIGINT)] AS piece
+""" + _duck_seq_slice("toks", "    ") + r""" AS piece
   FROM s)
 SELECT seq_id, CAST(COUNT(*) AS BIGINT) AS n_docs,
   CAST(len(flatten(list(piece ORDER BY seq_start))) AS BIGINT)
@@ -9445,14 +9295,7 @@ pairs AS (
   JOIN sig sa ON cand.id_a = sa.doc_id
   JOIN sig sb ON cand.id_b = sb.doc_id
   WHERE ({eq}) / 8.0 >= 0.5),
-edges AS (
-  SELECT id_a AS src, id_b AS dst FROM pairs
-  UNION SELECT id_b, id_a FROM pairs),
-nodes AS (SELECT DISTINCT src AS id FROM edges),
-reach(id, r) AS (
-  SELECT id, id FROM nodes
-  UNION
-  SELECT e.dst, reach.r FROM reach JOIN edges e ON e.src = reach.id),
+{_DUCK_COMPONENTS},
 comp AS (SELECT id, MIN(r) AS component FROM reach GROUP BY id),
 labeled AS (
   SELECT t.doc_id, t.tk,
@@ -9476,10 +9319,7 @@ s AS (
 p AS (
   SELECT split, seq_id,
     GREATEST(seq_id * 32, off) - seq_id * 32 AS seq_start,
-    tk[CAST(GREATEST(seq_id * 32 - off, 0) + 1 AS BIGINT)
-       :CAST(GREATEST(seq_id * 32 - off, 0)
-         + LEAST((seq_id + 1) * 32, off + n)
-         - GREATEST(seq_id * 32, off) AS BIGINT)] AS piece
+""" + _duck_seq_slice("tk", "    ") + f""" AS piece
   FROM s)
 SELECT split, seq_id, CAST(COUNT(*) AS BIGINT) AS n_docs,
   CAST(len(flatten(list(piece ORDER BY seq_start))) AS BIGINT)
@@ -9490,7 +9330,7 @@ FROM p GROUP BY split, seq_id ORDER BY split ASC, seq_id ASC"""
 
 @query(
     "z49_pretrain_pipeline",
-    None,  # oracle patched below (programmatically composed SQL)
+    _z49_oracle(),
     doc="The COMPLETE pretraining-data pipeline as ONE executed spec"
     " (pipelines.py::run_pipeline_with_source — the Dolma/RefinedWeb"
     " shape, examples/pretrain_corpus_pipeline.json is the"
@@ -9545,36 +9385,7 @@ def z49_pretrain_pipeline(spark, sf_dir):
     html = F.concat(
         F.lit("<html><body><p>"), text, F.lit("</p></body></html>")
     )
-    rec = F.concat(
-        F.lit(
-            "WARC/1.0\r\nWARC-Type: response\r\nWARC-Target-URI: "
-            "http://crawl.test/doc/"
-        ),
-        d.cast("string"),
-        F.lit("\r\nContent-Length: "),
-        F.octet_length(html).cast("string"),
-        F.lit("\r\n\r\n"),
-        html,
-        F.lit("\r\n\r\n"),
-    )
-    blobs = (
-        docs.select(
-            F.expr("doc_id DIV 4").alias("blob_id"),
-            F.struct(d.alias("doc_id"), rec.alias("rec")).alias("s"),
-        )
-        .groupBy("blob_id")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list("s")),
-                    lambda s: s["rec"],
-                ),
-                "",
-            )
-            .cast("binary")
-            .alias("content"),
-        )
-    )
+    blobs = _warc_blobs(docs, _crawl_record(html), 4)
     spec = {
         "stages": [
             {"name": "src", "type": "batchsource", "plugin": "File",
@@ -9627,14 +9438,6 @@ def z49_pretrain_pipeline(spark, sf_dir):
     return out["pack"].select(
         "split", "seq_id", "n_docs", "n_tokens", "tokens"
     ).orderBy("split", "seq_id")
-
-
-_Q["z49_pretrain_pipeline"] = _Q["z49_pretrain_pipeline"].__class__(
-    name="z49_pretrain_pipeline",
-    builder=_Q["z49_pretrain_pipeline"].builder,
-    oracle=_z49_oracle(),
-    doc=_Q["z49_pretrain_pipeline"].doc,
-)
 
 
 @query(
@@ -9755,7 +9558,7 @@ FROM t ORDER BY doc_id ASC"""
 
 @query(
     "z51_pii_redact",
-    None,  # oracle patched below (composed from PII_PATTERNS)
+    _z51_oracle(),
     doc="PII redaction (textstats.py::redact_pii, PiiRedact plugin)"
     " — the release-gate stage every public corpus ships through"
     " (Dolma postprocess, ROOTS): emails, IPv4 literals, and phone"
@@ -9813,25 +9616,10 @@ def z51_pii_redact(spark, sf_dir):
     ).orderBy("doc_id")
 
 
-_Q["z51_pii_redact"] = _Q["z51_pii_redact"].__class__(
-    name="z51_pii_redact",
-    builder=_Q["z51_pii_redact"].builder,
-    oracle=_z51_oracle(),
-    doc=_Q["z51_pii_redact"].doc,
-)
-
-
 def _z52_oracle() -> str:
-    x19 = _Q["x19_lsh_neardup_pairs"].oracle
+    x19 = QUERIES["x19_lsh_neardup_pairs"].oracle
     return f"""WITH RECURSIVE pairs AS ({x19}),
-edges AS (
-  SELECT id_a AS src, id_b AS dst FROM pairs
-  UNION SELECT id_b, id_a FROM pairs),
-nodes AS (SELECT DISTINCT src AS id FROM edges),
-reach(id, r) AS (
-  SELECT id, id FROM nodes
-  UNION
-  SELECT e.dst, reach.r FROM reach JOIN edges e ON e.src = reach.id),
+{_DUCK_COMPONENTS},
 comp AS (SELECT id, MIN(r) AS component FROM reach GROUP BY id),
 scored AS (
   SELECT d.doc_id,
@@ -9849,7 +9637,7 @@ WHERE rn = 1 ORDER BY doc_id ASC"""
 
 @query(
     "z52_neardup_keep_best",
-    None,  # oracle patched below (embeds the x19 pair SQL)
+    _z52_oracle(),
     doc="Quality-aware near-duplicate collapse (dedup.py::"
     "neardup_keep_best): each MinHash-LSH component keeps its"
     " HIGHEST-scoring member (ties: lowest id) instead of the"
@@ -9870,7 +9658,7 @@ def z52_neardup_keep_best(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents").withColumn(
         "score", F.length("text").cast("bigint")
     )
-    pairs = _Q["x19_lsh_neardup_pairs"].builder(spark, sf_dir)
+    pairs = QUERIES["x19_lsh_neardup_pairs"].builder(spark, sf_dir)
     return (
         neardup_keep_best(
             docs, pairs.select("id_a", "id_b"), "score"
@@ -9878,14 +9666,6 @@ def z52_neardup_keep_best(spark, sf_dir):
         .select("doc_id", "component", "score")
         .orderBy("doc_id")
     )
-
-
-_Q["z52_neardup_keep_best"] = _Q["z52_neardup_keep_best"].__class__(
-    name="z52_neardup_keep_best",
-    builder=_Q["z52_neardup_keep_best"].builder,
-    oracle=_z52_oracle(),
-    doc=_Q["z52_neardup_keep_best"].doc,
-)
 
 
 @query(
@@ -10091,23 +9871,12 @@ def z55_kn_perplexity(spark, sf_dir):
       regexp_extract_all(lower(text), '[a-z0-9]+'), '</s>') AS toks
   FROM documents WHERE doc_id < 400
     AND len(regexp_extract_all(lower(text), '[a-z0-9]+')) > 0),
-c AS (
-  SELECT okey, toks, CAST(len(toks) AS BIGINT) AS n,
-    CAST(COALESCE(SUM(CAST(len(toks) AS BIGINT)) OVER (
-      ORDER BY okey ROWS BETWEEN UNBOUNDED PRECEDING
-      AND 1 PRECEDING), 0) AS BIGINT) AS off
-  FROM t),
-s AS (
-  SELECT okey, toks, n, off, u.seq_id AS seq_id
-  FROM c, UNNEST(range(off // 32, (off + n - 1) // 32 + 1))
-    AS u(seq_id)),
-p AS (
+""" + _duck_pack_spans(
+    "okey, toks, ", "okey", "t", "okey, toks"
+) + r"""p AS (
   SELECT seq_id,
     GREATEST(seq_id * 32, off) - seq_id * 32 AS seq_start,
-    toks[CAST(GREATEST(seq_id * 32 - off, 0) + 1 AS BIGINT)
-         :CAST(GREATEST(seq_id * 32 - off, 0)
-           + LEAST((seq_id + 1) * 32, off + n)
-           - GREATEST(seq_id * 32, off) AS BIGINT)] AS piece
+""" + _duck_seq_slice("toks", "    ") + r""" AS piece
   FROM s)
 SELECT seq_id, CAST(COUNT(*) AS BIGINT) AS n_docs,
   CAST(len(flatten(list(piece ORDER BY seq_start))) AS BIGINT)
@@ -10132,16 +9901,8 @@ FROM p GROUP BY seq_id ORDER BY seq_id ASC""",
 )
 def z56_pack_with_eos(spark, sf_dir):
     from topn_spark.operators.pipeline import pack_token_sequences
-    from topn_spark.operators.textstats import tokens
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .where(F.col("doc_id") < 400)
-        .select(
-            F.md5(F.col("doc_id").cast("string")).alias("okey"),
-            tokens("text").alias("tokens"),
-        )
-    )
+    docs = _okey_docs(spark, sf_dir, mask=False)
     return pack_token_sequences(
         docs,
         id_col="okey",
@@ -10348,6 +10109,42 @@ _Z58_TRAIN = (
     "too short to match",
 )
 
+#: the oracle's planted train docs ``t`` and their word 13-grams ``tg``
+_Z58_SQL_TRAIN_GRAMS = r"""t AS (
+  SELECT doc_id,
+    CASE doc_id % 4
+      WHEN 0 THEN 'a web page quoting the quick brown fox jumps over the lazy dog near the river bank for flavor'
+      WHEN 1 THEN 'a perfectly clean document about nothing in particular with plenty of ordinary words to say here'
+      WHEN 2 THEN 'an essay citing to be or not to be that is the question whether tis nobler in the mind at length'
+      ELSE 'too short to match'
+    END || ' nr ' || doc_id AS text
+  FROM documents WHERE doc_id < 400),
+tg AS (
+  SELECT doc_id, u.g FROM (
+    SELECT doc_id,
+      regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
+    FROM t) s,
+  UNNEST(CASE WHEN len(toks) >= 13
+    THEN list_transform(range(1, len(toks) - 11),
+      i -> array_to_string(toks[i:i+12], ' '))
+    ELSE [] END) AS u(g))"""
+
+
+def _z58_train(docs):
+    """The planted train documents: one of the four ``_Z58_TRAIN``
+    texts per doc_id % 4, salted with the id."""
+    d = F.col("doc_id")
+    text = (
+        F.when(d % 4 == 0, F.lit(_Z58_TRAIN[0]))
+        .when(d % 4 == 1, F.lit(_Z58_TRAIN[1]))
+        .when(d % 4 == 2, F.lit(_Z58_TRAIN[2]))
+        .otherwise(F.lit(_Z58_TRAIN[3]))
+    )
+    return docs.where(d < 400).select(
+        "doc_id",
+        F.concat(text, F.lit(" nr "), d.cast("string")).alias("text"),
+    )
+
 
 @query(
     "z58_ngram_decontaminate",
@@ -10365,24 +10162,7 @@ eg AS (
     THEN list_transform(range(1, len(toks) - 11),
       i -> array_to_string(toks[i:i+12], ' '))
     ELSE [] END) AS u(g)),
-t AS (
-  SELECT doc_id,
-    CASE doc_id % 4
-      WHEN 0 THEN 'a web page quoting the quick brown fox jumps over the lazy dog near the river bank for flavor'
-      WHEN 1 THEN 'a perfectly clean document about nothing in particular with plenty of ordinary words to say here'
-      WHEN 2 THEN 'an essay citing to be or not to be that is the question whether tis nobler in the mind at length'
-      ELSE 'too short to match'
-    END || ' nr ' || doc_id AS text
-  FROM documents WHERE doc_id < 400),
-tg AS (
-  SELECT doc_id, u.g FROM (
-    SELECT doc_id,
-      regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
-    FROM t) s,
-  UNNEST(CASE WHEN len(toks) >= 13
-    THEN list_transform(range(1, len(toks) - 11),
-      i -> array_to_string(toks[i:i+12], ' '))
-    ELSE [] END) AS u(g)),
+""" + _Z58_SQL_TRAIN_GRAMS + r""",
 h AS (
   SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_contam_grams
   FROM tg JOIN eg USING (g) GROUP BY doc_id)
@@ -10418,16 +10198,7 @@ def z58_ngram_decontaminate(spark, sf_dir):
         .otherwise(F.lit(_Z58_EVAL[1]))
         .alias("text")
     )
-    text = (
-        F.when(d % 4 == 0, F.lit(_Z58_TRAIN[0]))
-        .when(d % 4 == 1, F.lit(_Z58_TRAIN[1]))
-        .when(d % 4 == 2, F.lit(_Z58_TRAIN[2]))
-        .otherwise(F.lit(_Z58_TRAIN[3]))
-    )
-    train = docs.where(d < 400).select(
-        "doc_id",
-        F.concat(text, F.lit(" nr "), d.cast("string")).alias("text"),
-    )
+    train = _z58_train(docs)
     return (
         ngram_decontaminate(train, ev, n=13)
         .select("doc_id", "n_contam_grams", "contaminated")
@@ -10435,9 +10206,10 @@ def z58_ngram_decontaminate(spark, sf_dir):
     )
 
 
-@query(
-    "z59_epoch_mixture",
-    r"""WITH t AS (
+#: the oracle's per-language token quotas ``j`` over the z59 fixture:
+#: md5-ordered running token count ``cum``, group total ``gsum`` and
+#: quota ``q`` (20000 tokens at en 0.1 / de 0.3 / zh 0.6)
+_Z59_SQL_QUOTAS = r"""WITH t AS (
   SELECT doc_id, lang, CAST(doc_id % 7 + 1 AS BIGINT) AS n_tokens
   FROM documents WHERE lang IN ('en', 'de', 'zh')),
 s AS (
@@ -10455,7 +10227,31 @@ j AS (
   SELECT c.doc_id, c.lang, c.n_tokens, c.cum, s.gsum,
     CAST(CASE c.lang WHEN 'en' THEN 2000 WHEN 'de' THEN 6000
       ELSE 12000 END AS BIGINT) AS q
-  FROM c JOIN s USING (lang)),
+  FROM c JOIN s USING (lang))"""
+
+
+def _z59_mixture(spark, sf_dir):
+    """The z59 fixture (n_tokens = doc_id % 7 + 1) mixed to 20000
+    tokens at en 0.1 / de 0.3 / zh 0.6, at most 5 epochs."""
+    from topn_spark.operators.pipeline import epoch_mixture
+
+    docs = load_table(spark, sf_dir, "documents").select(
+        "doc_id",
+        "lang",
+        ((F.col("doc_id") % 7) + 1).cast("bigint").alias("n_tokens"),
+    )
+    return epoch_mixture(
+        docs,
+        {"en": 0.1, "de": 0.3, "zh": 0.6},
+        20000,
+        group_col="lang",
+        max_epochs=5,
+    )
+
+
+@query(
+    "z59_epoch_mixture",
+    _Z59_SQL_QUOTAS + r""",
 e AS (
   SELECT doc_id, lang, n_tokens,
     LEAST(
@@ -10484,23 +10280,7 @@ FROM e WHERE n_epochs > 0 ORDER BY doc_id ASC""",
     " DuckDB, hash-exact",
 )
 def z59_epoch_mixture(spark, sf_dir):
-    from topn_spark.operators.pipeline import epoch_mixture
-
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id",
-        "lang",
-        ((F.col("doc_id") % 7) + 1).cast("bigint").alias("n_tokens"),
-    )
-    return (
-        epoch_mixture(
-            docs,
-            {"en": 0.1, "de": 0.3, "zh": 0.6},
-            20000,
-            group_col="lang",
-            max_epochs=5,
-        )
-        .orderBy("doc_id")
-    )
+    return _z59_mixture(spark, sf_dir).orderBy("doc_id")
 
 
 #: z60/z61 planted attribute fixtures: six shapes, each lighting up a
@@ -10741,25 +10521,7 @@ def z62_scrub_dup_paragraphs(spark, sf_dir):
 
 @query(
     "z63_expand_epochs",
-    r"""WITH t AS (
-  SELECT doc_id, lang, CAST(doc_id % 7 + 1 AS BIGINT) AS n_tokens
-  FROM documents WHERE lang IN ('en', 'de', 'zh')),
-s AS (
-  SELECT lang, CAST(SUM(n_tokens) AS BIGINT) AS gsum
-  FROM t GROUP BY lang),
-c AS (
-  SELECT doc_id, lang, n_tokens,
-    CAST(COALESCE(SUM(n_tokens) OVER (
-      PARTITION BY lang
-      ORDER BY md5(CAST(doc_id AS VARCHAR)) ASC, doc_id ASC
-      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-      AS BIGINT) AS cum
-  FROM t),
-j AS (
-  SELECT c.doc_id, c.lang, c.n_tokens, c.cum, s.gsum,
-    CAST(CASE c.lang WHEN 'en' THEN 2000 WHEN 'de' THEN 6000
-      ELSE 12000 END AS BIGINT) AS q
-  FROM c JOIN s USING (lang)),
+    _Z59_SQL_QUOTAS + r""",
 e AS (
   SELECT doc_id,
     LEAST(
@@ -10792,22 +10554,10 @@ FROM x ORDER BY order_key ASC, doc_id ASC""",
     " + UNNEST(range) + the same md5 key in DuckDB, hash-exact",
 )
 def z63_expand_epochs(spark, sf_dir):
-    from topn_spark.operators.pipeline import epoch_mixture, expand_epochs
+    from topn_spark.operators.pipeline import expand_epochs
 
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id",
-        "lang",
-        ((F.col("doc_id") % 7) + 1).cast("bigint").alias("n_tokens"),
-    )
-    mixed = epoch_mixture(
-        docs,
-        {"en": 0.1, "de": 0.3, "zh": 0.6},
-        20000,
-        group_col="lang",
-        max_epochs=5,
-    )
     return (
-        expand_epochs(mixed)
+        expand_epochs(_z59_mixture(spark, sf_dir))
         .select("doc_id", "epoch", "order_key")
         .orderBy("order_key", "doc_id")
     )
@@ -10886,24 +10636,7 @@ eg AS (
 gc AS (
   SELECT benchmark, CAST(COUNT(*) AS BIGINT) AS n_eval_grams
   FROM eg GROUP BY benchmark),
-t AS (
-  SELECT doc_id,
-    CASE doc_id % 4
-      WHEN 0 THEN 'a web page quoting the quick brown fox jumps over the lazy dog near the river bank for flavor'
-      WHEN 1 THEN 'a perfectly clean document about nothing in particular with plenty of ordinary words to say here'
-      WHEN 2 THEN 'an essay citing to be or not to be that is the question whether tis nobler in the mind at length'
-      ELSE 'too short to match'
-    END || ' nr ' || doc_id AS text
-  FROM documents WHERE doc_id < 400),
-tg AS (
-  SELECT doc_id, u.g FROM (
-    SELECT doc_id,
-      regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
-    FROM t) s,
-  UNNEST(CASE WHEN len(toks) >= 13
-    THEN list_transform(range(1, len(toks) - 11),
-      i -> array_to_string(toks[i:i+12], ' '))
-    ELSE [] END) AS u(g)),
+""" + _Z58_SQL_TRAIN_GRAMS + r""",
 h AS (
   SELECT doc_id, benchmark, CAST(COUNT(*) AS BIGINT) AS inst
   FROM tg JOIN eg USING (g) GROUP BY doc_id, benchmark
@@ -10947,17 +10680,35 @@ def z65_contamination_report(spark, sf_dir):
         .otherwise(F.lit(_Z58_EVAL[1]))
         .alias("text"),
     )
-    text = (
-        F.when(d % 4 == 0, F.lit(_Z58_TRAIN[0]))
-        .when(d % 4 == 1, F.lit(_Z58_TRAIN[1]))
-        .when(d % 4 == 2, F.lit(_Z58_TRAIN[2]))
-        .otherwise(F.lit(_Z58_TRAIN[3]))
-    )
-    train = docs.where(d < 400).select(
-        "doc_id",
-        F.concat(text, F.lit(" nr "), d.cast("string")).alias("text"),
-    )
+    train = _z58_train(docs)
     return contamination_report(train, ev, n=13)
+
+
+#: the oracle side of ``_z66_messages``
+_DUCK_CHAT_CASE = r"""CASE doc_id % 8
+      WHEN 0 THEN [{'role': 'system', 'content': 'sys ' || doc_id},
+                   {'role': 'user', 'content': 'hi ' || doc_id},
+                   {'role': 'assistant', 'content': 'hello ' || doc_id}]
+      WHEN 1 THEN [{'role': 'user', 'content': 'q1 ' || doc_id},
+                   {'role': 'assistant', 'content': 'a1'},
+                   {'role': 'user', 'content': 'q2'},
+                   {'role': 'assistant', 'content': 'a2 ' || doc_id}]
+      WHEN 2 THEN [{'role': 'user', 'content': 'x'},
+                   {'role': 'user', 'content': 'y ' || doc_id},
+                   {'role': 'assistant', 'content': 'z'}]
+      WHEN 3 THEN [{'role': 'user', 'content': 'x ' || doc_id},
+                   {'role': 'assistant', 'content': 'y'},
+                   {'role': 'user', 'content': 'tail'}]
+      WHEN 4 THEN [{'role': 'user', 'content': 'x'},
+                   {'role': 'tool', 'content': 't ' || doc_id},
+                   {'role': 'assistant', 'content': 'y'}]
+      WHEN 5 THEN [{'role': 'user', 'content': 'x ' || doc_id},
+                   {'role': 'assistant', 'content': '   '}]
+      WHEN 6 THEN [{'role': 'user', 'content': 'x'},
+                   {'role': 'system', 'content': 'late ' || doc_id},
+                   {'role': 'assistant', 'content': 'y'}]
+      ELSE CAST([] AS STRUCT(role VARCHAR, content VARCHAR)[])
+    END"""
 
 
 def _z66_messages():
@@ -11022,30 +10773,7 @@ def _z66_messages():
     "z66_sft_chat_prep",
     r"""WITH t AS (
   SELECT doc_id AS conv_id,
-    CASE doc_id % 8
-      WHEN 0 THEN [{'role': 'system', 'content': 'sys ' || doc_id},
-                   {'role': 'user', 'content': 'hi ' || doc_id},
-                   {'role': 'assistant', 'content': 'hello ' || doc_id}]
-      WHEN 1 THEN [{'role': 'user', 'content': 'q1 ' || doc_id},
-                   {'role': 'assistant', 'content': 'a1'},
-                   {'role': 'user', 'content': 'q2'},
-                   {'role': 'assistant', 'content': 'a2 ' || doc_id}]
-      WHEN 2 THEN [{'role': 'user', 'content': 'x'},
-                   {'role': 'user', 'content': 'y ' || doc_id},
-                   {'role': 'assistant', 'content': 'z'}]
-      WHEN 3 THEN [{'role': 'user', 'content': 'x ' || doc_id},
-                   {'role': 'assistant', 'content': 'y'},
-                   {'role': 'user', 'content': 'tail'}]
-      WHEN 4 THEN [{'role': 'user', 'content': 'x'},
-                   {'role': 'tool', 'content': 't ' || doc_id},
-                   {'role': 'assistant', 'content': 'y'}]
-      WHEN 5 THEN [{'role': 'user', 'content': 'x ' || doc_id},
-                   {'role': 'assistant', 'content': '   '}]
-      WHEN 6 THEN [{'role': 'user', 'content': 'x'},
-                   {'role': 'system', 'content': 'late ' || doc_id},
-                   {'role': 'assistant', 'content': 'y'}]
-      ELSE CAST([] AS STRUCT(role VARCHAR, content VARCHAR)[])
-    END AS m
+    """ + _DUCK_CHAT_CASE + r""" AS m
   FROM documents WHERE doc_id < 400),
 q AS (
   SELECT conv_id, m,
@@ -11404,30 +11132,7 @@ def z70_preference_pairs(spark, sf_dir):
     "z71_loss_spans",
     r"""WITH t AS (
   SELECT doc_id AS conv_id,
-    CASE doc_id % 8
-      WHEN 0 THEN [{'role': 'system', 'content': 'sys ' || doc_id},
-                   {'role': 'user', 'content': 'hi ' || doc_id},
-                   {'role': 'assistant', 'content': 'hello ' || doc_id}]
-      WHEN 1 THEN [{'role': 'user', 'content': 'q1 ' || doc_id},
-                   {'role': 'assistant', 'content': 'a1'},
-                   {'role': 'user', 'content': 'q2'},
-                   {'role': 'assistant', 'content': 'a2 ' || doc_id}]
-      WHEN 2 THEN [{'role': 'user', 'content': 'x'},
-                   {'role': 'user', 'content': 'y ' || doc_id},
-                   {'role': 'assistant', 'content': 'z'}]
-      WHEN 3 THEN [{'role': 'user', 'content': 'x ' || doc_id},
-                   {'role': 'assistant', 'content': 'y'},
-                   {'role': 'user', 'content': 'tail'}]
-      WHEN 4 THEN [{'role': 'user', 'content': 'x'},
-                   {'role': 'tool', 'content': 't ' || doc_id},
-                   {'role': 'assistant', 'content': 'y'}]
-      WHEN 5 THEN [{'role': 'user', 'content': 'x ' || doc_id},
-                   {'role': 'assistant', 'content': '   '}]
-      WHEN 6 THEN [{'role': 'user', 'content': 'x'},
-                   {'role': 'system', 'content': 'late ' || doc_id},
-                   {'role': 'assistant', 'content': 'y'}]
-      ELSE CAST([] AS STRUCT(role VARCHAR, content VARCHAR)[])
-    END AS m
+    """ + _DUCK_CHAT_CASE + r""" AS m
   FROM documents WHERE doc_id < 400),
 u AS (
   SELECT conv_id, i, m[i].role AS role, m[i].content AS content,
@@ -11654,15 +11359,7 @@ def z72_token_loss_mask(spark, sf_dir):
             "n_tokens"
         ),
         "n_supervised",
-        F.when(
-            mask.isNotNull(),
-            F.array_join(
-                F.transform(
-                    mask, lambda b: F.when(b, "1").otherwise("0")
-                ),
-                "",
-            ),
-        ).alias("mask_str"),
+        _mask_str(mask).alias("mask_str"),
         F.when(
             toks.isNotNull(),
             F.array_join(
@@ -11680,36 +11377,14 @@ def z72_token_loss_mask(spark, sf_dir):
 
 @query(
     "z73_pack_masked",
-    r"""WITH t AS (
-  SELECT md5(CAST(doc_id AS VARCHAR)) AS okey,
-    list_append(
-      regexp_extract_all(lower(text), '[a-z0-9]+'), '</s>') AS toks,
-    list_append(
-      list_transform(regexp_extract_all(lower(text), '[a-z0-9]+'),
-        x -> length(x) >= 4), false) AS msk
-  FROM documents WHERE doc_id < 400
-    AND len(regexp_extract_all(lower(text), '[a-z0-9]+')) > 0),
-c AS (
-  SELECT okey, toks, msk, CAST(len(toks) AS BIGINT) AS n,
-    CAST(COALESCE(SUM(CAST(len(toks) AS BIGINT)) OVER (
-      ORDER BY okey ROWS BETWEEN UNBOUNDED PRECEDING
-      AND 1 PRECEDING), 0) AS BIGINT) AS off
-  FROM t),
-s AS (
-  SELECT okey, toks, msk, n, off, u.seq_id AS seq_id
-  FROM c, UNNEST(range(off // 32, (off + n - 1) // 32 + 1))
-    AS u(seq_id)),
-p AS (
+    _DUCK_OKEY_MASKED + r""",
+""" + _duck_pack_spans(
+    "okey, toks, msk, ", "okey", "t", "okey, toks, msk"
+) + r"""p AS (
   SELECT seq_id,
     GREATEST(seq_id * 32, off) - seq_id * 32 AS seq_start,
-    toks[CAST(GREATEST(seq_id * 32 - off, 0) + 1 AS BIGINT)
-         :CAST(GREATEST(seq_id * 32 - off, 0)
-           + LEAST((seq_id + 1) * 32, off + n)
-           - GREATEST(seq_id * 32, off) AS BIGINT)] AS piece,
-    msk[CAST(GREATEST(seq_id * 32 - off, 0) + 1 AS BIGINT)
-        :CAST(GREATEST(seq_id * 32 - off, 0)
-          + LEAST((seq_id + 1) * 32, off + n)
-          - GREATEST(seq_id * 32, off) AS BIGINT)] AS mpiece
+""" + _duck_seq_slice("toks", "    ") + r""" AS piece,
+""" + _duck_seq_slice("msk", "    ") + r""" AS mpiece
   FROM s)
 SELECT seq_id, CAST(COUNT(*) AS BIGINT) AS n_docs,
   CAST(len(flatten(list(piece ORDER BY seq_start))) AS BIGINT)
@@ -11739,20 +11414,8 @@ FROM p GROUP BY seq_id ORDER BY seq_id ASC""",
 )
 def z73_pack_masked(spark, sf_dir):
     from topn_spark.operators.pipeline import pack_masked_sequences
-    from topn_spark.operators.textstats import tokens
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .where(F.col("doc_id") < 400)
-        .select(
-            F.md5(F.col("doc_id").cast("string")).alias("okey"),
-            tokens("text").alias("tokens"),
-        )
-        .withColumn(
-            "loss_mask",
-            F.transform("tokens", lambda t: F.length(t) >= 4),
-        )
-    )
+    docs = _okey_docs(spark, sf_dir)
     return pack_masked_sequences(
         docs,
         id_col="okey",
@@ -11886,30 +11549,7 @@ def z75_fim_transform(spark, sf_dir):
     r"""WITH t AS (
   SELECT doc_id,
     CASE WHEN doc_id % 9 = 8 THEN NULL ELSE
-    CASE doc_id % 8
-      WHEN 0 THEN [{'role': 'system', 'content': 'sys ' || doc_id},
-                   {'role': 'user', 'content': 'hi ' || doc_id},
-                   {'role': 'assistant', 'content': 'hello ' || doc_id}]
-      WHEN 1 THEN [{'role': 'user', 'content': 'q1 ' || doc_id},
-                   {'role': 'assistant', 'content': 'a1'},
-                   {'role': 'user', 'content': 'q2'},
-                   {'role': 'assistant', 'content': 'a2 ' || doc_id}]
-      WHEN 2 THEN [{'role': 'user', 'content': 'x'},
-                   {'role': 'user', 'content': 'y ' || doc_id},
-                   {'role': 'assistant', 'content': 'z'}]
-      WHEN 3 THEN [{'role': 'user', 'content': 'x ' || doc_id},
-                   {'role': 'assistant', 'content': 'y'},
-                   {'role': 'user', 'content': 'tail'}]
-      WHEN 4 THEN [{'role': 'user', 'content': 'x'},
-                   {'role': 'tool', 'content': 't ' || doc_id},
-                   {'role': 'assistant', 'content': 'y'}]
-      WHEN 5 THEN [{'role': 'user', 'content': 'x ' || doc_id},
-                   {'role': 'assistant', 'content': '   '}]
-      WHEN 6 THEN [{'role': 'user', 'content': 'x'},
-                   {'role': 'system', 'content': 'late ' || doc_id},
-                   {'role': 'assistant', 'content': 'y'}]
-      ELSE CAST([] AS STRUCT(role VARCHAR, content VARCHAR)[])
-    END END AS m
+    """ + _DUCK_CHAT_CASE + r""" END AS m
   FROM documents WHERE doc_id < 450),
 r AS (
   SELECT doc_id,
@@ -11982,31 +11622,12 @@ def z76_conversation_report(spark, sf_dir):
 
 @query(
     "z77_packing_report",
-    r"""WITH t AS (
-  SELECT md5(CAST(doc_id AS VARCHAR)) AS okey,
-    list_append(
-      regexp_extract_all(lower(text), '[a-z0-9]+'), '</s>') AS toks,
-    list_append(
-      list_transform(regexp_extract_all(lower(text), '[a-z0-9]+'),
-        x -> length(x) >= 4), false) AS msk
-  FROM documents WHERE doc_id < 400
-    AND len(regexp_extract_all(lower(text), '[a-z0-9]+')) > 0),
-c AS (
-  SELECT okey, toks, msk, CAST(len(toks) AS BIGINT) AS n,
-    CAST(COALESCE(SUM(CAST(len(toks) AS BIGINT)) OVER (
-      ORDER BY okey ROWS BETWEEN UNBOUNDED PRECEDING
-      AND 1 PRECEDING), 0) AS BIGINT) AS off
-  FROM t),
-s AS (
-  SELECT okey, msk, n, off, u.seq_id AS seq_id
-  FROM c, UNNEST(range(off // 32, (off + n - 1) // 32 + 1))
-    AS u(seq_id)),
-p AS (
+    _DUCK_OKEY_MASKED + r""",
+""" + _duck_pack_spans(
+    "okey, toks, msk, ", "okey", "t", "okey, msk"
+) + r"""p AS (
   SELECT seq_id,
-    msk[CAST(GREATEST(seq_id * 32 - off, 0) + 1 AS BIGINT)
-        :CAST(GREATEST(seq_id * 32 - off, 0)
-          + LEAST((seq_id + 1) * 32, off + n)
-          - GREATEST(seq_id * 32, off) AS BIGINT)] AS mpiece
+""" + _duck_seq_slice("msk", "    ") + r""" AS mpiece
   FROM s),
 q AS (
   SELECT seq_id, CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -12047,20 +11668,8 @@ def z77_packing_report(spark, sf_dir):
         pack_masked_sequences,
         packing_report,
     )
-    from topn_spark.operators.textstats import tokens
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .where(F.col("doc_id") < 400)
-        .select(
-            F.md5(F.col("doc_id").cast("string")).alias("okey"),
-            tokens("text").alias("tokens"),
-        )
-        .withColumn(
-            "loss_mask",
-            F.transform("tokens", lambda t: F.length(t) >= 4),
-        )
-    )
+    docs = _okey_docs(spark, sf_dir)
     packed = pack_masked_sequences(
         docs, id_col="okey", order_col="okey", seq_len=32,
         sep_token="</s>",
@@ -12382,24 +11991,7 @@ def z81_bpe_loss_mask(spark, sf_dir):
         mask.alias("loss_mask"),
     )
     out = bpe_loss_mask(base, _Z81_MERGES)
-    toks, msk = F.col("tokens"), F.col("loss_mask")
-    return out.select(
-        "conv_id",
-        "n_bpe_tokens",
-        "n_supervised",
-        F.when(toks.isNotNull(), F.array_join(toks, "|")).alias(
-            "toks_sig"
-        ),
-        F.when(
-            msk.isNotNull(),
-            F.array_join(
-                F.transform(
-                    msk, lambda b: F.when(b, "1").otherwise("0")
-                ),
-                "",
-            ),
-        ).alias("mask_str"),
-    ).orderBy("conv_id")
+    return _subtoken_sigs(out, "n_bpe_tokens")
 
 
 @query(
@@ -13057,24 +12649,7 @@ def z87_unigram_loss_mask(spark, sf_dir):
         mask.alias("loss_mask"),
     )
     out = unigram_loss_mask(base, _Z87_PIECES)
-    toks, msk = F.col("tokens"), F.col("loss_mask")
-    return out.select(
-        "conv_id",
-        "n_lm_tokens",
-        "n_supervised",
-        F.when(toks.isNotNull(), F.array_join(toks, "|")).alias(
-            "toks_sig"
-        ),
-        F.when(
-            msk.isNotNull(),
-            F.array_join(
-                F.transform(
-                    msk, lambda b: F.when(b, "1").otherwise("0")
-                ),
-                "",
-            ),
-        ).alias("mask_str"),
-    ).orderBy("conv_id")
+    return _subtoken_sigs(out, "n_lm_tokens")
 
 
 @query(
@@ -14945,23 +14520,7 @@ ORDER BY model_a ASC, model_b ASC""",
 def z113_pairwise_winrate(spark, sf_dir):
     from topn_spark.operators.sft import pairwise_winrate
 
-    docs = load_table(spark, sf_dir, "documents").where(
-        F.col("doc_id") < 480
-    )
-    d = F.col("doc_id")
-    p = (d / 8).cast("bigint")
-    score = F.when(
-        (d % 4 == 3) & (p % 3 == 0), F.lit(None).cast("double")
-    ).otherwise(
-        ((d * 7) % 29).cast("double")
-        + F.when(d % 4 == 0, F.lit(10.0)).otherwise(F.lit(0.0))
-    )
-    samples = docs.select(
-        p.alias("prompt_id"),
-        F.concat(F.lit("m"), (d % 4).cast("string")).alias("model"),
-        d.alias("sample_id"),
-        score.alias("score"),
-    )
+    samples = _arena_samples(spark, sf_dir)
     return pairwise_winrate(samples).orderBy("model_a", "model_b")
 
 
@@ -15080,27 +14639,13 @@ def z115_encode_token_ids(spark, sf_dir):
       x -> length(x) >= 4), false) AS msk
   FROM documents WHERE doc_id < 300
     AND len(regexp_extract_all(lower(text), '[a-z0-9]+')) > 0),
-c AS (
-  SELECT doc_id, toks, msk, CAST(len(toks) AS BIGINT) AS n,
-    CAST(COALESCE(SUM(CAST(len(toks) AS BIGINT)) OVER (
-      ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING
-      AND 1 PRECEDING), 0) AS BIGINT) AS off
-  FROM t),
-s AS (
-  SELECT doc_id, toks, msk, n, off, u.seq_id AS seq_id
-  FROM c, UNNEST(range(off // 32, (off + n - 1) // 32 + 1))
-    AS u(seq_id)),
-p AS (
+""" + _duck_pack_spans(
+    "doc_id, toks, msk, ", "doc_id", "t", "doc_id, toks, msk"
+) + r"""p AS (
   SELECT seq_id,
     GREATEST(seq_id * 32, off) - seq_id * 32 AS seq_start,
-    toks[CAST(GREATEST(seq_id * 32 - off, 0) + 1 AS BIGINT)
-         :CAST(GREATEST(seq_id * 32 - off, 0)
-           + LEAST((seq_id + 1) * 32, off + n)
-           - GREATEST(seq_id * 32, off) AS BIGINT)] AS piece,
-    msk[CAST(GREATEST(seq_id * 32 - off, 0) + 1 AS BIGINT)
-        :CAST(GREATEST(seq_id * 32 - off, 0)
-          + LEAST((seq_id + 1) * 32, off + n)
-          - GREATEST(seq_id * 32, off) AS BIGINT)] AS mpiece
+""" + _duck_seq_slice("toks", "    ") + r""" AS piece,
+""" + _duck_seq_slice("msk", "    ") + r""" AS mpiece
   FROM s),
 q AS (
   SELECT seq_id,
@@ -15113,8 +14658,7 @@ q AS (
   FROM p GROUP BY seq_id),
 sh AS (
   SELECT *,
-    CAST(CAST(('0x' || substring(md5(CAST(seq_id AS VARCHAR)
-      || 'z116'), 1, 8)) AS BIGINT) % 8 AS INT) AS shard
+    """ + _duck_md5_shard("seq_id", "z116", 8) + r"""
   FROM q)
 SELECT shard,
   CAST(ROW_NUMBER() OVER (PARTITION BY shard ORDER BY seq_id) - 1
@@ -15146,31 +14690,8 @@ def z116_bin_shard_round_trip(spark, sf_dir):
         export_bin_shards,
         read_bin_shards,
     )
-    from topn_spark.operators.pipeline import pack_masked_sequences
-    from topn_spark.operators.textstats import tokens
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .where(F.col("doc_id") < 300)
-        .select("doc_id", tokens("text").alias("tokens"))
-        .where(F.size("tokens") > 0)
-        .select(
-            "doc_id",
-            F.transform(
-                "tokens", lambda t: F.length(t).cast("bigint")
-            ).alias("tokens"),
-            F.transform(
-                "tokens", lambda t: F.length(t) >= 4
-            ).alias("loss_mask"),
-        )
-    )
-    packed = pack_masked_sequences(
-        docs,
-        id_col="doc_id",
-        order_col="doc_id",
-        seq_len=32,
-        sep_token=0,
-    )
+    packed = _packed_length_ids(spark, sf_dir)
     out_dir = f"/tmp/topn_z116_{os.path.basename(sf_dir.rstrip('/'))}"
     export_bin_shards(packed, out_dir, 8, salt="z116")
     return read_bin_shards(spark, out_dir).orderBy("seq_id")
@@ -15286,23 +14807,7 @@ def z117_bradley_terry(spark, sf_dir):
         pairwise_winrate,
     )
 
-    docs = load_table(spark, sf_dir, "documents").where(
-        F.col("doc_id") < 480
-    )
-    d = F.col("doc_id")
-    p = (d / 8).cast("bigint")
-    score = F.when(
-        (d % 4 == 3) & (p % 3 == 0), F.lit(None).cast("double")
-    ).otherwise(
-        ((d * 7) % 29).cast("double")
-        + F.when(d % 4 == 0, F.lit(10.0)).otherwise(F.lit(0.0))
-    )
-    samples = docs.select(
-        p.alias("prompt_id"),
-        F.concat(F.lit("m"), (d % 4).cast("string")).alias("model"),
-        d.alias("sample_id"),
-        score.alias("score"),
-    )
+    samples = _arena_samples(spark, sf_dir)
     fit = bradley_terry_fit(
         pairwise_winrate(samples), smoothing=0.5
     )
@@ -15373,23 +14878,7 @@ def z118_bt_calibration(spark, sf_dir):
         pairwise_winrate,
     )
 
-    docs = load_table(spark, sf_dir, "documents").where(
-        F.col("doc_id") < 480
-    )
-    d = F.col("doc_id")
-    p = (d / 8).cast("bigint")
-    score = F.when(
-        (d % 4 == 3) & (p % 3 == 0), F.lit(None).cast("double")
-    ).otherwise(
-        ((d * 7) % 29).cast("double")
-        + F.when(d % 4 == 0, F.lit(10.0)).otherwise(F.lit(0.0))
-    )
-    samples = docs.select(
-        p.alias("prompt_id"),
-        F.concat(F.lit("m"), (d % 4).cast("string")).alias("model"),
-        d.alias("sample_id"),
-        score.alias("score"),
-    )
+    samples = _arena_samples(spark, sf_dir)
     matrix = pairwise_winrate(samples)
     fit = bradley_terry_fit(matrix, smoothing=0.5)
     return bt_calibration(matrix, fit, n_bins=4).orderBy("bin")
@@ -15546,32 +15035,14 @@ z AS (
     list(CASE WHEN tok = '<img>' THEN assets[ph_ord] END
       ORDER BY i) AS refs
   FROM u GROUP BY doc_id, assets),
-c AS (
-  SELECT doc_id, toks, msk, refs,
-    CAST(len(toks) AS BIGINT) AS n,
-    CAST(COALESCE(SUM(CAST(len(toks) AS BIGINT)) OVER (
-      ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING
-      AND 1 PRECEDING), 0) AS BIGINT) AS off
-  FROM z),
-s AS (
-  SELECT doc_id, toks, msk, refs, n, off, u.seq_id AS seq_id
-  FROM c, UNNEST(range(off // 32, (off + n - 1) // 32 + 1))
-    AS u(seq_id)),
-p AS (
+""" + _duck_pack_spans(
+    "doc_id, toks, msk, refs,\n    ", "doc_id", "z", "doc_id, toks, msk, refs"
+) + r"""p AS (
   SELECT seq_id,
     GREATEST(seq_id * 32, off) - seq_id * 32 AS seq_start,
-    toks[CAST(GREATEST(seq_id * 32 - off, 0) + 1 AS BIGINT)
-         :CAST(GREATEST(seq_id * 32 - off, 0)
-           + LEAST((seq_id + 1) * 32, off + n)
-           - GREATEST(seq_id * 32, off) AS BIGINT)] AS piece,
-    msk[CAST(GREATEST(seq_id * 32 - off, 0) + 1 AS BIGINT)
-        :CAST(GREATEST(seq_id * 32 - off, 0)
-          + LEAST((seq_id + 1) * 32, off + n)
-          - GREATEST(seq_id * 32, off) AS BIGINT)] AS mpiece,
-    refs[CAST(GREATEST(seq_id * 32 - off, 0) + 1 AS BIGINT)
-         :CAST(GREATEST(seq_id * 32 - off, 0)
-           + LEAST((seq_id + 1) * 32, off + n)
-           - GREATEST(seq_id * 32, off) AS BIGINT)] AS rpiece
+""" + _duck_seq_slice("toks", "    ") + r""" AS piece,
+""" + _duck_seq_slice("msk", "    ") + r""" AS mpiece,
+""" + _duck_seq_slice("refs", "    ") + r""" AS rpiece
   FROM s)
 SELECT seq_id, CAST(COUNT(*) AS BIGINT) AS n_docs,
   CAST(len(flatten(list(piece ORDER BY seq_start))) AS BIGINT)
@@ -15812,23 +15283,7 @@ FROM best a JOIN best b
 def z121_bt_bootstrap(spark, sf_dir):
     from topn_spark.operators.sft import bradley_terry_bootstrap
 
-    docs = load_table(spark, sf_dir, "documents").where(
-        F.col("doc_id") < 480
-    )
-    d = F.col("doc_id")
-    p = (d / 8).cast("bigint")
-    score = F.when(
-        (d % 4 == 3) & (p % 3 == 0), F.lit(None).cast("double")
-    ).otherwise(
-        ((d * 7) % 29).cast("double")
-        + F.when(d % 4 == 0, F.lit(10.0)).otherwise(F.lit(0.0))
-    )
-    samples = docs.select(
-        p.alias("prompt_id"),
-        F.concat(F.lit("m"), (d % 4).cast("string")).alias("model"),
-        d.alias("sample_id"),
-        score.alias("score"),
-    )
+    samples = _arena_samples(spark, sf_dir)
     return bradley_terry_bootstrap(
         samples, n_boot=50, salt="z121"
     ).orderBy("model")
@@ -15855,8 +15310,7 @@ q AS (
     AS u(seq_id)),
 sh AS (
   SELECT seq_id,
-    CAST(CAST(('0x' || substring(md5(CAST(seq_id AS VARCHAR)
-      || 'z122s'), 1, 8)) AS BIGINT) % 4 AS INT) AS shard
+    """ + _duck_md5_shard("seq_id", "z122s", 4) + r"""
   FROM q),
 idx AS (
   SELECT shard,
@@ -15901,31 +15355,8 @@ def z122_epoch_order(spark, sf_dir):
         export_epoch_order,
         read_epoch_order,
     )
-    from topn_spark.operators.pipeline import pack_masked_sequences
-    from topn_spark.operators.textstats import tokens
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .where(F.col("doc_id") < 300)
-        .select("doc_id", tokens("text").alias("tokens"))
-        .where(F.size("tokens") > 0)
-        .select(
-            "doc_id",
-            F.transform(
-                "tokens", lambda t: F.length(t).cast("bigint")
-            ).alias("tokens"),
-            F.transform(
-                "tokens", lambda t: F.length(t) >= 4
-            ).alias("loss_mask"),
-        )
-    )
-    packed = pack_masked_sequences(
-        docs,
-        id_col="doc_id",
-        order_col="doc_id",
-        seq_len=32,
-        sep_token=0,
-    )
+    packed = _packed_length_ids(spark, sf_dir)
     out_dir = f"/tmp/topn_z122_{os.path.basename(sf_dir.rstrip('/'))}"
     export_bin_shards(packed, out_dir, 4, salt="z122s")
     export_epoch_order(spark, out_dir, epoch=0, salt="z122")
@@ -16127,32 +15558,14 @@ z AS (
     list(CASE WHEN tok = 9999 THEN assets[ph_ord] END
       ORDER BY i) AS refs
   FROM u GROUP BY doc_id, assets),
-c AS (
-  SELECT doc_id, toks, msk, refs,
-    CAST(len(toks) AS BIGINT) AS n,
-    CAST(COALESCE(SUM(CAST(len(toks) AS BIGINT)) OVER (
-      ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING
-      AND 1 PRECEDING), 0) AS BIGINT) AS off
-  FROM z),
-s AS (
-  SELECT doc_id, toks, msk, refs, n, off, u.seq_id AS seq_id
-  FROM c, UNNEST(range(off // 32, (off + n - 1) // 32 + 1))
-    AS u(seq_id)),
-p AS (
+""" + _duck_pack_spans(
+    "doc_id, toks, msk, refs,\n    ", "doc_id", "z", "doc_id, toks, msk, refs"
+) + r"""p AS (
   SELECT seq_id,
     GREATEST(seq_id * 32, off) - seq_id * 32 AS seq_start,
-    toks[CAST(GREATEST(seq_id * 32 - off, 0) + 1 AS BIGINT)
-         :CAST(GREATEST(seq_id * 32 - off, 0)
-           + LEAST((seq_id + 1) * 32, off + n)
-           - GREATEST(seq_id * 32, off) AS BIGINT)] AS piece,
-    msk[CAST(GREATEST(seq_id * 32 - off, 0) + 1 AS BIGINT)
-        :CAST(GREATEST(seq_id * 32 - off, 0)
-          + LEAST((seq_id + 1) * 32, off + n)
-          - GREATEST(seq_id * 32, off) AS BIGINT)] AS mpiece,
-    refs[CAST(GREATEST(seq_id * 32 - off, 0) + 1 AS BIGINT)
-         :CAST(GREATEST(seq_id * 32 - off, 0)
-           + LEAST((seq_id + 1) * 32, off + n)
-           - GREATEST(seq_id * 32, off) AS BIGINT)] AS rpiece
+""" + _duck_seq_slice("toks", "    ") + r""" AS piece,
+""" + _duck_seq_slice("msk", "    ") + r""" AS mpiece,
+""" + _duck_seq_slice("refs", "    ") + r""" AS rpiece
   FROM s),
 q AS (
   SELECT seq_id,
@@ -16172,8 +15585,7 @@ q AS (
     _Z124_PACK_SQL + r""",
 sh AS (
   SELECT *,
-    CAST(CAST(('0x' || substring(md5(CAST(seq_id AS VARCHAR)
-      || 'z124'), 1, 8)) AS BIGINT) % 8 AS INT) AS shard
+    """ + _duck_md5_shard("seq_id", "z124", 8) + r"""
   FROM q)
 SELECT shard,
   CAST(ROW_NUMBER() OVER (PARTITION BY shard ORDER BY seq_id) - 1
@@ -16276,17 +15688,9 @@ def z124_multimodal_bin_round_trip(spark, sf_dir):
 m AS (
   SELECT doc_id, toks,
     list_transform(toks, x -> x >= 4) AS msk,
-    CAST(CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR)
-      || 'z125'), 1, 8)) AS BIGINT) % 6 AS INT) AS shard
+    """ + _duck_md5_shard("doc_id", "z125", 6) + r"""
   FROM t)
-SELECT shard,
-  CAST(ROW_NUMBER() OVER (PARTITION BY shard ORDER BY doc_id) - 1
-    AS BIGINT) AS seq_index,
-  doc_id AS seq_id,
-  CAST(len(toks) AS BIGINT) AS n_tokens,
-  CAST(len(list_filter(msk, x -> x)) AS BIGINT) AS n_supervised,
-  toks AS tokens, msk AS loss_mask
-FROM m ORDER BY seq_id ASC""",
+""" + _DUCK_SEQ_ROWS,
     doc="INCREMENTAL BINARY RE-EXPORT (operators/binshard.py::"
     "export_bin_shards incremental=True) — the r11 verdict's other"
     " binary-layer gap: a corpus delta must not rewrite a 100 TB"
@@ -16315,23 +15719,11 @@ def z125_incremental_bin_export(spark, sf_dir):
         export_bin_shards,
         read_bin_shards,
     )
-    from topn_spark.operators.textstats import tokens
 
     d = F.col("doc_id")
 
     def corpus(v2: bool):
-        base = (
-            load_table(spark, sf_dir, "documents")
-            .where(d < 250)
-            .select(
-                "doc_id",
-                F.transform(
-                    tokens("text"),
-                    lambda t: F.length(t).cast("bigint"),
-                ).alias("tokens"),
-            )
-            .where(F.size("tokens") > 0)
-        )
+        base = _length_id_docs(spark, sf_dir, 250, mask=False)
         if v2:
             base = base.withColumn(
                 "tokens",
@@ -16362,42 +15754,13 @@ def z125_incremental_bin_export(spark, sf_dir):
 
 @query(
     "z126_bin_window_read",
-    r"""WITH t AS (
-  SELECT doc_id,
-    list_transform(regexp_extract_all(lower(text), '[a-z0-9]+'),
-      x -> CAST(length(x) AS BIGINT)) AS toks
-  FROM documents WHERE doc_id < 200
-    AND len(regexp_extract_all(lower(text), '[a-z0-9]+')) > 0),
+    _duck_length_ids("doc_id", "toks", 200) + r""",
 m AS (
   SELECT doc_id AS seq_id, toks,
     list_transform(toks, x -> x >= 4) AS msk,
-    CAST(CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR)
-      || 'z126'), 1, 8)) AS BIGINT) % 5 AS INT) AS shard
+    """ + _duck_md5_shard("doc_id", "z126", 5) + r"""
   FROM t),
-ix AS (
-  SELECT *,
-    CAST(ROW_NUMBER() OVER (PARTITION BY shard ORDER BY seq_id) - 1
-      AS BIGINT) AS seq_index
-  FROM m),
-pos AS (
-  SELECT *,
-    CAST(ROW_NUMBER() OVER (PARTITION BY shard ORDER BY
-      md5('2:' || CAST(shard AS VARCHAR) || ':'
-        || CAST(seq_index AS VARCHAR) || 'z126e'),
-      seq_index) - 1 AS BIGINT) AS position
-  FROM ix),
-sh AS (
-  SELECT shard, COUNT(*) AS n_seqs,
-    md5('2:' || CAST(shard AS VARCHAR) || 'z126e') AS skey
-  FROM pos GROUP BY shard),
-sp AS (
-  SELECT shard,
-    CAST(ROW_NUMBER() OVER (ORDER BY skey, shard) - 1 AS INT)
-      AS shard_pos,
-    CAST(COALESCE(SUM(n_seqs) OVER (ORDER BY skey, shard
-      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-      AS BIGINT) AS base
-  FROM sh)
+""" + _duck_epoch_order("seq", "m", 2, "z126e") + r"""
 SELECT base + position AS global_pos, shard, shard_pos, position,
   seq_index, seq_id,
   CAST(len(toks) AS BIGINT) AS n_tokens,
@@ -16432,24 +15795,8 @@ def z126_bin_window_read(spark, sf_dir):
         export_epoch_order,
         read_bin_window,
     )
-    from topn_spark.operators.textstats import tokens
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .where(F.col("doc_id") < 200)
-        .select(
-            "doc_id",
-            F.transform(
-                tokens("text"),
-                lambda t: F.length(t).cast("bigint"),
-            ).alias("tokens"),
-        )
-        .where(F.size("tokens") > 0)
-        .withColumn(
-            "loss_mask",
-            F.transform("tokens", lambda t: t >= 4),
-        )
-    )
+    docs = _length_id_docs(spark, sf_dir, 200)
     out_dir = f"/tmp/topn_z126_{os.path.basename(sf_dir.rstrip('/'))}"
     shutil.rmtree(out_dir, ignore_errors=True)
     export_bin_shards(
@@ -16463,34 +15810,13 @@ def z126_bin_window_read(spark, sf_dir):
 
 @query(
     "z127_preference_bin_round_trip",
-    r"""WITH t AS (
-  SELECT doc_id AS pair_id,
-    list_transform(regexp_extract_all(lower(text), '[a-z0-9]+'),
-      x -> CAST(length(x) AS BIGINT)) AS ct
-  FROM documents WHERE doc_id < 250
-    AND len(regexp_extract_all(lower(text), '[a-z0-9]+')) > 0),
-p AS (
-  SELECT pair_id, ct,
-    list_prepend(CAST(5 AS BIGINT),
-      list_transform(ct, x -> LEAST(x, CAST(9 AS BIGINT)))) AS rt,
-    list_transform(ct, x -> x >= 4) AS cm,
-    CAST(CAST(('0x' || substring(md5(CAST(pair_id AS VARCHAR)
-      || 'z127'), 1, 8)) AS BIGINT) % 6 AS INT) AS shard
-  FROM t),
-f AS (
-  SELECT *, list_transform(rt, x -> x >= 3) AS rm FROM p)
+    _duck_length_ids("doc_id AS pair_id", "ct", 250) + r""",
+""" + _duck_pair_sides("z127", 6) + r"""
 SELECT shard,
   CAST(ROW_NUMBER() OVER (PARTITION BY shard ORDER BY pair_id) - 1
     AS BIGINT) AS pair_index,
   pair_id,
-  CAST(len(ct) AS BIGINT) AS chosen_n_tokens,
-  CAST(len(rt) AS BIGINT) AS rejected_n_tokens,
-  CAST(len(list_filter(cm, x -> x)) AS BIGINT)
-    AS chosen_n_supervised,
-  CAST(len(list_filter(rm, x -> x)) AS BIGINT)
-    AS rejected_n_supervised,
-  ct AS chosen_tokens, rt AS rejected_tokens,
-  cm AS chosen_mask, rm AS rejected_mask
+""" + _DUCK_PAIR_ROWS + r"""
 FROM f ORDER BY pair_id ASC""",
     doc="PREFERENCE-PAIR BINARY ROUND TRIP (operators/binshard.py"
     "::export_preference_shards/read_preference_shards) — the r11"
@@ -16518,37 +15844,8 @@ def z127_preference_bin_round_trip(spark, sf_dir):
         export_preference_shards,
         read_preference_shards,
     )
-    from topn_spark.operators.textstats import tokens
 
-    pairs = (
-        load_table(spark, sf_dir, "documents")
-        .where(F.col("doc_id") < 250)
-        .select(
-            F.col("doc_id").alias("pair_id"),
-            F.transform(
-                tokens("text"),
-                lambda t: F.length(t).cast("bigint"),
-            ).alias("chosen_tokens"),
-        )
-        .where(F.size("chosen_tokens") > 0)
-        .withColumn(
-            "rejected_tokens",
-            F.concat(
-                F.array(F.lit(5).cast("bigint")),
-                F.transform(
-                    "chosen_tokens", lambda t: F.least(t, F.lit(9))
-                ),
-            ),
-        )
-        .withColumn(
-            "chosen_mask",
-            F.transform("chosen_tokens", lambda t: t >= 4),
-        )
-        .withColumn(
-            "rejected_mask",
-            F.transform("rejected_tokens", lambda t: t >= 3),
-        )
-    )
+    pairs = _preference_pairs(spark, sf_dir)
     out_dir = f"/tmp/topn_z127_{os.path.basename(sf_dir.rstrip('/'))}"
     shutil.rmtree(out_dir, ignore_errors=True)
     export_preference_shards(pairs, out_dir, 6, salt="z127")
@@ -16719,18 +16016,12 @@ def z128_decayed_bt_leaderboard(spark, sf_dir):
 
 @query(
     "z129_bin_data_card",
-    r"""WITH t AS (
-  SELECT doc_id,
-    list_transform(regexp_extract_all(lower(text), '[a-z0-9]+'),
-      x -> CAST(length(x) AS BIGINT)) AS toks
-  FROM documents WHERE doc_id < 220
-    AND len(regexp_extract_all(lower(text), '[a-z0-9]+')) > 0),
+    _duck_length_ids("doc_id", "toks", 220) + r""",
 m AS (
   SELECT doc_id, toks,
     CAST(len(toks) AS BIGINT) AS n,
     CAST(len(list_filter(toks, x -> x >= 4)) AS BIGINT) AS nsup,
-    CAST(CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR)
-      || 'z129'), 1, 8)) AS BIGINT) % 4 AS INT) AS shard
+    """ + _duck_md5_shard("doc_id", "z129", 4) + r"""
   FROM t)
 SELECT
   CAST(COUNT(DISTINCT shard) AS BIGINT) AS n_shards,
@@ -16781,24 +16072,8 @@ def z129_bin_data_card(spark, sf_dir):
         export_bin_shards,
         export_epoch_order,
     )
-    from topn_spark.operators.textstats import tokens
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .where(F.col("doc_id") < 220)
-        .select(
-            "doc_id",
-            F.transform(
-                tokens("text"),
-                lambda t: F.length(t).cast("bigint"),
-            ).alias("tokens"),
-        )
-        .where(F.size("tokens") > 0)
-        .withColumn(
-            "loss_mask",
-            F.transform("tokens", lambda t: t >= 4),
-        )
-    )
+    docs = _length_id_docs(spark, sf_dir, 220)
     out_dir = f"/tmp/topn_z129_{os.path.basename(sf_dir.rstrip('/'))}"
     shutil.rmtree(out_dir, ignore_errors=True)
     export_bin_shards(
@@ -16940,56 +16215,12 @@ def z130_arena_cumulative_drift(spark, sf_dir):
 
 @query(
     "z131_preference_window_read",
-    r"""WITH t AS (
-  SELECT doc_id AS pair_id,
-    list_transform(regexp_extract_all(lower(text), '[a-z0-9]+'),
-      x -> CAST(length(x) AS BIGINT)) AS ct
-  FROM documents WHERE doc_id < 250
-    AND len(regexp_extract_all(lower(text), '[a-z0-9]+')) > 0),
-p AS (
-  SELECT pair_id, ct,
-    list_prepend(CAST(5 AS BIGINT),
-      list_transform(ct, x -> LEAST(x, CAST(9 AS BIGINT)))) AS rt,
-    list_transform(ct, x -> x >= 4) AS cm,
-    CAST(CAST(('0x' || substring(md5(CAST(pair_id AS VARCHAR)
-      || 'z131'), 1, 8)) AS BIGINT) % 4 AS INT) AS shard
-  FROM t),
-f AS (
-  SELECT *, list_transform(rt, x -> x >= 3) AS rm FROM p),
-ix AS (
-  SELECT *,
-    CAST(ROW_NUMBER() OVER (PARTITION BY shard ORDER BY pair_id) - 1
-      AS BIGINT) AS pair_index
-  FROM f),
-pos AS (
-  SELECT *,
-    CAST(ROW_NUMBER() OVER (PARTITION BY shard ORDER BY
-      md5('1:' || CAST(shard AS VARCHAR) || ':'
-        || CAST(pair_index AS VARCHAR) || 'z131e'),
-      pair_index) - 1 AS BIGINT) AS position
-  FROM ix),
-sh AS (
-  SELECT shard, COUNT(*) AS n_units,
-    md5('1:' || CAST(shard AS VARCHAR) || 'z131e') AS skey
-  FROM pos GROUP BY shard),
-sp AS (
-  SELECT shard,
-    CAST(ROW_NUMBER() OVER (ORDER BY skey, shard) - 1 AS INT)
-      AS shard_pos,
-    CAST(COALESCE(SUM(n_units) OVER (ORDER BY skey, shard
-      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-      AS BIGINT) AS base
-  FROM sh)
+    _duck_length_ids("doc_id AS pair_id", "ct", 250) + r""",
+""" + _duck_pair_sides("z131", 4) + r""",
+""" + _duck_epoch_order("pair", "f", 1, "z131e") + r"""
 SELECT base + position AS global_pos, shard, shard_pos, position,
   pair_index, pair_id,
-  CAST(len(ct) AS BIGINT) AS chosen_n_tokens,
-  CAST(len(rt) AS BIGINT) AS rejected_n_tokens,
-  CAST(len(list_filter(cm, x -> x)) AS BIGINT)
-    AS chosen_n_supervised,
-  CAST(len(list_filter(rm, x -> x)) AS BIGINT)
-    AS rejected_n_supervised,
-  ct AS chosen_tokens, rt AS rejected_tokens,
-  cm AS chosen_mask, rm AS rejected_mask
+""" + _DUCK_PAIR_ROWS + r"""
 FROM pos JOIN sp USING (shard)
 WHERE base + position >= 10 AND base + position < 70
 ORDER BY global_pos ASC""",
@@ -17019,37 +16250,8 @@ def z131_preference_window_read(spark, sf_dir):
         export_preference_shards,
         read_preference_window,
     )
-    from topn_spark.operators.textstats import tokens
 
-    pairs = (
-        load_table(spark, sf_dir, "documents")
-        .where(F.col("doc_id") < 250)
-        .select(
-            F.col("doc_id").alias("pair_id"),
-            F.transform(
-                tokens("text"),
-                lambda t: F.length(t).cast("bigint"),
-            ).alias("chosen_tokens"),
-        )
-        .where(F.size("chosen_tokens") > 0)
-        .withColumn(
-            "rejected_tokens",
-            F.concat(
-                F.array(F.lit(5).cast("bigint")),
-                F.transform(
-                    "chosen_tokens", lambda t: F.least(t, F.lit(9))
-                ),
-            ),
-        )
-        .withColumn(
-            "chosen_mask",
-            F.transform("chosen_tokens", lambda t: t >= 4),
-        )
-        .withColumn(
-            "rejected_mask",
-            F.transform("rejected_tokens", lambda t: t >= 3),
-        )
-    )
+    pairs = _preference_pairs(spark, sf_dir)
     out_dir = f"/tmp/topn_z131_{os.path.basename(sf_dir.rstrip('/'))}"
     shutil.rmtree(out_dir, ignore_errors=True)
     export_preference_shards(pairs, out_dir, 4, salt="z131")
@@ -17061,26 +16263,13 @@ def z131_preference_window_read(spark, sf_dir):
 
 @query(
     "z132_streaming_bin_maintenance",
-    r"""WITH t AS (
-  SELECT doc_id,
-    list_transform(regexp_extract_all(lower(text), '[a-z0-9]+'),
-      x -> CAST(length(x) AS BIGINT)) AS toks
-  FROM documents WHERE doc_id < 250
-    AND len(regexp_extract_all(lower(text), '[a-z0-9]+')) > 0),
+    _duck_length_ids("doc_id", "toks", 250) + r""",
 m AS (
   SELECT doc_id, toks,
     list_transform(toks, x -> x >= 4) AS msk,
-    CAST(CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR)
-      || 'z132'), 1, 8)) AS BIGINT) % 6 AS INT) AS shard
+    """ + _duck_md5_shard("doc_id", "z132", 6) + r"""
   FROM t)
-SELECT shard,
-  CAST(ROW_NUMBER() OVER (PARTITION BY shard ORDER BY doc_id) - 1
-    AS BIGINT) AS seq_index,
-  doc_id AS seq_id,
-  CAST(len(toks) AS BIGINT) AS n_tokens,
-  CAST(len(list_filter(msk, x -> x)) AS BIGINT) AS n_supervised,
-  toks AS tokens, msk AS loss_mask
-FROM m ORDER BY seq_id ASC""",
+""" + _DUCK_SEQ_ROWS,
     doc="BATCH-PROPORTIONAL STREAMING SHARD MAINTENANCE (streaming/"
     "ingest.py::bin_export_batch + operators/binshard.py::"
     "export_bin_shards_delta) — the r12 verdict's top-ranked gap:"
@@ -17110,25 +16299,10 @@ def z132_streaming_bin_maintenance(spark, sf_dir):
     import shutil
 
     from topn_spark.operators.binshard import read_bin_shards
-    from topn_spark.operators.textstats import tokens
     from topn_spark.streaming.ingest import bin_export_batch
 
     d = F.col("doc_id")
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .where(d < 250)
-        .select(
-            "doc_id",
-            F.transform(
-                tokens("text"),
-                lambda t: F.length(t).cast("bigint"),
-            ).alias("tokens"),
-        )
-        .where(F.size("tokens") > 0)
-        .withColumn(
-            "loss_mask", F.transform("tokens", lambda t: t >= 4)
-        )
-    )
+    docs = _length_id_docs(spark, sf_dir, 250)
     base = f"/tmp/topn_z132_{os.path.basename(sf_dir.rstrip('/'))}"
     corpus, out = f"{base}_store", f"{base}_out"
     shutil.rmtree(corpus, ignore_errors=True)
@@ -17159,33 +16333,9 @@ def z132_streaming_bin_maintenance(spark, sf_dir):
 m AS (
   SELECT doc_id AS seq_id, toks,
     list_transform(toks, x -> x >= 4) AS msk,
-    CAST(CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR)
-      || 'z133'), 1, 8)) AS BIGINT) % 5 AS INT) AS shard
+    """ + _duck_md5_shard("doc_id", "z133", 5) + r"""
   FROM t),
-ix AS (
-  SELECT *,
-    CAST(ROW_NUMBER() OVER (PARTITION BY shard ORDER BY seq_id) - 1
-      AS BIGINT) AS seq_index
-  FROM m),
-pos AS (
-  SELECT *,
-    CAST(ROW_NUMBER() OVER (PARTITION BY shard ORDER BY
-      md5('0:' || CAST(shard AS VARCHAR) || ':'
-        || CAST(seq_index AS VARCHAR) || 'z133e'),
-      seq_index) - 1 AS BIGINT) AS position
-  FROM ix),
-sh AS (
-  SELECT shard, COUNT(*) AS n_seqs,
-    md5('0:' || CAST(shard AS VARCHAR) || 'z133e') AS skey
-  FROM pos GROUP BY shard),
-sp AS (
-  SELECT shard,
-    CAST(ROW_NUMBER() OVER (ORDER BY skey, shard) - 1 AS INT)
-      AS shard_pos,
-    CAST(COALESCE(SUM(n_seqs) OVER (ORDER BY skey, shard
-      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-      AS BIGINT) AS base
-  FROM sh)
+""" + _duck_epoch_order("seq", "m", 0, "z133e") + r"""
 SELECT base + position AS global_pos, shard, shard_pos, position,
   seq_index, seq_id,
   CAST(len(toks) AS BIGINT) AS n_tokens,
@@ -17223,23 +16373,11 @@ def z133_epoch_version_lifecycle(spark, sf_dir):
         export_epoch_order,
         read_bin_window,
     )
-    from topn_spark.operators.textstats import tokens
 
     d = F.col("doc_id")
 
     def corpus(v2: bool):
-        base = (
-            load_table(spark, sf_dir, "documents")
-            .where(d < 200)
-            .select(
-                "doc_id",
-                F.transform(
-                    tokens("text"),
-                    lambda t: F.length(t).cast("bigint"),
-                ).alias("tokens"),
-            )
-            .where(F.size("tokens") > 0)
-        )
+        base = _length_id_docs(spark, sf_dir, 200, mask=False)
         if v2:
             base = base.withColumn(
                 "tokens",
@@ -17275,26 +16413,13 @@ def z133_epoch_version_lifecycle(spark, sf_dir):
 
 @query(
     "z134_object_store_export",
-    r"""WITH t AS (
-  SELECT doc_id,
-    list_transform(regexp_extract_all(lower(text), '[a-z0-9]+'),
-      x -> CAST(length(x) AS BIGINT)) AS toks
-  FROM documents WHERE doc_id < 200
-    AND len(regexp_extract_all(lower(text), '[a-z0-9]+')) > 0),
+    _duck_length_ids("doc_id", "toks", 200) + r""",
 m AS (
   SELECT doc_id, toks,
     list_transform(toks, x -> x >= 4) AS msk,
-    CAST(CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR)
-      || 'z134'), 1, 8)) AS BIGINT) % 4 AS INT) AS shard
+    """ + _duck_md5_shard("doc_id", "z134", 4) + r"""
   FROM t)
-SELECT shard,
-  CAST(ROW_NUMBER() OVER (PARTITION BY shard ORDER BY doc_id) - 1
-    AS BIGINT) AS seq_index,
-  doc_id AS seq_id,
-  CAST(len(toks) AS BIGINT) AS n_tokens,
-  CAST(len(list_filter(msk, x -> x)) AS BIGINT) AS n_supervised,
-  toks AS tokens, msk AS loss_mask
-FROM m ORDER BY seq_id ASC""",
+""" + _DUCK_SEQ_ROWS,
     doc="OBJECT-STORAGE BINARY EXPORT (operators/binfs.py::"
     "ObjectStoreBinaryStore + the store= seam on every binshard"
     " entry point) — the r12 verdict's 'POSIX-only binary layer'"
@@ -17324,23 +16449,8 @@ def z134_object_store_export(spark, sf_dir):
         read_bin_shards,
         verify_bin_shards,
     )
-    from topn_spark.operators.textstats import tokens
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .where(F.col("doc_id") < 200)
-        .select(
-            "doc_id",
-            F.transform(
-                tokens("text"),
-                lambda t: F.length(t).cast("bigint"),
-            ).alias("tokens"),
-        )
-        .where(F.size("tokens") > 0)
-        .withColumn(
-            "loss_mask", F.transform("tokens", lambda t: t >= 4)
-        )
-    )
+    docs = _length_id_docs(spark, sf_dir, 200)
     root = f"/tmp/topn_z134_{os.path.basename(sf_dir.rstrip('/'))}"
     shutil.rmtree(root, ignore_errors=True)
     st = ObjectStoreBinaryStore(root)
@@ -17362,20 +16472,14 @@ def z134_object_store_export(spark, sf_dir):
 
 @query(
     "z135_preference_data_card",
-    r"""WITH t AS (
-  SELECT doc_id AS pair_id,
-    list_transform(regexp_extract_all(lower(text), '[a-z0-9]+'),
-      x -> CAST(length(x) AS BIGINT)) AS ct
-  FROM documents WHERE doc_id < 250
-    AND len(regexp_extract_all(lower(text), '[a-z0-9]+')) > 0),
+    _duck_length_ids("doc_id AS pair_id", "ct", 250) + r""",
 p AS (
   SELECT pair_id, ct,
     CAST(len(ct) AS BIGINT) AS cn,
     CAST(len(ct) + 1 AS BIGINT) AS rn,
     CAST(len(list_filter(ct, x -> x >= 4)) AS BIGINT) AS cs,
     CAST(1 + len(list_filter(ct, x -> x >= 3)) AS BIGINT) AS rs,
-    CAST(CAST(('0x' || substring(md5(CAST(pair_id AS VARCHAR)
-      || 'z135'), 1, 8)) AS BIGINT) % 4 AS INT) AS shard
+    """ + _duck_md5_shard("pair_id", "z135", 4) + r"""
   FROM t)
 SELECT
   CAST(COUNT(DISTINCT shard) AS BIGINT) AS n_shards,
@@ -17437,37 +16541,8 @@ def z135_preference_data_card(spark, sf_dir):
         export_epoch_order,
         export_preference_shards,
     )
-    from topn_spark.operators.textstats import tokens
 
-    pairs = (
-        load_table(spark, sf_dir, "documents")
-        .where(F.col("doc_id") < 250)
-        .select(
-            F.col("doc_id").alias("pair_id"),
-            F.transform(
-                tokens("text"),
-                lambda t: F.length(t).cast("bigint"),
-            ).alias("chosen_tokens"),
-        )
-        .where(F.size("chosen_tokens") > 0)
-        .withColumn(
-            "rejected_tokens",
-            F.concat(
-                F.array(F.lit(5).cast("bigint")),
-                F.transform(
-                    "chosen_tokens", lambda t: F.least(t, F.lit(9))
-                ),
-            ),
-        )
-        .withColumn(
-            "chosen_mask",
-            F.transform("chosen_tokens", lambda t: t >= 4),
-        )
-        .withColumn(
-            "rejected_mask",
-            F.transform("rejected_tokens", lambda t: t >= 3),
-        )
-    )
+    pairs = _preference_pairs(spark, sf_dir)
     out = f"/tmp/topn_z135_{os.path.basename(sf_dir.rstrip('/'))}"
     shutil.rmtree(out, ignore_errors=True)
     export_preference_shards(pairs, out, 4, salt="z135")
@@ -17628,34 +16703,13 @@ def z136_streaming_bootstrap_ci(spark, sf_dir):
 
 @query(
     "z137_streaming_preference_maintenance",
-    r"""WITH t AS (
-  SELECT doc_id AS pair_id,
-    list_transform(regexp_extract_all(lower(text), '[a-z0-9]+'),
-      x -> CAST(length(x) AS BIGINT)) AS ct
-  FROM documents WHERE doc_id < 250
-    AND len(regexp_extract_all(lower(text), '[a-z0-9]+')) > 0),
-p AS (
-  SELECT pair_id, ct,
-    list_prepend(CAST(5 AS BIGINT),
-      list_transform(ct, x -> LEAST(x, CAST(9 AS BIGINT)))) AS rt,
-    list_transform(ct, x -> x >= 4) AS cm,
-    CAST(CAST(('0x' || substring(md5(CAST(pair_id AS VARCHAR)
-      || 'z137'), 1, 8)) AS BIGINT) % 5 AS INT) AS shard
-  FROM t),
-f AS (
-  SELECT *, list_transform(rt, x -> x >= 3) AS rm FROM p)
+    _duck_length_ids("doc_id AS pair_id", "ct", 250) + r""",
+""" + _duck_pair_sides("z137", 5) + r"""
 SELECT shard,
   CAST(ROW_NUMBER() OVER (PARTITION BY shard ORDER BY pair_id) - 1
     AS BIGINT) AS pair_index,
   pair_id,
-  CAST(len(ct) AS BIGINT) AS chosen_n_tokens,
-  CAST(len(rt) AS BIGINT) AS rejected_n_tokens,
-  CAST(len(list_filter(cm, x -> x)) AS BIGINT)
-    AS chosen_n_supervised,
-  CAST(len(list_filter(rm, x -> x)) AS BIGINT)
-    AS rejected_n_supervised,
-  ct AS chosen_tokens, rt AS rejected_tokens,
-  cm AS chosen_mask, rm AS rejected_mask
+""" + _DUCK_PAIR_ROWS + r"""
 FROM f ORDER BY pair_id ASC""",
     doc="STREAMING PREFERENCE SHARD MAINTENANCE (streaming/"
     "ingest.py::preference_bin_export_batch, attached with"
@@ -17688,41 +16742,11 @@ def z137_streaming_preference_maintenance(spark, sf_dir):
     import shutil
 
     from topn_spark.operators.binshard import read_preference_shards
-    from topn_spark.operators.textstats import tokens
     from topn_spark.streaming.ingest import (
         preference_bin_export_batch,
     )
 
-    d = F.col("doc_id")
-    pairs = (
-        load_table(spark, sf_dir, "documents")
-        .where(d < 250)
-        .select(
-            d.alias("pair_id"),
-            F.transform(
-                tokens("text"),
-                lambda t: F.length(t).cast("bigint"),
-            ).alias("chosen_tokens"),
-        )
-        .where(F.size("chosen_tokens") > 0)
-        .withColumn(
-            "rejected_tokens",
-            F.concat(
-                F.array(F.lit(5).cast("bigint")),
-                F.transform(
-                    "chosen_tokens", lambda t: F.least(t, F.lit(9))
-                ),
-            ),
-        )
-        .withColumn(
-            "chosen_mask",
-            F.transform("chosen_tokens", lambda t: t >= 4),
-        )
-        .withColumn(
-            "rejected_mask",
-            F.transform("rejected_tokens", lambda t: t >= 3),
-        )
-    )
+    pairs = _preference_pairs(spark, sf_dir)
     base = f"/tmp/topn_z137_{os.path.basename(sf_dir.rstrip('/'))}"
     corpus, out = f"{base}_store", f"{base}_out"
     shutil.rmtree(corpus, ignore_errors=True)
@@ -17738,42 +16762,13 @@ def z137_streaming_preference_maintenance(spark, sf_dir):
 
 @query(
     "z138_trainer_cursor_resume",
-    r"""WITH t AS (
-  SELECT doc_id,
-    list_transform(regexp_extract_all(lower(text), '[a-z0-9]+'),
-      x -> CAST(length(x) AS BIGINT)) AS toks
-  FROM documents WHERE doc_id < 200
-    AND len(regexp_extract_all(lower(text), '[a-z0-9]+')) > 0),
+    _duck_length_ids("doc_id", "toks", 200) + r""",
 m AS (
   SELECT doc_id AS seq_id, toks,
     list_transform(toks, x -> x >= 4) AS msk,
-    CAST(CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR)
-      || 'z138'), 1, 8)) AS BIGINT) % 4 AS INT) AS shard
+    """ + _duck_md5_shard("doc_id", "z138", 4) + r"""
   FROM t),
-ix AS (
-  SELECT *,
-    CAST(ROW_NUMBER() OVER (PARTITION BY shard ORDER BY seq_id) - 1
-      AS BIGINT) AS seq_index
-  FROM m),
-pos AS (
-  SELECT *,
-    CAST(ROW_NUMBER() OVER (PARTITION BY shard ORDER BY
-      md5('0:' || CAST(shard AS VARCHAR) || ':'
-        || CAST(seq_index AS VARCHAR) || 'z138e'),
-      seq_index) - 1 AS BIGINT) AS position
-  FROM ix),
-sh AS (
-  SELECT shard, COUNT(*) AS n_seqs,
-    md5('0:' || CAST(shard AS VARCHAR) || 'z138e') AS skey
-  FROM pos GROUP BY shard),
-sp AS (
-  SELECT shard,
-    CAST(ROW_NUMBER() OVER (ORDER BY skey, shard) - 1 AS INT)
-      AS shard_pos,
-    CAST(COALESCE(SUM(n_seqs) OVER (ORDER BY skey, shard
-      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-      AS BIGINT) AS base
-  FROM sh)
+""" + _duck_epoch_order("seq", "m", 0, "z138e") + r"""
 SELECT base + position AS global_pos, shard, shard_pos, position,
   seq_index, seq_id,
   CAST(len(toks) AS BIGINT) AS n_tokens,
@@ -17817,23 +16812,8 @@ def z138_trainer_cursor_resume(spark, sf_dir):
         export_epoch_order,
         resume_bin_window,
     )
-    from topn_spark.operators.textstats import tokens
 
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .where(F.col("doc_id") < 200)
-        .select(
-            "doc_id",
-            F.transform(
-                tokens("text"),
-                lambda t: F.length(t).cast("bigint"),
-            ).alias("tokens"),
-        )
-        .where(F.size("tokens") > 0)
-        .withColumn(
-            "loss_mask", F.transform("tokens", lambda t: t >= 4)
-        )
-    )
+    docs = _length_id_docs(spark, sf_dir, 200)
     out = f"/tmp/topn_z138_{os.path.basename(sf_dir.rstrip('/'))}"
     shutil.rmtree(out, ignore_errors=True)
     export_bin_shards(docs, out, 4, id_col="doc_id", salt="z138")
@@ -17850,25 +16830,13 @@ def z138_trainer_cursor_resume(spark, sf_dir):
 
 @query(
     "z139_streaming_spec_maintenance",
-    r"""WITH t AS (
-  SELECT doc_id,
-    list_transform(regexp_extract_all(lower(text), '[a-z0-9]+'),
-      x -> CAST(length(x) AS BIGINT)) AS toks
-  FROM documents WHERE doc_id < 240
-    AND len(regexp_extract_all(lower(text), '[a-z0-9]+')) > 0),
+    _duck_length_ids("doc_id", "toks", 240) + r""",
 m AS (
   SELECT doc_id, toks,
     list_transform(toks, x -> x >= 4) AS msk,
     CAST(doc_id // 50 AS INT) AS shard
   FROM t)
-SELECT shard,
-  CAST(ROW_NUMBER() OVER (PARTITION BY shard ORDER BY doc_id) - 1
-    AS BIGINT) AS seq_index,
-  doc_id AS seq_id,
-  CAST(len(toks) AS BIGINT) AS n_tokens,
-  CAST(len(list_filter(msk, x -> x)) AS BIGINT) AS n_supervised,
-  toks AS tokens, msk AS loss_mask
-FROM m ORDER BY seq_id ASC""",
+""" + _DUCK_SEQ_ROWS,
     doc="SPEC-ADDRESSABLE STREAMING SHARD MAINTENANCE (pipelines.py"
     "::BinExportSink + run_streaming_pipeline ${batchId} binding) —"
     " the deploy-spec audience (the reference's ETLBatchConfig +"
