@@ -1578,3 +1578,132 @@ def test_table_signals_classes(spark):
     assert out[4].table_like and out[4].numeric_line_frac == 0.666667
     # empty and NULL keep NULL signals, observable
     assert out[5].table_like is None and out[6].digit_ratio is None
+
+
+def _canon_md5(df):
+    """md5 of a frame's canonical form: its column names in output
+    order, then its rows sorted by their JSON text."""
+    import hashlib
+    import json
+
+    rows = sorted(json.dumps(list(r)) for r in df.collect())
+    return hashlib.md5(
+        json.dumps([df.columns, rows]).encode()
+    ).hexdigest()
+
+
+def test_tokenizer_application_pinned(spark):
+    """Row-level pins of everything that applies the engine word rule
+    or a trained tokenizer: ``apply_bpe`` in every mode and
+    ``keep_tokens`` shape, ``apply_unigram_lm`` in both modes, the
+    three subtoken mask expanders, and the shingle / rolling-hash /
+    SimHash / md5 MinHash operators on one small frame (NULL, empty,
+    accented, CJK and near-duplicate documents)."""
+    import pandas as pd
+
+    from topn_spark.operators.dedup import lsh_pairs_md5, shingles, simhash
+    from topn_spark.operators.sft import bpe_loss_mask, unigram_loss_mask
+    from topn_spark.operators.textstats import (
+        apply_bpe,
+        apply_unigram_lm,
+        rolling_hashes,
+    )
+
+    # frames built from pandas go through Arrow: a frame built from a
+    # Python list is a Python RDD, and every job over it pays a
+    # Python-worker pass per partition
+    docs = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "doc_id": range(1, 8),
+                "text": [
+                    "The lower low lowest newer newest wider wides",
+                    "Café naïve résumé — straße ÉTÉ 東京 low",
+                    None,
+                    "",
+                    "the lower low lowest newer newest widest wides",
+                    "THE LOWER, low; lowest newer newest wider wides!",
+                    "Zebra 42 zebras 42x, x42 café",
+                ],
+            }
+        ),
+        "doc_id long, text string",
+    )
+    merges = [
+        ("l", "o"), ("lo", "w"), ("e", "r"), ("e", "s"), ("es", "t"),
+        ("n", "e"), ("ne", "w"), ("Ã", "©"), ("c", "a"), ("ca", "f"),
+    ]
+    pieces = [
+        ("low", -1.0), ("er", -1.5), ("est", -2.0), ("new", -1.2),
+        ("l", -3.0), ("o", -3.0), ("w", -3.0), ("e", -3.0),
+        ("r", -3.0), ("s", -3.2), ("t", -3.1), ("é", -2.5),
+        ("caf", -1.7),
+    ]
+    got = {}
+    for mode in ("ascii", "unicode", "byte"):
+        for keep in (0, 2, -1):
+            got[f"bpe_{mode}_{keep}"] = _canon_md5(
+                apply_bpe(docs, merges, keep_tokens=keep, mode=mode)
+            )
+    for mode in ("ascii", "unicode"):
+        got[f"unigram_{mode}"] = _canon_md5(
+            apply_unigram_lm(docs, pieces, keep_tokens=-1, mode=mode)
+        )
+
+    convs = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "conv_id": range(1, 6),
+                "tokens": [
+                    ["<user>", "lowest", "café"],
+                    ["newer", "widest"],
+                    None,
+                    ["misaligned"],
+                    [],
+                ],
+                "loss_mask": [
+                    [False, True, True],
+                    [True, False],
+                    None,
+                    [True, False],
+                    [],
+                ],
+            }
+        ),
+        "conv_id long, tokens array<string>, loss_mask array<boolean>",
+    )
+    for mode in ("byte", "char"):
+        got[f"bpe_mask_{mode}"] = _canon_md5(
+            bpe_loss_mask(convs, merges, mode=mode)
+        )
+    got["unigram_mask"] = _canon_md5(unigram_loss_mask(convs, pieces))
+
+    got["shingles"] = _canon_md5(
+        docs.select(
+            "doc_id",
+            shingles("text").alias("sh"),
+            shingles("text", 2).alias("sh2"),
+            rolling_hashes("text", window=3, every=2).alias("rh"),
+        )
+    )
+    got["simhash"] = _canon_md5(simhash(docs))
+    got["lsh_pairs_md5"] = _canon_md5(lsh_pairs_md5(docs))
+    assert got == {
+        "bpe_ascii_0": "f33a3fad61986e6864eddc15871b2c0b",
+        "bpe_ascii_2": "6446af5c18e271f0c799118b0dff7652",
+        "bpe_ascii_-1": "e26c5486342105e08cc99f413f068bfb",
+        "bpe_unicode_0": "0251878f5b611ceefd09abbc34032070",
+        "bpe_unicode_2": "cd22f095085ddeba2afa54e2bc3bbe7a",
+        "bpe_unicode_-1": "830eeb4c07270cf1fa2c18a0d5cb29d9",
+        "bpe_byte_0": "db72280bc1e3f6c021cb8f57fc64e6c3",
+        "bpe_byte_2": "82cc39e9a1c15d0a024ee11bb439b738",
+        "bpe_byte_-1": "22164096a92300ca5f7001cc07a3fbba",
+        "unigram_ascii": "88eea08fdca8c6fceea2dc0eecb0768f",
+        "unigram_unicode": "40ab4d613b93306e30eb01d45393c7f3",
+        "bpe_mask_byte": "0fc237ec1dbab1950a601145274396ab",
+        "bpe_mask_char": "c04ec76ec97389792d9e4f9bea498a8d",
+        "unigram_mask": "05b6380f29eb597e9342fee18c2918d4",
+        "shingles": "48556a456506b0f732ba80454a31ea16",
+        "simhash": "92f39f5e82aaadedfc9d5b8d6b2deff4",
+        "lsh_pairs_md5": "a0dde5f615ac831de3396fbc80d08768",
+    }
