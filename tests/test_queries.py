@@ -150,7 +150,7 @@ def test_catalog_text_pinned():
         )).encode())
     assert len(QUERIES) == 301
     assert h.hexdigest() == (
-        "4a7a94e653e98e14fed709354a3cf3bca7814532fc696f1359fda569c04dcb22"
+        "7ed5491d026c4d9923d643aa92322f171fa1813a6dcc83d7cbfb091527be1270"
     )
 
 

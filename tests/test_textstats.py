@@ -1707,3 +1707,46 @@ def test_tokenizer_application_pinned(spark):
         "simhash": "92f39f5e82aaadedfc9d5b8d6b2deff4",
         "lsh_pairs_md5": "a0dde5f615ac831de3396fbc80d08768",
     }
+
+
+def test_text_primitives_live_once():
+    """The engine word rule, its SQL builder, the byte render and the
+    input-spread helper each live once; textstats owns the tokenizer
+    primitives, so dedup imports them at module top and textstats
+    imports nothing from dedup. Pinned structurally so a re-grown
+    copy or import cycle turns the suite red."""
+    import ast
+    import re
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parent.parent / "topn_spark"
+    ops = {p.name: p.read_text() for p in (pkg / "operators").glob("*.py")}
+    every = {
+        p: p.read_text() for p in pkg.rglob("*.py")
+    }
+
+    def count(pattern, sources):
+        return sum(len(re.findall(pattern, s)) for s in sources)
+
+    assert count(r"(?m)^TOKEN_RE =", ops.values()) == 1
+    assert count(re.escape("regexp_extract_all(lower("), ops.values()) == 1
+    assert count(re.escape('"ISO-8859-1"'), ops.values()) == 1
+    defs = [p.name for p, s in every.items() if "def ensure_parallelism(" in s]
+    assert defs == ["plans.py"]
+    assert not any("_portable_minhash_pairs" in s for s in every.values())
+
+    def imports_from(tree, module):
+        return [
+            n for n in ast.walk(tree)
+            if isinstance(n, ast.ImportFrom) and n.module == module
+        ]
+
+    textstats = ast.parse(ops["textstats.py"])
+    assert not imports_from(textstats, "topn_spark.operators.dedup")
+    dedup = ast.parse(ops["dedup.py"])
+    for fn in ast.walk(dedup):
+        if isinstance(fn, ast.FunctionDef):
+            assert not imports_from(fn, "topn_spark.operators.textstats"), (
+                fn.name
+            )
+    assert imports_from(dedup, "topn_spark.operators.textstats")

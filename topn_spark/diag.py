@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from topn_spark.plans import ensure_parallelism
+
 
 def key_skew_profile(df: DataFrame, cols: list[str], k: int = 20) -> DataFrame:
     """Top-``k`` heaviest key values of ``cols`` with their share of
@@ -67,8 +69,6 @@ def profile_table(
     profiling wants the sketch; the exact form exists to be
     oracle-comparable.
     """
-    from topn_spark.operators.dedup import ensure_parallelism
-
     cols = cols or df.columns
     # The wide aggregate's heavy half is the map-side pass (with
     # exact NDVs the Expand multiplies every row by len(cols)+1

@@ -17,32 +17,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-TOKEN_RE = "[a-z0-9]+"
-
-
-def _tokens(text_col: str):
-    return F.expr(f"regexp_extract_all(lower({text_col}), '{TOKEN_RE}', 0)")
-
-
-def ensure_parallelism(df: DataFrame) -> DataFrame:
-    """Spread a low-partition-count input across the cluster before
-    CPU-heavy per-row work (tokenize/shingle/hash).
-
-    A small dimension-sized table often arrives as 1-2 parquet splits;
-    hashing 10⁶ shingles on one core wastes the other 31. The
-    repartition shuffle costs only the raw rows — cheap relative to
-    the per-shingle hashing it parallelizes. At 100 TB inputs arrive
-    as thousands of splits and this is a no-op.
-    """
-    target = df.sparkSession.sparkContext.defaultParallelism
-    # Partition count via the JVM query execution (as plans.py reads
-    # plans) — df.rdd would wrap the plan in a Python-serialized RDD
-    # just to read a count off it.
-    n_parts = df._jdf.queryExecution().toRdd().getNumPartitions()
-    if n_parts < target:
-        return df.repartition(target)
-    return df
-
+from topn_spark.operators.textstats import (
+    _token_sql,
+    ngrams_from_tokens,
+    shingles,
+    tokens,
+)
+from topn_spark.plans import ensure_parallelism
 
 def dedup_exact(
     df: DataFrame,
@@ -70,29 +51,6 @@ def dedup_exact(
         df.withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)
         .drop("_rn")
-    )
-
-
-def shingles(text_col: str, n: int = 3):
-    """Word n-gram shingle array (distinct), as a Catalyst expression.
-
-    Docs with fewer than ``n`` tokens yield an empty array (guarded:
-    ``sequence(1, 0)`` would otherwise produce a *descending* [1,0]).
-
-    The tokenizer result is BOUND once as a lambda variable (the
-    single-element ``transform(array(toks), t -> ...)`` trick): a
-    higher-order-function lambda re-evaluates every outer
-    subexpression it references per element, so inlining ``toks``
-    into the per-position ``slice`` re-ran the regexp tokenizer once
-    per shingle position — O(tokens²) regexp work per document,
-    measured 6× slower on the shingle-heavy entries (r14).
-    """
-    toks = f"regexp_extract_all(lower({text_col}), '{TOKEN_RE}', 0)"
-    return F.expr(
-        f"transform(array({toks}), t -> if(size(t) >= {n},"
-        f" array_distinct(transform(sequence(1, size(t) - {n - 1}),"
-        f" i -> concat_ws(' ', slice(t, i, {n})))),"
-        f" array()))[0]"
     )
 
 
@@ -353,7 +311,7 @@ def simhash(
     Near-dups are pairs within small Hamming distance — bucket by
     rotating bit blocks for search.
     """
-    toks = f"regexp_extract_all(lower({text_col}), '{TOKEN_RE}', 0)"
+    toks = _token_sql(text_col)
     hashed = ensure_parallelism(df.select(id_col, text_col)).select(
         id_col, F.expr(f"transform({toks}, t -> xxhash64(t))").alias("_hs")
     )
@@ -602,17 +560,10 @@ def lsh_pairs_md5(
             f"num_hashes ({num_hashes}) must divide into bands ({bands})"
         )
     rows = num_hashes // bands
-    toks = f"regexp_extract_all(lower({text_col}), '[a-z0-9]+', 0)"
-    # tokens bound once via transform(array(...)) — an inlined toks
-    # inside the slice lambda re-runs the regexp per position (r14)
-    sh = (
-        f"transform(array({toks}), t -> if(size(t) >= {shingle_size},"
-        f" transform(sequence(1, size(t) - {shingle_size - 1}),"
-        f" i -> concat_ws(' ', slice(t, i, {shingle_size}))),"
-        f" array()))[0]"
-    )
+    # distinct shingles: a min over the set equals the min over the
+    # bag, so the slots match a plain shingle list
     exploded = ensure_parallelism(df.select(id_col, text_col)).select(
-        id_col, F.explode(F.expr(sh)).alias("_s")
+        id_col, F.explode(shingles(text_col, shingle_size)).alias("_s")
     )
     # one materialization of the signatures feeds three consumers
     # (banding + both similarity sides), exactly as in
@@ -736,8 +687,6 @@ def eval_gram_digests(
     micro-batch of a stream (see
     ``streaming.ingest.decontam_corpus_sink``): the gram build is the
     only eval-side work, and it never changes between batches."""
-    from topn_spark.operators.textstats import ngrams_from_tokens, tokens
-
     if n < 1:
         raise ValueError(f"n must be >= 1, got {n}")
     return (
@@ -802,11 +751,6 @@ def ngram_decontaminate(
     precomputed :func:`eval_gram_digests` frame (column
     ``gram_hash``) — pass it when one benchmark gates many corpora
     or a stream, so the gram set is built (and persisted) once."""
-    from topn_spark.operators.textstats import (
-        ngrams_from_tokens,
-        tokens,
-    )
-
     if n < 1:
         raise ValueError(f"n must be >= 1, got {n}")
     if action not in ("flag", "drop"):
@@ -896,11 +840,6 @@ def contamination_report(
     ``(doc, benchmark)`` count agg feeds one benchmark-level agg —
     the z58 shape with a benchmark key riding through the join.
     """
-    from topn_spark.operators.textstats import (
-        ngrams_from_tokens,
-        tokens,
-    )
-
     if n < 1:
         raise ValueError(f"n must be >= 1, got {n}")
     if min_hits < 1:
@@ -1139,7 +1078,7 @@ def split_doc_pairs(
     boundary (every page of a site sharing the same footer opening)
     is a hot join key — AQE skew territory, same as dedup_lineage.
     """
-    toks = _tokens(text_col)
+    toks = tokens(text_col)
     head = F.when(
         F.size(toks) >= int(k),
         F.md5(F.array_join(F.slice(toks, 1, int(k)), " ")),

@@ -26,7 +26,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from topn_spark.operators.textstats import token_count, tokens
+from topn_spark.operators.textstats import (
+    add_quality,
+    ngrams_from_tokens,
+    shingles,
+    token_count,
+    tokens,
+)
+from topn_spark.plans import ensure_parallelism
 
 __all__ = [
     "assign_split",
@@ -1042,10 +1049,6 @@ def contamination_check(
     thousands of docs, not billions) — mark it broadcast so the 100 TB
     training side never shuffles: the probe is map-side.
     """
-    from topn_spark.operators.textstats import ngrams_from_tokens, tokens
-
-    from topn_spark.operators.dedup import ensure_parallelism
-
     def grams(df: DataFrame, *cols: str) -> DataFrame:
         # tokens bound in their own projection — see
         # ngrams_from_tokens's perf note on lambda re-evaluation
@@ -1386,8 +1389,6 @@ def chunk_by_tokens(
     """
     if overlap >= size:
         raise ValueError(f"overlap ({overlap}) must be < size ({size})")
-    from topn_spark.operators.dedup import ensure_parallelism
-
     step = size - overlap
     base = ensure_parallelism(df).withColumn("_toks", tokens(text_col))
     starts = F.expr(f"sequence(1, greatest(size(_toks), 1), {step})")
@@ -2543,8 +2544,6 @@ def corpus_report(
     Scale shape: ONE wide aggregate over a per-doc feature projection
     (count/sum/distinct-hash/percentile all in the same pass) plus a
     lang-keyed count agg — two scans; union of model-sized rows."""
-    from topn_spark.operators.textstats import add_quality, token_count
-
     feats = add_quality(
         df.withColumn("_nt", token_count(text_col)), text_col
     )
@@ -2640,8 +2639,6 @@ def corpus_overlap_estimate(
     subtraction when the true overlap is small — size ``lgk``
     accordingly and treat near-zero intersections as "run the exact
     check"."""
-    from topn_spark.operators.dedup import shingles
-
     def _sk(df, name):
         # non-foldable constant key: the one-row x one-row attach
         # plans as a broadcast HASH join, not a nested-loop rescans

@@ -30,6 +30,14 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from topn_spark.operators.textstats import (
+    PII_PATTERNS,
+    _byte_render,
+    _unigram_viterbi,
+    bpe_encode_word,
+    shingles,
+)
+
 __all__ = [
     "CHAT_TEMPLATES",
     "render_chat",
@@ -235,8 +243,6 @@ def redact_conversation(
     ``regexp_extract_all`` sizes summed with ``aggregate`` — all
     over one projection-bound message array, map-only.
     """
-    from topn_spark.operators.textstats import PII_PATTERNS
-
     b = df.withColumn("_rp_m", F.col(messages_col))
     m = F.col("_rp_m")
 
@@ -705,8 +711,6 @@ def bpe_loss_mask(
     as a closure (model-sized) — map-only, embarrassingly parallel,
     Python work linear in characters; there is no SQL-expressible
     merge walk, which is exactly why this is the UDF tier."""
-    from topn_spark.operators.textstats import bpe_encode_word
-
     if mode not in ("byte", "char"):
         raise ValueError(f"unknown mode {mode!r} (byte|char)")
     ranks = {tuple(p): i for i, p in enumerate(merges)}
@@ -744,10 +748,7 @@ def _expand_subtoken_mask(
     )
     toks = F.col(tokens_col)
     if byte_render:
-        toks = F.transform(
-            toks,
-            lambda w: F.decode(F.encode(w, "UTF-8"), "ISO-8859-1"),
-        )
+        toks = F.transform(toks, _byte_render)
     src = df.select(
         F.col(id_col), toks.alias("_w"), F.col(mask_col).alias("_m")
     )
@@ -818,8 +819,6 @@ def unigram_loss_mask(
     Scale shape: one Arrow mapInPandas pass, piece table as a
     closure — map-only; the DP is O(chars × max_piece_len) per
     unit, the tokenizer-service cost class."""
-    from topn_spark.operators.textstats import _unigram_viterbi
-
     logp = dict(pieces)
     max_len = max((len(p) for p in logp), default=1)
     return _expand_subtoken_mask(
@@ -1508,8 +1507,6 @@ def prompt_echo_score(
     echo is a row-local property). Mirrors into DuckDB list ops
     (z105).
     """
-    from topn_spark.operators.dedup import shingles
-
     pg = shingles(prompt_col, n)
     rg = shingles(response_col, n)
     both = F.col(prompt_col).isNotNull() & F.col(

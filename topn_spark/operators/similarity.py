@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from topn_spark.operators.topn import topn_grouped
+from topn_spark.plans import ensure_parallelism
 
 
 def _lit_d(x: float) -> str:
@@ -413,7 +414,6 @@ def edit_distance_join(
         f" i -> xxhash64(concat(substr({text_col}, 1, i - 1),"
         f" substr({text_col}, i + 1)))))"
     )
-    from topn_spark.operators.dedup import ensure_parallelism
 
     # A dimension-sized input often arrives as ONE parquet split, and
     # the deletion-neighborhood explode multiplies rows ×(len+1) —

@@ -12,8 +12,11 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from topn_spark.operators.dedup import shingles
+from topn_spark.plans import ensure_parallelism
 
+#: The engine word rule: lowercase, then runs of ``[a-z0-9]``. Its SQL
+#: form is :func:`_token_sql`; in Python it is
+#: ``re.findall(TOKEN_RE, text.lower())``.
 TOKEN_RE = "[a-z0-9]+"
 
 #: Unicode-aware token rule: letters + numbers in any script. The
@@ -38,6 +41,13 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
 }
 
 
+def _token_sql(text_col: str) -> str:
+    """SQL text of the engine word rule over ``text_col`` — for
+    callers that bind the token array inside a larger SQL expression
+    (shingles, rolling hashes, SimHash)."""
+    return f"regexp_extract_all(lower({text_col}), '{TOKEN_RE}', 0)"
+
+
 def tokens(text_col: str = "text", mode: str = "ascii") -> Column:
     """Token array under the engine token rule. ``mode="ascii"`` is
     the historical ``[a-z0-9]+`` rule (fast, Latin-only — non-Latin
@@ -56,9 +66,7 @@ def tokens(text_col: str = "text", mode: str = "ascii") -> Column:
     oracle parity through the DuckDB dialect pair is the contract
     here)."""
     if mode == "ascii":
-        return F.expr(
-            f"regexp_extract_all(lower({text_col}), '{TOKEN_RE}', 0)"
-        )
+        return F.expr(_token_sql(text_col))
     if mode == "unicode":
         # F.lit avoids SQL-literal backslash escaping of \p{L}
         return F.regexp_extract_all(
@@ -308,7 +316,7 @@ def _gopher_repetition_signals(text):
     fdl, fdlc = _dup_stats(lines)
     fdp, fdpc = _dup_stats(paras)
 
-    toks = re.findall("[a-z0-9]+", text.lower())
+    toks = re.findall(TOKEN_RE, text.lower())
     total_chars = sum(len(t) for t in toks)
     out = [fdl, fdp, fdlc, fdpc]
 
@@ -930,6 +938,28 @@ def ngrams_from_tokens(tok_col: str, n: int = 2) -> Column:
     )
 
 
+def shingles(text_col: str, n: int = 3):
+    """Word n-gram shingle array (distinct), as a Catalyst expression.
+
+    Docs with fewer than ``n`` tokens yield an empty array (guarded:
+    ``sequence(1, 0)`` would otherwise produce a *descending* [1,0]).
+
+    The tokenizer result is BOUND once as a lambda variable (the
+    single-element ``transform(array(toks), t -> ...)`` trick): a
+    higher-order-function lambda re-evaluates every outer
+    subexpression it references per element, so inlining ``toks``
+    into the per-position ``slice`` re-ran the regexp tokenizer once
+    per shingle position — O(tokens²) regexp work per document,
+    measured 6× slower on the shingle-heavy entries (r14).
+    """
+    return F.expr(
+        f"transform(array({_token_sql(text_col)}), t -> if(size(t) >= {n},"
+        f" array_distinct(transform(sequence(1, size(t) - {n - 1}),"
+        f" i -> concat_ws(' ', slice(t, i, {n})))),"
+        f" array()))[0]"
+    )
+
+
 def add_repetition_signals(
     df: DataFrame, text_col: str = "text", n: int = 2
 ) -> DataFrame:
@@ -946,8 +976,6 @@ def add_repetition_signals(
     materialized in their own projections (see
     :func:`ngrams_from_tokens`'s perf note).
     """
-    from topn_spark.operators.dedup import ensure_parallelism
-
     df = (
         ensure_parallelism(df)
         .withColumn("_toks", tokens(text_col))
@@ -1128,7 +1156,7 @@ def rolling_hashes(
     """Winnowing-style rolling fingerprints: xxhash64 of each
     ``window``-token shingle sampled every ``every`` tokens — the
     standard document-fingerprint set for partial-overlap detection."""
-    t = f"regexp_extract_all(lower({text_col}), '{TOKEN_RE}', 0)"
+    t = _token_sql(text_col)
     # tokens bound once via transform(array(...)) — an inlined t
     # inside the slice lambda re-runs the regexp per position (r14)
     return F.expr(
@@ -1478,8 +1506,6 @@ def _remove_repeated_windows(
         raise ValueError(f"keep must be 'first' or 'none', got {keep!r}")
     from pyspark.sql.window import Window
 
-    from topn_spark.operators.dedup import ensure_parallelism
-
     toks = (
         ensure_parallelism(df)
         .select(F.col(id_col).alias("_id"), units.alias("_toks"))
@@ -1604,19 +1630,55 @@ def apply_bpe(
     to total characters, same as any tokenizer service; there is no
     SQL-expressible equivalent, which is exactly why this is a UDF.
     """
-    ranks = {tuple(p): i for i, p in enumerate(merges)}
-    token_re = __import__("re").compile(TOKEN_RE)
-    idt = df.schema[id_col].dataType.simpleString()
-    out_cols = f"{id_col} {idt}, n_words long, n_bpe_tokens long"
-    if keep_tokens:
-        out_cols += ", tokens array<string>"
     if mode not in ("ascii", "unicode", "byte"):
         raise ValueError(
             f"unknown token mode {mode!r} (ascii|unicode|byte)"
         )
+    ranks = {tuple(p): i for i, p in enumerate(merges)}
+    return _encode_words(
+        df,
+        lambda w: bpe_encode_word(w, ranks),
+        id_col,
+        text_col,
+        keep_tokens,
+        mode,
+        count_col="n_bpe_tokens",
+    )
 
-    def _encode_word(word):
-        return bpe_encode_word(word, ranks)
+
+def _byte_render(word):
+    """A word's UTF-8 bytes rendered as latin-1 characters, JVM-side:
+    the bijective byte <-> U+0000..U+00FF map that byte-level BPE
+    (GPT-2) uses as its closed base alphabet."""
+    return F.decode(F.encode(word, "UTF-8"), "ISO-8859-1")
+
+
+def _encode_words(
+    df: DataFrame,
+    encode,
+    id_col: str,
+    text_col: str,
+    keep_tokens: int,
+    mode: str,
+    count_col: str,
+) -> DataFrame:
+    """Shared Arrow pass of the word-level tokenizer appliers
+    (:func:`apply_bpe`, :func:`apply_unigram_lm`): split each document
+    under the word rule of ``mode``, encode every word with
+    ``encode``, and emit ``(id, n_words, <count_col>)`` plus
+    ``tokens`` (the first ``keep_tokens`` subwords; -1 keeps all).
+    ``mode="ascii"`` splits in the UDF — identical semantics, one
+    narrow string column into Arrow instead of a token array;
+    ``"unicode"`` splits in Catalyst (Python's ``re`` lacks the
+    property classes); ``"byte"`` is the unicode split with each word
+    byte-rendered (:func:`_byte_render`)."""
+    import re
+
+    token_re = re.compile(TOKEN_RE)
+    idt = df.schema[id_col].dataType.simpleString()
+    out_cols = f"{id_col} {idt}, n_words long, {count_col} long"
+    if keep_tokens:
+        out_cols += ", tokens array<string>"
 
     def _run(it):
         import pandas as pd
@@ -1624,18 +1686,24 @@ def apply_bpe(
         for pdf in it:
             if not len(pdf):
                 continue
-            ids, nw, nt, toks = [], [], [], []
-            for did, words in zip(pdf[id_col], pdf["_words"]):
+            if mode == "ascii":
+                docs = [
+                    token_re.findall((t or "").lower())
+                    for t in pdf[text_col]
+                ]
+            else:
+                docs = pdf["_words"]
+            nw, nt, toks = [], [], []
+            for words in docs:
                 pieces = []
                 n = 0
                 for w in words:
-                    enc = _encode_word(w)
+                    enc = encode(w)
                     n += len(enc)
                     if keep_tokens and (
                         keep_tokens < 0 or len(pieces) < keep_tokens
                     ):
                         pieces.extend(enc)
-                ids.append(did)
                 nw.append(len(words))
                 nt.append(n)
                 if keep_tokens:
@@ -1643,40 +1711,18 @@ def apply_bpe(
                         pieces if keep_tokens < 0
                         else pieces[:keep_tokens]
                     )
-            data = {id_col: ids, "n_words": nw, "n_bpe_tokens": nt}
+            data = {id_col: list(pdf[id_col]), "n_words": nw, count_col: nt}
             if keep_tokens:
                 data["tokens"] = toks
             yield pd.DataFrame(data)
 
     if mode == "ascii":
-        # in-UDF split: identical semantics, one narrow string column
-        # into Arrow instead of a token array
-        def _tok_run(it):
-            import pandas as pd
-
-            for pdf in it:
-                if not len(pdf):
-                    continue
-                pdf = pdf.copy()
-                pdf["_words"] = [
-                    token_re.findall((t or "").lower())
-                    for t in pdf[text_col]
-                ]
-                yield from _run(iter([pdf]))
-
-        return df.select(id_col, text_col).mapInPandas(
-            _tok_run, out_cols
-        )
-    toks = tokens(text_col, "unicode" if mode == "byte" else mode)
+        return df.select(id_col, text_col).mapInPandas(_run, out_cols)
+    words = tokens(text_col, "unicode" if mode == "byte" else mode)
     if mode == "byte":
-        # byte-render JVM-side (UTF-8 bytes as latin-1 chars) so the
-        # UDF's merge walk stays mode-agnostic symbol pushing
-        toks = F.transform(
-            toks,
-            lambda w: F.decode(F.encode(w, "UTF-8"), "ISO-8859-1"),
-        )
+        words = F.transform(words, _byte_render)
     words_col = F.coalesce(
-        toks, F.array().cast("array<string>")
+        words, F.array().cast("array<string>")
     ).alias("_words")
     return df.select(id_col, words_col).mapInPandas(_run, out_cols)
 
@@ -2057,11 +2103,7 @@ def bpe_train(
         ).alias("word")
     )
     if mode == "byte":
-        base = base.select(
-            F.decode(F.encode("word", "UTF-8"), "ISO-8859-1").alias(
-                "word"
-            )
-        )
+        base = base.select(_byte_render("word").alias("word"))
     words = (
         base
         .groupBy("word")
@@ -2104,7 +2146,7 @@ def bpe_train(
             int(n_vocab // 100_000) + 1,
         ),
     )
-    # partition count via the JVM handle (dedup.ensure_parallelism's
+    # partition count via the JVM handle (plans.ensure_parallelism's
     # rationale: .rdd would wrap the plan just to read a number)
     if parts < words._jdf.queryExecution().toRdd().getNumPartitions():
         compact = words.repartition(parts).persist()
@@ -2552,65 +2594,15 @@ def apply_unigram_lm(
         raise ValueError(f"unknown token mode {mode!r} (ascii|unicode)")
     logp = dict(pieces)
     max_len = max((len(p) for p in logp), default=1)
-    token_re = __import__("re").compile(TOKEN_RE)
-    idt = df.schema[id_col].dataType.simpleString()
-    out_cols = f"{id_col} {idt}, n_words long, n_lm_tokens long"
-    if keep_tokens:
-        out_cols += ", tokens array<string>"
-
-    def _run(it):
-        import pandas as pd
-
-        for pdf in it:
-            if not len(pdf):
-                continue
-            ids, nw, nt, toks = [], [], [], []
-            for did, ws in zip(pdf[id_col], pdf["_words"]):
-                pieces_out = []
-                n = 0
-                for w in ws:
-                    enc = _unigram_viterbi(w, logp, max_len)
-                    n += len(enc)
-                    if keep_tokens and (
-                        keep_tokens < 0
-                        or len(pieces_out) < keep_tokens
-                    ):
-                        pieces_out.extend(enc)
-                ids.append(did)
-                nw.append(len(ws))
-                nt.append(n)
-                if keep_tokens:
-                    toks.append(
-                        pieces_out if keep_tokens < 0
-                        else pieces_out[:keep_tokens]
-                    )
-            data = {id_col: ids, "n_words": nw, "n_lm_tokens": nt}
-            if keep_tokens:
-                data["tokens"] = toks
-            yield pd.DataFrame(data)
-
-    if mode == "ascii":
-
-        def _tok_run(it):
-            import pandas as pd
-
-            for pdf in it:
-                if not len(pdf):
-                    continue
-                pdf = pdf.copy()
-                pdf["_words"] = [
-                    token_re.findall((t or "").lower())
-                    for t in pdf[text_col]
-                ]
-                yield from _run(iter([pdf]))
-
-        return df.select(id_col, text_col).mapInPandas(
-            _tok_run, out_cols
-        )
-    words_col = F.coalesce(
-        tokens(text_col, mode), F.array().cast("array<string>")
-    ).alias("_words")
-    return df.select(id_col, words_col).mapInPandas(_run, out_cols)
+    return _encode_words(
+        df,
+        lambda w: _unigram_viterbi(w, logp, max_len),
+        id_col,
+        text_col,
+        keep_tokens,
+        mode,
+        count_col="n_lm_tokens",
+    )
 
 
 def save_unigram_lm(

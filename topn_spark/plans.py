@@ -1,5 +1,6 @@
 """Plan-inspection helpers: the engine's performance contract is
-asserted, not hoped for.
+asserted, not hoped for. Also home of :func:`ensure_parallelism`, which
+the operators call to spread a small input before CPU-heavy work.
 
 Used by tests/test_plans.py to pin the physical shapes that matter at
 100 TB: filters pushed into scans, column pruning, broadcast joins on
@@ -10,6 +11,25 @@ whole-stage codegen coverage.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+
+
+def ensure_parallelism(df: DataFrame) -> DataFrame:
+    """Spread a low-partition-count input across the cluster before
+    CPU-heavy per-row work (tokenize/shingle/hash).
+
+    A small dimension-sized table often arrives as 1-2 parquet splits;
+    hashing 10⁶ shingles on one core wastes the other 31. The
+    repartition shuffle costs only the raw rows — cheap relative to
+    the per-shingle hashing it parallelizes. At 100 TB inputs arrive
+    as thousands of splits and this is a no-op.
+    """
+    target = df.sparkSession.sparkContext.defaultParallelism
+    # Partition count via the JVM query execution — df.rdd would wrap
+    # the plan in a Python-serialized RDD just to read a count off it.
+    n_parts = df._jdf.queryExecution().toRdd().getNumPartitions()
+    if n_parts < target:
+        return df.repartition(target)
+    return df
 
 
 def formatted_plan(df: DataFrame) -> str:

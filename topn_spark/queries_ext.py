@@ -14,12 +14,14 @@ from pyspark.sql import functions as F
 
 from topn_spark.catalog import load_table
 from topn_spark.operators import textstats
+from topn_spark.operators.dedup import lsh_pairs_md5
 from topn_spark.operators.similarity import cosine_topk
 from topn_spark.operators.textstats import (
     LANG_MARKERS,
     fingerprint,
     language_scores,
 )
+from topn_spark.plans import ensure_parallelism
 from topn_spark.queries import QUERIES, query
 
 _TOKS_DUCK = "regexp_extract_all(lower(text), '[a-z0-9]+')"
@@ -1055,78 +1057,6 @@ def x18_approx_percentile(spark, sf_dir):
     )
 
 
-def _portable_minhash_pairs(df, id_col="doc_id", text_col="text"):
-    """The x19 portable-md5 MinHash-LSH pair pipeline over ANY
-    (id, text) frame: 3-word shingles, 8 seeded-md5 min-hashes,
-    4 bands x 2 rows, bucket self-join, signature-estimated Jaccard
-    >= 0.5. Shared by x19 (documents) and z86 (rendered
-    conversations) so both modalities prove the SAME shape."""
-    from topn_spark.operators.dedup import ensure_parallelism
-
-    toks = f"regexp_extract_all(lower({text_col}), '[a-z0-9]+', 0)"
-    # tokens bound once via transform(array(...)) — an inlined toks
-    # inside the slice lambda re-runs the regexp per position (r14)
-    sh = (
-        f"transform(array({toks}), t -> if(size(t) >= 3,"
-        f" transform(sequence(1, size(t) - 2),"
-        f" i -> concat_ws(' ', slice(t, i, 3))), array()))[0]"
-    )
-    exploded = ensure_parallelism(df.select(id_col, text_col)).select(
-        id_col, F.explode(F.expr(sh)).alias("_s")
-    )
-    # Four consumers read sig (both band-join sides + both similarity
-    # sides); persist so the tokenize/shingle/hash pipeline runs once.
-    sig = exploded.groupBy(id_col).agg(
-        *[
-            F.min(F.md5(F.concat(F.lit(f"{j}:"), F.col("_s")))).alias(f"m{j}")
-            for j in range(8)
-        ]
-    ).persist()
-    bands = sig.select(
-        id_col,
-        F.posexplode(
-            F.array(
-                *[
-                    F.md5(F.concat(F.col(f"m{2 * b}"), F.col(f"m{2 * b + 1}")))
-                    for b in range(4)
-                ]
-            )
-        ).alias("b", "h"),
-    )
-    cand = (
-        bands.alias("a")
-        .join(
-            bands.alias("c"),
-            (F.col("a.b") == F.col("c.b"))
-            & (F.col("a.h") == F.col("c.h"))
-            & (F.col(f"a.{id_col}") < F.col(f"c.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"c.{id_col}").alias("id_b"),
-        )
-        .distinct()
-    )
-    sa = sig.select(
-        F.col(id_col).alias("id_a"), *[F.col(f"m{j}").alias(f"a{j}") for j in range(8)]
-    )
-    sb = sig.select(
-        F.col(id_col).alias("id_b"), *[F.col(f"m{j}").alias(f"b{j}") for j in range(8)]
-    )
-    matches = sum(
-        F.when(F.col(f"a{j}") == F.col(f"b{j}"), 1).otherwise(0)
-        for j in range(8)
-    )
-    return (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn("_m", matches)
-        .where(F.col("_m") >= 4)
-        .select("id_a", "id_b", (F.col("_m") / 8.0).alias("est_j"))
-        .orderBy("id_a", "id_b")
-    )
-
-
 @query(
     "x19_lsh_neardup_pairs",
     """WITH toks AS (
@@ -1172,7 +1102,7 @@ ORDER BY id_a ASC, id_b ASC""",
 )
 def x19_lsh_neardup_pairs(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
-    return _portable_minhash_pairs(docs)
+    return lsh_pairs_md5(docs).orderBy("id_a", "id_b")
 
 
 @query(
@@ -1368,8 +1298,6 @@ FROM bits ORDER BY doc_id ASC LIMIT 200""",
     "path is operators/dedup.simhash",
 )
 def x25_simhash(spark, sf_dir):
-    from topn_spark.operators.dedup import ensure_parallelism
-
     docs = load_table(spark, sf_dir, "documents")
     toks = "regexp_extract_all(lower(text), '[a-z0-9]+', 0)"
     # md5 is computed ONCE per token in the aggregate's child project
@@ -1513,8 +1441,6 @@ ORDER BY id_a ASC, id_b ASC"""
     "anywhere, hence hash-matchable",
 )
 def x28_embedding_neardup(spark, sf_dir):
-    from topn_spark.operators.dedup import ensure_parallelism
-
     # the embeddings table arrives as one parquet split; the
     # per-plane integer folds below are the CPU cost — spread them
     # (guide §2.5 input skew: repartition right after the read)
@@ -1739,8 +1665,6 @@ ORDER BY qdot DESC, a.vec_id ASC LIMIT 10"""
 )
 def x33_ivf_topk(spark, sf_dir):
     from pyspark.sql import Row
-
-    from topn_spark.operators.dedup import ensure_parallelism
 
     # one parquet split otherwise evaluates every centroid fold on
     # one core (guide §2.5)
@@ -5183,7 +5107,6 @@ def _y28_pysource_exact(con):
         "model train split und der die das le la et los el que is "
         "in on at"
     ).split()
-    langs = ("en", "de", "fr", "es")
 
     def h(s):
         return int(hashlib.md5(s.encode()).hexdigest()[:8], 16)
@@ -12467,7 +12390,7 @@ ORDER BY id_a ASC, id_b ASC"""
     _Z86_SQL,
     doc="CONVERSATION NEAR-DUP PAIRS (sft.render_chat + the x19"
     " portable MinHash-LSH pipeline via the shared"
-    " _portable_minhash_pairs) — the near-dup gate exact prompt"
+    " dedup.lsh_pairs_md5) — the near-dup gate exact prompt"
     " dedup (z79) misses: two conversations whose assistant turns"
     " differ by one reworded token are training-set duplicates even"
     " though their prompts and digests differ; LSH over the"
@@ -12510,7 +12433,9 @@ def z86_conversation_neardup(spark, sf_dir):
     rendered = render_chat(convs, template="plain").select(
         "conv_id", "text"
     )
-    return _portable_minhash_pairs(rendered, id_col="conv_id")
+    return lsh_pairs_md5(rendered, id_col="conv_id").orderBy(
+        "id_a", "id_b"
+    )
 
 
 #: z87 planted unigram piece table (log-probs; 'ab' vs 'a'+'b'

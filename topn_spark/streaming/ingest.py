@@ -382,6 +382,23 @@ def read_cdc_changes(
     ).select(*cols)
 
 
+def _batch_targets(
+    out_dir: str, reject_dir: str, batch_id: int | None
+) -> tuple[str, str, str]:
+    """``(out_target, reject_target, write_mode)`` of a gate batch: no
+    ``batch_id`` appends flat to both dirs (the caller owns replay
+    semantics); with one, each side overwrites its own
+    ``batch_id=<N>`` partition, so a checkpointed replay rewrites in
+    place."""
+    if batch_id is None:
+        return out_dir, reject_dir, "append"
+    return (
+        f"{out_dir}/batch_id={int(batch_id)}",
+        f"{reject_dir}/batch_id={int(batch_id)}",
+        "overwrite",
+    )
+
+
 def quality_gate_batch(
     batch: DataFrame,
     out_dir: str,
@@ -506,12 +523,9 @@ def _quality_gate_writes(
             != F.lit(keep_lang),
             F.lit("language"),
         ).otherwise(reason)
-    if batch_id is None:
-        out_target, rej_target, write_mode = out_dir, reject_dir, "append"
-    else:
-        out_target = f"{out_dir}/batch_id={int(batch_id)}"
-        rej_target = f"{reject_dir}/batch_id={int(batch_id)}"
-        write_mode = "overwrite"
+    out_target, rej_target, write_mode = _batch_targets(
+        out_dir, reject_dir, batch_id
+    )
     flagged = enriched.withColumn("_reason", reason).persist()
     try:
         admitted = flagged.where(F.col("_reason").isNull())
@@ -669,12 +683,9 @@ def routed_gate_batch(
             lms=lms,
             smoothing=smoothing,
         )
-        if batch_id is None:
-            out_target, rej_target, mode = out_dir, reject_dir, "append"
-        else:
-            out_target = f"{out_dir}/batch_id={int(batch_id)}"
-            rej_target = f"{reject_dir}/batch_id={int(batch_id)}"
-            mode = "overwrite"
+        out_target, rej_target, mode = _batch_targets(
+            out_dir, reject_dir, batch_id
+        )
         routed = routed.persist()
         try:
             admitted = routed.where(F.col("routed_keep"))
@@ -847,12 +858,9 @@ def decontam_gate_batch(
         batch, None, n=n, text_col=text_col, id_col=id_col,
         min_hits=min_hits, mode=mode, eval_grams=eval_grams,
     ).persist()
-    if batch_id is None:
-        out_target, rej_target, write_mode = out_dir, reject_dir, "append"
-    else:
-        out_target = f"{out_dir}/batch_id={int(batch_id)}"
-        rej_target = f"{reject_dir}/batch_id={int(batch_id)}"
-        write_mode = "overwrite"
+    out_target, rej_target, write_mode = _batch_targets(
+        out_dir, reject_dir, batch_id
+    )
     try:
         flagged.where(~F.col("contaminated")).select(
             *batch.columns
@@ -991,13 +999,9 @@ def sft_gate_batch(
 
     flagged = conversation_qc(batch, messages_col).persist()
     try:
-        if batch_id is None:
-            out_target, rej_target = out_dir, reject_dir
-            mode = "append"
-        else:
-            out_target = f"{out_dir}/batch_id={int(batch_id)}"
-            rej_target = f"{reject_dir}/batch_id={int(batch_id)}"
-            mode = "overwrite"
+        out_target, rej_target, mode = _batch_targets(
+            out_dir, reject_dir, batch_id
+        )
         kept = flagged.where(F.col("qc_pass")).select(*batch.columns)
         if redact:
             kept = redact_conversation(kept, messages_col).select(
