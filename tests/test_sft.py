@@ -1207,3 +1207,109 @@ def test_bt_matrix_bootstrap_shapes_and_determinism(spark):
     # empty matrix -> empty frame, correct schema
     empty = bradley_terry_matrix_bootstrap(mat(1.0).limit(0))
     assert empty.count() == 0 and "rating_lo" in empty.columns
+
+
+def _arena_frame(spark, prompts):
+    """Scored samples of four models, built from pandas (Arrow, no
+    Python-RDD pass per job): ties, a second sample of one model on
+    one prompt (best-of-n), a NULL score, and m3 absent from every
+    fifth prompt."""
+    import pandas as pd
+
+    rows = []
+    for p in prompts:
+        for i in range(4):
+            if i == 3 and p % 5 == 0:
+                continue
+            score = float((p * (3 + 2 * i) + 5 * i) % 7)
+            if (p, i) == (1, 2):
+                score = None
+            rows.append((p, f"m{i}", score, "x" * (20 + (p * 13 + i * 7) % 40)))
+    rows.append((prompts[0], "m1", -1.0, "short"))
+    return spark.createDataFrame(
+        pd.DataFrame(rows, columns=["prompt_id", "model", "score", "response"]),
+        "prompt_id long, model string, score double, response string",
+    )
+
+
+def _rows_md5(columns, rows):
+    """md5 of a result's canonical form: its column names in output
+    order, then its rows sorted by their JSON text."""
+    import hashlib
+    import json
+
+    body = sorted(json.dumps(list(r)) for r in rows)
+    return hashlib.md5(json.dumps([list(columns), body]).encode()).hexdigest()
+
+
+def _frame_md5(df):
+    return _rows_md5(df.columns, df.collect())
+
+
+def test_arena_chain_pinned(spark, tmp_path):
+    """Row-level pins of the arena chain: the win matrix, the
+    Bradley–Terry fit at smoothing 0 and 0.5, both bootstraps, the
+    length-controlled win rate, the calibration report, and every
+    partition the streaming monitor writes over two batches."""
+    import pyarrow.parquet as pq
+
+    from topn_spark.operators.sft import (
+        bradley_terry_bootstrap,
+        bradley_terry_fit,
+        bradley_terry_matrix_bootstrap,
+        bt_calibration,
+        length_controlled_winrate,
+        pairwise_winrate,
+    )
+    from topn_spark.streaming.ingest import arena_monitor_batch
+
+    df = _arena_frame(spark, range(24))
+    matrix = pairwise_winrate(df)
+    fit = bradley_terry_fit(matrix, smoothing=0.5)
+    got = {
+        "winrate": _frame_md5(matrix),
+        "fit_0": _frame_md5(bradley_terry_fit(matrix)),
+        "fit_05": _frame_md5(fit),
+        "bootstrap": _frame_md5(bradley_terry_bootstrap(df, n_boot=12)),
+        "matrix_bootstrap": _frame_md5(
+            bradley_terry_matrix_bootstrap(matrix, n_boot=12)
+        ),
+        "lc": _frame_md5(length_controlled_winrate(df)),
+        "calibration": _frame_md5(bt_calibration(matrix, fit, n_bins=4)),
+    }
+    out = str(tmp_path / "arena")
+    for b, prompts in enumerate((range(12), range(12, 24))):
+        arena_monitor_batch(
+            _arena_frame(spark, prompts), out, b,
+            half_life_batches=1.0, bootstrap=8,
+        )
+    for sub in (
+        "ratings", "matrix", "cumulative", "decayed",
+        "cumulative_ci", "decayed_ci",
+    ):
+        for b in (0, 1):
+            t = pq.read_table(f"{out}/{sub}/batch_id={b}")
+            got[f"{sub}_{b}"] = _rows_md5(
+                t.column_names, [r.values() for r in t.to_pylist()]
+            )
+    assert got == {
+        "winrate": "1f4615a6787de9fe3d16b891d960fc9f",
+        "fit_0": "942fa9082ea7c997a80fdb06d7f929cc",
+        "fit_05": "b3e67166ea6f6829aefe64707445faeb",
+        "bootstrap": "d30f54eada88e18da65b9bb151af2fa3",
+        "matrix_bootstrap": "6c44aaaf38337a3e8deb89c37e4e16fc",
+        "lc": "d293e427c1e0e72fd6dd69b2c6f2eb35",
+        "calibration": "3012007bdb7c29fedca652fe7833717f",
+        "ratings_0": "bc41bbe1eab8fb42c57a5334a67beb99",
+        "ratings_1": "bb5fb3ef4a195a3d5a366481543a840e",
+        "matrix_0": "ceaff426e63548b4bc07d8a50db761ae",
+        "matrix_1": "167d3c8b7b1afec95927f6de9ad32a41",
+        "cumulative_0": "e614f5d2e5417ddbbc3c24c48d333b17",
+        "cumulative_1": "6f009c2020398de7ce9403a26e877901",
+        "decayed_0": "bc41bbe1eab8fb42c57a5334a67beb99",
+        "decayed_1": "eb71b09f2cc866885498662b7d28e748",
+        "cumulative_ci_0": "64f162cd90ce9a3fc2f49c4926fe4f1e",
+        "cumulative_ci_1": "0356c45c97684e5831136684825df384",
+        "decayed_ci_0": "64f162cd90ce9a3fc2f49c4926fe4f1e",
+        "decayed_ci_1": "0e4d81a1e677c3ce93350d77f51fb7e8",
+    }
