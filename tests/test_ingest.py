@@ -1045,6 +1045,56 @@ def _arena_batch(spark, wins_b, n=10, base=0):
     )
 
 
+def test_arena_monitor_runs_one_action_per_batch(spark, tmp_path):
+    """Every fit, history read, bootstrap and write of the monitor is
+    driver work on the collected k² matrix: one call runs exactly one
+    Spark action (the matrix collect), also with the history, the
+    decayed leaderboard and the intervals on."""
+    import os
+
+    import pandas as pd
+
+    from topn_spark.streaming.ingest import arena_monitor_batch
+
+    def batch(base):
+        return spark.createDataFrame(
+            pd.DataFrame(
+                [
+                    (base + p, m, float((p * (i + 2)) % 5))
+                    for p in range(8)
+                    for i, m in enumerate(("mA", "mB", "mC"))
+                ],
+                columns=["prompt_id", "model", "score"],
+            ),
+            "prompt_id long, model string, score double",
+        )
+
+    out = str(tmp_path / "arena_jobs")
+    # the session's concrete DataFrame class: it overrides collect and
+    # count, so patching the pyspark.sql.DataFrame base sees no call
+    cls = type(batch(0))
+    calls = []
+    orig = {name: getattr(cls, name) for name in ("collect", "count")}
+
+    def counted(name):
+        return lambda self: (calls.append(name), orig[name](self))[1]
+
+    for name in orig:
+        setattr(cls, name, counted(name))
+    try:
+        for b in range(2):
+            frame = batch(100 * b)
+            calls.clear()
+            arena_monitor_batch(
+                frame, out, b, half_life_batches=1.0, bootstrap=4
+            )
+            assert calls == ["collect"], (b, calls)
+    finally:
+        for name, fn in orig.items():
+            setattr(cls, name, fn)
+    assert os.path.isdir(f"{out}/decayed_ci/batch_id=1")
+
+
 def test_arena_cumulative_drift_accumulates(spark, tmp_path):
     """A slow regression invisible per batch crosses the cumulative
     signal: batch 0 is balanced, every later batch gives mB a 6-4

@@ -1313,3 +1313,68 @@ def test_arena_chain_pinned(spark, tmp_path):
         "decayed_ci_0": "64f162cd90ce9a3fc2f49c4926fe4f1e",
         "decayed_ci_1": "0e4d81a1e677c3ce93350d77f51fb7e8",
     }
+
+
+def test_bootstraps_reject_n_boot_below_one(spark):
+    """``n_boot < 1`` leaves no replicate to take an interval over:
+    both bootstraps refuse it at entry, before any Spark action,
+    instead of failing on an empty quantile list after the job."""
+    from topn_spark.operators.sft import (
+        bradley_terry_bootstrap,
+        bradley_terry_matrix_bootstrap,
+        pairwise_winrate,
+    )
+
+    df = _arena_frame(spark, range(6))
+    # the session's concrete DataFrame class: it overrides collect,
+    # so patching the pyspark.sql.DataFrame base would see no call
+    cls = type(df)
+    calls = []
+    orig = cls.collect
+    cls.collect = lambda self: (calls.append(1), orig(self))[1]
+    try:
+        for n_boot in (0, -1):
+            with pytest.raises(ValueError, match="n_boot must be >= 1"):
+                bradley_terry_bootstrap(df, n_boot=n_boot)
+            with pytest.raises(ValueError, match="n_boot must be >= 1"):
+                bradley_terry_matrix_bootstrap(
+                    pairwise_winrate(df), n_boot=n_boot
+                )
+    finally:
+        cls.collect = orig
+    assert calls == []
+
+
+def test_arena_decisions_live_once():
+    """The Elo scale and the bootstrap argument check live once in
+    ``operators/sft.py`` (``queries_ext.py`` keeps its exact mirrors,
+    the oracle's reference); the streaming monitor defines no fit,
+    tuple or interval helper of its own; the partition-count and
+    Hadoop FileSystem lookups live once; and ``ingest.py`` imports
+    textstats only at module top."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parent.parent / "topn_spark"
+    every = [
+        p.read_text() for p in pkg.rglob("*.py") if p.name != "queries_ext.py"
+    ]
+    for needle in (
+        "400.0 * math.log10(",
+        "smoothing must be > 0",
+        ".getNumPartitions()",
+        ".hadoopConfiguration()",
+    ):
+        assert sum(s.count(needle) for s in every) == 1, needle
+    ingest = ast.parse((pkg / "streaming" / "ingest.py").read_text())
+    defined = {
+        n.name for n in ast.walk(ingest) if isinstance(n, ast.FunctionDef)
+    }
+    assert not defined & {"_tuples", "_fit", "_ci_rows"}
+    for fn in ast.walk(ingest):
+        if isinstance(fn, ast.FunctionDef):
+            assert not [
+                n for n in ast.walk(fn)
+                if isinstance(n, ast.ImportFrom)
+                and n.module == "topn_spark.operators.textstats"
+            ], fn.name

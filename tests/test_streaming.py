@@ -181,3 +181,33 @@ def test_streaming_topn_matches_batch(spark, events_batch, events_stream_dir):
     assert [(r.event_id, r.value) for r in got] == [
         (r.event_id, r.value) for r in want
     ]
+
+
+def test_streaming_topn_scans_each_batch_once(spark, events_batch):
+    """``batch_fn`` merges the held top-N with the batch's COLLECTED
+    candidate, so each batch is evaluated once: its rows pass a
+    counting UDF exactly once, and the two-batch result still equals
+    batch top-N over the union."""
+    from pyspark.sql.types import DoubleType
+
+    seen = spark.sparkContext.accumulator(0)
+
+    def count(v):
+        seen.add(1)
+        return v
+
+    counted = F.udf(count, DoubleType()).asNondeterministic()
+    halves = events_batch.randomSplit([0.5, 0.5], seed=7)
+    batch_fn, results = streaming_topn_sink(
+        "value", 15, tiebreak=["event_id"]
+    )
+    n_rows = 0
+    for batch_id, half in enumerate(halves):
+        half = half.cache()
+        n_rows += half.count()
+        batch_fn(half.withColumn("value", counted("value")), batch_id)
+        assert seen.value == n_rows
+    want = topn(events_batch, "value", 15, tiebreak=["event_id"]).collect()
+    assert [(r.event_id, r.value) for r in results()] == [
+        (r.event_id, r.value) for r in want
+    ]

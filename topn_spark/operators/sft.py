@@ -28,6 +28,8 @@ DuckDB list ops (z66), hash-exact.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame, functions as F
 
 from topn_spark.operators.textstats import (
@@ -1582,6 +1584,173 @@ def group_zscore(
     return joined.withColumn(out_col, z)
 
 
+def _best_scores(
+    df: DataFrame, prompt_col: str, model_col: str, score_col: str
+) -> DataFrame:
+    """Best-of-n reduction: one row per (prompt ``_p``, model ``_m``)
+    carrying that model's max score ``_s`` on the prompt (NULL
+    scores dropped) — one map-side-combinable hash agg."""
+    return (
+        df.where(F.col(score_col).isNotNull())
+        .groupBy(prompt_col, model_col)
+        .agg(F.max(F.col(score_col).cast("double")).alias("_s"))
+        .select(
+            F.col(prompt_col).alias("_p"),
+            F.col(model_col).alias("_m"),
+            "_s",
+        )
+    )
+
+
+def _model_pairs(best: DataFrame, *vals: str) -> DataFrame:
+    """The z113 pair build over one row per (prompt ``_p``, model
+    ``_m``): ONE prompt-keyed self-join to every model pair
+    ``model_a < model_b`` that shares the prompt, each value column
+    ``v`` carried as ``{v}a`` / ``{v}b``. The join explodes in MODELS
+    (k²/2 rows per prompt), never in prompts."""
+
+    def side(s: str) -> DataFrame:
+        return best.select(
+            "_p",
+            F.col("_m").alias(f"model_{s}"),
+            *(F.col(v).alias(f"{v}{s}") for v in vals),
+        )
+
+    return (
+        side("a")
+        .join(side("b"), "_p")
+        .where(F.col("model_a") < F.col("model_b"))
+    )
+
+
+#: the win-matrix columns every Bradley–Terry fit reads
+_MATRIX_COLS = ("model_a", "model_b", "wins_a", "wins_b", "ties")
+
+
+def _matrix_tuples(rows) -> list[tuple]:
+    """Collected win-matrix rows (Spark rows or dicts) as the
+    ``(model_a, model_b, wins_a, wins_b, ties)`` tuples
+    :func:`_bt_mm_core` reads, sorted by pair — the sorted read is
+    the fits' bit-identical-refit contract. float(), not int(): the
+    counts may be decay-WEIGHTED effective wins (the streaming
+    monitor's half-life leaderboard); integer matrices pass through
+    bit-identically either way."""
+    return sorted(
+        (
+            (
+                r["model_a"], r["model_b"], float(r["wins_a"]),
+                float(r["wins_b"]), float(r["ties"]),
+            )
+            for r in rows
+        ),
+        key=lambda t: (t[0], t[1]),
+    )
+
+
+def _bt_rating(strength: float) -> float:
+    """Elo-scale rating of a geometric-mean-1 BT strength: 400 points
+    per decade, centred at 0."""
+    return 400.0 * math.log10(strength)
+
+
+def _bt_fit_rows(
+    tuples: list, smoothing: float, max_iter: int = 1000,
+    tol: float = 1e-12,
+) -> list[dict]:
+    """:func:`bradley_terry_fit`'s rows, driver-side over sorted
+    matrix tuples — one dict per model (``model, strength, rating,
+    wins_eff, n_games, n_iter, converged``), sorted rating-desc then
+    model-asc. The streaming monitor writes these without a Spark
+    job."""
+    models, pi, wins, games, n_iter, converged = _bt_mm_core(
+        tuples, smoothing, max_iter, tol
+    )
+    out = [
+        {
+            "model": m,
+            "strength": p,
+            "rating": _bt_rating(p),
+            "wins_eff": w,
+            "n_games": g,
+            "n_iter": n_iter,
+            "converged": converged,
+        }
+        for m, p, w, g in zip(models, pi, wins, games)
+    ]
+    out.sort(key=lambda r: (-r["rating"], r["model"]))
+    return out
+
+
+def _bt_boot_check(caller: str, n_boot: int, smoothing: float) -> None:
+    """Argument check of every bootstrap, run before any Spark job."""
+    if not float(smoothing) > 0:
+        raise ValueError(
+            f"{caller}: smoothing must be > 0 — a bootstrap replicate "
+            "can resample away all of a model's wins, and its fit "
+            "must stay finite"
+        )
+    if int(n_boot) < 1:
+        raise ValueError(
+            f"{caller}: n_boot must be >= 1 — the interval bounds are "
+            f"quantiles over the replicate ratings (got {n_boot})"
+        )
+
+
+#: the bootstraps' output columns, one row per model
+_BT_CI_DDL = (
+    "model string, strength double, rating double,"
+    " rating_lo double, rating_hi double, n_games double, n_boot int"
+)
+
+
+def _bt_interval_rows(
+    point: list,
+    replicates,
+    n_boot: int,
+    smoothing: float,
+    max_iter: int,
+    tol: float,
+    lo: float,
+    hi: float,
+    caller: str,
+) -> list[dict]:
+    """Bootstrap interval rows over sorted matrix tuples: the point fit
+    on ``point``, and per model the nearest-rank ``lo``/``hi``
+    quantiles of the ratings fitted on each of the ``n_boot``
+    ``replicates`` (sorted; index ``floor(lo*(B-1))`` /
+    ``ceil(hi*(B-1))`` — a fixed, engine-stable rule). One dict per
+    model (``model, strength, rating, rating_lo, rating_hi, n_games,
+    n_boot``), sorted rating-desc then model-asc."""
+    models, pi, _, games, _, _ = _bt_mm_core(
+        point, smoothing, max_iter, tol, caller=caller
+    )
+    ratings = {m: [] for m in models}
+    for rep in replicates:
+        bm, bpi, _, _, _, _ = _bt_mm_core(
+            rep, smoothing, max_iter, tol, caller=caller
+        )
+        for m, p in zip(bm, bpi):
+            ratings[m].append(_bt_rating(p))
+    i_lo = int(math.floor(lo * (int(n_boot) - 1)))
+    i_hi = int(math.ceil(hi * (int(n_boot) - 1)))
+    out = []
+    for m, p, g in zip(models, pi, games):
+        rs = sorted(ratings[m])
+        out.append(
+            {
+                "model": m,
+                "strength": p,
+                "rating": _bt_rating(p),
+                "rating_lo": rs[i_lo],
+                "rating_hi": rs[i_hi],
+                "n_games": g,
+                "n_boot": int(n_boot),
+            }
+        )
+    out.sort(key=lambda r: (-r["rating"], r["model"]))
+    return out
+
+
 def pairwise_winrate(
     df: DataFrame,
     prompt_col: str = "prompt_id",
@@ -1605,23 +1774,8 @@ def pairwise_winrate(
     MODELS, never in prompts), and one (model_a, model_b) hash agg
     to a k²-sized report.
     """
-    best = (
-        df.where(F.col(score_col).isNotNull())
-        .groupBy(prompt_col, model_col)
-        .agg(F.max(F.col(score_col).cast("double")).alias("_s"))
-    )
-    a = best.select(
-        F.col(prompt_col).alias("_p"),
-        F.col(model_col).alias("model_a"),
-        F.col("_s").alias("_sa"),
-    )
-    b = best.select(
-        F.col(prompt_col).alias("_p"),
-        F.col(model_col).alias("model_b"),
-        F.col("_s").alias("_sb"),
-    )
-    pairs = a.join(b, "_p").where(
-        F.col("model_a") < F.col("model_b")
+    pairs = _model_pairs(
+        _best_scores(df, prompt_col, model_col, score_col), "_s"
     )
     wins_a = F.sum(
         (F.col("_sa") > F.col("_sb")).cast("bigint")
@@ -1690,21 +1844,7 @@ def bradley_terry_fit(
     happened in :func:`pairwise_winrate`; fitting on the sufficient
     statistic is exactly why the win matrix exists.
     """
-    import math
-
-    # float(), not int(): the counts may be decay-WEIGHTED effective
-    # wins (streaming/ingest.py's half-life leaderboard) — integer
-    # matrices pass through bit-identically either way
-    rows = sorted(
-        (
-            (r["model_a"], r["model_b"], float(r["wins_a"]),
-             float(r["wins_b"]), float(r["ties"]))
-            for r in matrix.select(
-                "model_a", "model_b", "wins_a", "wins_b", "ties"
-            ).collect()
-        ),
-        key=lambda t: (t[0], t[1]),
-    )
+    rows = _matrix_tuples(matrix.select(*_MATRIX_COLS).collect())
     schema = (
         "model string, strength double, rating double,"
         " wins_eff double, n_games double, n_iter int,"
@@ -1714,24 +1854,8 @@ def bradley_terry_fit(
         # empty matrix (e.g. deploy-phase schema propagation):
         # empty ratings frame, correct schema, nothing executed
         return matrix.sparkSession.createDataFrame([], schema)
-    models, pi, wins, games, n_iter, converged = _bt_mm_core(
-        rows, smoothing, max_iter, tol
-    )
-    k = len(models)
-    spark = matrix.sparkSession
-    out = [
-        (
-            models[i],
-            pi[i],
-            400.0 * math.log10(pi[i]),
-            wins[i],
-            games[i],
-            n_iter,
-            converged,
-        )
-        for i in range(k)
-    ]
-    return spark.createDataFrame(out, schema).orderBy(
+    out = _bt_fit_rows(rows, smoothing, max_iter, tol)
+    return matrix.sparkSession.createDataFrame(out, schema).orderBy(
         F.col("rating").desc(), F.col("model").asc()
     )
 
@@ -1745,12 +1869,10 @@ def _bt_mm_core(
 ):
     """Hunter-MM Bradley–Terry core shared by the point fit and the
     bootstrap: ``rows`` is a sorted list of ``(model_a, model_b,
-    wins_a, wins_b, ties)`` (ints for the point fit, weighted floats
-    for bootstrap replicates). Returns ``(models, pi, wins, games,
-    n_iter, converged)`` with the per-sweep geometric-mean-1 anchor —
-    the deterministic contract both callers share."""
-    import math
-
+    wins_a, wins_b, ties)`` float counts (:func:`_matrix_tuples`;
+    weighted for bootstrap replicates). Returns ``(models, pi, wins,
+    games, n_iter, converged)`` with the per-sweep geometric-mean-1
+    anchor — the deterministic contract both callers share."""
     models = sorted({m for r in rows for m in (r[0], r[1])})
     idx = {m: i for i, m in enumerate(models)}
     k = len(models)
@@ -1852,32 +1974,11 @@ def bradley_terry_bootstrap(
     ``(n_boot+1)·k²`` rows per task — replicate matrices, never
     data. The ``n_boot+1`` driver MM fits run on k²-sized
     statistics (:func:`_bt_mm_core`, the z117 core)."""
-    import math
-
-    if not float(smoothing) > 0:
-        raise ValueError(
-            "bradley_terry_bootstrap: smoothing must be > 0 — a "
-            "bootstrap replicate can resample away all of a model's "
-            "wins, and its fit must stay finite"
-        )
-    best = (
-        df.where(F.col(score_col).isNotNull())
-        .groupBy(prompt_col, model_col)
-        .agg(F.max(F.col(score_col).cast("double")).alias("_s"))
-    )
-    a = best.select(
-        F.col(prompt_col).alias("_p"),
-        F.col(model_col).alias("model_a"),
-        F.col("_s").alias("_sa"),
-    )
-    b = best.select(
-        F.col(prompt_col).alias("_p"),
-        F.col(model_col).alias("model_b"),
-        F.col("_s").alias("_sb"),
-    )
+    _bt_boot_check("bradley_terry_bootstrap", n_boot, smoothing)
     pairs = (
-        a.join(b, "_p")
-        .where(F.col("model_a") < F.col("model_b"))
+        _model_pairs(
+            _best_scores(df, prompt_col, model_col, score_col), "_s"
+        )
         .select(
             "_p",
             "model_a",
@@ -1923,53 +2024,19 @@ def bradley_terry_bootstrap(
         )
         .collect()
     )
-    schema = (
-        "model string, strength double, rating double,"
-        " rating_lo double, rating_hi double, n_games double,"
-        " n_boot int"
-    )
     if not mats:
         # no pair ever shares a scored prompt: nothing to rate
-        return df.sparkSession.createDataFrame([], schema)
+        return df.sparkSession.createDataFrame([], _BT_CI_DDL)
     by_rep: dict = {}
     for r in mats:
-        by_rep.setdefault(int(r["_b"]), []).append(
-            (
-                r["model_a"], r["model_b"], float(r["wins_a"]),
-                float(r["wins_b"]), float(r["ties"]),
-            )
-        )
-    for bb in by_rep:
-        by_rep[bb].sort(key=lambda t: (t[0], t[1]))
-    models, pi, wins, games, _, _ = _bt_mm_core(
-        by_rep[-1], smoothing, max_iter, tol,
+        by_rep.setdefault(int(r["_b"]), []).append(r)
+    out = _bt_interval_rows(
+        _matrix_tuples(by_rep[-1]),
+        (_matrix_tuples(by_rep[bb]) for bb in range(int(n_boot))),
+        n_boot, smoothing, max_iter, tol, lo, hi,
         caller="bradley_terry_bootstrap",
     )
-    ratings = {m: [] for m in models}
-    for bb in range(int(n_boot)):
-        bm, bpi, _, _, _, _ = _bt_mm_core(
-            by_rep[bb], smoothing, max_iter, tol,
-            caller="bradley_terry_bootstrap",
-        )
-        for i, m in enumerate(bm):
-            ratings[m].append(400.0 * math.log10(bpi[i]))
-    i_lo = int(math.floor(lo * (int(n_boot) - 1)))
-    i_hi = int(math.ceil(hi * (int(n_boot) - 1)))
-    out = []
-    for i, m in enumerate(models):
-        rs = sorted(ratings[m])
-        out.append(
-            (
-                m,
-                pi[i],
-                400.0 * math.log10(pi[i]),
-                rs[i_lo],
-                rs[i_hi],
-                games[i],
-                int(n_boot),
-            )
-        )
-    return df.sparkSession.createDataFrame(out, schema).orderBy(
+    return df.sparkSession.createDataFrame(out, _BT_CI_DDL).orderBy(
         F.col("rating").desc(), F.col("model").asc()
     )
 
@@ -2016,35 +2083,14 @@ def bradley_terry_matrix_bootstrap(
     construction, so the whole computation — ``n_boot + 1`` MM
     fits (:func:`_bt_mm_core`) — is driver math on model-sized
     state; nothing data-sized anywhere."""
-    if not float(smoothing) > 0:
-        raise ValueError(
-            "bradley_terry_matrix_bootstrap: smoothing must be > 0 "
-            "— a replicate can resample away all of a model's wins,"
-            " and its fit must stay finite"
-        )
-    schema = (
-        "model string, strength double, rating double,"
-        " rating_lo double, rating_hi double, n_games double,"
-        " n_boot int"
-    )
-    rows = sorted(
-        (
-            (
-                r["model_a"], r["model_b"], float(r["wins_a"]),
-                float(r["wins_b"]), float(r["ties"]),
-            )
-            for r in matrix.select(
-                "model_a", "model_b", "wins_a", "wins_b", "ties"
-            ).collect()
-        ),
-        key=lambda t: (t[0], t[1]),
-    )
+    _bt_boot_check("bradley_terry_matrix_bootstrap", n_boot, smoothing)
+    rows = _matrix_tuples(matrix.select(*_MATRIX_COLS).collect())
     if not rows:
-        return matrix.sparkSession.createDataFrame([], schema)
+        return matrix.sparkSession.createDataFrame([], _BT_CI_DDL)
     out = _bt_matrix_bootstrap_rows(
         rows, n_boot, smoothing, max_iter, tol, lo, hi, salt
     )
-    return matrix.sparkSession.createDataFrame(out, schema).orderBy(
+    return matrix.sparkSession.createDataFrame(out, _BT_CI_DDL).orderBy(
         F.col("rating").desc(), F.col("model").asc()
     )
 
@@ -2058,33 +2104,20 @@ def _bt_matrix_bootstrap_rows(
     lo: float = 0.025,
     hi: float = 0.975,
     salt: str = "",
-) -> list[tuple]:
+) -> list[dict]:
     """Driver-side core of :func:`bradley_terry_matrix_bootstrap`
     over already-collected ``(model_a, model_b, wins_a, wins_b,
     ties)`` tuples (sorted by pair) — shared with the streaming
     monitor, which holds its k²-sized matrices as plain rows and
     must not pay a Spark job per replicate table. Returns
-    ``(model, strength, rating, rating_lo, rating_hi, n_games,
-    n_boot)`` tuples sorted rating-desc, model-asc; the exact
-    replicate seeding contract is unchanged (the oracle mirrors
-    it)."""
+    :func:`_bt_interval_rows` dicts; the exact replicate seeding
+    contract is unchanged (the oracle mirrors it). The caller has
+    run :func:`_bt_boot_check`."""
     import hashlib
-    import math
 
     import numpy as np
 
-    if not float(smoothing) > 0:
-        raise ValueError(
-            "bradley_terry_matrix_bootstrap: smoothing must be > 0 "
-            "— a replicate can resample away all of a model's wins,"
-            " and its fit must stay finite"
-        )
-    models, pi, wins, games, _, _ = _bt_mm_core(
-        rows, smoothing, max_iter, tol,
-        caller="bradley_terry_matrix_bootstrap",
-    )
-    ratings = {m: [] for m in models}
-    for b in range(int(n_boot)):
+    def replicate(b: int) -> list[tuple]:
         rep = []
         for ma, mb, wa, wb, t in rows:
             seed = int(
@@ -2102,30 +2135,14 @@ def _bt_matrix_bootstrap_rows(
                     float(rng.poisson(t)),
                 )
             )
-        bm, bpi, _, _, _, _ = _bt_mm_core(
-            rep, smoothing, max_iter, tol,
-            caller="bradley_terry_matrix_bootstrap",
-        )
-        for i, m in enumerate(bm):
-            ratings[m].append(400.0 * math.log10(bpi[i]))
-    i_lo = int(math.floor(lo * (int(n_boot) - 1)))
-    i_hi = int(math.ceil(hi * (int(n_boot) - 1)))
-    out = []
-    for i, m in enumerate(models):
-        rs = sorted(ratings[m])
-        out.append(
-            (
-                m,
-                pi[i],
-                400.0 * math.log10(pi[i]),
-                rs[i_lo],
-                rs[i_hi],
-                games[i],
-                int(n_boot),
-            )
-        )
-    out.sort(key=lambda t: (-t[2], t[0]))
-    return out
+        return rep
+
+    return _bt_interval_rows(
+        rows,
+        (replicate(b) for b in range(int(n_boot))),
+        n_boot, smoothing, max_iter, tol, lo, hi,
+        caller="bradley_terry_matrix_bootstrap",
+    )
 
 
 def save_bt_ratings(ratings: DataFrame, path: str) -> None:
@@ -2299,8 +2316,6 @@ def length_controlled_winrate(
     (``n_iter``/``converged`` are that pair's own diagnostics), and
     the step logic (ridge, 2×2 solve, ±10 damping) is identical.
     """
-    import math
-
     best = (
         df.where(F.col(score_col).isNotNull())
         .groupBy(prompt_col, model_col)
@@ -2319,28 +2334,12 @@ def length_controlled_winrate(
             F.col("_b.ln").alias("_l"),
         )
     )
-    a = best.select(
-        F.col("_p"),
-        F.col("_m").alias("model_a"),
-        F.col("_s").alias("_sa"),
-        F.col("_l").alias("_la"),
-    )
-    b = best.select(
-        F.col("_p"),
-        F.col("_m").alias("model_b"),
-        F.col("_s").alias("_sb"),
-        F.col("_l").alias("_lb"),
-    )
-    pairs = (
-        a.join(b, "_p")
-        .where(F.col("model_a") < F.col("model_b"))
-        .select(
-            "model_a",
-            "model_b",
-            (F.col("_sa") > F.col("_sb")).alias("_win"),
-            (F.col("_sa") == F.col("_sb")).alias("_tie"),
-            (F.col("_la") - F.col("_lb")).alias("_dx"),
-        )
+    pairs = _model_pairs(best, "_s", "_l").select(
+        "model_a",
+        "model_b",
+        (F.col("_sa") > F.col("_sb")).alias("_win"),
+        (F.col("_sa") == F.col("_sb")).alias("_tie"),
+        (F.col("_la") - F.col("_lb")).alias("_dx"),
     )
     out_ddl = (
         "model_a string, model_b string, n_pairs bigint,"
@@ -2379,13 +2378,7 @@ def length_controlled_winrate(
             for r in moments.collect()
         }
         if not mrows:
-            return df.sparkSession.createDataFrame(
-                [],
-                "model_a string, model_b string, n_pairs bigint,"
-                " n_ties bigint, raw_winrate_a double,"
-                " lc_winrate_a double, beta_len double,"
-                " n_iter int, converged boolean",
-            )
+            return df.sparkSession.createDataFrame([], out_ddl)
         spark = df.sparkSession
         mdf = F.broadcast(moments.select("model_a", "model_b", "sx"))
         # scale-only standardization — NOT centered: sigmoid(b0) must
@@ -2486,13 +2479,9 @@ def length_controlled_winrate(
                     conv[k],
                 )
             )
-        return spark.createDataFrame(
-            out,
-            "model_a string, model_b string, n_pairs bigint,"
-            " n_ties bigint, raw_winrate_a double,"
-            " lc_winrate_a double, beta_len double,"
-            " n_iter int, converged boolean",
-        ).orderBy("model_a", "model_b")
+        return spark.createDataFrame(out, out_ddl).orderBy(
+            "model_a", "model_b"
+        )
     finally:
         used.unpersist()
 
@@ -2507,8 +2496,6 @@ def _lc_winrate_driver(
     distributed sweep loop, evaluated over distinct length gaps
     weighted by their counts. Pairs with only tied outcomes carry
     no win signal and drop, matching the distributed path."""
-    import math
-
     import numpy as np
 
     by: dict = {}

@@ -12,7 +12,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from topn_spark.plans import ensure_parallelism
+from topn_spark.plans import ensure_parallelism, num_partitions
 
 #: The engine word rule: lowercase, then runs of ``[a-z0-9]``. Its SQL
 #: form is :func:`_token_sql`; in Python it is
@@ -2146,9 +2146,7 @@ def bpe_train(
             int(n_vocab // 100_000) + 1,
         ),
     )
-    # partition count via the JVM handle (plans.ensure_parallelism's
-    # rationale: .rdd would wrap the plan just to read a number)
-    if parts < words._jdf.queryExecution().toRdd().getNumPartitions():
+    if parts < num_partitions(words):
         compact = words.repartition(parts).persist()
         compact.count()
         words.unpersist()

@@ -24,12 +24,16 @@ def ensure_parallelism(df: DataFrame) -> DataFrame:
     as thousands of splits and this is a no-op.
     """
     target = df.sparkSession.sparkContext.defaultParallelism
-    # Partition count via the JVM query execution — df.rdd would wrap
-    # the plan in a Python-serialized RDD just to read a count off it.
-    n_parts = df._jdf.queryExecution().toRdd().getNumPartitions()
-    if n_parts < target:
+    if num_partitions(df) < target:
         return df.repartition(target)
     return df
+
+
+def num_partitions(df: DataFrame) -> int:
+    """Partition count of ``df``'s physical plan, read through the JVM
+    query execution — ``df.rdd`` would wrap the plan in a
+    Python-serialized RDD just to read a count off it."""
+    return df._jdf.queryExecution().toRdd().getNumPartitions()
 
 
 def formatted_plan(df: DataFrame) -> str:

@@ -21,7 +21,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from topn_spark.operators.dedup import dedup_exact
-from topn_spark.operators.textstats import tokens
+from topn_spark.operators.textstats import (
+    ROUTE_DEFAULTS,
+    gopher_rules,
+    redact_pii,
+    routed_quality,
+    tokens,
+)
 
 
 def _error_condition(e) -> str:
@@ -457,14 +463,12 @@ def quality_gate_batch(
     without the cache the single materialization of the flagged
     frame would scan the (possibly expensive) upstream source twice.
     """
-    from topn_spark.operators.textstats import gopher_rules
-
     batch = batch.persist()
     try:
         _quality_gate_writes(
             batch, out_dir, reject_dir, text_col, id_col,
             use_gopher, lm, max_ppl, smoothing, k, batch_id,
-            gopher_rules, langid, keep_lang, redact,
+            langid, keep_lang, redact,
         )
     finally:
         batch.unpersist()
@@ -472,7 +476,7 @@ def quality_gate_batch(
 
 def _quality_gate_writes(
     batch, out_dir, reject_dir, text_col, id_col, use_gopher, lm,
-    max_ppl, smoothing, k, batch_id, gopher_rules,
+    max_ppl, smoothing, k, batch_id,
     langid=None, keep_lang=None, redact=False,
 ) -> None:
     if use_gopher:
@@ -530,8 +534,6 @@ def _quality_gate_writes(
     try:
         admitted = flagged.where(F.col("_reason").isNull())
         if redact:
-            from topn_spark.operators.textstats import redact_pii
-
             admitted = redact_pii(admitted, text_col).withColumn(
                 text_col, F.col("clean_text")
             )
@@ -653,8 +655,6 @@ def routed_gate_batch(
             "pass exactly one of lang_col (trusted column) or "
             "langid (saved model)"
         )
-    from topn_spark.operators.textstats import routed_quality
-
     batch = batch.persist()
     try:
         if langid is not None:
@@ -690,8 +690,6 @@ def routed_gate_batch(
         try:
             admitted = routed.where(F.col("routed_keep"))
             if redact:
-                from topn_spark.operators.textstats import redact_pii
-
                 admitted = redact_pii(admitted, text_col).withColumn(
                     text_col, F.col("clean_text")
                 )
@@ -736,8 +734,6 @@ def routed_corpus_sink(
     validation), not mid-stream. Epoch ids thread through as
     ``batch_id`` for the exactly-once partition contract. Returns
     the started ``StreamingQuery``."""
-    from topn_spark.operators.textstats import ROUTE_DEFAULTS
-
     for g, cfg in routes.items():
         if {**ROUTE_DEFAULTS, **cfg}["max_ppl"] is not None and (
             not lm_paths or g not in lm_paths
@@ -1185,12 +1181,12 @@ def arena_monitor_batch(
     rows, never samples. ``out_dir`` holds model-sized accounting
     state on driver-reachable storage (shared filesystem, or an
     object-store backend via ``store``)."""
-    import math
-
     from topn_spark.operators.binfs import LocalBinaryStore
     from topn_spark.operators.sft import (
+        _bt_boot_check,
+        _bt_fit_rows,
         _bt_matrix_bootstrap_rows,
-        _bt_mm_core,
+        _matrix_tuples,
         pairwise_winrate,
     )
 
@@ -1226,62 +1222,24 @@ def arena_monitor_batch(
         " n_boot int"
     )
 
-    def _tuples(rows):
-        return [
-            (
-                r["model_a"], r["model_b"], float(r["wins_a"]),
-                float(r["wins_b"]), float(r["ties"]),
-            )
-            for r in rows
-        ]
-
-    def _fit(tuples):
-        """bradley_terry_fit's row shape (rating-desc, model-asc),
-        driver-side on already-collected k² tuples."""
-        models, pi, wins, games, _, converged = _bt_mm_core(
-            tuples, smoothing, 1000, 1e-12
-        )
-        out = [
-            {
-                "model": models[i],
-                "strength": pi[i],
-                "rating": 400.0 * math.log10(pi[i]),
-                "wins_eff": wins[i],
-                "n_games": games[i],
-                "converged": converged,
-            }
-            for i in range(len(models))
-        ]
-        out.sort(key=lambda r: (-r["rating"], r["model"]))
-        return out
-
-    def _ci_rows(tuples):
-        return [
-            dict(
-                zip(
-                    (
-                        "model", "strength", "rating", "rating_lo",
-                        "rating_hi", "n_games", "n_boot",
-                    ),
-                    t,
-                )
-            )
-            for t in _bt_matrix_bootstrap_rows(
-                tuples, int(bootstrap), smoothing
-            )
-        ]
-
     def _part(sub):
         return (
             f"{out_dir}/{sub}/batch_id={int(batch_id)}"
         )
 
     st.makedirs(f"{out_dir}/ratings")
-    st.write_parquet(_part("ratings"), _fit(_tuples(mrows)),
-                     ratings_ddl)
+    st.write_parquet(
+        _part("ratings"), _bt_fit_rows(_matrix_tuples(mrows), smoothing),
+        ratings_ddl,
+    )
     st.makedirs(f"{out_dir}/matrix")
     st.write_parquet(_part("matrix"), mrows, matrix_ddl)
     if cumulative or half_life_batches is not None:
+        if bootstrap:
+            # the intervals are bradley_terry_matrix_bootstrap's
+            _bt_boot_check(
+                "bradley_terry_matrix_bootstrap", bootstrap, smoothing
+            )
         # model-sized history: every committed matrix partition
         # <= batch_id, read driver-side through the backend
         hist: dict[int, list[dict]] = {}
@@ -1314,11 +1272,12 @@ def arena_monitor_batch(
 
         if cumulative:
             cum_t = _summed(lambda b: 1.0)
-            cum_rows = _fit(cum_t)
-            first = min(hist)
+            cum_rows = _bt_fit_rows(cum_t, smoothing)
             base = {
                 r["model"]: r["rating"]
-                for r in _fit(_tuples(hist[first]))
+                for r in _bt_fit_rows(
+                    _matrix_tuples(hist[min(hist)]), smoothing
+                )
             }
             for r in cum_rows:
                 r0 = base.get(r["model"])
@@ -1333,7 +1292,9 @@ def arena_monitor_batch(
             if bootstrap:
                 st.makedirs(f"{out_dir}/cumulative_ci")
                 st.write_parquet(
-                    _part("cumulative_ci"), _ci_rows(cum_t), ci_ddl
+                    _part("cumulative_ci"),
+                    _bt_matrix_bootstrap_rows(cum_t, bootstrap, smoothing),
+                    ci_ddl,
                 )
         if half_life_batches is not None:
             dec_t = _summed(
@@ -1345,12 +1306,15 @@ def arena_monitor_batch(
             )
             st.makedirs(f"{out_dir}/decayed")
             st.write_parquet(
-                _part("decayed"), _fit(dec_t), ratings_ddl
+                _part("decayed"), _bt_fit_rows(dec_t, smoothing),
+                ratings_ddl,
             )
             if bootstrap:
                 st.makedirs(f"{out_dir}/decayed_ci")
                 st.write_parquet(
-                    _part("decayed_ci"), _ci_rows(dec_t), ci_ddl
+                    _part("decayed_ci"),
+                    _bt_matrix_bootstrap_rows(dec_t, bootstrap, smoothing),
+                    ci_ddl,
                 )
 
 
@@ -1468,6 +1432,7 @@ def bin_export_batch(
         export_bin_shards_delta,
         export_epoch_order,
     )
+    from topn_spark.streaming.statestore import _hadoop
 
     spark = batch.sparkSession
     assigned = _assign_shards(
@@ -1480,31 +1445,18 @@ def bin_export_batch(
     # detection would miss re-delivered partitions on exactly the
     # stores that need it. globStatus is ONE directory-level pattern
     # walk (shard dirs × one child probe), never a full-store leaf
-    # listing.
-    jvm = spark._jvm
-    _hpath = jvm.org.apache.hadoop.fs.Path
-    root = _hpath(corpus_dir)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-
-    def _batch_partitions():
-        """This batch_id's landed ``shard=k/batch_id=N`` partition
-        directories (absolute URIs)."""
-        if not fs.exists(root):
-            return []
-        pat = _hpath(
-            os.path.join(
-                corpus_dir, "shard=*", f"batch_id={int(batch_id)}"
-            )
-        )
-        return [
-            str(st.getPath()) for st in (fs.globStatus(pat) or [])
-        ]
-
-    replayed = _batch_partitions()
-    for d in replayed:
+    # listing; under a missing corpus_dir it matches nothing.
+    # ``pat`` matches this batch_id's landed ``shard=k/batch_id=N``
+    # partition directories
+    fs, pat = _hadoop(
+        spark,
+        os.path.join(corpus_dir, "shard=*", f"batch_id={int(batch_id)}"),
+    )
+    replayed = fs.globStatus(pat) or []
+    for hit in replayed:
         # replace the failed/duplicate delivery wholesale — the
         # replay contract of the other streaming gates
-        fs.delete(_hpath(d), True)
+        fs.delete(hit.getPath(), True)
     assigned.withColumn(
         "batch_id", F.lit(int(batch_id))
     ).write.mode("append").partitionBy("shard", "batch_id").parquet(
@@ -1582,7 +1534,9 @@ def bin_export_batch(
         # path, so per-commit file-index work stays batch-sized no
         # matter how many (shard, batch_id) partitions the store has
         # accumulated.
-        landed = _store_frame(_batch_partitions()).drop("batch_id")
+        landed = _store_frame(
+            [str(hit.getPath()) for hit in fs.globStatus(pat) or []]
+        ).drop("batch_id")
 
         def _touched_shards_reader(touched):
             return _store_frame(

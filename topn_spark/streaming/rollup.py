@@ -25,23 +25,14 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from topn_spark.operators.rollup import BUCKET_COL, RollupSpec, re_rollup, rollup
 from topn_spark.streaming.ingest import start_batches
+from topn_spark.streaming.statestore import _hadoop
 
 _PART = "_pdate"  # date partition column: dynamic overwrite granularity
-
-
-def _store_exists(spark: SparkSession, path: str) -> bool:
-    """Existence test through the Hadoop FS API so it answers for any
-    Spark-reachable filesystem (local, HDFS, object stores), not just
-    the driver's local disk."""
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(hconf).exists(p)
 
 
 def rollup_batch(
@@ -63,7 +54,8 @@ def rollup_batch(
     delta = rollup(batch, ts_col, bucket, spec).withColumn(
         _PART, F.col(BUCKET_COL).cast("date")
     )
-    if _store_exists(spark, store_dir):
+    fs, root = _hadoop(spark, store_dir)
+    if fs.exists(root):
         cur = spark.read.parquet(store_dir)
         touched = [r[0] for r in delta.select(_PART).distinct().collect()]
         if not touched:

@@ -116,17 +116,15 @@ def streaming_topn_sink(
     state: dict[str, list] = {"rows": []}
 
     def batch_fn(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        candidate = topn(batch_df, field, size, tiebreak=tiebreak)
-        new_rows = candidate.collect()
+        rows = topn(batch_df, field, size, tiebreak=tiebreak).collect()
         if state["rows"]:
-            prev = spark.createDataFrame(state["rows"], batch_df.schema)
-            merged = topn(
-                prev.unionByName(candidate), field, size, tiebreak=tiebreak
+            # merge from the collected candidate: the batch is scanned
+            # once, and the merge runs over <= 2*size driver rows
+            held = batch_df.sparkSession.createDataFrame(
+                state["rows"] + rows, batch_df.schema
             )
-            state["rows"] = merged.collect()
-        else:
-            state["rows"] = new_rows
+            rows = topn(held, field, size, tiebreak=tiebreak).collect()
+        state["rows"] = rows
 
     def results_fn() -> list:
         return list(state["rows"])
