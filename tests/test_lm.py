@@ -273,13 +273,14 @@ def test_perplexity_score_meta_scalars_schedule_no_jobs(spark):
     actions — pinned by counting DataFrame.collect calls during plan
     construction (the only eager sites in perplexity_score are the
     two scalar derivations)."""
-    from pyspark.sql import DataFrame
-
     from topn_spark.operators.lm import perplexity_score
 
     docs = _docs(spark, [(1, "a b a"), (2, "b c")])
     uni, bi = train_bigram_lm(docs)
     calls = []
+    # the session's concrete DataFrame class: it overrides collect, so
+    # patching the pyspark.sql.DataFrame base sees no call
+    DataFrame = type(docs)
     orig = DataFrame.collect
     DataFrame.collect = lambda self: (calls.append(1), orig(self))[1]
     try:

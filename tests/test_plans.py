@@ -36,6 +36,16 @@ def test_grouped_topn_has_mapside_rank_cut(spark):
     assert first_wgl != -1 and first_exchange != -1
 
 
+def test_salted_topn_limits_both_phases(spark):
+    # x32's two cuts (keyed by (key, __salt), then by key) each keep a
+    # WindowGroupLimit directly below their Exchange.
+    tree = formatted_plan(q(spark, "x32_topn_salted")).split("\n\n", 1)[0]
+    ops = [ln.strip(" +-").split(" (")[0] for ln in tree.splitlines()]
+    below = [ops[i + 1] for i, op in enumerate(ops[:-1]) if op == "Exchange"]
+    assert ops.count("Window") == 2, tree
+    assert below.count("WindowGroupLimit") == 2, tree
+
+
 def test_filter_and_projection_push_into_scan(spark):
     plan = formatted_plan(q(spark, "q05"))
     assert "PushedFilters:" in plan

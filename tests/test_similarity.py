@@ -457,6 +457,50 @@ def test_ivfpq_rerank_recall_never_below_plain(spark):
         ivfpq_topk_rerank(df, 0, k=10, rerank=5, **kw)
 
 
+def test_ivfpq_rerank_looks_up_query_once(spark):
+    """``ivfpq_topk_rerank`` reads the query vector once and shares it
+    with the shortlist: two collects (the training sample and the
+    lookup), and its rows are the exact re-sort of plain
+    ``ivfpq_topk``'s shortlist."""
+    import pandas as pd
+
+    from topn_spark.operators.similarity import (
+        ivfpq_topk,
+        ivfpq_topk_rerank,
+    )
+
+    rng = np.random.default_rng(11)
+    vecs = rng.normal(size=(200, 16))
+    df = spark.createDataFrame(
+        pd.DataFrame({"vec_id": range(200), "embedding": list(vecs)}),
+        "vec_id long, embedding array<double>",
+    )
+    kw = dict(nlist=8, nprobe=3, m=8, nbits=4, train_rows=64)
+    cls = type(df)
+    calls = []
+    orig = cls.collect
+    cls.collect = lambda self: (calls.append(1), orig(self))[1]
+    try:
+        plan = ivfpq_topk_rerank(df, 5, k=10, rerank=40, **kw)
+    finally:
+        cls.collect = orig
+    assert len(calls) == 2
+    got = plan.collect()
+    short = ivfpq_topk(df, 5, k=40, **kw).collect()
+    exact = {
+        r.vec_id: float(((vecs[r.vec_id] - vecs[5]) ** 2).sum())
+        for r in short
+    }
+    want = sorted(short, key=lambda r: (exact[r.vec_id], r.vec_id))[:10]
+    assert [(r.vec_id, r.adc_dist) for r in got] == [
+        (r.vec_id, r.adc_dist) for r in want
+    ]
+    for r in got:
+        assert abs(r.exact_dist - exact[r.vec_id]) < 1e-9
+    with pytest.raises(ValueError, match="query id 999 not found"):
+        ivfpq_topk_rerank(df, 999, k=10, rerank=40, **kw)
+
+
 class TestIvfPq:
     def test_copy_of_query_ranks_first_with_recall(self, spark):
         """IVF-PQ on two separated blobs: the query's exact copy shares

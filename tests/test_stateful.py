@@ -3,7 +3,6 @@ applyInPandasWithState, replay-checked against batch grouped top-N."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMALL
@@ -62,93 +61,44 @@ def test_grouped_running_topn_matches_batch(spark, tmp_path):
     assert got_by_key == want_by_key
 
 
-def _has_protobuf():
-    try:
-        import google.protobuf  # noqa: F401
+def test_grouped_running_topn_ranks_nan_like_batch(spark, tmp_path):
+    """NaN is a value, null is not: the stream keeps NaN (above every
+    number) and drops nulls, exactly as
+    ``topn_grouped(ignore_null=True)`` does — pandas reads both as
+    NaN, so the operator must not tell them apart on the pandas side."""
+    import numpy as np
+    import pandas as pd
 
-        return True
-    except ImportError:
-        return False
-
-
-def test_grouped_running_topn_v2_gated_without_protobuf(spark, tmp_path):
-    """Without protobuf the v2 operator must fail fast with a clear
-    error, not crash the streaming worker mid-query."""
-    if _has_protobuf():
-        pytest.skip("protobuf present; gate inactive")
-    from topn_spark.streaming.stateful import grouped_running_topn_v2
-
-    ev = load_table(spark, SF_SMALL, "events")
-    (tmp_path / "empty").mkdir()
-    stream = spark.readStream.schema(ev.schema).parquet(str(tmp_path / "empty"))
-    with pytest.raises(ImportError, match="protobuf"):
-        grouped_running_topn_v2(stream, "event_type", "event_id", "value", 3)
-
-
-@pytest.mark.skipif(
-    not _has_protobuf(), reason="transformWithState needs protobuf"
-)
-def test_grouped_running_topn_v2_matches_v1_semantics(spark, tmp_path):
-    """The transformWithState (v2 API) operator must produce the same
-    final per-key top-N as the batch grouped top-N over the replayed
-    stream — same contract as the v1 test."""
-    from topn_spark.streaming.stateful import grouped_running_topn_v2
-
-    ev = load_table(spark, SF_SMALL, "events")
-    d = str(tmp_path / "stream")
-    ev.repartition(3).write.mode("overwrite").parquet(d)
-
+    vals = pd.arrays.FloatingArray(
+        np.array([1.0, np.nan, 5.0, 0.0, 3.0]),
+        np.array([False, False, False, True, False]),
+    )
+    pdf = pd.DataFrame({"k": ["a"] * 5, "id": range(1, 6), "v": vals})
+    df = spark.createDataFrame(pdf, "k string, id long, v double")
+    d = str(tmp_path / "nan_stream")
+    for part in (df.where("id <= 2"), df.where("id > 2")):
+        part.coalesce(1).write.mode("append").parquet(d)
     stream = (
-        spark.readStream.schema(ev.schema)
+        spark.readStream.schema(df.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(d)
     )
-    out = grouped_running_topn_v2(stream, "event_type", "event_id", "value", 3)
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    q = (
+        grouped_running_topn(stream, "k", "id", "v", 2)
+        .writeStream.format("memory")
+        .queryName("running_topn_nan")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    try:
-        q = (
-            out.writeStream.format("memory")
-            .queryName("running_topn_v2")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-
-    emitted = spark.table("running_topn_v2").collect()
-    final = {}
-    for r in emitted:
-        if r.event_type not in final or r.version > final[r.event_type].version:
-            final[r.event_type] = r
-    batch_counts = {
-        r.event_type: r.cnt
-        for r in ev.groupBy("event_type").agg(F.count("*").alias("cnt")).collect()
-    }
-    assert {k: v.version for k, v in final.items()} == batch_counts
-
-    want = topn_grouped(
-        ev.select("event_type", "event_id", "value"),
-        "event_type",
-        "value",
-        3,
-        tiebreak="event_id",
-    )
-    want_by_key = {}
-    for r in want.collect():
-        want_by_key.setdefault(r.event_type, []).append((r.event_id, r.value))
-    got_by_key = {
-        k: list(zip(v.ids, v.vals)) for k, v in final.items()
-    }
-    assert got_by_key == want_by_key
+    q.awaitTermination(180)
+    emitted = spark.table("running_topn_nan").collect()
+    final = max(emitted, key=lambda r: r.version)
+    want = topn_grouped(df, "k", "v", 2, ignore_null=True, tiebreak="id")
+    assert sorted(r.id for r in want.collect()) == [2, 3]
+    assert final.version == 5
+    assert final.ids == [2, 3]
+    assert np.isnan(final.vals[0]) and final.vals[1] == 5.0
 
 
 def test_streaming_ewma_replay_equals_single_pass_and_flags_spike(

@@ -23,7 +23,11 @@ from topn_spark.streaming import (
 
 @pytest.fixture(scope="module")
 def events_batch(spark):
-    return load_table(spark, SF_SMALL, "events").cache()
+    # released at teardown: a cached events relation left behind would
+    # stand in for the scan in later modules' plans
+    df = load_table(spark, SF_SMALL, "events").cache()
+    yield df
+    df.unpersist()
 
 
 @pytest.fixture(scope="module")
@@ -211,3 +215,54 @@ def test_streaming_topn_scans_each_batch_once(spark, events_batch):
     assert [(r.event_id, r.value) for r in results()] == [
         (r.event_id, r.value) for r in want
     ]
+
+
+def _scored(spark, first_id, vals):
+    """A pandas-built (id, v) frame; ``None`` in ``vals`` is a null,
+    ``nan`` a NaN."""
+    import numpy as np
+    import pandas as pd
+
+    v = pd.arrays.FloatingArray(
+        np.array([0.0 if x is None else x for x in vals]),
+        np.array([x is None for x in vals]),
+    )
+    ids = range(first_id, first_id + len(vals))
+    return spark.createDataFrame(
+        pd.DataFrame({"id": ids, "v": v}), "id long, v double"
+    )
+
+
+def test_streaming_topn_nulls_nan_and_ties_across_batches(spark):
+    """NaN ranks above every number, nulls last, ties across batches
+    go to the smaller id — the driver merge keeps ``topn``'s order —
+    and each batch runs exactly one Spark action."""
+    nan = float("nan")
+    batches = [
+        _scored(spark, 1, [5.0, nan, None, 3.0, 5.0, 1.0]),
+        _scored(spark, 7, [nan, 5.0, None, 3.0, 4.0, 2.0]),
+    ]
+    union = batches[0].unionByName(batches[1])
+    cls = type(union)
+    calls = []
+    orig = {name: getattr(cls, name) for name in ("collect", "count")}
+
+    def counted(name):
+        return lambda self: (calls.append(name), orig[name](self))[1]
+
+    for size in (4, 11):
+        batch_fn, results = streaming_topn_sink("v", size, tiebreak=["id"])
+        for name in orig:
+            setattr(cls, name, counted(name))
+        try:
+            for batch_id, batch in enumerate(batches):
+                calls.clear()
+                batch_fn(batch, batch_id)
+                assert calls == ["collect"], (size, batch_id, calls)
+        finally:
+            for name, fn in orig.items():
+                setattr(cls, name, fn)
+        want = topn(union, "v", size, tiebreak=["id"]).collect()
+        got = [(r.id, repr(r.v)) for r in results()]
+        assert got == [(r.id, repr(r.v)) for r in want]
+    assert [r.id for r in want] == [2, 7, 1, 5, 8, 11, 4, 10, 12, 6, 3]

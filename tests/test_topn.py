@@ -221,3 +221,32 @@ class TestTopNWithTies:
             [(1, 5), (2, None), (3, None)], "id int, v int"
         )
         assert topn_with_ties(df, "v", 3, ignore_null=True).count() == 1
+
+
+def test_topn_order_and_cut_live_once():
+    """The top-N order and the windowed cut are written once in
+    ``operators/topn.py``; the streaming merges sort nothing of their
+    own; the transformWithState fork is gone."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parent.parent / "topn_spark"
+    topn_src = (pkg / "operators" / "topn.py").read_text()
+    assert topn_src.count("desc_nulls_last()") == 1
+    assert topn_src.count(".where(F.col(rn) <= size)") == 1
+    windowed = {
+        fn.name
+        for fn in ast.parse(topn_src).body
+        if isinstance(fn, ast.FunctionDef)
+        and "Window" in {n.id for n in ast.walk(fn) if isinstance(n, ast.Name)}
+    }
+    assert windowed == {"_cut", "rank_low_cardinality"}
+    for rel in ("streaming/stateful.py", "streaming/windows.py"):
+        src = (pkg / rel).read_text()
+        assert "sorted(" not in src and "heapq" not in src, rel
+        assert "createDataFrame" not in src, rel
+    stateful = (pkg / "streaming" / "stateful.py").read_text()
+    assert "dropna" not in stateful.split("def streaming_ewma")[0]
+    every = "".join(p.read_text() for p in pkg.rglob("*.py"))
+    assert "grouped_running_topn_v2" not in every
+    assert "transformWithState" not in every

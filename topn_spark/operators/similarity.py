@@ -918,6 +918,18 @@ def pq_adc_topk(
     return scored.orderBy(F.col("adc_dist").asc(), F.col(id_col).asc()).limit(k)
 
 
+def _query_vector(df: DataFrame, query_id, id_col: str, vec_col: str):
+    """The query's vector as a list of floats, looked up by id."""
+    qrow = (
+        df.where(F.col(id_col) == query_id)
+        .select(F.col(vec_col).cast("array<double>"))
+        .collect()
+    )
+    if not qrow:
+        raise ValueError(f"query id {query_id} not found")
+    return qrow[0][0]
+
+
 def pq_topk(
     df: DataFrame,
     k: int = 10,
@@ -943,15 +955,9 @@ def pq_topk(
         .collect()
     ]
     books = pq_train_codebooks(sample, m=m, nbits=nbits)
-    qrow = (
-        df.where(F.col(id_col) == query_id)
-        .select(F.col(vec_col).cast("array<double>"))
-        .collect()
-    )
-    if not qrow:
-        raise ValueError(f"query id {query_id} not found")
+    q = _query_vector(df, query_id, id_col, vec_col)
     codes = pq_encode(df, books, id_col, vec_col)
-    return pq_adc_topk(codes, books, qrow[0][0], k, id_col)
+    return pq_adc_topk(codes, books, q, k, id_col)
 
 
 def ivfpq_topk(
@@ -989,6 +995,16 @@ def ivfpq_topk(
     ``orderBy().limit(k)`` (TakeOrderedAndProject). No pairwise
     row-space ever exists.
     """
+    q = _query_vector(df, query_id, id_col, vec_col)
+    return _ivfpq_topk(
+        df, q, k, nlist, nprobe, m, nbits, train_rows, id_col, vec_col
+    )
+
+
+def _ivfpq_topk(
+    df, qvec, k, nlist, nprobe, m, nbits, train_rows, id_col, vec_col
+) -> DataFrame:
+    """:func:`ivfpq_topk` for an already looked-up query vector."""
     import numpy as np
 
     # --- driver-side models (both bounded, never data-sized) -------
@@ -1007,14 +1023,7 @@ def ivfpq_topk(
     B = np.asarray(books, dtype=np.float64)
     _, ksub, dsub = B.shape
 
-    qrow = (
-        df.where(F.col(id_col) == query_id)
-        .select(F.col(vec_col).cast("array<double>"))
-        .collect()
-    )
-    if not qrow:
-        raise ValueError(f"query id {query_id} not found")
-    q = np.asarray(qrow[0][0], dtype=np.float64)
+    q = np.asarray(qvec, dtype=np.float64)
 
     # --- one Arrow encode pass: (id, cell, codes) ------------------
     idt = df.schema[id_col].dataType.simpleString()
@@ -1124,19 +1133,11 @@ def ivfpq_topk_rerank(
         raise ValueError(
             f"rerank window ({rerank}) must be >= k ({k})"
         )
-    shortlist = ivfpq_topk(
-        df, query_id, k=rerank, nlist=nlist, nprobe=nprobe, m=m,
-        nbits=nbits, train_rows=train_rows, id_col=id_col,
-        vec_col=vec_col,
+    q = _query_vector(df, query_id, id_col, vec_col)
+    shortlist = _ivfpq_topk(
+        df, q, rerank, nlist, nprobe, m, nbits, train_rows, id_col, vec_col
     )
-    qrow = (
-        df.where(F.col(id_col) == query_id)
-        .select(F.col(vec_col).cast("array<double>"))
-        .collect()
-    )
-    if not qrow:
-        raise ValueError(f"query id {query_id} not found")
-    qarr = F.array(*[F.lit(float(x)) for x in qrow[0][0]])
+    qarr = F.array(*[F.lit(float(x)) for x in q])
     exact = (
         df.select(
             id_col, F.col(vec_col).cast("array<double>").alias("_v")

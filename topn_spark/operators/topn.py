@@ -31,6 +31,7 @@ variant, ``topn_grouped_salted``.
 
 from __future__ import annotations
 
+import heapq
 from dataclasses import dataclass, replace
 from typing import Mapping
 
@@ -237,12 +238,58 @@ def topn_configured(
     )
 
 
-def _tiebreak_cols(tiebreak) -> list[Column]:
-    if tiebreak is None:
-        return []
+def _prologue(
+    df: DataFrame, field: str, size: int, ignore_null: bool, group_by=None
+) -> tuple[DataFrame, list | None]:
+    """Shared entry of every top-N variant: validate, drop null rows
+    when asked (TopN.java:133-135), normalise ``group_by`` to a list."""
+    validate_topn(df.schema, field, size).get_or_throw()
+    if ignore_null:
+        df = df.where(F.col(field).isNotNull())
+    if isinstance(group_by, str):
+        group_by = [group_by]
+    return df, group_by
+
+
+def _order(field: str, tiebreak=None) -> list[Column]:
+    """The top-N order: ``field`` descending, nulls smallest
+    (TopN.java:222-231), then the tiebreak column(s)."""
     if isinstance(tiebreak, (str, Column)):
         tiebreak = [tiebreak]
-    return [F.col(c) if isinstance(c, str) else c for c in tiebreak]
+    ties = [F.col(c) if isinstance(c, str) else c for c in tiebreak or []]
+    return [F.col(field).desc_nulls_last(), *ties]
+
+
+def _driver_topn(rows, field, size: int, tiebreak=None) -> list:
+    """Driver twin of :func:`_order` and the cut, over rows already on
+    the driver: ``field`` descending with NaN above +inf and nulls
+    last, then each ``tiebreak`` name ascending with nulls first, as
+    Spark sorts. ``rows`` are indexable by those names (``Row``
+    objects, or tuples by position). A bounded heap (TopN.java:117)."""
+
+    def asc(v):
+        return (0,) if v is None else (2,) if v != v else (1, v)
+
+    def key(row):
+        v = row[field]
+        head = (2,) if v is None else (0,) if v != v else (1, -v)
+        return (head, *(asc(row[t]) for t in tiebreak or ()))
+
+    return heapq.nsmallest(size, rows, key=key)
+
+
+def _cut(
+    df: DataFrame, keys, order, size: int, ties=False, rank_col=None
+) -> DataFrame:
+    """The windowed top-N cut: ``row_number()`` (BIGINT) or, with
+    ``ties``, ``rank()`` ``OVER (PARTITION BY keys ORDER BY order) <=
+    size``, the rank dropped unless kept as ``rank_col``. Spark >=3.5
+    plans either as a ``WindowGroupLimit`` below the shuffle."""
+    rn = "__rk" if rank_col is None else rank_col
+    w = Window.partitionBy(*keys).orderBy(*order)
+    rank = F.rank().over(w) if ties else F.row_number().over(w).cast("bigint")
+    out = df.withColumn(rn, rank).where(F.col(rn) <= size)
+    return out.drop(rn) if rank_col is None else out
 
 
 def topn(
@@ -262,12 +309,8 @@ def topn(
     ``tiebreak``: optional column(s) ordering ties deterministically;
     the reference leaves ties unordered (SURVEY.md §2.1 #4).
     """
-    validate_topn(df.schema, field, size).get_or_throw()
-    if ignore_null:
-        # TopN.java:133-135
-        df = df.where(F.col(field).isNotNull())
-    order = [F.col(field).desc_nulls_last(), *_tiebreak_cols(tiebreak)]
-    return df.orderBy(*order).limit(size)
+    df, _ = _prologue(df, field, size, ignore_null)
+    return df.orderBy(*_order(field, tiebreak)).limit(size)
 
 
 def topn_grouped(
@@ -290,19 +333,8 @@ def topn_grouped(
     If ``rank_col`` is given, the 1-based rank is kept as that column
     (BIGINT); otherwise output schema == input schema.
     """
-    validate_topn(df.schema, field, size).get_or_throw()
-    if isinstance(group_by, str):
-        group_by = [group_by]
-    if ignore_null:
-        df = df.where(F.col(field).isNotNull())
-    w = Window.partitionBy(*group_by).orderBy(
-        F.col(field).desc_nulls_last(), *_tiebreak_cols(tiebreak)
-    )
-    rn = "__topn_rn" if rank_col is None else rank_col
-    out = df.withColumn(rn, F.row_number().over(w).cast("bigint")).where(
-        F.col(rn) <= size
-    )
-    return out.drop(rn) if rank_col is None else out
+    df, keys = _prologue(df, field, size, ignore_null, group_by)
+    return _cut(df, keys, _order(field, tiebreak), size, rank_col=rank_col)
 
 
 def topn_grouped_salted(
@@ -324,32 +356,14 @@ def topn_grouped_salted(
     handling covers joins, not windows — this is the window-side
     escape hatch (SURVEY.md §4.2).
     """
-    validate_topn(df.schema, field, size).get_or_throw()
-    if isinstance(group_by, str):
-        group_by = [group_by]
-    if ignore_null:
-        df = df.where(F.col(field).isNotNull())
+    df, keys = _prologue(df, field, size, ignore_null, group_by)
     salt = F.pmod(
         F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(salt_buckets)
     )
-    ties = _tiebreak_cols(tiebreak)
-    w1 = Window.partitionBy(*group_by, "__salt").orderBy(
-        F.col(field).desc_nulls_last(), *ties
-    )
-    partial = (
-        df.withColumn("__salt", salt)
-        .withColumn("__rn1", F.row_number().over(w1))
-        .where(F.col("__rn1") <= size)
-        .drop("__salt", "__rn1")
-    )
-    w2 = Window.partitionBy(*group_by).orderBy(
-        F.col(field).desc_nulls_last(), *ties
-    )
-    return (
-        partial.withColumn("__rn2", F.row_number().over(w2))
-        .where(F.col("__rn2") <= size)
-        .drop("__rn2")
-    )
+    order = _order(field, tiebreak)
+    salted = df.withColumn("__salt", salt)
+    partial = _cut(salted, [*keys, "__salt"], order, size).drop("__salt")
+    return _cut(partial, keys, order, size)
 
 
 def topn_with_ties(
@@ -378,26 +392,13 @@ def topn_with_ties(
     semantics without a global sort; the driver holds ``size`` values,
     never data. Two jobs, both scale-safe at 100 TB.
     """
-    validate_topn(df.schema, field, size).get_or_throw()
-    if ignore_null:
-        df = df.where(F.col(field).isNotNull())
-    if group_by is not None:
-        if isinstance(group_by, str):
-            group_by = [group_by]
-        w = Window.partitionBy(*group_by).orderBy(
-            F.col(field).desc_nulls_last()
-        )
-        return (
-            df.withColumn("__rk", F.rank().over(w))
-            .where(F.col("__rk") <= size)
-            .drop("__rk")
-        )
+    df, keys = _prologue(df, field, size, ignore_null, group_by)
+    if keys is not None:
+        return _cut(df, keys, _order(field), size, ties=True)
     # Global: threshold = the size-th distinct-position value (nulls
     # sort last, so a null threshold means fewer than `size` non-null
     # rows — keep nulls too, matching rank() over desc_nulls_last).
-    top = df.select(field).orderBy(F.col(field).desc_nulls_last()).limit(
-        size
-    )
+    top = df.select(field).orderBy(*_order(field)).limit(size)
     row = top.agg(
         F.count(F.lit(1)).alias("n"),
         F.count(field).alias("n_nonnull"),

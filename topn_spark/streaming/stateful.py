@@ -6,7 +6,7 @@ driver; this operator keeps a top-N PER KEY inside Spark's state
 store — state lives with the executors, scales with the key space,
 and survives checkpoint/restart. The merge is the reference's bounded
 heap (TopN.java:117-118) applied to (held state ∪ new batch rows) per
-key per micro-batch.
+key per micro-batch, under ``operators.topn``'s own order.
 """
 
 from __future__ import annotations
@@ -15,7 +15,10 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from topn_spark.operators.topn import _driver_topn
 
 
 def grouped_running_topn(
@@ -30,19 +33,18 @@ def grouped_running_topn(
     Emits, on every micro-batch that touches a key, that key's current
     top rows as ``(key, version, ids array, values array)`` where
     ``version`` is the total row count processed for the key (a
-    monotone watermark for "which emission is newest"). Values are
-    held descending; nulls in ``field`` are ignored (they can never
-    enter a top-N under null-smallest semantics unless fewer than
-    ``size`` non-null rows exist — matching ignoreNull=False would
-    need null tracking; this operator documents ignoreNull=True
-    behavior).
+    monotone watermark for "which emission is newest"). The rows are
+    those of ``topn_grouped(ignore_null=True, tiebreak=id_col)``:
+    null ``field`` rows are dropped, NaN ranks above every number, ties
+    go to the smaller id. Null-ness enters, and NaN leaves, the pandas
+    kernel as a flag: pandas conversion conflates NaN and null.
 
     State per key is two ``size``-bounded lists — O(keys × size)
     across the cluster's state stores.
     """
     out_schema = (
         f"{key_col} string, version bigint, ids array<bigint>, "
-        f"vals array<double>"
+        f"vals array<double>, nan array<boolean>"
     )
     state_schema = "ids array<bigint>, vals array<double>, n bigint"
 
@@ -51,125 +53,41 @@ def grouped_running_topn(
         pdfs: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            ids, vals, seen = state.get
-            ids, vals = list(ids), list(vals)
-        else:
-            ids, vals, seen = [], [], 0
+        ids, vals, seen = state.get if state.exists else ([], [], 0)
+        held = list(zip(ids, vals))
         for pdf in pdfs:
-            sub = pdf[[id_col, field]].dropna(subset=[field])
             seen += len(pdf)
-            for i, v in zip(sub[id_col], sub[field]):
-                ids.append(int(i))
-                vals.append(float(v))
-        # bounded-heap cut: keep top-`size` by value desc, id asc ties
-        order = sorted(
-            range(len(vals)), key=lambda j: (-vals[j], ids[j])
-        )[:size]
-        ids = [ids[j] for j in order]
-        vals = [vals[j] for j in order]
+            sub = pdf[~pdf["__null"]]
+            held += zip(sub[id_col].astype("int64"), sub[field])
+        # (id, value) pairs under topn's order: value desc, id asc
+        top = _driver_topn(held, 1, size, tiebreak=[0])
+        ids = [int(i) for i, _ in top]
+        vals = [float(v) for _, v in top]
         state.update((ids, vals, seen))
+        # pandas output turns NaN into null: ship NaN as a flag
         yield pd.DataFrame(
             {
                 key_col: [key[0]],
                 "version": [seen],
                 "ids": [ids],
-                "vals": [vals],
+                "vals": [[0.0 if v != v else v for v in vals]],
+                "nan": [[v != v for v in vals]],
             }
         )
 
-    return stream.groupBy(key_col).applyInPandasWithState(
+    flagged = stream.select(
+        key_col, id_col, field, F.col(field).isNull().alias("__null")
+    )
+    out = flagged.groupBy(key_col).applyInPandasWithState(
         fn,
         outputStructType=out_schema,
         stateStructType=state_schema,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-def grouped_running_topn_v2(
-    stream: DataFrame,
-    key_col: str,
-    id_col: str,
-    field: str,
-    size: int,
-) -> DataFrame:
-    """Per-key running top-``size`` on the ``transformWithState``
-    API (Spark 4) — same semantics and output shape as
-    :func:`grouped_running_topn`, held in a typed ``ValueState``
-    inside the RocksDB state store — transformWithState requires
-    ``spark.sql.streaming.stateStore.providerClass`` to be the
-    RocksDB provider, set before the query starts (runtime-settable;
-    scope it per query, as the default HDFS-backed store remains
-    right for the v1 operators).
-
-    The v2 API is the forward path for custom stateful operators:
-    typed state handles, timers, and TTL live on the handle instead
-    of a single opaque tuple, and state survives schema evolution.
-    Kept alongside the v1 operator so both engine surfaces are
-    exercised.
-
-    Environment gate: transformWithState's Python↔JVM state protocol
-    is protobuf-based; without the ``protobuf`` package this raises
-    immediately (instead of crashing the streaming worker mid-query).
-    The v1 operator has no such dependency.
-    """
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError as e:
-        raise ImportError(
-            "grouped_running_topn_v2 needs the 'protobuf' package "
-            "(transformWithState state protocol); use "
-            "grouped_running_topn (applyInPandasWithState) instead"
-        ) from e
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    out_schema = (
-        f"{key_col} string, version bigint, ids array<bigint>, "
-        f"vals array<double>"
-    )
-
-    class _TopNProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "topn", "ids array<bigint>, vals array<double>, n bigint"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            held = self._state.get() if self._state.exists() else None
-            ids, vals, seen = (
-                (list(held[0]), list(held[1]), held[2]) if held else ([], [], 0)
-            )
-            for pdf in rows:
-                sub = pdf[[id_col, field]].dropna(subset=[field])
-                seen += len(pdf)
-                for i, v in zip(sub[id_col], sub[field]):
-                    ids.append(int(i))
-                    vals.append(float(v))
-            order = sorted(
-                range(len(vals)), key=lambda j: (-vals[j], ids[j])
-            )[:size]
-            ids = [ids[j] for j in order]
-            vals = [vals[j] for j in order]
-            self._state.update((ids, vals, seen))
-            yield pd.DataFrame(
-                {
-                    key_col: [key[0]],
-                    "version": [seen],
-                    "ids": [ids],
-                    "vals": [vals],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return stream.groupBy(key_col).transformWithStateInPandas(
-        statefulProcessor=_TopNProcessor(),
-        outputStructType=out_schema,
-        outputMode="append",
-        timeMode="None",
-    )
+    nan = F.lit(float("nan"))
+    vals = F.zip_with("vals", "nan", lambda v, n: F.when(n, nan).otherwise(v))
+    return out.select(key_col, "version", "ids", vals.alias("vals"))
 
 
 def streaming_ewma(

@@ -109,22 +109,18 @@ def streaming_topn_sink(
     union of all processed batches (top-N is a commutative,
     idempotent merge — no retraction needed).
 
-    The held state is ≤ ``size`` driver-side rows, by construction.
+    One Spark action per batch (the candidate's ``collect``); the merge
+    runs on the driver over <= 2*size rows under ``topn``'s order. The
+    held state is <= ``size`` driver-side rows, by construction.
     """
-    from topn_spark.operators.topn import topn
+    from topn_spark.operators.topn import _driver_topn, topn
 
     state: dict[str, list] = {"rows": []}
 
     def batch_fn(batch_df: DataFrame, batch_id: int) -> None:
         rows = topn(batch_df, field, size, tiebreak=tiebreak).collect()
-        if state["rows"]:
-            # merge from the collected candidate: the batch is scanned
-            # once, and the merge runs over <= 2*size driver rows
-            held = batch_df.sparkSession.createDataFrame(
-                state["rows"] + rows, batch_df.schema
-            )
-            rows = topn(held, field, size, tiebreak=tiebreak).collect()
-        state["rows"] = rows
+        held = state["rows"] + rows
+        state["rows"] = _driver_topn(held, field, size, tiebreak)
 
     def results_fn() -> list:
         return list(state["rows"])
