@@ -1548,3 +1548,167 @@ def test_one_shard_writer_and_one_sequence_decoder():
     ):
         holders = [str(p) for p, text in sources.items() if gone in text]
         assert not holders, (gone, holders)
+
+
+# ------------------------------------------ byte-sized writer spread
+
+
+def _spread_seqs(spark, ids, bump=()):
+    """Pandas-built (Arrow) sequences: a list-built frame is a Python
+    RDD whose every job first runs a Python pass per partition."""
+    import pandas as pd
+
+    ids = list(ids)
+    toks = [
+        [(i * 7 + j) % 50 + 1 + (i in bump) for j in range(1 + i % 5)]
+        for i in ids
+    ]
+    return spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "seq_id": ids,
+                "tokens": toks,
+                "loss_mask": [[j % 2 == 0 for j in t] for t in toks],
+            }
+        ),
+        "seq_id bigint, tokens array<bigint>, loss_mask array<boolean>",
+    )
+
+
+def _write_job(spark, fn):
+    """Run ``fn`` under a fresh job group; return its result and the
+    ``(n_stages, n_tasks)`` of the group's last job — the writer's
+    ``collect``. A repartition would put its shuffle-map stage in
+    that job too (run as a separate AQE job, listed as skipped)."""
+    import uuid
+
+    sc = spark.sparkContext
+    tr = sc.statusTracker()
+    group = f"spread-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    stages = tr.getJobInfo(max(tr.getJobIdsForGroup(group))).stageIds
+    return out, (len(stages), tr.getStageInfo(max(stages)).numTasks)
+
+
+def test_small_delta_writes_in_one_task_without_exchange(spark, tmp_path):
+    """A commit far below the advisory partition size writes all of
+    its touched shards in ONE task: the writer's job is one stage,
+    with no exchange ahead of it."""
+    from topn_spark.operators.binshard import export_bin_shards_delta
+    from topn_spark.operators.pipeline import shard_assignment
+
+    out = str(tmp_path / "small_delta")
+    export_bin_shards(_spread_seqs(spark, range(40)), out, 4, salt="sp")
+    man, job = _write_job(
+        spark,
+        lambda: export_bin_shards_delta(
+            _spread_seqs(spark, range(40, 46)),
+            shard_assignment(
+                _spread_seqs(spark, range(46)), 4, "seq_id", "sp"
+            ),
+            out, 4, salt="sp",
+        ),
+    )
+    assert sum(r.rewritten for r in man.collect()) > 1
+    assert job == (1, 1)
+
+
+def test_forced_spread_writes_the_same_bytes(spark, tmp_path):
+    """With the advisory partition size set to a few bytes, the full,
+    incremental and delta writers spread to one task per written
+    shard, and every shard file equals the one-task write's."""
+    from topn_spark.operators.binshard import export_bin_shards_delta
+    from topn_spark.operators.pipeline import shard_assignment
+
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+
+    def steps(out):
+        jobs = []
+        _, job = _write_job(
+            spark,
+            lambda: export_bin_shards(
+                _spread_seqs(spark, range(30)), out, 5, salt="f"
+            ),
+        )
+        jobs.append(job)
+        man, job = _write_job(
+            spark,
+            lambda: export_bin_shards(
+                _spread_seqs(spark, range(30), bump=(3, 4)), out, 5,
+                salt="f", incremental=True,
+            ),
+        )
+        jobs.append((job, sum(r.rewritten for r in man.collect())))
+        man, job = _write_job(
+            spark,
+            lambda: export_bin_shards_delta(
+                _spread_seqs(spark, range(30, 36)),
+                shard_assignment(
+                    _spread_seqs(spark, range(36), bump=(3, 4)), 5,
+                    "seq_id", "f",
+                ),
+                out, 5, salt="f",
+            ),
+        )
+        jobs.append((job, sum(r.rewritten for r in man.collect())))
+        return jobs, _file_hashes(out)
+
+    one_jobs, one = steps(str(tmp_path / "one"))
+    spark.conf.set(key, "8b")
+    try:
+        wide_jobs, wide = steps(str(tmp_path / "wide"))
+    finally:
+        spark.conf.unset(key)
+    assert one == wide
+    assert one_jobs[0] == (1, 1)
+    assert all(job == (1, 1) for job, _ in one_jobs[1:])
+    # spread: shuffle-map stage + one write task per written shard
+    assert wide_jobs[0] == (2, 5)
+    for (stages, tasks), n_written in wide_jobs[1:]:
+        assert n_written > 1
+        assert (stages, tasks) == (2, n_written)
+
+
+def test_incremental_one_changed_shard_writes_in_one_task(
+    spark, tmp_path
+):
+    """An ``incremental=True`` export that changes one of 8 shards
+    sizes its writer from that shard alone: one task, one stage."""
+    out = str(tmp_path / "inc_one")
+    export_bin_shards(_spread_seqs(spark, range(48)), out, 8, salt="i")
+    man, job = _write_job(
+        spark,
+        lambda: export_bin_shards(
+            _spread_seqs(spark, range(48), bump=(5,)), out, 8,
+            salt="i", incremental=True,
+        ),
+    )
+    assert sum(r.rewritten for r in man.collect()) == 1
+    assert job == (1, 1)
+
+
+def test_manifest_collect_starts_no_python_worker(spark, tmp_path):
+    """The returned manifest is a local relation: its executed plan
+    scans no Python RDD, and collecting it runs no Spark job."""
+    out = str(tmp_path / "man_local")
+    for man in (
+        export_bin_shards(_spread_seqs(spark, range(20)), out, 3),
+        export_bin_shards(
+            _spread_seqs(spark, range(20), bump=(2,)), out, 3,
+            incremental=True,
+        ),
+    ):
+        sc = spark.sparkContext
+        sc.setJobGroup("manifest-collect", "manifest-collect")
+        try:
+            rows = man.collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        plan = man._jdf.queryExecution().executedPlan().toString()
+        assert "ExistingRDD" not in plan, plan
+        assert not sc.statusTracker().getJobIdsForGroup("manifest-collect")
+        assert [r.shard for r in rows] == [0, 1, 2]

@@ -72,7 +72,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from topn_spark.operators.binfs import LocalBinaryStore
+from topn_spark.operators.binfs import LocalBinaryStore, _pa_schema
 
 _MAGIC = b"TNSPBIN1"
 _AST_MAGIC = b"TNSPAST1"
@@ -111,17 +111,16 @@ def _fields(ddl: str) -> list[str]:
 def _rows_df(
     spark: SparkSession, rows: list[dict], ddl: str
 ) -> DataFrame:
-    """Model-sized accounting rows (driver-side dicts from the
+    """Model-sized per-shard work list (driver-side dicts from the
     storage backend) as a DataFrame in the DDL's column order."""
     names = _fields(ddl)
     data = [tuple(r[n] for n in names) for r in rows]
-    # One row per slice: every consumer is either a per-shard
-    # mapInPandas work-list (wants exactly one task per shard — the
-    # default 32-way parallelize splits a handful of rows into
-    # mostly-empty partitions, one task's scheduler overhead each)
-    # or a model-sized accounting table where fewer tasks only
-    # helps. This also makes the downstream repartition-by-shard
-    # exchange unnecessary (guide §2.4: remove shuffles outright).
+    # One row per slice: every consumer is a per-shard mapInPandas
+    # work-list (wants exactly one task per shard — the default
+    # 32-way parallelize splits a handful of rows into mostly-empty
+    # partitions, one task's scheduler overhead each). This also
+    # makes the downstream repartition-by-shard exchange
+    # unnecessary (guide §2.4: remove shuffles outright).
     return spark.createDataFrame(
         spark.sparkContext.parallelize(data, max(len(data), 1)), ddl
     )
@@ -454,14 +453,17 @@ def _shard_stats(hashed: DataFrame, dtype: str, caller: str):
     the per-shard signature parts (``n``, ``x``) the incremental
     diff and the delta fold consume, AND the token-id range the
     dtype resolution checks — never two scans where one suffices
-    (at corpus scale, input passes ARE the cost model). Returns the
-    stats rows and the dtype code; sequences without tokens carry
-    no range, so an all-empty input resolves like token id 0."""
+    (at corpus scale, input passes ARE the cost model) — and the
+    token count ``t`` the writer's byte estimate is built from
+    (:func:`_token_bytes`). Returns the stats rows and the dtype
+    code; sequences without tokens carry no range, so an all-empty
+    input resolves like token id 0."""
     stats = hashed.groupBy("shard").agg(
         F.count(F.lit(1)).alias("n"),
         F.bit_xor("_h").alias("x"),
         F.min(F.array_min("_toks")).alias("lo"),
         F.max(F.array_max("_toks")).alias("hi"),
+        F.sum(F.size("_toks")).alias("t"),
     ).collect()
     lo = min(
         (r["lo"] for r in stats if r["lo"] is not None), default=0
@@ -470,6 +472,13 @@ def _shard_stats(hashed: DataFrame, dtype: str, caller: str):
         (r["hi"] for r in stats if r["hi"] is not None), default=0
     )
     return stats, _resolve_dtype(int(lo), int(hi), dtype, caller)
+
+
+def _token_bytes(stats, code: int) -> int:
+    """Bytes the ``.bin`` streams of these stats rows' shards take in
+    dtype ``code`` — the data-sized part of a write's estimate."""
+    itemsize = np.dtype(_DTYPES[code][0]).itemsize
+    return itemsize * sum(int(r["t"] or 0) for r in stats)
 
 
 def _prior_export(spark, out_dir: str, st, want: dict, caller: str):
@@ -513,16 +522,30 @@ def _prior_export(spark, out_dir: str, st, want: dict, caller: str):
 
 
 def _write_shards(
-    st, out_dir, hashed, nparts, code, has_mask, has_ast, id_col
+    st, out_dir, hashed, est_bytes, n_write, code, has_mask, has_ast,
+    id_col,
 ) -> list[dict]:
     """The ONE write step of every exporter — one writer, one byte
     layout, regardless of which planner decided WHICH shards to
-    rewrite: a hash repartition on the shard key plus an
-    in-partition sort by ``(shard, _id)``, then an Arrow
+    rewrite: an in-partition sort by ``(shard, _id)``, then an Arrow
     ``mapInPandas`` pass in which each task streams its shards'
     bytes straight to the storage backend and yields the
     model-sized manifest rows. ``collect`` executes the write
-    exactly once; the manifest is one row per shard."""
+    exactly once; the manifest is one row per shard.
+
+    Scale shape: the spread is sized from the bytes the write will
+    produce (``est_bytes``, built on the driver from the stats pass
+    and the prior manifest) against the session's AQE target
+    ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` —
+    ``clamp(ceil(est_bytes / advisory), 1, n_write)`` tasks. One
+    task reads its input through ``coalesce(1)``: no exchange, the
+    write is one stage (a Python task costs ~0.15 s on a 4-core
+    local box even when it does nothing, so a small streaming
+    commit pays for one, not one per shard). More tasks
+    hash-repartition on the shard key. The
+    writer switches state on the shard key, so a task may hold
+    several shards; each shard is still written whole, by one task,
+    in id order, so the bytes do not depend on the spread."""
     np_dtype, _, dtype_name = _DTYPES[code]
     itemsize = np.dtype(np_dtype).itemsize
 
@@ -716,10 +739,20 @@ def _write_shards(
             out_rows.append(close_shard(state))
         if out_rows:
             yield pd.DataFrame(out_rows)
+    spark = hashed.sparkSession
+    advisory = spark._jsparkSession.sessionState().conf().getConf(
+        spark._jvm.org.apache.spark.sql.internal.SQLConf
+        .ADVISORY_PARTITION_SIZE_IN_BYTES()
+    )
+    nparts = max(1, min(n_write, -(-est_bytes // advisory)))
+    spread = (
+        hashed.coalesce(1)
+        if nparts == 1
+        else hashed.repartition(nparts, "shard")
+    )
     return [
         r.asDict()
-        for r in hashed.repartition(nparts, "shard")
-        .sortWithinPartitions("shard", "_id")
+        for r in spread.sortWithinPartitions("shard", "_id")
         .mapInPandas(_write, _MANIFEST_SCHEMA)
         .collect()
     ]
@@ -830,14 +863,19 @@ def export_bin_shards(
     changed shard). The writer walks each shard sorted by id, so
     duplicates surface as adjacent rows and the check is free.
 
-    Scale shape: ONE shuffle (hash repartition on the shard key +
-    in-partition sort — the exchange the partitioned parquet write
-    pays too), then a single Arrow ``mapInPandas`` pass in which
-    each task streams its shards' bytes straight to storage:
-    nothing data-sized ever sits on the driver, and memory per task
-    is one Arrow batch plus the open write buffers. The manifest is
-    n_shards rows (model-sized) — collected once so the write
-    executes exactly once, then persisted next to the shards.
+    Scale shape: the stats aggregate, then ONE write stage sized by
+    bytes (:func:`_write_shards`): the written shards' token bytes
+    over the session's advisory partition size, at most one task
+    per written shard. A write under one advisory partition runs in
+    one task with no exchange; a larger one hash-repartitions on
+    the shard key (the exchange the partitioned parquet write pays
+    too). Either way an in-partition sort feeds an Arrow
+    ``mapInPandas`` pass in which each task streams its shards'
+    bytes straight to storage: nothing data-sized ever sits on the
+    driver, and memory per task is one Arrow batch plus the open
+    write buffers. The manifest is n_shards rows (model-sized) —
+    collected once so the write executes exactly once, then
+    persisted next to the shards.
 
     ``store`` selects the storage backend
     (:mod:`topn_spark.operators.binfs`): the default
@@ -922,7 +960,6 @@ def export_bin_shards(
         }
         st.makedirs(out_dir)
         old_rows = None
-        n_write = len(stats)
         if incremental:
             prior, old_rows = _prior_export(
                 spark, out_dir, st,
@@ -958,13 +995,12 @@ def export_bin_shards(
                 F.col("shard").isin(sorted(changed))
             )
             meta["export_version"] = int(prior["export_version"]) + 1
-            n_write = len(changed)
+            stats = [r for r in stats if int(r["shard"]) in changed]
         else:
             _clear_shards(st, out_dir, None)
         rows = _write_shards(
-            st, out_dir, assigned,
-            int(n_shards) if seqs_per_shard is None else max(n_write, 1),
-            code, has_mask, has_ast, id_col,
+            st, out_dir, assigned, _token_bytes(stats, code),
+            len(stats), code, has_mask, has_ast, id_col,
         )
         return _commit_export(spark, st, out_dir, rows, old_rows, meta)
     finally:
@@ -977,16 +1013,27 @@ def _manifest_df(spark, rows, written) -> DataFrame:
     delta exports) add the ``rewritten`` boolean per shard. Callers
     that need to know whether a rewrite changed anything read the
     ``export_version`` in ``_manifest_meta`` (bumped exactly when a
-    rewrite happened) instead of collecting this frame."""
-    out = _rows_df(
-        spark, sorted(rows, key=lambda r: r["shard"]), _MANIFEST_SCHEMA
+    rewrite happened) instead of collecting this frame.
+
+    Built from an Arrow table, so the frame is a local relation:
+    collecting it starts no Python worker and no Spark job, and it
+    keeps the driver's shard order (a Spark sort would add a
+    range-exchange job). :func:`_rows_df` stays for the per-shard
+    work lists that want one task per shard."""
+    import pyarrow as pa
+
+    out = spark.createDataFrame(
+        pa.Table.from_pylist(
+            sorted(rows, key=lambda r: r["shard"]),
+            schema=_pa_schema(_MANIFEST_SCHEMA),
+        )
     )
     if written is not None:
         out = out.withColumn(
             "rewritten",
             F.col("shard").isin([int(k) for k in written]),
         )
-    return out.orderBy("shard")
+    return out
 
 
 def _parse_sig(sig: str) -> tuple[int, int]:
@@ -1051,8 +1098,11 @@ def export_bin_shards_delta(
        keeps untouched FILES closed. With ``store_reader`` set,
        ``store_df`` may be ``None`` (it is never consulted).
     3. The rewrite is the full exporter's own write step
-       (:func:`_write_shards` — same ONE repartition-by-shard
-       shuffle, atomic writes, crc manifest), then CROSS-CHECKS
+       (:func:`_write_shards` — same byte-sized spread, atomic
+       writes, crc manifest; the estimate is the batch's token
+       bytes plus the touched shards' prior bytes from the
+       manifest, so a small commit writes in one task with no
+       exchange), then CROSS-CHECKS
        each written shard's signature against the batch-side fold:
        a mismatch means the append-only/unique-id contract was
        violated (an id updated, removed, or duplicated) and RAISES — the export never silently diverges
@@ -1148,6 +1198,12 @@ def export_bin_shards_delta(
         _hashed_projection(
             src_df.where(F.col("shard").isin(touched)),
             tokens_col, mask_col, id_col, assets_col,
+        ),
+        _token_bytes(bstats, code)
+        + sum(
+            old_rows[k][c]
+            for k in touched if k in old_rows
+            for c in ("bin_bytes", "msk_bytes", "ast_bytes")
         ),
         len(touched), code, has_mask, has_ast, id_col,
     )

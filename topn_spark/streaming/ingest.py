@@ -1393,8 +1393,10 @@ def bin_export_batch(
     :func:`preference_bin_export_batch`). Returns the manifest.
 
     Scale shape per commit: one batch write (shuffle-free append),
-    one batch-sized aggregate, one rewrite shuffle over touched
-    shards' rows only; epoch re-derivation is index-sized. The
+    one batch-sized aggregate, one rewrite over touched shards' rows
+    only, spread by the bytes it writes (a commit under one advisory
+    partition writes in one task with no exchange); epoch
+    re-derivation is index-sized. The
     corpus store stays a Spark-managed parquet dataset (any
     cluster filesystem); ``store`` routes only the BINARY layer's
     I/O (:mod:`topn_spark.operators.binfs`).

@@ -17,16 +17,33 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def _maybe_watermark(
-    df: DataFrame, ts_col: str, watermark: str | None
+def _window_counts(
+    df: DataFrame,
+    ts_col: str,
+    win: Column,
+    group_cols: list[str] | None,
+    watermark: str | None,
+    prefix: str,
 ) -> DataFrame:
+    """The one body of the window-count builders: watermark (on a
+    stream), ``groupBy(win, *group_cols)``, count, then the window's
+    bounds as ``<prefix>_start`` / ``<prefix>_end``."""
     if watermark is not None and df.isStreaming:
-        return df.withWatermark(ts_col, watermark)
-    return df
+        df = df.withWatermark(ts_col, watermark)
+    cols = group_cols or []
+    out = df.groupBy(win.alias("w"), *cols).agg(
+        F.count(F.lit(1)).alias("cnt")
+    )
+    return out.select(
+        F.col("w.start").alias(f"{prefix}_start"),
+        F.col("w.end").alias(f"{prefix}_end"),
+        *cols,
+        "cnt",
+    )
 
 
 def tumbling_counts(
@@ -38,14 +55,9 @@ def tumbling_counts(
 ) -> DataFrame:
     """Tumbling event-time window counts:
     ``(window_start, window_end, *group_cols, cnt)``."""
-    df = _maybe_watermark(df, ts_col, watermark)
-    keys = [F.window(ts_col, window).alias("w"), *(group_cols or [])]
-    out = df.groupBy(*keys).agg(F.count(F.lit(1)).alias("cnt"))
-    return out.select(
-        F.col("w.start").alias("window_start"),
-        F.col("w.end").alias("window_end"),
-        *(group_cols or []),
-        "cnt",
+    return _window_counts(
+        df, ts_col, F.window(ts_col, window), group_cols, watermark,
+        "window",
     )
 
 
@@ -59,14 +71,9 @@ def sliding_counts(
 ) -> DataFrame:
     """Sliding event-time window counts (each row lands in
     window/slide overlapping windows)."""
-    df = _maybe_watermark(df, ts_col, watermark)
-    keys = [F.window(ts_col, window, slide).alias("w"), *(group_cols or [])]
-    out = df.groupBy(*keys).agg(F.count(F.lit(1)).alias("cnt"))
-    return out.select(
-        F.col("w.start").alias("window_start"),
-        F.col("w.end").alias("window_end"),
-        *(group_cols or []),
-        "cnt",
+    return _window_counts(
+        df, ts_col, F.window(ts_col, window, slide), group_cols,
+        watermark, "window",
     )
 
 
@@ -80,14 +87,9 @@ def session_counts(
     """Session windows: per key, rows within ``gap`` of each other
     merge into one session → ``(session_start, session_end, *keys,
     cnt)``. Streaming requires a watermark (state must be bounded)."""
-    df = _maybe_watermark(df, ts_col, watermark)
-    keys = [F.session_window(ts_col, gap).alias("w"), *(group_cols or [])]
-    out = df.groupBy(*keys).agg(F.count(F.lit(1)).alias("cnt"))
-    return out.select(
-        F.col("w.start").alias("session_start"),
-        F.col("w.end").alias("session_end"),
-        *(group_cols or []),
-        "cnt",
+    return _window_counts(
+        df, ts_col, F.session_window(ts_col, gap), group_cols,
+        watermark, "session",
     )
 
 
