@@ -1595,7 +1595,7 @@ def _write_job(spark, fn):
 
 
 def test_small_delta_writes_in_one_task_without_exchange(spark, tmp_path):
-    """A commit far below the advisory partition size writes all of
+    """A commit far below one writer task's bytes writes all of
     its touched shards in ONE task: the writer's job is one stage,
     with no exchange ahead of it."""
     from topn_spark.operators.binshard import export_bin_shards_delta
@@ -1671,6 +1671,25 @@ def test_forced_spread_writes_the_same_bytes(spark, tmp_path):
     for (stages, tasks), n_written in wide_jobs[1:]:
         assert n_written > 1
         assert (stages, tasks) == (2, n_written)
+
+
+def test_writer_task_bytes_caps_the_advisory_size(
+    spark, tmp_path, monkeypatch
+):
+    """The writer's own per-task size caps the session's advisory
+    partition size: at the default advisory size, a write over that
+    cap spreads to one task per written shard."""
+    from topn_spark.operators import binshard
+
+    monkeypatch.setattr(binshard, "_WRITER_TASK_BYTES", 8)
+    _, job = _write_job(
+        spark,
+        lambda: export_bin_shards(
+            _spread_seqs(spark, range(30)), str(tmp_path / "cap"), 5,
+            salt="f",
+        ),
+    )
+    assert job == (2, 5)
 
 
 def test_incremental_one_changed_shard_writes_in_one_task(

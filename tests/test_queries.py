@@ -150,7 +150,7 @@ def test_catalog_text_pinned():
         )).encode())
     assert len(QUERIES) == 301
     assert h.hexdigest() == (
-        "7ed5491d026c4d9923d643aa92322f171fa1813a6dcc83d7cbfb091527be1270"
+        "d04119aee413b916acd09c18294e0e5dd4599e42cecb808e3098e2c838607084"
     )
 
 

@@ -82,6 +82,14 @@ _DTYPES = {
     2: ("<u2", (1 << 16) - 1, "uint16"),
     4: ("<u4", (1 << 32) - 1, "uint32"),
 }
+#: Token bytes one writer task takes before the write spreads (the
+#: session's AQE advisory size caps it further). The advisory default,
+#: 64 MB, is a JVM shuffle target; this Python writer's crossover is
+#: far lower. On a 4-core local box, materialized z116/z124 plants at
+#: seq 2048 over 64 shards: one task ties a spread at 5 MB of
+#: tokens and is 7-18% slower at 16 MB and 14-18% slower at 53 MB
+#: (SCALING.md §14).
+_WRITER_TASK_BYTES = 8 << 20
 
 _MANIFEST_SCHEMA = (
     "shard int, n_seqs bigint, n_tokens bigint, n_supervised bigint,"
@@ -533,13 +541,14 @@ def _write_shards(
     model-sized manifest rows. ``collect`` executes the write
     exactly once; the manifest is one row per shard.
 
-    Scale shape: the spread is sized from the bytes the write will
-    produce (``est_bytes``, built on the driver from the stats pass
-    and the prior manifest) against the session's AQE target
-    ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` —
-    ``clamp(ceil(est_bytes / advisory), 1, n_write)`` tasks. One
-    task reads its input through ``coalesce(1)``: no exchange, the
-    write is one stage (a Python task costs ~0.15 s on a 4-core
+    Scale shape: the spread is sized from the token bytes the write
+    will produce (``est_bytes``, built on the driver from the stats
+    pass and the prior manifest) —
+    ``clamp(ceil(est_bytes / per_task), 1, n_write)`` tasks, where
+    ``per_task`` is :data:`_WRITER_TASK_BYTES` capped by the
+    session's ``spark.sql.adaptive.advisoryPartitionSizeInBytes``.
+    One task reads its input through ``coalesce(1)``: no exchange,
+    the write is one stage (a Python task costs ~0.15 s on a 4-core
     local box even when it does nothing, so a small streaming
     commit pays for one, not one per shard). More tasks
     hash-repartition on the shard key. The
@@ -740,11 +749,14 @@ def _write_shards(
         if out_rows:
             yield pd.DataFrame(out_rows)
     spark = hashed.sparkSession
-    advisory = spark._jsparkSession.sessionState().conf().getConf(
-        spark._jvm.org.apache.spark.sql.internal.SQLConf
-        .ADVISORY_PARTITION_SIZE_IN_BYTES()
+    per_task = min(
+        _WRITER_TASK_BYTES,
+        spark._jsparkSession.sessionState().conf().getConf(
+            spark._jvm.org.apache.spark.sql.internal.SQLConf
+            .ADVISORY_PARTITION_SIZE_IN_BYTES()
+        ),
     )
-    nparts = max(1, min(n_write, -(-est_bytes // advisory)))
+    nparts = max(1, min(n_write, -(-est_bytes // per_task)))
     spread = (
         hashed.coalesce(1)
         if nparts == 1
@@ -865,17 +877,16 @@ def export_bin_shards(
 
     Scale shape: the stats aggregate, then ONE write stage sized by
     bytes (:func:`_write_shards`): the written shards' token bytes
-    over the session's advisory partition size, at most one task
-    per written shard. A write under one advisory partition runs in
-    one task with no exchange; a larger one hash-repartitions on
-    the shard key (the exchange the partitioned parquet write pays
-    too). Either way an in-partition sort feeds an Arrow
-    ``mapInPandas`` pass in which each task streams its shards'
-    bytes straight to storage: nothing data-sized ever sits on the
-    driver, and memory per task is one Arrow batch plus the open
-    write buffers. The manifest is n_shards rows (model-sized) —
-    collected once so the write executes exactly once, then
-    persisted next to the shards.
+    over the writer's per-task size, at most one task per written
+    shard. A write under one task's bytes runs in one task with no
+    exchange; a larger one hash-repartitions on the shard key (the
+    exchange the partitioned parquet write pays too). Either way an
+    in-partition sort feeds an Arrow ``mapInPandas`` pass in which
+    each task streams its shards' bytes straight to storage: nothing
+    data-sized ever sits on the driver, and memory per task is one
+    Arrow batch plus the open write buffers. The manifest is
+    n_shards rows (model-sized) — collected once so the write
+    executes exactly once, then persisted next to the shards.
 
     ``store`` selects the storage backend
     (:mod:`topn_spark.operators.binfs`): the default
@@ -1100,8 +1111,8 @@ def export_bin_shards_delta(
     3. The rewrite is the full exporter's own write step
        (:func:`_write_shards` — same byte-sized spread, atomic
        writes, crc manifest; the estimate is the batch's token
-       bytes plus the touched shards' prior bytes from the
-       manifest, so a small commit writes in one task with no
+       bytes plus the touched shards' prior ``bin_bytes`` from
+       the manifest, so a small commit writes in one task with no
        exchange), then CROSS-CHECKS
        each written shard's signature against the batch-side fold:
        a mismatch means the append-only/unique-id contract was
@@ -1200,11 +1211,7 @@ def export_bin_shards_delta(
             tokens_col, mask_col, id_col, assets_col,
         ),
         _token_bytes(bstats, code)
-        + sum(
-            old_rows[k][c]
-            for k in touched if k in old_rows
-            for c in ("bin_bytes", "msk_bytes", "ast_bytes")
-        ),
+        + sum(old_rows[k]["bin_bytes"] for k in touched if k in old_rows),
         len(touched), code, has_mask, has_ast, id_col,
     )
     for r in rows:

@@ -14601,9 +14601,11 @@ FROM sh ORDER BY seq_id ASC""",
     " INCLUDING the mask bits, the md5 shard assignment, and the"
     " in-shard write order. Planted: token-length ids (1..~20) with"
     " an unsupervised EOS id 0, packed at seq_len 32 in doc_id"
-    " order, 8 shards. Scale: ONE repartition-by-shard shuffle into"
-    " a streaming Arrow writer (bytes go straight to executor-local"
-    " files, nothing driver-sized); read is one task per shard."
+    " order, 8 shards. Scale: a streaming Arrow writer spread by the"
+    " token bytes it writes — one task with no exchange here, a"
+    " repartition-by-shard shuffle once the export outgrows one"
+    " task (bytes go straight to executor-local files, nothing"
+    " driver-sized); read is one task per shard."
     " Oracle: the z73 dual-array slice arithmetic + z36 md5-mod"
     " shard rule + ROW_NUMBER write order in DuckDB, hash-exact"
     " including both full arrays",
@@ -15530,9 +15532,9 @@ FROM sh ORDER BY seq_id ASC""",
     " token-length ids with placeholder id 9999 in the three z120"
     " conversation shapes (leading+trailing/none/trailing image),"
     " packed at seq_len 32 with an unsupervised EOS 0, 8 shards."
-    " Scale: the z116 shape exactly — ONE repartition-by-shard"
-    " shuffle into a streaming Arrow byte writer; refs are"
-    " image-count-sized. Oracle: z120's triple-array slice"
+    " Scale: the z116 shape exactly — a streaming Arrow byte"
+    " writer spread by token bytes (one task at this size); refs"
+    " are image-count-sized. Oracle: z120's triple-array slice"
     " arithmetic + z116's md5-mod shard rule in DuckDB, hash-exact"
     " including all three arrays",
 )
@@ -16361,8 +16363,8 @@ m AS (
     " hash-exact vs the declarative oracle, proving the seam"
     " changes bytes nowhere; the posix-vs-object byte-identity and"
     " ranged-GET window reads are pytest-pinned. Scale: identical"
-    " plan to z116 (ONE repartition-by-shard shuffle + streaming"
-    " writer); atomicity moves from rename to single-object PUT.",
+    " plan to z116 (the streaming writer, spread by token bytes);"
+    " atomicity moves from rename to single-object PUT.",
 )
 def z134_object_store_export(spark, sf_dir):
     import os

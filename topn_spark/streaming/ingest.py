@@ -1394,8 +1394,8 @@ def bin_export_batch(
 
     Scale shape per commit: one batch write (shuffle-free append),
     one batch-sized aggregate, one rewrite over touched shards' rows
-    only, spread by the bytes it writes (a commit under one advisory
-    partition writes in one task with no exchange); epoch
+    only, spread by the bytes it writes (a small commit writes in
+    one task with no exchange); epoch
     re-derivation is index-sized. The
     corpus store stays a Spark-managed parquet dataset (any
     cluster filesystem); ``store`` routes only the BINARY layer's
