@@ -49,22 +49,7 @@ import shutil
 import tempfile
 import uuid
 
-
-def _pa_schema(ddl: str):
-    import pyarrow as pa
-
-    pa_types = {
-        "int": pa.int32(),
-        "bigint": pa.int64(),
-        "string": pa.string(),
-        "boolean": pa.bool_(),
-        "double": pa.float64(),
-    }
-    fields = []
-    for part in ddl.split(","):
-        name, typ = part.strip().split(" ")
-        fields.append(pa.field(name, pa_types[typ]))
-    return pa.schema(fields)
+from topn_spark.plans import arrow_schema
 
 
 class LocalBinaryStore:
@@ -148,7 +133,7 @@ class LocalBinaryStore:
         import pyarrow.parquet as pq
 
         table = pa.Table.from_pylist(
-            [dict(r) for r in rows], schema=_pa_schema(ddl)
+            [dict(r) for r in rows], schema=arrow_schema(ddl)
         )
         tmp = f"{path}.inprogress-{uuid.uuid4().hex}"
         os.makedirs(tmp)
@@ -326,7 +311,7 @@ class ObjectStoreBinaryStore:
         import pyarrow.parquet as pq
 
         table = pa.Table.from_pylist(
-            [dict(r) for r in rows], schema=_pa_schema(ddl)
+            [dict(r) for r in rows], schema=arrow_schema(ddl)
         )
         sink = pa.BufferOutputStream()
         pq.write_table(table, sink)

@@ -71,8 +71,10 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from topn_spark.operators.binfs import LocalBinaryStore, _pa_schema
+from topn_spark.operators.binfs import LocalBinaryStore
+from topn_spark.plans import local_frame
 
 _MAGIC = b"TNSPBIN1"
 _AST_MAGIC = b"TNSPAST1"
@@ -112,17 +114,13 @@ _EPOCH_SCHEMA = (
 _INTEGRAL = {"tinyint", "smallint", "int", "bigint"}
 
 
-def _fields(ddl: str) -> list[str]:
-    return [p.strip().split(" ")[0] for p in ddl.split(",")]
-
-
 def _rows_df(
     spark: SparkSession, rows: list[dict], ddl: str
 ) -> DataFrame:
     """Model-sized per-shard work list (driver-side dicts from the
     storage backend) as a DataFrame in the DDL's column order."""
-    names = _fields(ddl)
-    data = [tuple(r[n] for n in names) for r in rows]
+    schema = T.StructType.fromDDL(ddl)
+    data = [tuple(r[n] for n in schema.names) for r in rows]
     # One row per slice: every consumer is a per-shard mapInPandas
     # work-list (wants exactly one task per shard — the default
     # 32-way parallelize splits a handful of rows into mostly-empty
@@ -130,7 +128,7 @@ def _rows_df(
     # makes the downstream repartition-by-shard exchange
     # unnecessary (guide §2.4: remove shuffles outright).
     return spark.createDataFrame(
-        spark.sparkContext.parallelize(data, max(len(data), 1)), ddl
+        spark.sparkContext.parallelize(data, max(len(data), 1)), schema
     )
 
 
@@ -204,7 +202,8 @@ def token_vocab(
     sp = list(specials)
     spark = df.sparkSession
     if sp:
-        sp_df = spark.createDataFrame(
+        sp_df = local_frame(
+            spark,
             [(t, i) for i, t in enumerate(sp)],
             "token string, token_id bigint",
         )
@@ -1026,18 +1025,10 @@ def _manifest_df(spark, rows, written) -> DataFrame:
     ``export_version`` in ``_manifest_meta`` (bumped exactly when a
     rewrite happened) instead of collecting this frame.
 
-    Built from an Arrow table, so the frame is a local relation:
-    collecting it starts no Python worker and no Spark job, and it
-    keeps the driver's shard order (a Spark sort would add a
-    range-exchange job). :func:`_rows_df` stays for the per-shard
-    work lists that want one task per shard."""
-    import pyarrow as pa
-
-    out = spark.createDataFrame(
-        pa.Table.from_pylist(
-            sorted(rows, key=lambda r: r["shard"]),
-            schema=_pa_schema(_MANIFEST_SCHEMA),
-        )
+    A local relation (:func:`~topn_spark.plans.local_frame`) in the
+    driver's shard order: collecting it runs no Spark job."""
+    out = local_frame(
+        spark, sorted(rows, key=lambda r: r["shard"]), _MANIFEST_SCHEMA
     )
     if written is not None:
         out = out.withColumn(
@@ -1419,9 +1410,12 @@ def _read_window(
     for pos, k, n in man:
         s, e = max(start, g0), min(stop, g0 + n)
         if s < e:
-            work.append((k, pos, g0, s - g0, e - g0))
+            work.append(
+                {"shard": k, "shard_pos": pos, "g0": g0,
+                 "ls": s - g0, "le": e - g0}
+            )
         g0 += n
-    cols = _fields(schema)
+    cols = T.StructType.fromDDL(schema).names
 
     def _read(batches):
         for pdf in batches:
@@ -1444,8 +1438,9 @@ def _read_window(
                 ]
                 yield pd.DataFrame(rows, columns=cols)
 
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(work, max(len(work), 1)),
+    return _rows_df(
+        spark,
+        work,
         "shard int, shard_pos int, g0 bigint, ls bigint, le bigint",
     ).mapInPandas(_read, schema)
 
@@ -1495,6 +1490,7 @@ def read_bin_shards(
     )
     if has_ast:
         schema += ", asset_ids array<bigint>"
+    cols = T.StructType.fromDDL(schema).names
 
     def _read(batches):
         for pdf in batches:
@@ -1508,7 +1504,7 @@ def read_bin_shards(
                         + ((_asset_ids(ast, i),) if has_ast else ())
                         for i in range(len(ids))
                     ]
-                yield pd.DataFrame(rows, columns=_fields(schema))
+                yield pd.DataFrame(rows, columns=cols)
 
     return _shard_frame(spark, out_dir, st).mapInPandas(
         _read, schema
@@ -1756,23 +1752,18 @@ def export_epoch_order(
     pos = {k: i for i, k in enumerate(order)}
     div = 2 if unit == "pair" else 1
     rows = [
-        (
-            int(r["shard"]),
-            pos[int(r["shard"])],
-            int(r["n_seqs"]),
-            unit,
-            int(r["n_seqs"]) // div,
-            export_version,
-        )
+        {
+            "shard": int(r["shard"]),
+            "shard_pos": pos[int(r["shard"])],
+            "n_seqs": int(r["n_seqs"]),
+            "unit": unit,
+            "n_units": int(r["n_seqs"]) // div,
+            "export_version": export_version,
+        }
         for r in man
     ]
     schema = _EPOCH_SCHEMA
-    # one shard per slice: exactly one task per shard, no
-    # repartition exchange (guide §2.4)
-    work = spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, max(len(rows), 1)),
-        schema,
-    )
+    work = _rows_df(spark, rows, schema)
 
     def _write(batches):
         for pdf in batches:
@@ -1812,13 +1803,14 @@ def export_epoch_order(
             if out:
                 yield pd.DataFrame(out)
 
-    got = work.mapInPandas(_write, schema).collect()
-    st.write_parquet(
-        os.path.join(out_dir, f"_epoch_{int(epoch):04d}"),
-        sorted((r.asDict() for r in got), key=lambda r: r["shard"]),
-        schema,
+    got = sorted(
+        (r.asDict() for r in work.mapInPandas(_write, schema).collect()),
+        key=lambda r: r["shard"],
     )
-    return spark.createDataFrame(got, schema).orderBy("shard")
+    st.write_parquet(
+        os.path.join(out_dir, f"_epoch_{int(epoch):04d}"), got, schema
+    )
+    return local_frame(spark, got, schema)
 
 
 def _load_epoch(
@@ -2136,6 +2128,7 @@ def read_preference_shards(
         " chosen_tokens array<bigint>, rejected_tokens array<bigint>,"
         " chosen_mask array<boolean>, rejected_mask array<boolean>"
     )
+    cols = T.StructType.fromDDL(schema).names
 
     def _read(batches):
         for pdf in batches:
@@ -2152,7 +2145,7 @@ def read_preference_shards(
                         (int(k),) + _pair_row(k, p, ids, seq)
                         for p in range(len(ids) // 2)
                     ]
-                yield pd.DataFrame(rows, columns=_fields(schema))
+                yield pd.DataFrame(rows, columns=cols)
 
     return _shard_frame(spark, out_dir, st).mapInPandas(
         _read, schema

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from topn_spark.plans import local_frame
+
 
 def pagerank(
     edges: DataFrame,
@@ -232,8 +234,8 @@ def triangle_count(
     e.unpersist()
     adj.unpersist()
     deg.unpersist()
-    spark = edges.sparkSession
-    return spark.createDataFrame(
+    return local_frame(
+        edges.sparkSession,
         [(n_nodes, n_edges, n_tris)],
         "n_nodes bigint, n_edges bigint, n_triangles bigint",
     )
@@ -276,8 +278,10 @@ def bfs_hops(
         )
     adj = e.distinct().localCheckpoint(eager=True)
     spark = edges.sparkSession
-    dist = spark.createDataFrame(
-        [(s, 0) for s in sources], ["id", "hops"]
+    seeds = [(s, 0) for s in sources]
+    # the column types Spark infers from the Python seed values
+    dist = local_frame(
+        spark, seeds, spark._inferSchemaFromList(seeds, ["id", "hops"])
     ).localCheckpoint(eager=True)
     frontier = dist.select("id")
     for d in range(1, max_hops + 1):

@@ -41,6 +41,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from topn_spark.plans import local_frame
+
 __all__ = [
     "char_array",
     "char_ngrams",
@@ -313,8 +315,8 @@ def save_langid(
     spark = counts.sparkSession
     counts.write.mode("overwrite").parquet(f"{path}/counts")
     classes.write.mode("overwrite").parquet(f"{path}/classes")
-    spark.createDataFrame(
-        [(int(n_lo), int(n_hi))], "n_lo int, n_hi int"
+    local_frame(
+        spark, [(int(n_lo), int(n_hi))], "n_lo int, n_hi int"
     ).write.mode("overwrite").parquet(f"{path}/meta")
 
 

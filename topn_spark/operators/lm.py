@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from topn_spark.operators.textstats import ngrams_from_tokens, tokens
+from topn_spark.plans import local_frame
 
 __all__ = [
     "train_bigram_lm",
@@ -311,7 +312,8 @@ def save_bigram_lm(
     stats = uni.agg(
         F.count(F.lit(1)).alias("n"), F.sum("c").alias("t")
     ).collect()[0]
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [(int(stats["n"]) + 1, int(stats["t"] or 0), mode)],
         "vocab_size long, total_tokens long, token_mode string",
     ).write.mode("overwrite").parquet(f"{path}/meta")

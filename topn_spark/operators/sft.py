@@ -39,6 +39,8 @@ from topn_spark.operators.textstats import (
     bpe_encode_word,
     shingles,
 )
+from topn_spark.operators.topn import _driver_topn
+from topn_spark.plans import local_frame
 
 __all__ = [
     "CHAT_TEMPLATES",
@@ -1660,8 +1662,8 @@ def _bt_fit_rows(
     """:func:`bradley_terry_fit`'s rows, driver-side over sorted
     matrix tuples — one dict per model (``model, strength, rating,
     wins_eff, n_games, n_iter, converged``), sorted rating-desc then
-    model-asc. The streaming monitor writes these without a Spark
-    job."""
+    model-asc as Spark sorts (NaN first). The streaming monitor writes
+    these without a Spark job."""
     models, pi, wins, games, n_iter, converged = _bt_mm_core(
         tuples, smoothing, max_iter, tol
     )
@@ -1677,8 +1679,7 @@ def _bt_fit_rows(
         }
         for m, p, w, g in zip(models, pi, wins, games)
     ]
-    out.sort(key=lambda r: (-r["rating"], r["model"]))
-    return out
+    return _driver_topn(out, "rating", len(out), ["model"])
 
 
 def _bt_boot_check(caller: str, n_boot: int, smoothing: float) -> None:
@@ -1747,8 +1748,7 @@ def _bt_interval_rows(
                 "n_boot": int(n_boot),
             }
         )
-    out.sort(key=lambda r: (-r["rating"], r["model"]))
-    return out
+    return _driver_topn(out, "rating", len(out), ["model"])
 
 
 def pairwise_winrate(
@@ -1840,9 +1840,10 @@ def bradley_terry_fit(
 
     Scale shape: the matrix is k²-sized (k = models, a handful) —
     collected to the driver, fitted with a model-sized NumPy loop,
-    returned as a createDataFrame. The DATA-sized work already
-    happened in :func:`pairwise_winrate`; fitting on the sufficient
-    statistic is exactly why the win matrix exists.
+    returned as a local relation in rating order
+    (:func:`~topn_spark.plans.local_frame`). The DATA-sized work
+    already happened in :func:`pairwise_winrate`; fitting on the
+    sufficient statistic is exactly why the win matrix exists.
     """
     rows = _matrix_tuples(matrix.select(*_MATRIX_COLS).collect())
     schema = (
@@ -1850,14 +1851,10 @@ def bradley_terry_fit(
         " wins_eff double, n_games double, n_iter int,"
         " converged boolean"
     )
-    if not rows:
-        # empty matrix (e.g. deploy-phase schema propagation):
-        # empty ratings frame, correct schema, nothing executed
-        return matrix.sparkSession.createDataFrame([], schema)
-    out = _bt_fit_rows(rows, smoothing, max_iter, tol)
-    return matrix.sparkSession.createDataFrame(out, schema).orderBy(
-        F.col("rating").desc(), F.col("model").asc()
-    )
+    # empty matrix (e.g. deploy-phase schema propagation): empty
+    # ratings frame, correct schema, nothing executed
+    out = _bt_fit_rows(rows, smoothing, max_iter, tol) if rows else []
+    return local_frame(matrix.sparkSession, out, schema)
 
 
 def _bt_mm_core(
@@ -2026,7 +2023,7 @@ def bradley_terry_bootstrap(
     )
     if not mats:
         # no pair ever shares a scored prompt: nothing to rate
-        return df.sparkSession.createDataFrame([], _BT_CI_DDL)
+        return local_frame(df.sparkSession, [], _BT_CI_DDL)
     by_rep: dict = {}
     for r in mats:
         by_rep.setdefault(int(r["_b"]), []).append(r)
@@ -2036,9 +2033,7 @@ def bradley_terry_bootstrap(
         n_boot, smoothing, max_iter, tol, lo, hi,
         caller="bradley_terry_bootstrap",
     )
-    return df.sparkSession.createDataFrame(out, _BT_CI_DDL).orderBy(
-        F.col("rating").desc(), F.col("model").asc()
-    )
+    return local_frame(df.sparkSession, out, _BT_CI_DDL)
 
 
 def bradley_terry_matrix_bootstrap(
@@ -2085,14 +2080,10 @@ def bradley_terry_matrix_bootstrap(
     state; nothing data-sized anywhere."""
     _bt_boot_check("bradley_terry_matrix_bootstrap", n_boot, smoothing)
     rows = _matrix_tuples(matrix.select(*_MATRIX_COLS).collect())
-    if not rows:
-        return matrix.sparkSession.createDataFrame([], _BT_CI_DDL)
     out = _bt_matrix_bootstrap_rows(
         rows, n_boot, smoothing, max_iter, tol, lo, hi, salt
-    )
-    return matrix.sparkSession.createDataFrame(out, _BT_CI_DDL).orderBy(
-        F.col("rating").desc(), F.col("model").asc()
-    )
+    ) if rows else []
+    return local_frame(matrix.sparkSession, out, _BT_CI_DDL)
 
 
 def _bt_matrix_bootstrap_rows(
@@ -2354,9 +2345,11 @@ def length_controlled_winrate(
         .collect()
     )
     if len(grouped) <= int(max_groups):
-        return df.sparkSession.createDataFrame(
-            _lc_winrate_driver(grouped, max_iter, tol, l2), out_ddl
-        ).orderBy("model_a", "model_b")
+        return local_frame(
+            df.sparkSession,
+            _lc_winrate_driver(grouped, max_iter, tol, l2),
+            out_ddl,
+        )
 
     used = pairs.where(~F.col("_tie")).persist()
     try:
@@ -2378,7 +2371,7 @@ def length_controlled_winrate(
             for r in moments.collect()
         }
         if not mrows:
-            return df.sparkSession.createDataFrame([], out_ddl)
+            return local_frame(df.sparkSession, [], out_ddl)
         spark = df.sparkSession
         mdf = F.broadcast(moments.select("model_a", "model_b", "sx"))
         # scale-only standardization — NOT centered: sigmoid(b0) must
@@ -2407,7 +2400,8 @@ def length_controlled_winrate(
             if not active:
                 break
             bdf = F.broadcast(
-                spark.createDataFrame(
+                local_frame(
+                    spark,
                     [(ka, kb, b0, b1) for (ka, kb), (b0, b1) in
                      sorted(betas.items()) if (ka, kb) in active],
                     "model_a string, model_b string,"
@@ -2479,9 +2473,7 @@ def length_controlled_winrate(
                     conv[k],
                 )
             )
-        return spark.createDataFrame(out, out_ddl).orderBy(
-            "model_a", "model_b"
-        )
+        return local_frame(spark, out, out_ddl)
     finally:
         used.unpersist()
 

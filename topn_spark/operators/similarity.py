@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from topn_spark.operators.topn import topn_grouped
-from topn_spark.plans import ensure_parallelism
+from topn_spark.plans import ensure_parallelism, local_frame
 
 
 def _lit_d(x: float) -> str:
@@ -754,9 +754,7 @@ def embedding_covariance(
         F.size(F.col(vec_col)).alias("d")
     ).limit(1).collect()
     if not d_probe:
-        return df.sparkSession.createDataFrame(
-            [], "i int, j int, cov double"
-        )
+        return local_frame(df.sparkSession, [], "i int, j int, cov double")
     d = int(d_probe[0]["d"])
     part_schema = T.StructType(
         [
@@ -785,9 +783,7 @@ def embedding_covariance(
 
     rows = df.select(vec_col).mapInPandas(partials, part_schema).collect()
     if not rows:
-        return df.sparkSession.createDataFrame(
-            [], "i int, j int, cov double"
-        )
+        return local_frame(df.sparkSession, [], "i int, j int, cov double")
     n = sum(r["n"] for r in rows)
     s = np.sum([np.array(r["s"]) for r in rows], axis=0)
     xx = np.sum([np.array(r["xx"]) for r in rows], axis=0).reshape(d, d)
@@ -796,7 +792,7 @@ def embedding_covariance(
     out = [
         (i, j, float(cov[i, j])) for i in range(d) for j in range(d)
     ]
-    return df.sparkSession.createDataFrame(out, "i int, j int, cov double")
+    return local_frame(df.sparkSession, out, "i int, j int, cov double")
 
 
 def pq_train_codebooks(sample_v, m: int = 8, nbits: int = 4, iters: int = 10):
@@ -1281,7 +1277,7 @@ def contrastive_triplets(
         f" neg_id {id_type}, neg_score double, margin double"
     )
     if not a_rows:
-        return spark.createDataFrame([], empty_out)
+        return local_frame(spark, [], empty_out)
 
     def _unit_rows(mat: "np.ndarray") -> "np.ndarray":
         nm = np.sqrt(np.einsum("ij,ij->i", mat, mat))

@@ -12,7 +12,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from topn_spark.plans import ensure_parallelism, num_partitions
+from topn_spark.plans import ensure_parallelism, local_frame, num_partitions
 
 #: The engine word rule: lowercase, then runs of ``[a-z0-9]``. Its SQL
 #: form is :func:`_token_sql`; in Python it is
@@ -627,7 +627,7 @@ def routed_quality(
         + ", ".join(f"_r_{key} {t}" for key, t in num_keys)
         + ", _r_stopwords array<string>"
     )
-    thr = spark.createDataFrame(rows, schema)
+    thr = local_frame(spark, rows, schema)
     joined = sig.join(
         F.broadcast(thr),
         sig[lang_col] == thr["_route_lang"],
@@ -1318,7 +1318,7 @@ def cms_token_counts(
         bytes(sk_row["sk"])
     )
     rows = [(t, int(cms.estimateCount(t))) for t in terms]
-    return df.sparkSession.createDataFrame(rows, "term string, est bigint")
+    return local_frame(df.sparkSession, rows, "term string, est bigint")
 
 
 def vocab_oov_rates(
@@ -1891,16 +1891,23 @@ def train_quality_classifier(
     return w, logreg_predict(feat, w, QUALITY_FEATURES)
 
 
+def merges_frame(spark, merges: list[tuple[str, str]]) -> DataFrame:
+    """A merge table as ``(rank, lhs, rhs)`` rows in rank order."""
+    return local_frame(
+        spark,
+        [(r, a, b) for r, (a, b) in enumerate(merges)],
+        "rank int, lhs string, rhs string",
+    )
+
+
 def save_bpe_merges(spark, merges: list[tuple[str, str]], path: str) -> None:
     """Persist a trained merge table as ``(rank, lhs, rhs)`` parquet
     — the model artifact of the BPE lifecycle (train once on the
     corpus, store, apply from any session/job). Rank order IS the
     merge priority :func:`apply_bpe` consumes. Coalesced to one file:
     merge tables are model-sized (10k-50k rows), not data."""
-    spark.createDataFrame(
-        [(r, a, b) for r, (a, b) in enumerate(merges)],
-        "rank int, lhs string, rhs string",
-    ).coalesce(1).write.mode("overwrite").parquet(path)
+    art = merges_frame(spark, merges)
+    art.coalesce(1).write.mode("overwrite").parquet(path)
 
 
 def load_bpe_merges(spark, path: str) -> list[tuple[str, str]]:
@@ -2608,9 +2615,8 @@ def save_unigram_lm(
 ) -> None:
     """Persist a unigram-LM piece table as parquet ``(piece,
     logprob)`` — the artifact discipline of :func:`save_bpe_merges`."""
-    spark.createDataFrame(
-        list(pieces), "piece string, logprob double"
-    ).coalesce(1).write.mode("overwrite").parquet(path)
+    art = local_frame(spark, pieces, "piece string, logprob double")
+    art.coalesce(1).write.mode("overwrite").parquet(path)
 
 
 def load_unigram_lm(spark, path: str) -> list[tuple[str, float]]:
@@ -2922,9 +2928,8 @@ def save_logreg(
         (i + 1, c, float(w))
         for i, (c, w) in enumerate(zip(feature_cols, weights[1:]))
     ]
-    spark.createDataFrame(
-        rows, "idx int, feature string, weight double"
-    ).coalesce(1).write.mode("overwrite").parquet(path)
+    art = local_frame(spark, rows, "idx int, feature string, weight double")
+    art.coalesce(1).write.mode("overwrite").parquet(path)
 
 
 def load_logreg(spark, path: str) -> tuple[list[float], list[str]]:

@@ -55,6 +55,7 @@ from topn_spark.errors import (
 )
 from topn_spark.operators.dedup import dedup_exact
 from topn_spark.operators.topn import TopNConfig, topn
+from topn_spark.plans import local_frame
 from topn_spark.sources.io import read, write
 
 
@@ -271,7 +272,7 @@ def _stage_source(spark, stage, inputs, collector, substitutions, phase):
     if phase == "deploy" and (contains_macro(path) or contains_macro(fmt)):
         schema = p.get("schema")
         if schema and not contains_macro(schema):
-            return spark.createDataFrame([], schema)
+            return local_frame(spark, [], schema)
         return None  # downstream validation deferred to run
     if collector.failures:
         return None
@@ -1022,9 +1023,7 @@ def _stage_warc_source(
         # schema is static (blob_id = file path) — validate downstream
         # against an empty typed frame, the File-source literal-schema
         # shape
-        empty = spark.createDataFrame(
-            [], "blob_id string, content binary"
-        )
+        empty = local_frame(spark, [], "blob_id string, content binary")
         return parse_warc(empty, id_col="blob_id", strict=True)
     path = _str_prop(p, "path", None, collector, substitutions, phase)
     if collector.failures:
@@ -3117,7 +3116,7 @@ def run_streaming_pipeline(
 
     # deploy-time validation of the whole DAG on an empty batch frame
     # (schemas are what validation needs; rows are not)
-    empty = spark.createDataFrame([], p["schema"])
+    empty = local_frame(spark, [], p["schema"])
     _walk(spark, spec, None, "deploy", source=(src["name"], empty))
 
     # @Macro lifecycle for the stream source, mirroring the batch

@@ -1,6 +1,7 @@
 """Plan-inspection helpers: the engine's performance contract is
 asserted, not hoped for. Also home of :func:`ensure_parallelism`, which
-the operators call to spread a small input before CPU-heavy work.
+the operators call to spread a small input before CPU-heavy work, and
+of :func:`local_frame`, the one way driver rows become a DataFrame.
 
 Used by tests/test_plans.py to pin the physical shapes that matter at
 100 TB: filters pushed into scans, column pruning, broadcast joins on
@@ -11,6 +12,39 @@ whole-stage codegen coverage.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql import types as T
+
+
+def arrow_schema(ddl: str | T.StructType):
+    """The Arrow schema of a DDL string (or a parsed schema), read by
+    Spark's own parser — the column types a Spark write of the same
+    DDL produces."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(ddl, str):
+        ddl = T.StructType.fromDDL(ddl)
+    return to_arrow_schema(ddl)
+
+
+def local_frame(spark, rows, ddl: str | T.StructType) -> DataFrame:
+    """Driver-sized rows (dicts by column name, or tuples in the DDL's
+    column order) as a DataFrame of the DDL's schema.
+
+    Built from an Arrow table, so the frame is a ``LocalTableScan``:
+    collecting it runs no Spark job and starts no Python worker, and
+    it keeps the driver's row order. A list-built frame is a Python
+    RDD cut into ``defaultParallelism`` slices, whose every job costs
+    one task per configured core. No rows give an empty frame of the
+    same schema."""
+    import pyarrow as pa
+
+    schema = T.StructType.fromDDL(ddl) if isinstance(ddl, str) else ddl
+    names = schema.names
+    table = pa.Table.from_pylist(
+        [r if isinstance(r, dict) else dict(zip(names, r)) for r in rows],
+        schema=arrow_schema(schema),
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def ensure_parallelism(df: DataFrame) -> DataFrame:

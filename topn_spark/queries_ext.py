@@ -20,8 +20,9 @@ from topn_spark.operators.textstats import (
     LANG_MARKERS,
     fingerprint,
     language_scores,
+    merges_frame,
 )
-from topn_spark.plans import ensure_parallelism
+from topn_spark.plans import ensure_parallelism, local_frame
 from topn_spark.queries import QUERIES, query
 
 _TOKS_DUCK = "regexp_extract_all(lower(text), '[a-z0-9]+')"
@@ -1664,8 +1665,6 @@ ORDER BY qdot DESC, a.vec_id ASC LIMIT 10"""
     "cross-engine deterministic",
 )
 def x33_ivf_topk(spark, sf_dir):
-    from pyspark.sql import Row
-
     # one parquet split otherwise evaluates every centroid fold on
     # one core (guide §2.5)
     emb = ensure_parallelism(
@@ -1674,9 +1673,8 @@ def x33_ivf_topk(spark, sf_dir):
         )
     )
     cents = _ivf_centroids()
-    cents_df = spark.createDataFrame(
-        [Row(cid=i, c=c) for i, c in enumerate(cents)],
-        "cid int, c array<bigint>",
+    cents_df = local_frame(
+        spark, list(enumerate(cents)), "cid int, c array<bigint>"
     )
     qv = F.transform(
         F.col("embedding"),
@@ -5636,11 +5634,9 @@ def z02_bpe_train(spark, sf_dir):
         F.sum("n_words").alias("corpus_words"),
         F.sum("n_bpe_tokens").alias("corpus_bpe_tokens"),
     )
-    mdf = spark.createDataFrame(
-        [(r, a, b) for r, (a, b) in enumerate(merges)],
-        "rank int, lhs string, rhs string",
+    return _attach_scalar(merges_frame(spark, merges), totals).orderBy(
+        "rank"
     )
-    return _attach_scalar(mdf, totals).orderBy("rank")
 
 
 def _ivfpq_adc_mirror_core(con):
@@ -6742,11 +6738,9 @@ def z19_bpe_unicode(spark, sf_dir):
         F.sum("n_words").alias("corpus_words"),
         F.sum("n_bpe_tokens").alias("corpus_bpe_tokens"),
     )
-    mdf = spark.createDataFrame(
-        [(r, a, b) for r, (a, b) in enumerate(merges)],
-        "rank int, lhs string, rhs string",
+    return _attach_scalar(merges_frame(spark, merges), totals).orderBy(
+        "rank"
     )
-    return _attach_scalar(mdf, totals).orderBy("rank")
 
 
 @query(
@@ -8283,9 +8277,8 @@ def z38_unigram_lm_train(spark, sf_dir):
         max_piece_len=8,
         min_count=2,
     )
-    return spark.createDataFrame(
-        pieces, "piece string, logprob double"
-    ).orderBy("piece")
+    mdf = local_frame(spark, pieces, "piece string, logprob double")
+    return mdf.orderBy("piece")
 
 
 def _z39_unigram_apply_mirror(con):
@@ -8997,11 +8990,9 @@ def z46_byte_bpe(spark, sf_dir):
             6,
         ).alias("fertility"),
     )
-    mdf = spark.createDataFrame(
-        [(r, a, b) for r, (a, b) in enumerate(merges)],
-        "rank int, lhs string, rhs string",
+    return _attach_scalar(merges_frame(spark, merges), totals).orderBy(
+        "rank"
     )
-    return _attach_scalar(mdf, totals).orderBy("rank")
 
 
 @query(
@@ -12100,9 +12091,8 @@ def z83_sft_decontaminate(spark, sf_dir):
     )
     convs = docs.select(d.alias("conv_id"), msgs.alias("messages"))
     rendered = render_chat(convs).select("conv_id", "text")
-    ev = convs.sparkSession.createDataFrame(
-        [(1, "benchmark item: " + _Z83_QUOTE)],
-        "qid long, text string",
+    ev = local_frame(
+        spark, [(1, "benchmark item: " + _Z83_QUOTE)], "qid long, text string"
     )
     return (
         ngram_decontaminate(

@@ -28,6 +28,7 @@ from topn_spark.operators.textstats import (
     routed_quality,
     tokens,
 )
+from topn_spark.plans import local_frame
 
 
 def _error_condition(e) -> str:
@@ -785,33 +786,22 @@ def gate_report(spark, out_dir: str, reject_dir: str) -> DataFrame:
     own outputs (two count aggs over model-thin columns); a dir that
     does not exist yet (nothing admitted / nothing rejected) counts
     as zero rows rather than failing, so the report is safe to poll
-    while the stream runs."""
-
-    def _read(path, cols):
-        try:
-            return spark.read.parquet(path).select(*cols)
-        except Exception as e:
-            if _error_condition(e) in (
-                "PATH_NOT_FOUND",
-                "UNABLE_TO_INFER_SCHEMA",
-            ):
-                return None
-            raise
-
-    rows = []
-    adm = _read(out_dir, [])
-    rows.append(("admitted", None, adm.count() if adm is not None else 0))
-    rej = _read(reject_dir, ["reason"])
+    while the stream runs. Rows come back ordered by status, then
+    reason (nulls first)."""
+    adm = _read_store(spark, out_dir)
+    rows = [("admitted", None, adm.count() if adm is not None else 0)]
+    rej = _read_store(spark, reject_dir)
     if rej is not None:
-        rows.extend(
-            ("rejected", r["reason"], int(r["n"]))
-            for r in rej.groupBy("reason")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
+        rows += sorted(
+            (
+                ("rejected", r["reason"], int(r["n"]))
+                for r in rej.groupBy("reason")
+                .agg(F.count(F.lit(1)).alias("n"))
+                .collect()
+            ),
+            key=lambda r: (r[1] is not None, r[1]),
         )
-    return spark.createDataFrame(
-        rows, "status string, reason string, n long"
-    ).orderBy("status", "reason")
+    return local_frame(spark, rows, "status string, reason string, n long")
 
 
 def decontam_gate_batch(
@@ -1053,9 +1043,7 @@ def drift_monitor_batch(
     spark = batch.sparkSession
     n_ref = sum(reference.values())
     ref_df = F.broadcast(
-        spark.createDataFrame(
-            list(reference.items()), "w string, rc long"
-        )
+        local_frame(spark, list(reference.items()), "w string, rc long")
     )
     # persist: the total-token collect below and the full-outer join
     # would otherwise each recompute the unigram agg from the raw
@@ -1487,7 +1475,7 @@ def bin_export_batch(
         corpus-sized metadata work per commit even though pruning
         keeps untouched files closed (guide §6 file listing)."""
         if not paths:
-            return spark.createDataFrame([], store_schema)
+            return local_frame(spark, [], store_schema)
         return (
             spark.read.schema(store_schema)
             .option("basePath", corpus_dir)
